@@ -28,11 +28,16 @@ object GraftSession {
     *    measured configuration is explicit.
     * ABA-measured r19 on a 20-query cross-family subset (fresh JVMs,
     * min-of-reps): 37.3-40.5 s without, 32.0-32.3 s with. Applies to any
-    * builder — cluster or local. */
+    * builder — cluster or local.
+    *
+    * `file:` resolves to [[ForkFreeLocalFileSystem]], which sets file
+    * modes in-process instead of forking a `chmod` per created file when
+    * Hadoop's native library is absent. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+    .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
 
   /** Harness base for the local benches/gates: `local[$cpus]` master
     * (the driver re-runs the bench at a lower core count to measure

@@ -30,21 +30,25 @@ object PcapToParquet {
       "usage: PcapToParquet <input.pcap|dir> <output.parquet> [strict|permissive]")
     val Array(in, out) = args.take(2)
     val mode = if (args.length == 3) args(2) else "strict"
-    val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("pcap-to-parquet")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.hadoopConfiguration.set("parquet.writer.version", "v2")
+    val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    // a caller-owned session is used as it is: no config of this job leaks into it
+    val spark = preexisting.getOrElse {
+      val s = GraftSession.tuned(SparkSession.builder())
+        .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
+        .appName("pcap-to-parquet")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      s.sparkContext.setLogLevel("WARN")
+      s
+    }
     // No orderBy: one scan partition per capture, records already in
     // capture order — the write stays shuffle-free (see scaladoc).
     spark.read.format("pcap").option("mode", mode).load(in)
       .select("src_ip", "dst_ip", "len", "protocol", "src_port", "dst_port",
               "mm_ts", "mm_id", "mm_port")
-      .write.mode("overwrite").option("compression", "zstd").parquet(out)
-    if (!preexisting) spark.stop() // don't tear down a caller-owned session
+      .write.mode("overwrite").option("compression", "zstd")
+      .option("parquet.writer.version", "v2").parquet(out)
+    if (preexisting.isEmpty) spark.stop() // don't tear down a caller-owned session
   }
 }

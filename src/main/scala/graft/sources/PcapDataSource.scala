@@ -1,46 +1,49 @@
 package graft.sources
 
 import java.io.{ObjectInputStream, ObjectOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
+import java.util.OptionalLong
 
+import scala.annotation.switch
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import java.util.OptionalLong
-
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for legacy pcap captures:
   * `spark.read.format("pcap").load(pathOrDir)` for batch and
   * `spark.readStream.format("pcap").load(dir)` for a growing capture
   * directory (SURVEY.md §4.3 / §7 M5 — the "custom DataSource V2"
-  * milestone; v1 was binaryFile + flatMap).
+  * milestone).
   *
-  * Split model: ONE InputPartition PER CAPTURE FILE. Legacy pcap has no
-  * record sync markers, so a file cannot be split mid-stream safely
-  * (SURVEY.md §7 risk #4) — at 100 TB parallelism comes from the number
-  * of capture files, which is how capture hardware rolls them anyway.
-  * Decoding happens inside each PartitionReader on executors; file bytes
-  * never touch the driver.
+  * Split model: ONE InputPartition PER CAPTURE FILE by default. Legacy
+  * pcap has no record sync markers, so a file cannot be split mid-stream
+  * by resync (SURVEY.md §7 risk #4); `splitBytes` chunks large files by
+  * a framing skim instead (see [[PcapScanBuilder.planInputPartitions]]).
+  * Decoding happens inside each [[PcapColumnarReader]] on executors,
+  * straight into column vectors; file bytes never touch the driver.
   *
   * Filesystem: all listing and reading goes through the Hadoop
   * `FileSystem` API resolved from the path's scheme, so `hdfs://`,
   * `s3a://`, and plain local paths all work — the only place 100 TB of
   * captures can actually live is a distributed store. The driver's hadoop
-  * conf (credentials, endpoints) ships to executors via
-  * [[SerializableHadoopConf]].
+  * conf (credentials, endpoints) ships to executors as one broadcast
+  * [[SerializableHadoopConf]] per scan.
   *
   * Formats: legacy pcap (both byte orders, ns-magic variant) AND pcapng
   * (SHB/IDB/EPB/SPB block walk, per-section byte order, per-interface
@@ -101,41 +104,19 @@ object PcapDataSource {
     else Seq((status.getPath.toString, status.getLen))
   }
 
-  /** Reads one capture fully via the Hadoop FileSystem API. A legacy pcap
-    * must be decoded sequentially anyway (no sync markers), and capture
-    * hardware rolls files at fixed sizes well under 2 GiB. */
-  def readCaptureBytes(file: String, conf: Configuration): Array[Byte] =
-    readCapturePrefix(file, conf, Long.MaxValue)._1
-
-  /** Reads `[0, min(fileLen, upTo))` of a capture; the Boolean is true
-    * when the file continues PAST the returned buffer — chunked readers
-    * prefetch only `[0, rangeEnd + straddle)` and must not mistake the
-    * prefetch edge for capture truncation. */
-  def readCapturePrefix(file: String, conf: Configuration,
-                        upTo: Long): (Array[Byte], Boolean) = {
-    val p = new HadoopPath(file)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    val take = math.min(len, upTo)
-    require(take <= Int.MaxValue.toLong,
+  /** Reads one capture of known length `len` (from the listing) fully via
+    * the Hadoop FileSystem API. A legacy pcap must be decoded sequentially
+    * anyway (no sync markers), and capture hardware rolls files at fixed
+    * sizes well under 2 GiB. */
+  def readCaptureBytes(file: String, conf: Configuration, len: Long): Array[Byte] = {
+    require(len <= Int.MaxValue.toLong,
       s"$file: capture is $len bytes. Whole-buffer reads cap at 2 GiB: LEGACY pcap " +
         "above that reads fine with splitBytes (the r8 seek-skim never materializes " +
         "the prefix), but pcapng requires a full-section buffer — roll pcapng " +
         "captures into files under 2 GiB")
-    val buf = new Array[Byte](take.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    (buf, take < len)
-  }
-
-  /** First `n` bytes of a capture (the global-header probe a chunked
-    * reader sizes its prefetch window with). */
-  def readCaptureHead(file: String, conf: Configuration, n: Int): Array[Byte] = {
+    val buf = new Array[Byte](len.toInt)
     val p = new HadoopPath(file)
-    val fs = p.getFileSystem(conf)
-    val len = math.min(fs.getFileStatus(p).getLen, n.toLong).toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
+    val in = p.getFileSystem(conf).open(p)
     try in.readFully(0, buf) finally in.close()
     buf
   }
@@ -160,14 +141,12 @@ object PcapDataSource {
     * Records larger than the window are hopped by re-seeking. */
   private val SkimBuf = 1 << 20
 
-  def skimLegacyChunk(file: String, conf: Configuration,
+  def skimLegacyChunk(file: String, conf: Configuration, len: Long,
                       rangeStart: Long, rangeEnd: Long,
                       strict: Boolean): Option[ChunkWindow] = {
-    val p = new HadoopPath(file)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
     if (len < 24) return None
-    val in = fs.open(p)
+    val p = new HadoopPath(file)
+    val in = p.getFileSystem(conf).open(p)
     try {
       val head = new Array[Byte](24)
       in.readFully(head, 0, 24) // sequential from 0: ONE stream for everything
@@ -235,7 +214,7 @@ object PcapDataSource {
     val buf = new Array[Byte](sz.toInt)
     val p = new HadoopPath(file)
     val in = p.getFileSystem(conf).open(p)
-    // seek + sequential read, NOT readFully(pos, buf) — see header() above
+    // seek + sequential read, NOT readFully(pos, buf) — see skimLegacyChunk
     try { in.seek(startOff); in.readFully(buf, 0, buf.length) } finally in.close()
     buf
   }
@@ -243,7 +222,7 @@ object PcapDataSource {
 
 /** Hadoop `Configuration` is not `Serializable`; this is the standard
   * Writable-based wrapper (the same shape as Spark's internal
-  * `SerializableConfiguration`) so reader factories can ship the driver's
+  * `SerializableConfiguration`) so a scan can broadcast the driver's
   * hadoop conf — `fs.*` credentials, endpoints — to executors. */
 final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
   private def writeObject(out: ObjectOutputStream): Unit = {
@@ -277,22 +256,23 @@ class PcapTable(properties: Map[String, String]) extends Table with SupportsRead
     val maxFiles = Option(options.get("maxFilesPerTrigger"))
       .orElse(properties.get("maxFilesPerTrigger")).map(_.toInt).getOrElse(0)
     require(maxFiles >= 0, s"pcap option maxFilesPerTrigger=$maxFiles must be >= 0")
-    // resolved on the driver, shipped to executors by the reader factory
+    // resolved on the driver, broadcast to executors once per scan
     val conf = new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
     new PcapScanBuilder(path, mode == "strict", conf, splitBytes, maxFiles)
   }
 }
 
 /** Translates pushed-down [[Filter]]s over the decodable columns into a
-  * `Packet => Boolean` evaluated inside the reader BEFORE row
-  * construction: a pushed `protocol = 'TCP'` skips InternalRow building
-  * (and the dotted-quad formatting the row would need) for every
-  * non-matching packet. Null semantics match SQL: a comparison against a
-  * NULL field is not-true, so the row is dropped — and every filter is
-  * also re-applied by Spark post-scan (parquet-style contract), so the
-  * push is a decode-skip optimization, never a correctness risk. */
+  * predicate on the decoded scalars ([[PcapParser.Fields]]), evaluated
+  * inside the reader BEFORE a packet is appended to the column vectors:
+  * a pushed `protocol = 'TCP'` skips the append (and the dotted-quad
+  * formatting it would need) for every non-matching packet. Null
+  * semantics match SQL: a comparison against a NULL field is not-true,
+  * so the row is dropped — and every filter is also re-applied by Spark
+  * post-scan (parquet-style contract), so the push is a decode-skip
+  * optimization, never a correctness risk. */
 object PcapFilters {
-  import PcapParser.Packet
+  import PcapParser.Fields
 
   private val numericCols = Set("len", "src_port", "dst_port", "pkt_idx")
   private val allCols = numericCols ++ Set("protocol", "file")
@@ -318,12 +298,21 @@ object PcapFilters {
     case _        => None
   }
 
-  private def numField(a: String): Packet => Option[Long] = a match {
+  /** A numeric column's value; every one is non-negative when present,
+    * so negative means NULL. */
+  private def numField(a: String): Fields => Long = a match {
     case "len"      => _.len
-    case "src_port" => _.src_port.map(_.toLong)
-    case "dst_port" => _.dst_port.map(_.toLong)
-    case "pkt_idx"  => p => Some(p.pkt_idx)
+    case "src_port" => _.srcPort.toLong
+    case "dst_port" => _.dstPort.toLong
+    case "pkt_idx"  => _.pktIdx
     case other      => throw new IllegalArgumentException(s"not a numeric pcap filter column: $other")
+  }
+
+  /** Protocol codes whose name is one of `vs`; names the decoder never
+    * emits match nothing, exactly as they would post-scan. */
+  private def protocolCodes(vs: Array[Any]): Set[Int] = {
+    val names = vs.map(String.valueOf).toSet
+    PcapParser.ProtocolNames.indices.filter(i => i > 0 && names(PcapParser.ProtocolNames(i))).toSet
   }
 
   /** True iff a pushed filter set rejects EVERY packet of `file` without
@@ -345,15 +334,17 @@ object PcapFilters {
   /** `file` filters compile against the enclosing file's path (constant per
     * partition), letting e.g. `file LIKE` residuals coexist with an exact
     * `file =` push that skips the whole partition's decode. */
-  def compile(f: Filter, file: String): Packet => Boolean = f match {
+  def compile(f: Filter, file: String): Fields => Boolean = f match {
     case EqualTo("file", v)     => val hit = String.valueOf(v) == file; _ => hit
     case In("file", vs)         => val hit = vs.map(String.valueOf).contains(file); _ => hit
     case IsNull("file")         => _ => false
     case IsNotNull("file")      => _ => true
-    case EqualTo("protocol", v) => val s = String.valueOf(v); p => p.protocol.contains(s)
-    case In("protocol", vs)     => val s = vs.map(String.valueOf).toSet; p => p.protocol.exists(s)
-    case IsNull(a)              => val g = anyField(a); p => g(p).isEmpty
-    case IsNotNull(a)           => val g = anyField(a); p => g(p).isDefined
+    case EqualTo("protocol", v) => val cs = protocolCodes(Array(v)); p => cs(p.protocol)
+    case In("protocol", vs)     => val cs = protocolCodes(vs); p => cs(p.protocol)
+    case IsNull("protocol")     => _.protocol == 0
+    case IsNotNull("protocol")  => _.protocol != 0
+    case IsNull(a)              => val g = numField(a); p => g(p) < 0
+    case IsNotNull(a)           => val g = numField(a); p => g(p) >= 0
     case EqualTo(a, v)             => cmp(a, v, _ == _)
     case In(a, vs)                 =>
       val preds = vs.map(v => cmp(a, v, _ == _)); p => preds.exists(_(p))
@@ -366,30 +357,24 @@ object PcapFilters {
     case _ => _ => true // unsupported never reaches here (supported() gate); decode-all is safe
   }
 
-  private def anyField(a: String): Packet => Option[Any] = a match {
-    case "protocol" => _.protocol
-    case other      => numField(other)
-  }
-
-  private def cmp(a: String, v: Any, op: (Long, Long) => Boolean): Packet => Boolean =
+  private def cmp(a: String, v: Any, op: (Long, Long) => Boolean): Fields => Boolean =
     numVal(v) match {
-      case Some(n) => val g = numField(a); p => g(p).exists(op(_, n))
+      case Some(n) => val g = numField(a); p => { val x = g(p); x >= 0 && op(x, n) }
       case None    => _ => true // unexpected literal type: decode everything, Spark re-filters
     }
 
-  def toPredicate(fs: Array[Filter], file: String): Packet => Boolean =
+  def toPredicate(fs: Array[Filter], file: String): Fields => Boolean =
     if (fs.isEmpty) { _ => true }
     else { val ps = fs.map(compile(_, file)); p => ps.forall(_(p)) }
 }
 
 /** Scan with column pruning (SupportsPushDownRequiredColumns) and filter
   * pushdown (SupportsPushDownFilters). Catalyst hands us the required
-  * columns, so `SELECT protocol FROM pcap` skips dotted-quad string
-  * formatting (no src_ip/dst_ip), the whole network decode (no network
-  * columns), and the Metamako trailer scan (no mm_* columns) per packet —
-  * at 100 TB of captures the formatting alone dominates an un-pruned
-  * scan. Pushed filters additionally skip row construction for
-  * non-matching packets (see [[PcapFilters]]). */
+  * columns, so `SELECT protocol FROM pcap` skips address formatting (no
+  * src_ip/dst_ip), the whole network decode (no network columns), and
+  * the Metamako trailer scan (no mm_* columns) per packet. Pushed
+  * filters additionally skip the append of non-matching packets (see
+  * [[PcapFilters]]). */
 class PcapScanBuilder(path: String, strict: Boolean, conf: SerializableHadoopConf,
                       splitBytes: Long = 0L, maxFilesPerTrigger: Int = 0)
     extends ScanBuilder with Scan with Batch
@@ -398,6 +383,11 @@ class PcapScanBuilder(path: String, strict: Boolean, conf: SerializableHadoopCon
   private var required: StructType = PcapDataSource.schema
   private var pushed: Array[Filter] = Array.empty
   private var runtime: Array[Filter] = Array.empty
+  /** The hadoop conf shipped to executors ONCE per scan, as Spark's own
+    * `FileScan` does — serialized into each task, it was deserialized by
+    * every task. */
+  private lazy val broadcastConf: Broadcast[SerializableHadoopConf] =
+    SparkSession.active.sparkContext.broadcast(conf)
 
   /** Runtime filtering (r8, VERDICT r7 #6) — the DPP analog for the
     * non-partitioned pcap path: joining captures against a selective dim
@@ -432,13 +422,8 @@ class PcapScanBuilder(path: String, strict: Boolean, conf: SerializableHadoopCon
     * unknown (legacy pcap has no record count in the header). */
   override def estimateStatistics(): Statistics = new Statistics {
     private val total: Long =
-      try {
-        val c = conf.value
-        PcapDataSource.listCaptureFiles(path, c).map { f =>
-          val p = new HadoopPath(f)
-          p.getFileSystem(c).getFileStatus(p).getLen
-        }.sum
-      } catch { case _: Exception => -1L }
+      try PcapDataSource.listCaptureFilesWithLen(path, conf.value).map(_._2).sum
+      catch { case _: Exception => -1L }
     override def sizeInBytes(): OptionalLong =
       if (total < 0) OptionalLong.empty() else OptionalLong.of(total)
     override def numRows(): OptionalLong = OptionalLong.empty()
@@ -450,28 +435,31 @@ class PcapScanBuilder(path: String, strict: Boolean, conf: SerializableHadoopCon
     * decode. Chunk boundaries are raw byte offsets; the reader resolves
     * them to exact record boundaries (a record belongs to the chunk
     * containing its first byte) via the framing skim in
-    * [[PcapParser.parseFileRange]], so the union of chunk reads is
+    * [[PcapDataSource.skimLegacyChunk]], so the union of chunk reads is
     * byte-identical to the unsplit read, global `pkt_idx` included. */
   override def planInputPartitions(): Array[InputPartition] =
     PcapDataSource.listCaptureFilesWithLen(path, conf.value)
       .filterNot { case (f, _) => PcapFilters.rejectsWholeFile(runtime, f) }
       .flatMap { case (f, len) =>
-        if (splitBytes <= 0 || len <= splitBytes) Seq(PcapFilePartition(f))
+        if (splitBytes <= 0 || len <= splitBytes) Seq(PcapFilePartition(f, len))
         else {
           val n = ((len + splitBytes - 1) / splitBytes).toInt
           (0 until n).map { i =>
-            PcapFilePartition(f, i * splitBytes,
+            PcapFilePartition(f, len, i * splitBytes,
               if (i == n - 1) Long.MaxValue else (i + 1) * splitBytes)
           }
         }
       }.map(p => p: InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new PcapReaderFactory(required, pushed ++ runtime, strict, conf)
+    new PcapReaderFactory(required, pushed ++ runtime, strict, broadcastConf)
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new PcapMicroBatchStream(path, required, pushed, strict, conf, maxFilesPerTrigger)
+    new PcapMicroBatchStream(path, required, pushed, strict, conf, broadcastConf,
+      maxFilesPerTrigger)
 }
 
-case class PcapFilePartition(file: String, rangeStart: Long = 0L,
+/** One capture file (or a byte range of one) with its length from the
+  * listing, so the reader needs no `getFileStatus` of its own. */
+case class PcapFilePartition(file: String, len: Long, rangeStart: Long = 0L,
                              rangeEnd: Long = Long.MaxValue) extends InputPartition
 
 /** Offset for the pcap stream: the count of (name-sorted) capture files
@@ -505,14 +493,16 @@ object PcapOffset {
   * source: `spark.readStream.format("pcap").load(dir)`. Each trigger picks
   * up capture files that appeared since the last committed offset, one
   * InputPartition per new file (the same unsplittable-file granularity as
-  * the batch scan). Contract: capture files are immutable once written and
-  * roll with lexicographically increasing names (how capture hardware
-  * names them) — ENFORCED via the last-filename carried in [[PcapOffset]]:
-  * a rename/delete/out-of-order landing fails the query loudly instead of
+  * the batch scan), read by the batch scan's columnar reader. Contract:
+  * capture files are immutable once written and roll with
+  * lexicographically increasing names (how capture hardware names them)
+  * — ENFORCED via the last-filename carried in [[PcapOffset]]: a
+  * rename/delete/out-of-order landing fails the query loudly instead of
   * silently replaying or skipping. Column pruning and filter pushdown
   * apply the same as the batch path. */
 class PcapMicroBatchStream(path: String, readSchema: StructType, pushed: Array[Filter],
                            strict: Boolean, conf: SerializableHadoopConf,
+                           broadcastConf: Broadcast[SerializableHadoopConf],
                            maxFilesPerTrigger: Int = 0)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
@@ -520,19 +510,20 @@ class PcapMicroBatchStream(path: String, readSchema: StructType, pushed: Array[F
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
   // snapshot the listing once per latestOffset() call so a file landing
   // mid-planning can't shift indices between latestOffset and plan
-  @volatile private var snapshot: Seq[String] = Nil
+  @volatile private var snapshot: Seq[(String, Long)] = Nil
+  private def list(): Seq[(String, Long)] =
+    PcapDataSource.listCaptureFilesWithLen(path, conf.value)
   // Trigger.AvailableNow (r15): pin the catch-up target at query start —
   // the stream drains to exactly this listing (in maxFilesPerTrigger-
   // bounded batches) and stops; files landing mid-drain wait for the
   // next run. Same contract as the table stream's AvailableNow.
   @volatile private var availableNowTarget: Option[Int] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget =
-      Some(PcapDataSource.listCaptureFiles(path, conf.value).size)
+    availableNowTarget = Some(list().size)
   override def initialOffset(): Offset = PcapOffset(0, None)
   override def latestOffset(): Offset = {
-    snapshot = PcapDataSource.listCaptureFiles(path, conf.value)
-    PcapOffset(snapshot.size, snapshot.lastOption)
+    snapshot = list()
+    PcapOffset(snapshot.size, snapshot.lastOption.map(_._1))
   }
   /** ADMISSION CONTROL (r15, VERDICT r14 #6) — the `maxFilesPerTrigger`
     * analog the capture-directory source was missing: a restart against
@@ -550,113 +541,181 @@ class PcapMicroBatchStream(path: String, readSchema: StructType, pushed: Array[F
     if (maxFilesPerTrigger > 0) ReadLimit.maxFiles(maxFilesPerTrigger)
     else ReadLimit.allAvailable()
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    snapshot = PcapDataSource.listCaptureFiles(path, conf.value)
+    snapshot = list()
     val s = start.asInstanceOf[PcapOffset]
     val avail = availableNowTarget.fold(snapshot.size)(math.min(snapshot.size, _))
     val cap = limit match {
       case m: ReadMaxFiles => math.min(avail, s.n + m.maxFiles())
       case _ => avail
     }
-    PcapOffset(cap, if (cap > 0) Some(snapshot(cap - 1)) else None)
+    PcapOffset(cap, if (cap > 0) Some(snapshot(cap - 1)._1) else None)
   }
   /** True head of the directory regardless of the cap — the engine's
     * backlog/lag metric reads this. */
   override def reportLatestOffset(): Offset =
-    PcapOffset(snapshot.size, snapshot.lastOption)
+    PcapOffset(snapshot.size, snapshot.lastOption.map(_._1))
   override def deserializeOffset(json: String): Offset = PcapOffset.fromJson(json)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PcapOffset]
     val e = end.asInstanceOf[PcapOffset]
-    val files =
-      if (snapshot.size >= e.n) snapshot
-      else PcapDataSource.listCaptureFiles(path, conf.value)
+    val files = if (snapshot.size >= e.n) snapshot else list()
     if (s.n > 0) s.last.foreach { committed =>
-      val now = if (files.size < s.n) None else Some(files(s.n - 1))
+      val now = if (files.size < s.n) None else Some(files(s.n - 1)._1)
       if (!now.contains(committed)) throw new IllegalStateException(
         s"pcap stream listing shifted under committed offset $s: file #${s.n - 1} was " +
           s"'$committed' but is now ${now.fold("missing")(f => s"'$f'")} — capture files must " +
           "roll append-only with lexicographically increasing names (no renames/deletes)")
     }
-    files.slice(s.n, e.n).map(PcapFilePartition(_): InputPartition).toArray
+    files.slice(s.n, e.n).map { case (f, len) => PcapFilePartition(f, len): InputPartition }
+      .toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new PcapReaderFactory(readSchema, pushed, strict, conf)
+    new PcapReaderFactory(readSchema, pushed, strict, broadcastConf)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-class PcapReaderFactory(readSchema: StructType, pushed: Array[Filter],
-                        strict: Boolean, conf: SerializableHadoopConf)
+/** Columnar-only: every partition reads through [[PcapColumnarReader]],
+  * and Spark inserts `ColumnarToRow` where a consumer needs rows. */
+class PcapReaderFactory(readSchema: StructType, pushed: Array[Filter], strict: Boolean,
+                        conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[PcapFilePartition]
-    val file = part.file
-    val names = readSchema.fieldNames
-    // decode must cover pushed-filter columns too, even when pruned away
-    val need = names.toSet ++ pushed.flatMap(_.references)
-    val wants = PcapParser.Wants(
-      ips = need("src_ip") || need("dst_ip"),
-      net = Seq("src_ip", "dst_ip", "protocol", "src_port", "dst_port").exists(need),
-      trailers = Seq("mm_ts", "mm_id", "mm_port").exists(need))
-    new PartitionReader[InternalRow] {
-      private val fileUtf8 = UTF8String.fromString(file)
-      // one value extractor per REQUIRED column, in the pruned schema's order
-      private val getters: Array[PcapParser.Packet => Any] = names.map {
-        case "file" => (_: PcapParser.Packet) => fileUtf8
-        case "pkt_idx" => (p: PcapParser.Packet) => p.pkt_idx
-        case "src_ip" => (p: PcapParser.Packet) => p.src_ip.map(UTF8String.fromString).orNull
-        case "dst_ip" => (p: PcapParser.Packet) => p.dst_ip.map(UTF8String.fromString).orNull
-        case "len" => (p: PcapParser.Packet) => p.len.map(Long.box).orNull
-        case "protocol" => (p: PcapParser.Packet) => p.protocol.map(UTF8String.fromString).orNull
-        case "src_port" => (p: PcapParser.Packet) => p.src_port.map(Int.box).orNull
-        case "dst_port" => (p: PcapParser.Packet) => p.dst_port.map(Int.box).orNull
-        case "mm_ts" => (p: PcapParser.Packet) => p.mm_ts.map(Long.box).orNull
-        case "mm_id" => (p: PcapParser.Packet) => p.mm_id.map(Int.box).orNull
-        case "mm_port" => (p: PcapParser.Packet) => p.mm_port.map(Int.box).orNull
-        case other => throw new IllegalArgumentException(s"unknown pcap column $other")
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("the pcap source reads columnar batches only")
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new PcapColumnarReader(partition.asInstanceOf[PcapFilePartition], readSchema, pushed,
+      strict, conf.value.value)
+}
+
+object PcapColumnarReader {
+  /** Rows per batch — Spark's own parquet/orc vectorized-reader default. */
+  val BatchRows = 4096
+
+  // ordinals in PcapDataSource.schema
+  private final val File = 0
+  private final val PktIdx = 1
+  private final val SrcIp = 2
+  private final val DstIp = 3
+  private final val Len = 4
+  private final val Protocol = 5
+  private final val SrcPort = 6
+  private final val DstPort = 7
+  private final val MmTs = 8
+  private final val MmId = 9
+  private final val MmPort = 10
+
+  private val ProtocolUtf8: Array[Array[Byte]] =
+    PcapParser.ProtocolNames.map(n => if (n == null) null else n.getBytes(UTF_8))
+}
+
+/** Decodes one capture partition straight into column vectors: each
+  * record is decoded IN PLACE from the capture buffer by
+  * [[PcapParser.decodeFields]] into one reused [[PcapParser.Fields]], the
+  * pushed filters run on those scalars, and a passing record's required
+  * columns are written into reused `OnHeapColumnVector`s — addresses as
+  * text bytes, NULLs as vector nulls, `file` as one constant vector. No
+  * object is allocated per packet.
+  *
+  * Buffers: an unsplit partition reads the whole capture; a CHUNK
+  * partition of a legacy capture (r8) first runs a SEEK-BASED framing
+  * skim over the 16-byte record headers through a 1 MiB sliding window
+  * to the chunk's exact [startOff, endOff) record range — payloads are
+  * hopped, the prefix is never materialized, so legacy captures far
+  * beyond 2 GiB chunk-read fine — and reads just that range. pcapng has
+  * no fixed record framing (SHB/IDB section state), so its chunks fall
+  * back to the full-buffer range walk, capped at 2 GiB per file. A
+  * file-level predicate that rejects the whole partition skips even the
+  * read (no bytes fetched, nothing decoded). */
+final class PcapColumnarReader(part: PcapFilePartition, schema: StructType,
+                               pushed: Array[Filter], strict: Boolean, conf: Configuration)
+    extends PartitionReader[ColumnarBatch] {
+  import PcapColumnarReader._
+
+  private val file = part.file
+  private val kinds: Array[Int] = schema.fieldNames.map(n => PcapDataSource.schema.fieldIndex(n))
+  // decode must cover pushed-filter columns too, even when pruned away
+  private val need = schema.fieldNames.toSet ++ pushed.flatMap(_.references)
+  private val wants = PcapParser.Wants(
+    ips = need("src_ip") || need("dst_ip"),
+    net = Seq("src_ip", "dst_ip", "protocol", "src_port", "dst_port").exists(need),
+    trailers = Seq("mm_ts", "mm_id", "mm_port").exists(need))
+  private val pred = PcapFilters.toPredicate(pushed, file)
+
+  private val cursor: PcapParser.RecordCursor =
+    if (PcapFilters.rejectsWholeFile(pushed, file)) PcapParser.EmptyCursor
+    else if (part.rangeStart == 0L && part.rangeEnd == Long.MaxValue)
+      PcapParser.openFile(PcapDataSource.readCaptureBytes(file, conf, part.len), strict, file)
+    else PcapDataSource.skimLegacyChunk(file, conf, part.len,
+        part.rangeStart, part.rangeEnd, strict) match {
+      case Some(w) if w.startOff >= w.endOff => PcapParser.EmptyCursor
+      case Some(w) =>
+        PcapParser.openRecords(
+          PcapDataSource.readCaptureRange(file, conf, w.startOff, w.endOff),
+          w.swapped, w.baseIdx, strict, file)
+      case None =>
+        PcapParser.openFile(PcapDataSource.readCaptureBytes(file, conf, part.len),
+          strict, file, part.rangeStart, part.rangeEnd)
+    }
+
+  /** Writable vector per column, in the pruned schema's order; null for
+    * the constant `file` column. */
+  private val vectors: Array[WritableColumnVector] = kinds.map { k =>
+    if (k == File) null
+    else new OnHeapColumnVector(BatchRows, PcapDataSource.schema(k).dataType)
+  }
+  private val batch = new ColumnarBatch(kinds.indices.map { c =>
+    if (kinds(c) == File) {
+      val v = new ConstantColumnVector(BatchRows, StringType)
+      v.setUtf8String(UTF8String.fromString(file))
+      v
+    } else vectors(c): ColumnVector
+  }.toArray)
+  private val fields = new PcapParser.Fields
+  private val text = new Array[Byte](40)
+
+  override def next(): Boolean = {
+    vectors.foreach(v => if (v != null) v.reset())
+    var n = 0
+    while (n < BatchRows && cursor.next()) {
+      val b = cursor.bytes
+      fields.pktIdx = cursor.idx
+      PcapParser.decodeFields(b, cursor.off, cursor.off + cursor.inclLen, cursor.tsSec,
+        cursor.origLen, wants, fields)
+      if (pred(fields)) { append(b, n); n += 1 }
+    }
+    batch.setNumRows(n)
+    n > 0
+  }
+
+  private def append(b: Array[Byte], row: Int): Unit = {
+    val f = fields
+    var c = 0
+    while (c < kinds.length) {
+      val v = vectors(c)
+      (kinds(c): @switch) match {
+        case PktIdx => v.putLong(row, f.pktIdx)
+        case SrcIp => putIp(b, v, row, f.ipOff)
+        case DstIp => putIp(b, v, row, f.dstOff)
+        case Len => if (f.len < 0) v.putNull(row) else v.putLong(row, f.len)
+        case Protocol =>
+          if (f.protocol == 0) v.putNull(row)
+          else { val s = ProtocolUtf8(f.protocol); v.putByteArray(row, s, 0, s.length) }
+        case SrcPort => if (f.srcPort < 0) v.putNull(row) else v.putInt(row, f.srcPort)
+        case DstPort => if (f.dstPort < 0) v.putNull(row) else v.putInt(row, f.dstPort)
+        case MmTs => if (f.trailer) v.putLong(row, f.mmTs) else v.putNull(row)
+        case MmId => if (f.trailer) v.putInt(row, f.mmId) else v.putNull(row)
+        case MmPort => if (f.trailer) v.putInt(row, f.mmPort) else v.putNull(row)
+        case _ => // File: the constant vector
       }
-      // pushed filters run on the decoded Packet, BEFORE InternalRow
-      // construction — non-matching packets never allocate a row; a
-      // file-level predicate that rejects this whole partition skips even
-      // the read (no bytes fetched, nothing decoded)
-      private val pred = PcapFilters.toPredicate(pushed, file)
-      private val it: Iterator[PcapParser.Packet] =
-        if (PcapFilters.rejectsWholeFile(pushed, file)) Iterator.empty
-        else if (part.rangeEnd == Long.MaxValue && part.rangeStart == 0L)
-          // unsplit partition: whole-file read, identical to pre-r7
-          PcapParser.parseFile(
-            PcapDataSource.readCaptureBytes(file, conf.value),
-            wants, strict = strict, name = file).filter(pred)
-        else {
-          // CHUNK partition (r8): a SEEK-BASED framing skim walks the
-          // 16-byte record headers through a 1 MiB sliding window to the
-          // chunk's exact [startOff, endOff) record range — payloads are
-          // hopped, the prefix is never materialized, so legacy captures
-          // far beyond 2 GiB chunk-read fine (the pre-r8 prefix fetch
-          // re-imposed the array cap on every big file's last chunk).
-          // Decode CPU — the bottleneck — parallelizes per chunk; skim
-          // work is header arithmetic. pcapng has no fixed record
-          // framing (SHB/IDB section state), so it falls back to the
-          // full-buffer range parse, capped at 2 GiB per file.
-          PcapDataSource.skimLegacyChunk(file, conf.value,
-            part.rangeStart, part.rangeEnd, strict) match {
-            case Some(w) if w.startOff >= w.endOff => Iterator.empty
-            case Some(w) =>
-              PcapParser.parseRecords(
-                PcapDataSource.readCaptureRange(file, conf.value, w.startOff, w.endOff),
-                w.swapped, w.baseIdx, wants, strict = strict, name = file).filter(pred)
-            case None =>
-              PcapParser.parseFileRange(
-                PcapDataSource.readCaptureBytes(file, conf.value),
-                wants, strict = strict, name = file,
-                part.rangeStart, part.rangeEnd, moreAfterBuffer = false).filter(pred)
-          }
-        }
-      private var current: PcapParser.Packet = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) current = it.next(); h }
-      override def get(): InternalRow =
-        new GenericInternalRow(getters.map(_(current)))
-      override def close(): Unit = ()
+      c += 1
     }
   }
+
+  private def putIp(b: Array[Byte], v: WritableColumnVector, row: Int, addrOff: Int): Unit =
+    if (fields.ipVersion == 0) v.putNull(row)
+    else v.putByteArray(row, text, 0, PcapParser.writeIpText(b, addrOff, fields.ipVersion, text))
+
+  override def get(): ColumnarBatch = batch
+  override def close(): Unit = batch.close()
 }

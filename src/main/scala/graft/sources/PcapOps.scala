@@ -9,24 +9,20 @@ import graft.Tables
   *
   * Scale notes (100 TB):
   *  - `pcap_ingest` models the production shape: one capture file = one
-  *    unsplittable unit (legacy pcap has no sync markers — SURVEY.md risk
-  *    #4), decoded inside `flatMap` on executors. A directory of N
-  *    capture files parallelizes to N tasks via
-  *    `spark.read.format("binaryFile")` with exactly this per-file
-  *    decoder; here the input is the deterministic synthetic capture
-  *    (no pcap exists in the driver corpus).
+  *    input partition of the `pcap` DataSource V2 connector
+  *    (PcapDataSource.scala; legacy pcap has no sync markers — SURVEY.md
+  *    risk #4), decoded on executors. A directory of N capture files
+  *    parallelizes to N tasks; here the input is the deterministic
+  *    synthetic capture (the query corpus holds no pcap).
   *  - The per-packet single-row RecordBatch anti-pattern of the reference
-  *    (main.rs:104-106; SURVEY.md §4.2) disappears: rows flow through
-  *    Tungsten batches and columnar parquet write buffering.
+  *    (main.rs:104-106; SURVEY.md §4.2) disappears: the connector decodes
+  *    straight into 4096-row column vectors, and the parquet writer
+  *    buffers columnar pages.
   *  - `sink_parquet_zstd` reproduces the reference writer config
   *    (main.rs:72-77): ZSTD compression, parquet v2 page format.
   */
 object PcapOps {
 
-  /** Synthetic capture ingested through the DataSource V2 connector
-    * (`spark.read.format("pcap")`, PcapDataSource.scala) — one input
-    * partition per capture file, decode on executors. Mirrors main()
-    * (main.rs:59-122) as a distributed pipeline. */
   /** Writes the golden synthetic capture to scratch, returns its dir. */
   private[graft] def goldenCaptureDir(): String = {
     val capDir = new java.io.File(s"${Tables.scratchDir}/captures")
@@ -36,6 +32,10 @@ object PcapOps {
     capDir.getAbsolutePath
   }
 
+  /** Synthetic capture ingested through the DataSource V2 connector
+    * (`spark.read.format("pcap")`, PcapDataSource.scala) — one input
+    * partition per capture file, decode on executors. Mirrors main()
+    * (main.rs:59-122) as a distributed pipeline. */
   def pcapIngest(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("pcap").load(goldenCaptureDir())
       .drop("file")
@@ -62,9 +62,9 @@ object PcapOps {
     * on the ORIGINAL table. */
   def sinkParquetZstd(spark: SparkSession, dir: String): DataFrame = {
     val out = s"${Tables.scratchDir}/sink_parquet_zstd"
-    spark.sparkContext.hadoopConfiguration.set("parquet.writer.version", "v2")
     Tables.t(spark, dir, "lineitem")
-      .write.mode("overwrite").option("compression", "zstd").parquet(out)
+      .write.mode("overwrite").option("compression", "zstd")
+      .option("parquet.writer.version", "v2").parquet(out)
     spark.read.parquet(out)
       .agg(count(lit(1)).as("n_rows"),
            round(sum(col("l_quantity").cast("decimal(18,2)")), 2).cast("double").as("sum_qty"),
@@ -109,10 +109,9 @@ object PcapOps {
 
   /** Pushdown probe at ingest scale (r4): the same 200k-packet capture with
     * a `protocol = 'TCP'` predicate. The DSv2 scan receives the filter
-    * (SupportsPushDownFilters) and drops non-matching packets BEFORE
-    * InternalRow construction — at 100 TB of captures the skipped
-    * dotted-quad formatting and row allocation are most of a filtered
-    * scan's cost. PcapSourceSpec pins both the pushed plan and row
+    * (SupportsPushDownFilters) and drops non-matching packets before
+    * they are appended to the column vectors — at 100 TB of captures the
+    * skipped dotted-quad formatting is most of a filtered scan's cost. PcapSourceSpec pins both the pushed plan and row
     * agreement with the unfiltered histogram. */
   def pcapFilterPush(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("pcap").load(largeCaptureDir())

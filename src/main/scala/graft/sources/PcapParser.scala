@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.US_ASCII
+
 /** Pure-Scala legacy-pcap frame decoder — the reference's entire job
   * re-expressed as a deterministic byte-slice -> row function
   * (SURVEY.md §2.A, A1–A9; semantics cited per function below from
@@ -11,11 +13,14 @@ package graft.sources
   * buffer with `origlen`, main.rs:97); we yield NULL fields instead
   * (SURVEY.md §2.A "fidelity traps" #1, FIXTURES.md §2 case 12).
   *
-  * Scale note: the decoder is a pure function over a byte slice with no
-  * allocation beyond the output row — usable inside `flatMap` /
-  * `mapPartitions` over a `binaryFile` scan, one task per capture file
-  * (legacy pcap has no record sync markers, so file granularity is the
-  * correct split unit — SURVEY.md §7 M2 / risk #4).
+  * Shape: ONE field decoder, [[decodeFields]], reads a record IN PLACE
+  * from the capture buffer (no per-record copy) into the mutable scalar
+  * slots of a reused [[Fields]]; container walks are pull-based
+  * [[RecordCursor]]s. The DSv2 columnar reader feeds cursor + decoder
+  * straight into column vectors, allocating nothing per packet (IP text
+  * is formatted into a scratch byte array). [[Packet]] and the
+  * Iterator-returning `parse*` entry points are thin wrappers over the
+  * same cursor + decoder for callers that want one object per record.
   */
 object PcapParser {
 
@@ -35,6 +40,36 @@ object PcapParser {
       mm_id: Option[Int],         // u16 -> int
       mm_port: Option[Int])       // u8 -> int
 
+  /** Protocol names by [[Fields.protocol]] code; code 0 is NULL. */
+  val ProtocolNames: Array[String] = Array(null, "ICMP", "IGMP", "TCP", "UDP", "ICMPv6")
+  private final val Icmp = 1
+  private final val Igmp = 2
+  private final val Tcp = 3
+  private final val Udp = 4
+  private final val Icmpv6 = 5
+
+  /** The decoded scalars of one record, reused across records. Every
+    * nullable numeric field is non-negative when present, so a negative
+    * value means NULL; `protocol` 0 means NULL. The addresses are NOT
+    * decoded to text: `ipVersion` (0 = none, 4 or 6), `ipOff` (buffer
+    * offset of the source address) and `dstOff` let the consumer format
+    * them straight into its own output with [[writeIpText]]. */
+  final class Fields {
+    var pktIdx: Long = 0L
+    var len: Long = -1L
+    var ipVersion: Int = 0
+    var ipOff: Int = 0
+    var protocol: Int = 0
+    var srcPort: Int = -1
+    var dstPort: Int = -1
+    var trailer: Boolean = false
+    var mmTs: Long = 0L
+    var mmId: Int = 0
+    var mmPort: Int = 0
+    /** Buffer offset of the destination address. */
+    def dstOff: Int = ipOff + (if (ipVersion == 4) 4 else 16)
+  }
+
   private def be16(b: Array[Byte], off: Int): Int =
     ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
   private def be32(b: Array[Byte], off: Int): Long =
@@ -47,35 +82,27 @@ object PcapParser {
     ((b(off + 1) & 0xff) << 8) | (b(off) & 0xff)
 
   /** TCP/UDP port extraction (main.rs:213-231): BE u16 at L4 offsets 0/2. */
-  private def parsePorts(b: Array[Byte], off: Int): (Option[Int], Option[Int]) =
-    if (off + 4 <= b.length) (Some(be16(b, off)), Some(be16(b, off + 2)))
-    else (None, None)
+  private def decodePorts(b: Array[Byte], l4: Int, end: Int, f: Fields): Unit =
+    if (l4 + 4 <= end) { f.srcPort = be16(b, l4); f.dstPort = be16(b, l4 + 2) }
 
   /** IPv4 header decode (main.rs:185-211): IHL from the low nibble of
     * byte 0; protocol at byte 9; src/dst addresses at bytes 12-15/16-19
-    * formatted dotted-quad (main.rs:193-196); dispatch 1/2/6/17 ->
-    * ICMP/IGMP/TCP/UDP (main.rs:198-210), anything else leaves protocol
-    * NULL. No checksum/fragment/option handling, as in the reference.
-    * `wantIps = false` (column pruned at the scan) skips the dotted-quad
-    * string formatting — the dominant per-packet cost. */
-  private def parseIpv4(b: Array[Byte], off: Int, p: Packet, wantIps: Boolean): Packet = {
-    if (off + 20 > b.length) return p
+    * (formatted dotted-quad by [[writeIpText]], main.rs:193-196); dispatch
+    * 1/2/6/17 -> ICMP/IGMP/TCP/UDP (main.rs:198-210), anything else leaves
+    * protocol NULL. No checksum/fragment/option handling, as in the
+    * reference. `wantIps = false` (column pruned at the scan) leaves the
+    * addresses unrecorded, so nothing downstream formats them. */
+  private def decodeIpv4(b: Array[Byte], off: Int, end: Int, wantIps: Boolean,
+                         f: Fields): Unit = {
+    if (off + 20 > end) return
     val ihl = (b(off) & 0x0f) * 4
-    val proto = b(off + 9) & 0xff
-    def quad(o: Int) = s"${b(o) & 0xff}.${b(o + 1) & 0xff}.${b(o + 2) & 0xff}.${b(o + 3) & 0xff}"
-    val withIps =
-      if (wantIps) p.copy(src_ip = Some(quad(off + 12)), dst_ip = Some(quad(off + 16)))
-      else p
-    proto match {
-      case 1 => withIps.copy(protocol = Some("ICMP"))
-      case 2 => withIps.copy(protocol = Some("IGMP"))
-      case 6 =>
-        val (s, d) = parsePorts(b, off + ihl)
-        withIps.copy(protocol = Some("TCP"), src_port = s, dst_port = d)
-      case 17 =>
-        val (s, d) = parsePorts(b, off + ihl)
-        withIps.copy(protocol = Some("UDP"), src_port = s, dst_port = d)
-      case _ => withIps // protocol number not mapped -> name stays NULL
+    if (wantIps) { f.ipVersion = 4; f.ipOff = off + 12 }
+    (b(off + 9) & 0xff) match {
+      case 1 => f.protocol = Icmp
+      case 2 => f.protocol = Igmp
+      case 6 => f.protocol = Tcp; decodePorts(b, off + ihl, end, f)
+      case 17 => f.protocol = Udp; decodePorts(b, off + ihl, end, f)
+      case _ => // protocol number not mapped -> name stays NULL
     }
   }
 
@@ -90,18 +117,15 @@ object PcapParser {
     * bounded at 8, each (next, (len+1)·8) except fragment's fixed 8 —
     * to reach TCP/UDP/ICMPv6; an unmapped or truncated chain leaves
     * protocol NULL, exactly the IPv4 posture. */
-  private def parseIpv6(b: Array[Byte], off: Int, p: Packet, wantIps: Boolean): Packet = {
-    if (off + 40 > b.length) return p
-    def addr(o: Int) =
-      (0 until 8).map(i => Integer.toHexString(be16(b, o + 2 * i))).mkString(":")
-    val withIps =
-      if (wantIps) p.copy(src_ip = Some(addr(off + 8)), dst_ip = Some(addr(off + 24)))
-      else p
+  private def decodeIpv6(b: Array[Byte], off: Int, end: Int, wantIps: Boolean,
+                         f: Fields): Unit = {
+    if (off + 40 > end) return
+    if (wantIps) { f.ipVersion = 6; f.ipOff = off + 8 }
     var next = b(off + 6) & 0xff
     var l4 = off + 40
     var hops = 0
     while ((next == 0 || next == 43 || next == 44 || next == 60) &&
-           hops < 8 && l4 + 8 <= b.length) {
+           hops < 8 && l4 + 8 <= end) {
       val n = b(l4) & 0xff
       val len = if (next == 44) 8 else ((b(l4 + 1) & 0xff) + 1) * 8
       next = n
@@ -109,14 +133,10 @@ object PcapParser {
       hops += 1
     }
     next match {
-      case 6 =>
-        val (s, d) = parsePorts(b, l4)
-        withIps.copy(protocol = Some("TCP"), src_port = s, dst_port = d)
-      case 17 =>
-        val (s, d) = parsePorts(b, l4)
-        withIps.copy(protocol = Some("UDP"), src_port = s, dst_port = d)
-      case 58 => withIps.copy(protocol = Some("ICMPv6"))
-      case _ => withIps
+      case 6 => f.protocol = Tcp; decodePorts(b, l4, end, f)
+      case 17 => f.protocol = Udp; decodePorts(b, l4, end, f)
+      case 58 => f.protocol = Icmpv6
+      case _ =>
     }
   }
 
@@ -127,39 +147,41 @@ object PcapParser {
     * dispatches to the IPv6 decoder. ARP and everything else still
     * leaves fields NULL. MACs deliberately not extracted
     * (main.rs:235-236). */
-  def parseEthernet(b: Array[Byte], p: Packet, wantIps: Boolean = true): Packet = {
-    if (b.length < 14) return p
-    var off = 12
+  private def decodeEthernet(b: Array[Byte], start: Int, end: Int, wantIps: Boolean,
+                             f: Fields): Unit = {
+    if (end - start < 14) return
+    var off = start + 12
     var tags = 0
     var et = be16(b, off)
     while ((et == 0x8100 || et == 0x88a8 || et == 0x9100) &&
-           tags < 4 && off + 6 <= b.length) {
+           tags < 4 && off + 6 <= end) {
       off += 4
       et = be16(b, off)
       tags += 1
     }
-    et match {
-      case 0x0800 => parseIpv4(b, off + 2, p, wantIps)
-      case 0x86dd => parseIpv6(b, off + 2, p, wantIps)
-      case _ => p
-    }
+    if (et == 0x0800) decodeIpv4(b, off + 2, end, wantIps, f)
+    else if (et == 0x86dd) decodeIpv6(b, off + 2, end, wantIps, f)
   }
 
-  /** Single Metamako trailer probe at `end` (exclusive) — main.rs:157-183.
-    * Valid iff |pcap_ts_sec - mm_s| < 300 and mm_ns < 1e9 (main.rs:174).
-    * Returns the trailer fields without mutating — the CALLER decides
-    * overwrite order (first-device-wins, main.rs:127). */
-  private def probeTrailer(b: Array[Byte], end: Int, pcapTsSec: Long): Option[(Long, Int, Int)] = {
-    if (end < 16 || end > b.length) return None
-    val s = be32(b, end - 12).toInt  // BE i32 seconds
-    val ns = be32(b, end - 8).toInt  // BE i32 nanoseconds
+  /** Single Metamako trailer probe at `e` (exclusive) of the frame
+    * `[start, end)` — main.rs:157-183. Valid iff |pcap_ts_sec - mm_s| <
+    * 300 and mm_ns < 1e9 (main.rs:174). A hit overwrites the trailer
+    * fields, so the CALLER's probe order decides which trailer wins
+    * (first-device-wins, main.rs:127). */
+  private def probeTrailer(b: Array[Byte], start: Int, end: Int, e: Int,
+                           pcapTsSec: Long, f: Fields): Boolean = {
+    if (e - start < 16 || e > end) return false
+    val s = be32(b, e - 12).toInt  // BE i32 seconds
+    val ns = be32(b, e - 8).toInt  // BE i32 nanoseconds
     // NB: the reference only checks ns < 1e9, NOT ns >= 0 (main.rs:174) —
     // a negative i32 ns passes and is added signed; replicated faithfully.
     if (math.abs(pcapTsSec - s) < 300 && ns < 1000000000) {
-      val id = be16(b, end - 3)
-      val port = b(end - 1) & 0xff
-      Some((s.toLong * 1000000000L + ns, id, port))
-    } else None
+      f.trailer = true
+      f.mmTs = s.toLong * 1000000000L + ns
+      f.mmId = be16(b, e - 3)
+      f.mmPort = b(e - 1) & 0xff
+      true
+    } else false
   }
 
   /** Multi-trailer scan (main.rs:128-148): probe at the full length; on a
@@ -168,47 +190,138 @@ object PcapParser {
     * overwrite, so the FIRST-appended (innermost) trailer wins
     * (main.rs:127). If the probe at full length misses, retry once
     * assuming a trailing 4-byte FCS (main.rs:141-146). Scans against the
-    * actual buffer length, never past it (divergence: reference indexes
+    * actual frame length, never past it (divergence: reference indexes
     * with origlen and can panic). */
-  def extractTrailers(b: Array[Byte], pcapTsSec: Long, p: Packet): Packet = {
-    val len = b.length
-    def scanFrom(end: Int): Option[(Long, Int, Int)] =
-      probeTrailer(b, end, pcapTsSec) match {
-        case None => None
-        case Some(first) =>
-          var best = first
-          var i = 16 // bytes consumed from the tail so far
-          while (end - i >= 16) {
-            probeTrailer(b, end - i, pcapTsSec) match {
-              case Some(t) => best = t; i += 16
-              case None => i += 1
-            }
-          }
-          Some(best)
+  private def decodeTrailers(b: Array[Byte], start: Int, end: Int, pcapTsSec: Long,
+                             f: Fields): Unit = {
+    def scanFrom(e: Int): Boolean =
+      probeTrailer(b, start, end, e, pcapTsSec, f) && {
+        var i = 16 // bytes consumed from the tail so far
+        while (e - i - start >= 16)
+          i += (if (probeTrailer(b, start, end, e - i, pcapTsSec, f)) 16 else 1)
+        true
       }
-    val hit = scanFrom(len).orElse(scanFrom(len - 4)) // FCS retry
-    hit.fold(p) { case (ts, id, port) =>
-      p.copy(mm_ts = Some(ts), mm_id = Some(id), mm_port = Some(port))
-    }
+    if (!scanFrom(end)) scanFrom(end - 4) // FCS retry
   }
 
   /** Which column groups a consumer actually needs — the scan-side pruning
-    * contract. `ips` gates dotted-quad formatting, `net` the whole
+    * contract. `ips` gates address decoding, `net` the whole
     * Ethernet/IPv4/L4 decode, `trailers` the Metamako tail scan. Full
     * decode = Wants(true, true, true). */
   final case class Wants(ips: Boolean = true, net: Boolean = true, trailers: Boolean = true)
   val WantsAll: Wants = Wants()
 
-  /** Full per-record pipeline (main() body, main.rs:89-101): trailer scan
-    * guarded by origlen >= 16 (main.rs:92), then Ethernet decode. Pruned
-    * column groups (`wants`) skip their decode work entirely — the fields
-    * stay None, which the pruned scan never reads. */
+  /** THE field decoder — the per-record pipeline of main() (main.rs:89-101)
+    * over the frame `b[start, end)`, in place: trailer scan guarded by
+    * origlen >= 16 (main.rs:92), then Ethernet decode. Pruned column
+    * groups (`wants`) skip their decode work entirely — their fields stay
+    * NULL, which the pruned scan never reads. Resets every slot of `f`
+    * except `pktIdx`, which the caller owns. */
+  def decodeFields(b: Array[Byte], start: Int, end: Int, tsSec: Long, origLen: Long,
+                   wants: Wants, f: Fields): Unit = {
+    f.len = origLen
+    f.ipVersion = 0
+    f.protocol = 0
+    f.srcPort = -1
+    f.dstPort = -1
+    f.trailer = false
+    if (wants.trailers && origLen >= 16) decodeTrailers(b, start, end, tsSec, f)
+    if (wants.net) decodeEthernet(b, start, end, wants.ips, f)
+  }
+
+  private val HexDigits = "0123456789abcdef".getBytes(US_ASCII)
+
+  /** Text form of the address at `addrOff` into `out` from 0 (room for 39
+    * bytes), returning its length: dotted quad for IPv4, eight full-form
+    * lowercase-hex groups without leading zeros for IPv6. */
+  def writeIpText(b: Array[Byte], addrOff: Int, version: Int, out: Array[Byte]): Int = {
+    var n = 0
+    if (version == 4) {
+      var i = 0
+      while (i < 4) {
+        if (i > 0) { out(n) = '.'; n += 1 }
+        val v = b(addrOff + i) & 0xff
+        if (v >= 100) { out(n) = ('0' + v / 100).toByte; n += 1 }
+        if (v >= 10) { out(n) = ('0' + v / 10 % 10).toByte; n += 1 }
+        out(n) = ('0' + v % 10).toByte; n += 1
+        i += 1
+      }
+    } else {
+      var i = 0
+      while (i < 8) {
+        if (i > 0) { out(n) = ':'; n += 1 }
+        val v = be16(b, addrOff + 2 * i)
+        var shift = 12
+        while (shift > 0 && (v >> shift) == 0) shift -= 4
+        while (shift >= 0) { out(n) = HexDigits((v >> shift) & 0xf); n += 1; shift -= 4 }
+        i += 1
+      }
+    }
+    n
+  }
+
+  private def decodePacket(pktIdx: Long, b: Array[Byte], start: Int, end: Int,
+                           tsSec: Long, origLen: Long, wants: Wants): Packet = {
+    val f = new Fields
+    decodeFields(b, start, end, tsSec, origLen, wants, f)
+    def ip(dst: Boolean): Option[String] =
+      if (f.ipVersion == 0) None
+      else {
+        val out = new Array[Byte](40)
+        val at = if (dst) f.dstOff else f.ipOff
+        Some(new String(out, 0, writeIpText(b, at, f.ipVersion, out), US_ASCII))
+      }
+    def opt(v: Int): Option[Int] = if (v < 0) None else Some(v)
+    Packet(pktIdx, ip(dst = false), ip(dst = true), if (f.len < 0) None else Some(f.len),
+      Option(ProtocolNames(f.protocol)), opt(f.srcPort), opt(f.dstPort),
+      if (f.trailer) Some(f.mmTs) else None,
+      if (f.trailer) Some(f.mmId) else None,
+      if (f.trailer) Some(f.mmPort) else None)
+  }
+
+  /** One record as a [[Packet]]: [[decodeFields]] over the whole of
+    * `data`, addresses formatted to strings. */
   def decodeRecord(pktIdx: Long, data: Array[Byte], tsSec: Long, origLen: Long,
-                   wants: Wants = WantsAll): Packet = {
-    val base = Packet(pktIdx, None, None, Some(origLen), None, None, None, None, None, None)
-    val withMm =
-      if (wants.trailers && origLen >= 16) extractTrailers(data, tsSec, base) else base
-    if (wants.net) parseEthernet(data, withMm, wants.ips) else withMm
+                   wants: Wants = WantsAll): Packet =
+    decodePacket(pktIdx, data, 0, data.length, tsSec, origLen, wants)
+
+  // ---- record cursors ------------------------------------------------------
+
+  /** Pull-based walk over the records of one capture buffer. After
+    * `next()` returns true the current record's frame is
+    * `bytes[off, off + inclLen)`, with its ordinal, pcap timestamp
+    * seconds and original length alongside; `next()` returning false
+    * ends the walk (clean EOF, end of range, or — permissive — the first
+    * corrupt record). Strict walks raise [[PcapFormatException]]. */
+  abstract class RecordCursor {
+    var idx: Long = 0L
+    var off: Int = 0
+    var inclLen: Int = 0
+    var tsSec: Long = 0L
+    var origLen: Long = 0L
+    def bytes: Array[Byte]
+    def next(): Boolean
+  }
+
+  /** A cursor over no records. */
+  object EmptyCursor extends RecordCursor {
+    val bytes: Array[Byte] = Array.emptyByteArray
+    def next(): Boolean = false
+  }
+
+  /** Every remaining record of `c` as a [[Packet]]. */
+  private def packets(c: RecordCursor, wants: Wants): Iterator[Packet] = new Iterator[Packet] {
+    private var ready = false
+    private var done = false
+    def hasNext: Boolean = {
+      if (!ready && !done) { ready = c.next(); done = !ready }
+      ready
+    }
+    def next(): Packet = {
+      if (!hasNext) throw new NoSuchElementException("pcap iterator exhausted")
+      ready = false
+      decodePacket(c.idx, c.bytes, c.off, c.off + c.inclLen, c.tsSec, c.origLen, wants)
+    }
   }
 
   // ---- legacy pcap container (main.rs:64-66, 83-118) ---------------------
@@ -274,141 +387,131 @@ object PcapParser {
     * `[rangeStart, rangeEnd)`, with GLOBAL `pkt_idx` values, so the union
     * of the chunk reads of one capture is byte-identical to the unsplit
     * read. A record belongs to exactly the chunk containing its start.
+    * See [[openFile]] for the walk. */
+  def parseFileRange(bytes: Array[Byte], wants: Wants, strict: Boolean, name: String,
+                     rangeStart: Long, rangeEnd: Long,
+                     moreAfterBuffer: Boolean): Iterator[Packet] =
+    packets(openFile(bytes, strict, name, rangeStart, rangeEnd, moreAfterBuffer), wants)
+
+  /** Cursor over the records of one whole-capture buffer whose first byte
+    * lies in `[rangeStart, rangeEnd)`, the container sniffed from its
+    * magic. Header-level strict errors raise here, eagerly.
     *
     * Legacy pcap has no record sync markers, so a mid-file offset cannot
     * be decoded in isolation — and SPECULATIVE resync (scan for a
     * plausible header, validate N records ahead) was rejected: it cannot
     * recover the global record ordinal `pkt_idx` at all, and a crafted or
     * unlucky payload embedding a plausible header misframes silently.
-    * Instead every chunk SKIMS the file prefix: a framing-only walk
-    * (16-byte header arithmetic, no payload copy, no network decode, no
-    * trailer scan — the actual per-record cost) that lands on its range
-    * start EXACTLY, counting records on the way. Decode CPU — the
-    * bottleneck; the reference is CPU-bound single-threaded — then
-    * parallelizes per chunk, while skim work sums to C²/2 header walks
-    * costing a few % of one decode pass. pcapng chunks skim the same way,
+    * Instead a range walk SKIMS the file prefix: a framing-only walk
+    * (16-byte header arithmetic, no network decode, no trailer scan — the
+    * actual per-record cost) that lands on its range start EXACTLY,
+    * counting records on the way. pcapng ranges skim the same way,
     * additionally replaying SHB/IDB section state (byte order, tsresol,
     * snaplens) that mid-file packets depend on.
     *
     * `moreAfterBuffer = true` says the buffer is a PREFIX of the capture
     * (the caller prefetched `[0, rangeEnd + straddle)`): running out of
-    * buffer then just ends the chunk instead of raising "truncated", and
+    * buffer then just ends the walk instead of raising "truncated", and
     * a record that overruns the prefetch window (declared length past the
     * snaplen the window was sized by) is a named strict error. Structural
     * strict errors in the skimmed prefix raise exactly as the unsplit
     * read would — a malformed capture names itself from every chunk. */
-  def parseFileRange(bytes: Array[Byte], wants: Wants, strict: Boolean, name: String,
-                     rangeStart: Long, rangeEnd: Long,
-                     moreAfterBuffer: Boolean): Iterator[Packet] = {
+  def openFile(bytes: Array[Byte], strict: Boolean, name: String,
+               rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue,
+               moreAfterBuffer: Boolean = false): RecordCursor = {
     def fail(why: String): Nothing = throw new PcapFormatException(s"$name: $why")
     if (sniffPcapng(bytes))
-      return parsePcapng(bytes, wants, strict, name, rangeStart, rangeEnd)
+      return new PcapngCursor(bytes, strict, name, rangeStart, rangeEnd)
     if (bytes.length < 24) {
       if (strict) fail(s"truncated pcap global header (${bytes.length} bytes < 24)")
-      return Iterator.empty
+      return EmptyCursor
     }
     val magic = le32(bytes, 0)
-    val (swapped, ok) = magic match {
-      case MagicBe | MagicBeNs => (false, true)   // file written LE (we read LE)
-      case MagicLe | MagicLeNs => (true, true)    // file written BE
-      case _ => (false, false)                    // unknown container: stop
+    legacyByteOrder(bytes) match {
+      case Some(swapped) =>
+        new LegacyCursor(bytes, swapped, startOff = 24, baseIdx = 0L,
+          rangeStart, rangeEnd, moreAfterBuffer, strict, name)
+      case None =>
+        if (strict) fail(f"unrecognized pcap magic 0x$magic%08x — not a capture " +
+          "(read with option(\"mode\", \"permissive\") to skip unreadable files)")
+        EmptyCursor
     }
-    if (!ok) {
-      if (strict) fail(f"unrecognized pcap magic 0x$magic%08x — not a capture " +
-        "(read with option(\"mode\", \"permissive\") to skip unreadable files)")
-      return Iterator.empty
-    }
-    recordsIterator(bytes, swapped, startOff = 24, baseIdx = 0L,
-      rangeStart, rangeEnd, moreAfterBuffer, wants, strict, name)
   }
 
-  /** Parse a buffer holding legacy pcap RECORDS ONLY (no 24-byte global
-    * header) with absolute record ordinals from `baseIdx` — the decode
-    * half of the r8 seek-skim chunk reader: the skim walks framing
+  /** Cursor over a buffer holding legacy pcap RECORDS ONLY (no 24-byte
+    * global header) with absolute record ordinals from `baseIdx` — the
+    * decode half of the r8 seek-skim chunk reader: the skim walks framing
     * headers through a bounded window to find a chunk's exact byte
     * range, then hands JUST that range here. `swapped` carries the byte
     * order the capture's global header declared. */
-  def parseRecords(bytes: Array[Byte], swapped: Boolean, baseIdx: Long,
-                   wants: Wants, strict: Boolean, name: String): Iterator[Packet] =
-    recordsIterator(bytes, swapped, startOff = 0, baseIdx,
-      rangeStart = 0L, rangeEnd = Long.MaxValue, moreAfterBuffer = false,
-      wants, strict, name)
+  def openRecords(bytes: Array[Byte], swapped: Boolean, baseIdx: Long,
+                  strict: Boolean, name: String): RecordCursor =
+    new LegacyCursor(bytes, swapped, startOff = 0, baseIdx,
+      rangeStart = 0L, rangeEnd = Long.MaxValue, moreAfterBuffer = false, strict, name)
 
-  private def recordsIterator(bytes: Array[Byte], swapped: Boolean,
-                              startOff: Int, baseIdx: Long,
-                              rangeStart: Long, rangeEnd: Long,
-                              moreAfterBuffer: Boolean, wants: Wants,
-                              strict: Boolean, name: String): Iterator[Packet] = {
-    def fail(why: String): Nothing = throw new PcapFormatException(s"$name: $why")
-    def u32(off: Int): Long = if (swapped) be32(bytes, off) else le32(bytes, off)
-    new Iterator[Packet] {
-      private var off = startOff
-      private var idx = baseIdx
-      private var pending: Packet = _
-      private var exhausted = false
+  private final class LegacyCursor(val bytes: Array[Byte], swapped: Boolean,
+                                   startOff: Int, baseIdx: Long,
+                                   rangeStart: Long, rangeEnd: Long,
+                                   moreAfterBuffer: Boolean, strict: Boolean,
+                                   name: String) extends RecordCursor {
+    private def fail(why: String): Nothing = throw new PcapFormatException(s"$name: $why")
+    private def u32(o: Int): Long = if (swapped) be32(bytes, o) else le32(bytes, o)
+    private var pos = startOff
+    private var nextIdx = baseIdx
+    private var done = false
 
-      /** Next record in [rangeStart, rangeEnd), skimming earlier ones;
-        * null once the range (or the capture) is exhausted. */
-      private def advance(): Packet = {
-        while (true) {
-          if (off >= rangeEnd) return null // next chunk's record
-          val rem = bytes.length - off
+    /** Next record in [rangeStart, rangeEnd), skimming earlier ones. */
+    def next(): Boolean = {
+      while (!done) {
+        if (pos >= rangeEnd) done = true // next chunk's record
+        else {
+          val rem = bytes.length - pos
           if (rem < 16) {
-            if (rem == 0 || moreAfterBuffer) return null // clean EOF / prefix end
-            if (strict) fail(
-              s"truncated record header after record ${idx - 1} at byte $off ($rem bytes < 16)")
-            return null
-          }
-          val tsSec = u32(off)
-          // incl_len is a u32: `.toInt` on values >= 2^31 wraps negative and a
-          // negative length walks `off` backwards (non-terminating iterator) or
-          // crashes copyOfRange. Clamp to the bytes actually present instead: a
-          // record claiming more than remains is truncated — emit what's there,
-          // after which `off` lands at bytes.length and iteration ends. `off`
-          // therefore always advances by >= 16, so the iterator terminates.
-          val rawIncl = u32(off + 8)
-          val avail = (bytes.length - off - 16).toLong
-          if (rawIncl > avail) {
-            if (moreAfterBuffer) {
-              // the prefetch window was sized by the header's snaplen, so
-              // only a record VIOLATING its capture's snaplen lands here
-              if (strict) fail(
-                s"record $idx at byte $off claims $rawIncl bytes, past the chunk " +
-                  "prefetch window sized by the capture's declared snaplen " +
-                  "(corrupt record, or a snaplen-violating writer)")
-              return null
+            // clean EOF / prefix end, or a truncated record header
+            if (rem != 0 && !moreAfterBuffer && strict) fail(
+              s"truncated record header after record ${nextIdx - 1} at byte $pos ($rem bytes < 16)")
+            done = true
+          } else {
+            val ts = u32(pos)
+            // incl_len is a u32: `.toInt` on values >= 2^31 wraps negative, and
+            // a negative length walks `pos` backwards (a non-terminating walk).
+            // Clamp to the bytes actually present instead: a record claiming
+            // more than remains is truncated — emit what's there, after which
+            // `pos` lands at bytes.length and the walk ends. `pos` therefore
+            // always advances by >= 16, so the walk terminates.
+            val rawIncl = u32(pos + 8)
+            val avail = (bytes.length - pos - 16).toLong
+            if (rawIncl > avail) {
+              if (moreAfterBuffer) {
+                // the prefetch window was sized by the header's snaplen, so
+                // only a record VIOLATING its capture's snaplen lands here
+                if (strict) fail(
+                  s"record $nextIdx at byte $pos claims $rawIncl bytes, past the chunk " +
+                    "prefetch window sized by the capture's declared snaplen " +
+                    "(corrupt record, or a snaplen-violating writer)")
+                done = true
+              } else if (strict) fail(
+                s"record $nextIdx at byte $pos claims $rawIncl bytes but only $avail remain " +
+                  "(truncated or corrupt capture)")
             }
-            if (strict) fail(
-              s"record $idx at byte $off claims $rawIncl bytes but only $avail remain " +
-                "(truncated or corrupt capture)")
-          }
-          val inclLen = math.min(rawIncl, avail).toInt
-          val origLen = u32(off + 12)
-          val start = off
-          off += 16 + inclLen
-          val i = idx
-          idx += 1
-          if (start >= rangeStart) { // ours: decode. Earlier: skim (framing only)
-            val data = java.util.Arrays.copyOfRange(bytes, start + 16, start + 16 + inclLen)
-            return decodeRecord(i, data, tsSec, origLen, wants)
+            if (!done) {
+              val incl = math.min(rawIncl, avail).toInt
+              val start = pos
+              pos += 16 + incl
+              nextIdx += 1
+              if (start >= rangeStart) { // ours. Earlier: skim (framing only)
+                idx = nextIdx - 1
+                off = start + 16
+                inclLen = incl
+                tsSec = ts
+                origLen = u32(start + 12)
+                return true
+              }
+            }
           }
         }
-        null // unreachable
       }
-
-      def hasNext: Boolean = {
-        if (pending == null && !exhausted) {
-          pending = advance()
-          exhausted = pending == null
-        }
-        pending != null
-      }
-      def next(): Packet = {
-        if (!hasNext) throw new NoSuchElementException("pcap iterator exhausted")
-        val p = pending
-        pending = null
-        p
-      }
+      false
     }
   }
 
@@ -452,7 +555,7 @@ object PcapParser {
     * (SHB / IDB / EPB / SPB; unknown block types skipped, as the spec
     * requires), honoring per-section byte order (the BOM in each SHB) and
     * per-interface if_tsresol, and feeds every packet through the same
-    * [[decodeRecord]] pipeline as legacy pcap. SPB carries no timestamp,
+    * [[decodeFields]] pipeline as legacy pcap. SPB carries no timestamp,
     * so its trailer-heuristic window anchors at 0 — Metamako trailers in
     * SPB-only captures are not recovered (they need the ±300 s check).
     * Strict mode raises a [[PcapFormatException]] naming the capture on a
@@ -463,137 +566,130 @@ object PcapParser {
   def parsePcapng(bytes: Array[Byte], wants: Wants = WantsAll,
                   strict: Boolean = false, name: String = "<buffer>",
                   rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue): Iterator[Packet] =
-    new Iterator[Packet] {
-      private def fail(why: String): Nothing =
-        throw new PcapFormatException(s"$name: $why")
-      private var off = 0
-      private var idx = 0L
-      private var swapped = false
-      private var inSection = false
-      private val unitsPerSec = scala.collection.mutable.ArrayBuffer.empty[Long]
-      private val snapLens = scala.collection.mutable.ArrayBuffer.empty[Long]
-      private var pending: Packet = null
-      private var exhausted = false
+    packets(new PcapngCursor(bytes, strict, name, rangeStart, rangeEnd), wants)
 
-      private def u32(o: Int): Long = if (swapped) be32(bytes, o) else le32(bytes, o)
+  private final class PcapngCursor(val bytes: Array[Byte], strict: Boolean, name: String,
+                                   rangeStart: Long, rangeEnd: Long) extends RecordCursor {
+    private def fail(why: String): Nothing =
+      throw new PcapFormatException(s"$name: $why")
+    private var pos = 0
+    private var nextIdx = 0L
+    private var swapped = false
+    private var inSection = false
+    private val unitsPerSec = scala.collection.mutable.ArrayBuffer.empty[Long]
+    private val snapLens = scala.collection.mutable.ArrayBuffer.empty[Long]
+    private var done = false
 
-      /** Advance to the next packet block; null at clean (or salvaged) EOF. */
-      @annotation.tailrec
-      private def advance(): Packet = {
-        if (off >= rangeEnd) return null // next chunk's blocks
-        if (off == bytes.length) return null
-        if (off + 12 > bytes.length) {
-          if (strict) fail(s"truncated pcapng block header at byte $off " +
-            s"(${bytes.length - off} bytes < 12)")
-          return null
-        }
-        val blockStart = off
-        val isShb = le32(bytes, blockStart) == PcapngShb
-        // SHB starts a (new) section and resets endianness + interfaces
-        if (isShb) {
-          val bomLe = le32(bytes, off + 8)
-          if (bomLe == PcapngBom) swapped = false
-          else if (be32(bytes, off + 8) == PcapngBom) swapped = true
-          else {
-            if (strict) fail(f"pcapng: bad byte-order magic 0x$bomLe%08x in " +
-              s"section header at byte $off")
-            return null
-          }
-          inSection = true
-          unitsPerSec.clear()
-          snapLens.clear()
-        } else if (!inSection) {
-          if (strict) fail("pcapng: first block is not a section header")
-          return null
-        }
-        val totalLen = u32(blockStart + 4)
-        if (totalLen < 12 || (totalLen & 3) != 0 || blockStart + totalLen > bytes.length) {
-          if (strict) fail(s"pcapng: block at byte $blockStart declares impossible " +
-            s"length $totalLen (file holds ${bytes.length - blockStart} more bytes)")
-          return null
-        }
-        val body = blockStart + 8
-        val bodyEnd = blockStart + totalLen.toInt - 4
-        val btype = if (isShb) PcapngShb else u32(blockStart)
-        off = blockStart + totalLen.toInt
-        btype match {
-          case IdbType =>
-            // linktype u16 + reserved u16 + snaplen u32, then options
-            unitsPerSec += (if (bodyEnd - body >= 8)
-              idbUnitsPerSec(bytes, body + 8, bodyEnd, swapped) else 1000000L)
-            // snaplen 0 means "no limit" per the spec
-            snapLens += (if (bodyEnd - body >= 8) {
-              val s = u32(body + 4); if (s == 0) Long.MaxValue else s
-            } else Long.MaxValue)
-            advance()
-          case EpbType =>
-            if (bodyEnd - body < 20) {
-              if (strict) fail(s"pcapng: EPB at byte ${body - 8} too small")
-              return null
-            }
-            val iface = u32(body).toInt
-            val ts = (u32(body + 4) << 32) | u32(body + 8)
-            val capLen = u32(body + 12)
-            val origLen = u32(body + 16)
-            val room = (bodyEnd - body - 20).toLong
-            if (strict && capLen > room) fail(s"pcapng: EPB packet $idx claims " +
-              s"$capLen captured bytes but its block holds $room")
-            val ups =
-              if (iface >= 0 && iface < unitsPerSec.length) unitsPerSec(iface)
-              else if (strict) fail(s"pcapng: EPB packet $idx references " +
-                s"undeclared interface $iface (${unitsPerSec.length} declared)")
-              else 1000000L
-            if (blockStart < rangeStart) { idx += 1; advance() } // skim: framing only
-            else {
-              val take = math.min(capLen, room).toInt
-              val data = java.util.Arrays.copyOfRange(bytes, body + 20, body + 20 + take)
-              val p = decodeRecord(idx, data, ts / ups, origLen, wants)
-              idx += 1
-              p
-            }
-          case SpbType =>
-            if (bodyEnd - body < 4) {
-              if (strict) fail(s"pcapng: SPB at byte ${body - 8} too small")
-              return null
-            }
-            // spec (§4.4): packet blocks may only follow an IDB in their
-            // section; an SPB with no interface declared would otherwise
-            // fall back to an unbounded snaplen — mirror the EPB
-            // undeclared-interface check in strict mode
-            if (strict && snapLens.isEmpty)
-              fail(s"pcapng: SPB packet $idx before any interface " +
-                "description block in its section")
-            val origLen = u32(body)
-            // spec: SPB captured length = min(orig_len, interface 0's
-            // snaplen) — the block body is padded to 4 bytes, so without
-            // the snaplen bound a snaplen-truncated packet would absorb
-            // its pad bytes as frame data
-            val snap = if (snapLens.nonEmpty) snapLens(0) else Long.MaxValue
-            if (blockStart < rangeStart) { idx += 1; advance() } // skim: framing only
-            else {
-              val take = math.min(math.min(origLen, snap),
-                (bodyEnd - body - 4).toLong).toInt
-              val data = java.util.Arrays.copyOfRange(bytes, body + 4, body + 4 + take)
-              val p = decodeRecord(idx, data, 0L, origLen, wants) // SPB: no timestamp
-              idx += 1
-              p
-            }
-          case _ => advance() // SHB handled above; unknown blocks skipped
-        }
-      }
+    private def u32(o: Int): Long = if (swapped) be32(bytes, o) else le32(bytes, o)
 
-      def hasNext: Boolean = {
-        if (pending == null && !exhausted) {
-          pending = advance()
-          exhausted = pending == null
-        }
-        pending != null
-      }
-      def next(): Packet = {
-        if (!hasNext) throw new NoSuchElementException("pcapng iterator exhausted")
-        val p = pending
-        pending = null
-        p
+    /** Sets the current record from a packet block's frame, or skims it
+      * (framing only) when the block starts before the range. */
+    private def emit(blockStart: Int, frameOff: Int, take: Int, ts: Long, orig: Long): Boolean = {
+      nextIdx += 1
+      if (blockStart < rangeStart) false
+      else {
+        idx = nextIdx - 1; off = frameOff; inclLen = take; tsSec = ts; origLen = orig
+        true
       }
     }
+
+    /** Advance to the next packet block; false at clean (or salvaged) EOF. */
+    def next(): Boolean = {
+      while (!done) {
+        if (step()) return true
+      }
+      false
+    }
+
+    /** One block: true when it is a packet of ours; sets `done` at the end. */
+    private def step(): Boolean = {
+      def stop(): Boolean = { done = true; false }
+      if (pos >= rangeEnd) return stop() // next chunk's blocks
+      if (pos == bytes.length) return stop()
+      if (pos + 12 > bytes.length) {
+        if (strict) fail(s"truncated pcapng block header at byte $pos " +
+          s"(${bytes.length - pos} bytes < 12)")
+        return stop()
+      }
+      val blockStart = pos
+      val isShb = le32(bytes, blockStart) == PcapngShb
+      // SHB starts a (new) section and resets endianness + interfaces
+      if (isShb) {
+        val bomLe = le32(bytes, pos + 8)
+        if (bomLe == PcapngBom) swapped = false
+        else if (be32(bytes, pos + 8) == PcapngBom) swapped = true
+        else {
+          if (strict) fail(f"pcapng: bad byte-order magic 0x$bomLe%08x in " +
+            s"section header at byte $pos")
+          return stop()
+        }
+        inSection = true
+        unitsPerSec.clear()
+        snapLens.clear()
+      } else if (!inSection) {
+        if (strict) fail("pcapng: first block is not a section header")
+        return stop()
+      }
+      val totalLen = u32(blockStart + 4)
+      if (totalLen < 12 || (totalLen & 3) != 0 || blockStart + totalLen > bytes.length) {
+        if (strict) fail(s"pcapng: block at byte $blockStart declares impossible " +
+          s"length $totalLen (file holds ${bytes.length - blockStart} more bytes)")
+        return stop()
+      }
+      val body = blockStart + 8
+      val bodyEnd = blockStart + totalLen.toInt - 4
+      val btype = if (isShb) PcapngShb else u32(blockStart)
+      pos = blockStart + totalLen.toInt
+      btype match {
+        case IdbType =>
+          // linktype u16 + reserved u16 + snaplen u32, then options
+          unitsPerSec += (if (bodyEnd - body >= 8)
+            idbUnitsPerSec(bytes, body + 8, bodyEnd, swapped) else 1000000L)
+          // snaplen 0 means "no limit" per the spec
+          snapLens += (if (bodyEnd - body >= 8) {
+            val s = u32(body + 4); if (s == 0) Long.MaxValue else s
+          } else Long.MaxValue)
+          false
+        case EpbType =>
+          if (bodyEnd - body < 20) {
+            if (strict) fail(s"pcapng: EPB at byte ${body - 8} too small")
+            return stop()
+          }
+          val iface = u32(body).toInt
+          val ts = (u32(body + 4) << 32) | u32(body + 8)
+          val capLen = u32(body + 12)
+          val orig = u32(body + 16)
+          val room = (bodyEnd - body - 20).toLong
+          if (strict && capLen > room) fail(s"pcapng: EPB packet $nextIdx claims " +
+            s"$capLen captured bytes but its block holds $room")
+          val ups =
+            if (iface >= 0 && iface < unitsPerSec.length) unitsPerSec(iface)
+            else if (strict) fail(s"pcapng: EPB packet $nextIdx references " +
+              s"undeclared interface $iface (${unitsPerSec.length} declared)")
+            else 1000000L
+          emit(blockStart, body + 20, math.min(capLen, room).toInt, ts / ups, orig)
+        case SpbType =>
+          if (bodyEnd - body < 4) {
+            if (strict) fail(s"pcapng: SPB at byte ${body - 8} too small")
+            return stop()
+          }
+          // spec (§4.4): packet blocks may only follow an IDB in their
+          // section; an SPB with no interface declared would otherwise
+          // fall back to an unbounded snaplen — mirror the EPB
+          // undeclared-interface check in strict mode
+          if (strict && snapLens.isEmpty)
+            fail(s"pcapng: SPB packet $nextIdx before any interface " +
+              "description block in its section")
+          val orig = u32(body)
+          // spec: SPB captured length = min(orig_len, interface 0's
+          // snaplen) — the block body is padded to 4 bytes, so without
+          // the snaplen bound a snaplen-truncated packet would absorb
+          // its pad bytes as frame data
+          val snap = if (snapLens.nonEmpty) snapLens(0) else Long.MaxValue
+          val take = math.min(math.min(orig, snap), (bodyEnd - body - 4).toLong).toInt
+          emit(blockStart, body + 4, take, 0L, orig) // SPB: no timestamp
+        case _ => false // SHB handled above; unknown blocks skipped
+      }
+    }
+  }
 }

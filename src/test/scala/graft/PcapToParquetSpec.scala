@@ -2,6 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.page.DataPageV2
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import graft.sources.PcapFixtures
 
 /** End-to-end CLI contract test: golden capture -> PcapToParquet main ->
@@ -23,6 +31,29 @@ class PcapToParquetSpec extends SparkTestBase {
     assert(back.count() == 12)
     val udp = back.filter(org.apache.spark.sql.functions.col("protocol") === "UDP").count()
     assert(udp >= 4) // golden frames 1,7,8,9,10,11 are UDP
+  }
+
+  test("main writes v2 data pages without setting the writer version on the session") {
+    spark
+    val dir = Files.createTempDirectory("p2p-v2").toFile
+    Files.write(new java.io.File(dir, "golden.pcap").toPath, PcapFixtures.goldenPcap)
+    val out = new java.io.File(dir, "out.parquet")
+
+    PcapToParquet.main(Array(dir.getAbsolutePath, out.getAbsolutePath))
+
+    assert(spark.sparkContext.hadoopConfiguration.get("parquet.writer.version") == null)
+    assert(spark.sessionState.newHadoopConf().get("parquet.writer.version") == null)
+    val part = out.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(part.toURI), new Configuration()))
+    try {
+      val columns = reader.getFooter.getFileMetaData.getSchema.getColumns.asScala
+      val pages = reader.readNextRowGroup()
+      columns.foreach { c =>
+        val page = pages.getPageReader(c).readPage()
+        assert(page.isInstanceOf[DataPageV2], s"${c.getPath.mkString(".")}: $page")
+      }
+    } finally reader.close()
   }
 
   test("shuffle-free plan; per-capture record order preserved in each output part") {

@@ -14,7 +14,7 @@ object AsOfJoinPropertySpec extends Properties("AsOfJoinExec") {
     p.withMinSuccessfulTests(8)
 
   private lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
+    val s = graft.GraftSession.tuned(SparkSession.builder()).master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       // keep in lockstep with SparkTestBase: whichever suite runs first

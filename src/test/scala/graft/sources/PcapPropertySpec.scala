@@ -109,10 +109,21 @@ object PcapPropertySpec extends Properties("PcapParser") {
     }
   }
 
+  /** The decoded scalars the reader's predicate sees for `p`. */
+  private def fieldsOf(p: PcapParser.Packet): PcapParser.Fields = {
+    val f = new PcapParser.Fields
+    f.pktIdx = p.pkt_idx
+    f.len = p.len.getOrElse(-1L)
+    f.protocol = p.protocol.fold(0)(PcapParser.ProtocolNames.indexOf(_))
+    f.srcPort = p.src_port.getOrElse(-1)
+    f.dstPort = p.dst_port.getOrElse(-1)
+    f
+  }
+
   property("pushed-filter predicate matches SQL null semantics on random packets") =
     forAll(genPkt, genFilter) { (p, f) =>
       PcapFilters.supported(f) &&
-        PcapFilters.toPredicate(Array(f), "x.pcap")(p) == refEval(f, p)
+        PcapFilters.toPredicate(Array(f), "x.pcap")(fieldsOf(p)) == refEval(f, p)
     }
 
   property("pcap container round-trip preserves record count and order") =

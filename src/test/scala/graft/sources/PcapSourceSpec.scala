@@ -2,6 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.vectorized.ColumnarBatch
+
 import graft.SparkTestBase
 import graft.sources.PcapFixtures.BaseTs
 
@@ -238,17 +241,23 @@ class PcapSourceSpec extends SparkTestBase {
     assert(df.count() == 2) // 1 golden TCP + 1 in b.pcap
   }
 
+  private def broadcastConf =
+    spark.sparkContext.broadcast(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+
+  /** Rows a columnar reader yields, summed over its batches; closes it. */
+  private def rowCount(r: PartitionReader[ColumnarBatch]): Long = {
+    var n = 0L
+    try while (r.next()) n += r.get().numRows finally r.close()
+    n
+  }
+
   test("pushed filters drop rows inside the reader, before row construction") {
     import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual}
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
+    val conf = broadcastConf
     def readerCount(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
       val factory = new PcapReaderFactory(PcapDataSource.schema, filters, strict = true, conf)
-      PcapDataSource.listCaptureFiles(dir, spark.sessionState.newHadoopConf()).map { f =>
-        val r = factory.createReader(PcapFilePartition(f))
-        var n = 0L
-        while (r.next()) n += 1
-        r.close()
-        n
+      PcapDataSource.listCaptureFilesWithLen(dir, spark.sessionState.newHadoopConf()).map {
+        case (f, len) => rowCount(factory.createColumnarReader(PcapFilePartition(f, len)))
       }.sum
     }
     assert(readerCount(Array.empty) == 13)
@@ -276,24 +285,20 @@ class PcapSourceSpec extends SparkTestBase {
 
   test("a pushed file-predicate skips rejected partitions without any I/O") {
     import org.apache.spark.sql.sources.EqualTo
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
+    val conf = broadcastConf
     // the partition points at a NONEXISTENT capture: if the reader tried to
     // read it, this would throw FileNotFound — an empty result proves the
     // file-level reject short-circuits before the fetch
     val factory = new PcapReaderFactory(PcapDataSource.schema,
       Array(EqualTo("file", "file:/captures/other.pcap")), strict = true, conf)
-    val r = factory.createReader(PcapFilePartition("file:/does/not/exist.pcap"))
-    assert(!r.next())
-    r.close()
+    assert(rowCount(factory.createColumnarReader(
+      PcapFilePartition("file:/does/not/exist.pcap", 24L))) == 0)
     // sanity: the same predicate MATCHING the partition's file still reads
-    val real = PcapDataSource.listCaptureFiles(dir, spark.sessionState.newHadoopConf()).head
+    val (real, len) =
+      PcapDataSource.listCaptureFilesWithLen(dir, spark.sessionState.newHadoopConf()).head
     val f2 = new PcapReaderFactory(PcapDataSource.schema,
       Array(EqualTo("file", real)), strict = true, conf)
-    val r2 = f2.createReader(PcapFilePartition(real))
-    var n = 0
-    while (r2.next()) n += 1
-    r2.close()
-    assert(n == 12) // a.pcap = the 12 golden records
+    assert(rowCount(f2.createColumnarReader(PcapFilePartition(real, len))) == 12) // a.pcap
   }
 
   test("scan reports capture byte size to the planner (SupportsReportStatistics)") {
@@ -413,9 +418,8 @@ class PcapSourceSpec extends SparkTestBase {
     assert(planned.head.asInstanceOf[PcapFilePartition].file == files.head)
     // and rows behind the runtime filter stay exact
     val factory = sb.createReaderFactory()
-    val reader = factory.createReader(planned.head)
-    var n = 0
-    while (reader.next()) n += 1
+    assert(factory.supportColumnarReads(planned.head))
+    val n = rowCount(factory.createColumnarReader(planned.head))
     assert(n == 12, s"expected the 12 golden rows, got $n") // a.pcap sorts first
   }
 
