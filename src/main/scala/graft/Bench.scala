@@ -45,7 +45,9 @@ object Bench {
       else try {
         val java = System.getProperty("java.home") + "/bin/java"
         val cp = System.getProperty("java.class.path")
-        val pb = new ProcessBuilder(java, "-Xmx16g", "-cp", cp,
+        // the child gets the parent's own heap ceiling, not a fixed size
+        val heapMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
+        val pb = new ProcessBuilder(java, s"-Xmx${heapMb}m", "-cp", cp,
           "graft.SentinelBench")
         pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
         pb.environment().put("SPARK_GRAFT_CPUS", cpus)

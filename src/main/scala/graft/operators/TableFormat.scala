@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
+import scala.concurrent.duration.DurationInt
+
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,6 +41,7 @@ import graft.Tables
   * object stores punish.
   */
 object TableFormat {
+  private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3148,25 +3151,21 @@ object TableFormat {
     val dir = s"$base/data/eq${version}_${java.util.UUID.randomUUID.toString.take(8)}"
     // key count observed ON the staging write (r19 opt): the old
     // read-back count re-scanned the staged files as a second job.
-    // Bounded wait (r20, ADVICE r19 #1): the write has already returned,
-    // so the metrics are normally available immediately — but obs.get
-    // blocks forever if the listener bus ever drops the event, so poll
-    // getOrEmpty with a deadline and fall back to the read-back count.
+    // Bounded wait: the write has already returned, so the observation is
+    // normally complete; if the listener bus ever drops the event, give
+    // up after 30 s and fall back to the read-back count. Waiting on the
+    // observation's own future parks no extra thread.
     val obs = org.apache.spark.sql.Observation()
     keys.select(keyCols.map(col): _*).na.drop.distinct()
       .observe(obs, count(lit(1)).as("n"))
       .write.parquet(dir)
-    val n: Long = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.DurationInt
-      import scala.concurrent.ExecutionContext.Implicits.global
-      try Await.result(Future(obs.get("n").asInstanceOf[Long]), 30.seconds)
+    val n: Long =
+      try scala.concurrent.Await.result(obs.future, 30.seconds).getAs[Long]("n")
       catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println(s"[tableformat] delete_eq: observed metrics " +
-          s"not delivered within 30 s on $dir — falling back to read-back count")
+        log.warn(s"delete_eq: observed metrics not delivered within 30 s on $dir; " +
+          "falling back to the read-back count")
         spark.read.parquet(dir).count()
       }
-    }
     if (n == 0) {
       try { fs(spark, base).delete(new Path(dir), true); () }
       catch { case _: java.io.IOException => () }

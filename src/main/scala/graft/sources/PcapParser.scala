@@ -167,10 +167,14 @@ object PcapParser {
     * `[start, end)` — main.rs:157-183. Valid iff |pcap_ts_sec - mm_s| <
     * 300 and mm_ns < 1e9 (main.rs:174). A hit overwrites the trailer
     * fields, so the CALLER's probe order decides which trailer wins
-    * (first-device-wins, main.rs:127). */
+    * (first-device-wins, main.rs:127). `top0`/`top1` are the only top
+    * bytes the seconds field can have in the window (see
+    * [[decodeTrailers]]): any other rejects the probe on one byte. */
   private def probeTrailer(b: Array[Byte], start: Int, end: Int, e: Int,
-                           pcapTsSec: Long, f: Fields): Boolean = {
+                           pcapTsSec: Long, top0: Byte, top1: Byte, f: Fields): Boolean = {
     if (e - start < 16 || e > end) return false
+    val top = b(e - 12)
+    if (top != top0 && top != top1) return false
     val s = be32(b, e - 12).toInt  // BE i32 seconds
     val ns = be32(b, e - 8).toInt  // BE i32 nanoseconds
     // NB: the reference only checks ns < 1e9, NOT ns >= 0 (main.rs:174) —
@@ -191,14 +195,24 @@ object PcapParser {
     * (main.rs:127). If the probe at full length misses, retry once
     * assuming a trailing 4-byte FCS (main.rs:141-146). Scans against the
     * actual frame length, never past it (divergence: reference indexes
-    * with origlen and can panic). */
+    * with origlen and can panic).
+    *
+    * Prefilter: a hit needs the i32 seconds `s` in [ts - 299, ts + 299].
+    * That window is narrower than 2^24, so it spans at most two values of
+    * `s`'s top (first big-endian) byte, and a probe whose byte at e - 12
+    * is neither cannot hit. A window outside the i32 range admits none. */
   private def decodeTrailers(b: Array[Byte], start: Int, end: Int, pcapTsSec: Long,
                              f: Fields): Unit = {
+    val lo = math.max(pcapTsSec - 299, Int.MinValue.toLong)
+    val hi = math.min(pcapTsSec + 299, Int.MaxValue.toLong)
+    if (lo > hi) return
+    val top0 = (lo >> 24).toByte
+    val top1 = (hi >> 24).toByte
     def scanFrom(e: Int): Boolean =
-      probeTrailer(b, start, end, e, pcapTsSec, f) && {
+      probeTrailer(b, start, end, e, pcapTsSec, top0, top1, f) && {
         var i = 16 // bytes consumed from the tail so far
         while (e - i - start >= 16)
-          i += (if (probeTrailer(b, start, end, e - i, pcapTsSec, f)) 16 else 1)
+          i += (if (probeTrailer(b, start, end, e - i, pcapTsSec, top0, top1, f)) 16 else 1)
         true
       }
     if (!scanFrom(end)) scanFrom(end - 4) // FCS retry

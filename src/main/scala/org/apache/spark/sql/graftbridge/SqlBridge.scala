@@ -42,4 +42,12 @@ object SqlBridge {
     * idempotent and creates it on first use. */
   def ensureStateStoreCoordinator(spark: SparkSession): Unit =
     spark.streams.asInstanceOf[classic.StreamingQueryManager].stateStoreCoordinator
+
+  /** Record a write task's output in its task metrics, as Spark's file
+    * writers do (the `OutputMetrics` setters are `private[spark]`). */
+  def reportOutput(bytes: Long, records: Long): Unit = {
+    val m = org.apache.spark.TaskContext.get().taskMetrics().outputMetrics
+    m.setBytesWritten(bytes)
+    m.setRecordsWritten(records)
+  }
 }

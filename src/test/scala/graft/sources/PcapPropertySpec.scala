@@ -137,4 +137,68 @@ object PcapPropertySpec extends Properties("PcapParser") {
       parsed.size == n && parsed.map(_.pkt_idx) == (0L until n.toLong).toVector &&
         parsed.zipWithIndex.forall { case (p, i) => p.src_port.contains(i) }
     }
+
+  // The trailer scan's one-byte prefilter must be exact: the reference
+  // below is the scan as it was before the prefilter (main.rs:128-183),
+  // probing every offset in full.
+  private def refTrailer(b: Array[Byte], ts: Long): Option[(Long, Int, Int)] = {
+    def be32(o: Int) = ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
+      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+    var hit: Option[(Long, Int, Int)] = None
+    def probe(e: Int): Boolean = e >= 16 && e <= b.length && {
+      val s = be32(e - 12).toInt
+      val ns = be32(e - 8).toInt
+      (math.abs(ts - s) < 300 && ns < 1000000000) && {
+        hit = Some((s.toLong * 1000000000L + ns, ((b(e - 3) & 0xff) << 8) | (b(e - 2) & 0xff),
+          b(e - 1) & 0xff))
+        true
+      }
+    }
+    def scanFrom(e: Int): Boolean = probe(e) && {
+      var i = 16
+      while (e - i >= 16) i += (if (probe(e - i)) 16 else 1)
+      true
+    }
+    if (!scanFrom(b.length)) scanFrom(b.length - 4)
+    hit
+  }
+
+  /** Capture clocks around the places the prefilter's window turns: a
+    * top-byte rollover, the i32 edges, zero, and anywhere in u32. */
+  private val genTs: Gen[Long] = Gen.oneOf(
+    Gen.chooseNum(0x65FFFF00L, 0x66000100L),
+    Gen.chooseNum(0x7FFFFE00L, 0x80000200L),
+    Gen.chooseNum(0L, 600L),
+    Gen.chooseNum(0L, 0xFFFFFFFFL),
+    Gen.const(BaseTs))
+
+  /** A frame tail: random bytes, then 0-3 trailers whose seconds sit in or
+    * just outside the window, each followed by a short random gap (0 = a
+    * stacked trailer), then maybe an FCS. */
+  private def genTail(ts: Long): Gen[Array[Byte]] = {
+    val bytes = (n: Int) => Gen.containerOfN[Array, Byte](n, Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
+    val trailer = for {
+      skew <- Gen.oneOf(Gen.chooseNum(-301L, 301L), Gen.chooseNum(-70000L, 70000L))
+      ns <- Gen.oneOf(Gen.chooseNum(0, 999999999), Gen.chooseNum(Int.MinValue, Int.MaxValue))
+      id <- Gen.chooseNum(0, 65535)
+      port <- Gen.chooseNum(0, 255)
+      gap <- Gen.oneOf(Gen.const(0), Gen.chooseNum(1, 5)).flatMap(bytes)
+    } yield PcapFixtures.mmTrailer(ts + skew, ns, id, port) ++ gap
+    for {
+      head <- Gen.chooseNum(0, 40).flatMap(bytes)
+      k <- Gen.chooseNum(0, 3)
+      trailers <- Gen.listOfN(k, trailer)
+      fcs <- Gen.oneOf(0, 4).flatMap(bytes)
+    } yield head ++ trailers.flatten ++ fcs
+  }
+
+  property("trailer prefilter finds exactly what the full probe loop finds") =
+    forAll(genTs.flatMap(ts => genTail(ts).map(ts -> _))) { case (ts, b) =>
+      val f = new PcapParser.Fields
+      PcapParser.decodeFields(b, 0, b.length, ts, b.length.toLong,
+        PcapParser.Wants(ips = false, net = false), f)
+      val got = if (f.trailer) Some((f.mmTs, f.mmId, f.mmPort)) else None
+      val want = if (b.length >= 16) refTrailer(b, ts) else None
+      got == want
+    }
 }
