@@ -1043,8 +1043,8 @@ object MaterializedView {
         // no stored bit) — and the recorded high-water mark still covers
         // them, so a later refresh can never re-issue one.
         val propMax: Option[Long] =
-          try TableFormat.manifestProps(spark, dictB,
-              TableFormat.currentVersion(spark, dictB))
+          try TableFormat.manifest(spark, dictB,
+              TableFormat.currentVersion(spark, dictB)).props
             .get("graft.dict.maxcode").flatMap(_.toLongOption)
           catch { case _: java.io.FileNotFoundException => None }
         val maxCode = propMax.getOrElse(
@@ -1551,7 +1551,7 @@ object MaterializedView {
       .flatMap { sb =>
         try {
           val v = TableFormat.currentVersion(spark, sb)
-          val props = TableFormat.manifestProps(spark, sb, v)
+          val props = TableFormat.manifest(spark, sb, v).props
           if (props.contains("graft.mv.query") && props.contains("graft.mv.src"))
             Some((sb, v, props))
           else None
@@ -1809,8 +1809,8 @@ object MaterializedView {
   /** Resolve a source's outstanding equality deletes before pinning or
     * advancing a bookmark (r15) — see the call sites in create/refresh. */
   private def resolveSrcEqDels(spark: SparkSession, src: String): Unit = {
-    if (TableFormat.manifestEqDels(spark, src,
-        TableFormat.currentVersion(spark, src)).nonEmpty) {
+    if (TableFormat.manifest(spark, src,
+        TableFormat.currentVersion(spark, src)).eqDels.nonEmpty) {
       TableFormat.resolveEqDeletes(spark, src)
       ()
     }
@@ -2027,7 +2027,7 @@ object MaterializedView {
     * that already committed. */
   private def autoMaintain(spark: SparkSession, mvBase: String, v: Int): Unit =
     try {
-      val props = TableFormat.manifestProps(spark, mvBase, v)
+      val props = TableFormat.manifest(spark, mvBase, v).props
       val every = props.get("graft.mv.maintain.every")
         .flatMap(_.toIntOption).getOrElse(0)
       if (every > 0 && v % every == 0) {
@@ -2055,7 +2055,7 @@ object MaterializedView {
               mvBase0: String): (Int, Int, Int, Long, Long) = {
     val mvBase = resolveState(spark, mvBase0)
     val mvV = TableFormat.currentVersion(spark, mvBase)
-    val props = TableFormat.manifestProps(spark, mvBase, mvV)
+    val props = TableFormat.manifest(spark, mvBase, mvV).props
     val query = props.getOrElse("graft.mv.query",
       throw new IllegalArgumentException(
         s"materialized view: $mvBase carries no graft.mv.query — not an MV"))

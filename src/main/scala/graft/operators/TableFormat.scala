@@ -251,24 +251,212 @@ object TableFormat {
     }
   }
 
-  /** Commit `df` as snapshot `version`. `parent = Some(v)` makes this an
-    * APPEND commit (new manifest = v's files + the new ones); `None`
-    * starts the table (or replaces it wholesale). `statsCol` (a LONG
-    * column) records per-file min/max in the manifest — the file-skipping
-    * index `readSnapshotWhere` prunes on; the data is range-clustered on
-    * it first so file ranges are disjoint and skipping actually bites
-    * (production writers collect these stats task-side during the write;
-    * the one-pass read-back here stands in for that). Returns version. */
-  /** Manifest header lines (r7). `#schema` records the table schema so an
-    * EMPTY snapshot (empty first commit, or a delete that drops every
-    * file) still reads back as a typed empty DataFrame instead of
-    * "unable to infer schema" from a zero-path parquet scan. `#txn`
-    * records the (appId, batchId) of a streaming commit — the
-    * exactly-once replay check keys on BOTH, like Delta's txn marker:
-    * version alone would make a fresh-checkpoint restart (batchId back
-    * to 0) silently drop new data. */
-  private val SchemaPrefix = "#schema\t"
-  private val TxnPrefix = "#txn\t"
+  /** One manifest file, parsed once: every header as a typed field, plus
+    * the body lines. This is the only place that knows the header
+    * format. A header line is `#name\t<value>`; header lines come in
+    * the field order below, and an absent or empty field writes no
+    * line. Map headers render sorted by key with names (and string
+    * values) URL-encoded, so `Manifest.parse` followed by [[render]]
+    * reproduces a manifest byte for byte.
+    *
+    * Commits inherit every header from their parent except `schemaJson`,
+    * `statsCols`, `op` and `txn`, which each commit sets itself, and
+    * `delta`/`entriesPq`/`body`, which describe this file's entry list
+    * (see [[writeManifest]]). */
+  final case class Manifest(
+      /** `#schema` (r7): the table schema as JSON, so an EMPTY snapshot
+        * (empty first commit, or a delete that drops every file) still
+        * reads back as a typed empty DataFrame instead of "unable to
+        * infer schema" from a zero-path parquet scan. */
+      schemaJson: Option[String] = None,
+      /** `#stats`: the column name(s) the entries' per-file stats were
+        * collected on, so SQL-side readers (the `graft` catalog) can map
+        * pushed predicates onto the file-skipping index. */
+      statsCols: Seq[String] = Nil,
+      /** `#op` (r9): WHAT KIND of commit produced this version —
+        * `append`, `replace`, `delete`, `merge`, `compact`, `restore`, ….
+        * The change-data-feed ([[readChanges]]) needs it for exactly one
+        * distinction: a COMPACT commit moves bytes but changes no rows,
+        * so it must emit zero change rows — without the marker a file
+        * diff would have to read and cancel the entire compacted payload
+        * (Delta/Iceberg record the same operation tag in their commit
+        * metadata). Absent on pre-r9 manifests: [[readChanges]] then
+        * falls back to the full file diff, always correct, just not
+        * compact-aware. */
+      op: Option[String] = None,
+      /** `#props` (r10): the table's user properties (TBLPROPERTIES) —
+        * versioned metadata like the schema, so time travel sees the
+        * properties a snapshot was committed under. Set explicitly by
+        * [[alterPropsCommit]] and table (re)definitions. */
+      props: Map[String, String] = Map.empty,
+      /** `#colmap` (r10): logical → PHYSICAL column-name mapping — the
+        * Delta column-mapping (name mode) / Iceberg rename device. A
+        * column's physical name (what parquet files store) NEVER
+        * changes; RENAME only re-points the logical name, so zero data
+        * files move and files written before or after the rename read
+        * identically. Only columns whose names diverge appear. */
+      colmap: Map[String, String] = Map.empty,
+      /** `#tombstones` (r10): physical names that once held data under a
+        * now-retired meaning (dropped columns, or names vacated by
+        * rename): ADD COLUMN re-using such a name is assigned a FRESH
+        * physical name, so old files' stale bytes can never resurrect
+        * under the new column. */
+      tombstones: Set[String] = Set.empty,
+      /** `#constraints` (r10): the enforced CHECK constraints as
+        * (name, predicateSql), in declaration order. Only CHECK is
+        * stored: unique/PK/FK are not enforceable without a global index
+        * (the Delta posture — CHECK + NOT NULL only). */
+      constraints: Seq[(String, String)] = Nil,
+      /** `#hwm` (r11): IDENTITY high-water marks — per identity column,
+        * the NEXT value to allocate. The OCC commit loop serializes
+        * versions, so an insert that reads hwm H and publishes
+        * H + n·step owns [H, H + n·step) exclusively — a loser's
+        * conflict re-reads the new mark and re-assigns before retrying
+        * ([[appendCommitIdentity]]). RESTORE keeps the PARENT's marks: a
+        * watermark must never regress, or restored-past inserts would
+        * re-issue ids (the Delta identity rule). */
+      hwm: Map[String, Long] = Map.empty,
+      /** `#ndv` (r11): one base64 DataSketches HLL per declared stats
+        * column — MERGEABLE, so every data-adding commit unions the new
+        * files' sketch into the parent's instead of rescanning the table
+        * (the Iceberg puffin-sketch model). Deletes/rewrites inherit the
+        * sketch unchanged: an HLL cannot subtract, so the estimate is a
+        * documented UPPER bound until a full rewrite or ANALYZE rebuilds
+        * it. Surfaced to Spark through the scan's `columnStats()`, so
+        * CBO join-reorder sees real NDVs for graft-native joins. */
+      ndv: Map[String, String] = Map.empty,
+      /** `#hist` (r13): per stats column ANALYZE processed, an
+        * equi-height histogram encoded `height|lo:hi:ndv;…` (decoded by
+        * [[histograms]]) — the selectivity input CBO's FilterEstimation
+        * consumes beyond plain NDV. Values are the column's numeric image
+        * (raw integral, micros for timestamps, epoch-days for dates, the
+        * prefix rank for strings). Same staleness contract as `ndv`:
+        * exact as of the last ANALYZE, advisory afterwards. */
+      hist: Map[String, String] = Map.empty,
+      /** `#eqdel` (r15): outstanding equality deletes as
+        * (keyDir, keyColumnSpec, committedAtVersion), oldest first. */
+      eqDels: Seq[(String, String, Int)] = Nil,
+      /** `#eqadd` (r15): path → version the file was ADDED at, for files
+        * added while equality deletes were outstanding (an absent path
+        * predates them). Kept only while `eqDels` is non-empty. */
+      eqAdds: Map[String, Int] = Map.empty,
+      /** `#txn`: the (appId, batchId) of a streaming commit — the
+        * exactly-once replay check keys on BOTH, like Delta's txn marker:
+        * version alone would make a fresh-checkpoint restart (batchId
+        * back to 0) silently drop new data. The one header written
+        * unencoded, so the app id may not hold a separator
+        * ([[Manifest.requireTxnId]]). */
+      txn: Option[(String, Long)] = None,
+      /** `#delta` (r13): (parentVersion, depth) of a DELTA manifest whose
+        * body is an edit script against the parent's entry list; depth
+        * is the distance from the chain's last full manifest. */
+      delta: Option[(Int, Int)] = None,
+      /** `#entriespq` (r14): (sidecarName, entryCount) of a full manifest
+        * whose entry list lives in a columnar parquet sidecar. */
+      entriesPq: Option[(String, Int)] = None,
+      /** The non-header lines: entry lines of a full text manifest, or
+        * the `-`/`~`/`+` edit script of a delta. */
+      body: Seq[String] = Nil) {
+
+    lazy val schema: Option[StructType] =
+      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+
+    /** Distance from the last FULL manifest in the chain (0 = full). */
+    def depth: Int = delta.fold(0)(_._2)
+
+    /** column → (binHeight, bins as (lo, hi, ndv)), decoded from `hist`. */
+    lazy val histograms: Map[String, (Double, Seq[(Double, Double, Long)])] =
+      hist.map { case (c, s) =>
+        val bar = s.indexOf('|')
+        val bins = s.substring(bar + 1).split(";").toSeq.filter(_.nonEmpty).map { b =>
+          val p = b.split(":")
+          (p(0).toDouble, p(1).toDouble, p(2).toLong)
+        }
+        c -> (s.substring(0, bar).toDouble, bins)
+      }
+
+    def render: String = {
+      import Manifest.enc
+      def line(name: String, values: Iterable[String]) =
+        if (values.isEmpty) None else Some(values.mkString(s"#$name\t", "\t", ""))
+      def pairs[V](kvs: Seq[(String, V)])(v: V => String) =
+        kvs.map { case (k, x) => s"${enc(k)}=${v(x)}" }
+      (schemaJson.map("#schema\t" + _) ++
+        line("stats", statsCols) ++
+        op.map("#op\t" + _) ++
+        line("props", pairs(props.toSeq.sortBy(_._1))(enc)) ++
+        line("colmap", pairs(colmap.toSeq.sortBy(_._1))(enc)) ++
+        line("tombstones", tombstones.toSeq.sorted.map(enc)) ++
+        line("constraints", pairs(constraints)(enc)) ++
+        line("hwm", pairs(hwm.toSeq.sortBy(_._1))(_.toString)) ++
+        line("ndv", pairs(ndv.toSeq.sortBy(_._1))(identity)) ++
+        line("hist", pairs(hist.toSeq.sortBy(_._1))(identity)) ++
+        line("eqdel", eqDels.map { case (d, k, v) => s"${enc(d)}:${enc(k)}:$v" }) ++
+        line("eqadd", pairs(eqAdds.toSeq.sortBy(_._1))(_.toString)) ++
+        txn.map { case (app, b) => s"#txn\t$app\t$b" } ++
+        delta.map { case (p, d) => s"#delta\t$p\t$d" } ++
+        entriesPq.map { case (n, c) => s"#entriespq\t$n\t$c" } ++
+        body).mkString("\n")
+    }
+  }
+
+  object Manifest {
+    val empty: Manifest = Manifest()
+
+    private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+
+    def parse(text: String): Manifest = {
+      val lines = text.split("\n").toSeq
+      // the FIRST line of each header name wins, as it always has
+      val headers = lines.reverseIterator.filter(_.startsWith("#")).map { l =>
+        val tab = l.indexOf('\t')
+        if (tab < 0) l.substring(1) -> "" else l.substring(1, tab) -> l.substring(tab + 1)
+      }.toMap
+      def fields(name: String): Seq[String] =
+        headers.get(name).toSeq.flatMap(_.split("\t")).filter(_.nonEmpty)
+      def pairs(name: String): Seq[(String, String)] = fields(name).map { kv =>
+        val i = kv.indexOf('=')
+        dec(kv.substring(0, i)) -> kv.substring(i + 1)
+      }
+      Manifest(
+        schemaJson = headers.get("schema"),
+        statsCols = fields("stats"),
+        op = headers.get("op"),
+        props = pairs("props").map { case (k, v) => k -> dec(v) }.toMap,
+        colmap = pairs("colmap").map { case (k, v) => k -> dec(v) }.toMap,
+        tombstones = fields("tombstones").map(dec).toSet,
+        constraints = pairs("constraints").map { case (k, v) => k -> dec(v) },
+        hwm = pairs("hwm").map { case (k, v) => k -> v.toLong }.toMap,
+        ndv = pairs("ndv").toMap,
+        hist = pairs("hist").toMap,
+        eqDels = fields("eqdel").map { r =>
+          val p = r.split(":", 3)
+          (dec(p(0)), dec(p(1)), p(2).toInt)
+        },
+        eqAdds = pairs("eqadd").map { case (p, v) => p -> v.toInt }.toMap,
+        txn = headers.get("txn").map { t =>
+          val i = t.lastIndexOf('\t')
+          t.substring(0, i) -> t.substring(i + 1).toLong
+        },
+        delta = headers.get("delta").map { d =>
+          val p = d.split("\t")
+          (p(0).toInt, p.lift(1).flatMap(_.toIntOption).getOrElse(0))
+        },
+        entriesPq = headers.get("entriespq").map { s =>
+          val p = s.split("\t")
+          (p(0), p(1).toInt)
+        },
+        body = lines.filter(l => l.nonEmpty && !l.startsWith("#")))
+    }
+
+    /** `#txn` is written unencoded: an app id holding a tab would shift
+      * the batch id, and one holding a line break would inject a line
+      * that reads back as a data-file entry. */
+    def requireTxnId(id: String): Unit =
+      require(!id.exists(c => c == '\t' || c == '\r' || c == '\n'),
+        "txn app id must not contain a tab or line break")
+  }
 
   /** MANIFEST CACHE (r12). Every table query resolves headers and
     * entries with SEVERAL reads of the same manifest (schema, stats,
@@ -323,7 +511,7 @@ object TableFormat {
           e: java.util.Map.Entry[String, (ManifestStamp, A)]): Boolean =
         size() > ManifestCacheMax
     }
-  private val manifestTextCache = lru[String]()
+  private val manifestCache = lru[Manifest]()
   private val manifestEntriesCache = lru[Seq[ManifestEntry]]()
   private def manifestPath(base: String, version: Int): String =
     s"$base/_manifests/v$version.manifest"
@@ -359,7 +547,6 @@ object TableFormat {
     * replacement), writes full — which also resets the chain.
     * Version 1, empty snapshots, and pre-r13 manifests are always full;
     * the formats coexist per-file. */
-  private[operators] val DeltaPrefix = "#delta\t"
   private[operators] val CheckpointEvery = 16
 
   /** PARQUET CHECKPOINT MANIFESTS (r14, VERDICT r13 #2). Delta-log
@@ -382,7 +569,6 @@ object TableFormat {
     * the manifest can see its sidecar. Small tables stay text — the
     * formats coexist per-version, and deltas/edit scripts are never
     * parquet (they are small by construction). */
-  private[operators] val EntriesPqPrefix = "#entriespq\t"
   private[operators] val PqCheckpointMinEntries = 64
 
   /** Stage `entries` as a columnar checkpoint sidecar (driver-side
@@ -469,23 +655,16 @@ object TableFormat {
     out.result()
   }
 
-  /** The full-manifest body for `entries` under the checkpoint-format
-    * rule: columnar sidecar + pointer header at
-    * [[PqCheckpointMinEntries]]+, inline text lines below it. Returns
-    * (bodyLines, sidecarName). */
-  private def fullEntriesBody(spark: SparkSession, base: String, version: Int,
-                              entries: Seq[ManifestEntry]): (Seq[String], Option[String]) =
+  /** `headers` as a FULL manifest of `entries` under the checkpoint-format
+    * rule: a columnar sidecar plus its pointer header at
+    * [[PqCheckpointMinEntries]]+ entries, inline entry lines below it. */
+  private def fullManifest(spark: SparkSession, base: String, version: Int,
+                           headers: Manifest, entries: Seq[ManifestEntry]): Manifest =
     if (entries.size >= PqCheckpointMinEntries) {
       val name = s"v$version.entries.${java.util.UUID.randomUUID.toString.take(8)}.zstd.parquet"
       writeEntriesParquet(spark, s"$base/_manifests/$name", entries)
-      (Seq(s"$EntriesPqPrefix$name\t${entries.size}"), Some(name))
-    } else (entries.map(_.line), None)
-
-  /** Distance of `version`'s manifest from the last FULL manifest in its
-    * chain (0 = full/checkpoint). */
-  private def deltaDepth(spark: SparkSession, base: String, version: Int): Int =
-    manifestHeader(spark, base, version, DeltaPrefix)
-      .flatMap(_.split("\t").lift(1)).flatMap(_.toIntOption).getOrElse(0)
+      headers.copy(delta = None, entriesPq = Some((name, entries.size)), body = Nil)
+    } else headers.copy(delta = None, entriesPq = None, body = entries.map(_.line))
 
   /** Overwrite `version`'s DELTA manifest with its FULL form: identical
     * headers minus the `#delta` line, the resolved entry list spelled
@@ -496,12 +675,10 @@ object TableFormat {
     * reclaiming a retained delta's chain parents. No-op on full
     * manifests. */
   private def materializeManifest(spark: SparkSession, base: String, version: Int): Unit = {
-    val text = manifestText(spark, base, version)
-    if (!text.split("\n").exists(_.startsWith(DeltaPrefix))) return
+    val m = manifest(spark, base, version)
+    if (m.delta.isEmpty) return
     // resolve while the chain is still intact on disk
     val entries = manifestEntries(spark, base, version)
-    val headers = text.split("\n").toSeq
-      .filter(l => l.startsWith("#") && !l.startsWith(DeltaPrefix))
     // the manifest's mtime IS its commit instant to [[versionAtOrBefore]]
     // (TIMESTAMP AS OF, timestamp-bounded CDF) — restore it after the
     // rewrite, or materialization would teleport a retained version's
@@ -512,9 +689,8 @@ object TableFormat {
     val committedAt = f.getFileStatus(mp).getModificationTime
     // same checkpoint-format rule as a fresh full write (r14): a big
     // materialized snapshot lands as a columnar sidecar + pointer
-    val (bodyLines, _) = fullEntriesBody(spark, base, version, entries)
     writeFile(spark, manifestPath(base, version),
-      (headers ++ bodyLines).mkString("\n"))
+      fullManifest(spark, base, version, m, entries).render)
     // stores without setTimes (some object-store connectors) keep the
     // rewrite time — the pre-r14 behavior, degraded AS-OF anchoring
     // only on those stores, never a failed vacuum
@@ -545,82 +721,69 @@ object TableFormat {
     * count for a full manifest. */
   def manifestLogStat(spark: SparkSession, base: String,
                       version: Int): (Boolean, Int, Int, Long) = {
-    val lines = manifestText(spark, base, version).split("\n")
-    val delta = lines.exists(_.startsWith(DeltaPrefix))
-    val pq = lines.find(_.startsWith(EntriesPqPrefix))
-      .map(_.substring(EntriesPqPrefix.length).split("\t"))
+    val m = manifest(spark, base, version)
     // a parquet checkpoint's body is its sidecar: entry count from the
     // pointer header, bytes = manifest text + sidecar file (r14)
-    val body = pq.flatMap(_.lift(1)).flatMap(_.toIntOption).getOrElse(
-      lines.count(l => l.nonEmpty && !l.startsWith("#")))
+    val body = m.entriesPq.fold(m.body.size)(_._2)
     val f = fs(spark, base)
     val bytes = f.getFileStatus(new Path(manifestPath(base, version))).getLen +
-      pq.map(h => f.getFileStatus(new Path(s"$base/_manifests/${h.head}")).getLen)
-        .getOrElse(0L)
-    (delta, deltaDepth(spark, base, version), body, bytes)
+      m.entriesPq.fold(0L)(pq => f.getFileStatus(new Path(s"$base/_manifests/${pq._1}")).getLen)
+    (m.delta.isDefined, m.depth, body, bytes)
   }
-
-  /** Whether `version`'s full manifest stores its entries as a columnar
-    * parquet sidecar (r14) — the `graft_table_manifest` format column. */
-  def manifestIsParquet(spark: SparkSession, base: String, version: Int): Boolean =
-    manifestHeader(spark, base, version, EntriesPqPrefix).isDefined
 
   /** The versions whose manifest FILES `version`'s resolution needs:
     * itself plus the transitive `#delta` parents back to the chain's
     * full manifest — what vacuum must keep on disk for a retained
     * version to stay resolvable. */
   private def chainVersions(spark: SparkSession, base: String, version: Int): Seq[Int] = {
-    var v = version
-    val out = scala.collection.mutable.ArrayBuffer(v)
-    var parent = manifestHeader(spark, base, v, DeltaPrefix)
-      .flatMap(_.split("\t").headOption).flatMap(_.toIntOption)
+    val out = scala.collection.mutable.ArrayBuffer(version)
+    var parent = manifest(spark, base, version).delta.map(_._1)
     while (parent.isDefined) {
-      v = parent.get
-      out += v
-      parent = manifestHeader(spark, base, v, DeltaPrefix)
-        .flatMap(_.split("\t").headOption).flatMap(_.toIntOption)
+      out += parent.get
+      parent = manifest(spark, base, parent.get).delta.map(_._1)
     }
     out.toSeq
   }
   private[operators] def invalidateManifest(path: String): Unit = {
-    manifestTextCache.synchronized { manifestTextCache.remove(path); () }
+    manifestCache.synchronized { manifestCache.remove(path); () }
     manifestEntriesCache.synchronized { manifestEntriesCache.remove(path); () }
   }
   private def manifestStamp(spark: SparkSession, path: String): ManifestStamp = {
     val st = fs(spark, path).getFileStatus(new Path(path)) // FNF exactly like an uncached read
     ManifestStamp(st.getModificationTime, st.getLen)
   }
-  private def manifestText(spark: SparkSession, base: String, version: Int): String = {
+  /** The parsed manifest of snapshot `version`, served from the bounded
+    * cache while its (mtime, len) stamp holds — the one manifest reader.
+    * A caller that needs several headers of one version reads it once. */
+  def manifest(spark: SparkSession, base: String, version: Int): Manifest = {
     val path = manifestPath(base, version)
-    val stamp = manifestStamp(spark, path)
-    manifestTextCache.synchronized {
-      Option(manifestTextCache.get(path)) match {
-        case Some((s, t)) if s == stamp => return t
+    manifestAt(spark, path, manifestStamp(spark, path))
+  }
+  private def manifestAt(spark: SparkSession, path: String, stamp: ManifestStamp): Manifest = {
+    manifestCache.synchronized {
+      Option(manifestCache.get(path)) match {
+        case Some((s, m)) if s == stamp => return m
         case _ => ()
       }
     }
-    val t = readFile(spark, path)
+    val m = Manifest.parse(readFile(spark, path))
     if (trustable(path, stamp))
-      manifestTextCache.synchronized { manifestTextCache.put(path, (stamp, t)); () }
-    t
+      manifestCache.synchronized { manifestCache.put(path, (stamp, m)); () }
+    m
   }
 
-  private def manifestHeader(spark: SparkSession, base: String, version: Int,
-                             prefix: String): Option[String] =
-    manifestText(spark, base, version)
-      .split("\n").find(_.startsWith(prefix)).map(_.substring(prefix.length))
-
-  /** The schema snapshot `version` was committed with. */
-  def manifestSchema(spark: SparkSession, base: String, version: Int): Option[StructType] =
-    manifestHeader(spark, base, version, SchemaPrefix)
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-
   private def emptySnapshot(spark: SparkSession, base: String, version: Int): DataFrame = {
-    val schema = manifestSchema(spark, base, version).getOrElse(
+    val schema = manifest(spark, base, version).schema.getOrElse(
       throw new IllegalStateException(
         s"table $base v$version: empty manifest with no recorded schema"))
     spark.createDataFrame(new java.util.ArrayList[Row](), schema)
   }
+
+  /** `m`'s recorded schema; every manifest since r7 carries one. */
+  private def schemaOf(m: Manifest, base: String, v: Int): StructType =
+    m.schema.getOrElse(throw new IllegalStateException(s"table $base v$v has no schema header"))
+  private def schemaJsonOf(m: Manifest, base: String, v: Int): String =
+    m.schemaJson.getOrElse(throw new IllegalStateException(s"table $base v$v has no schema header"))
 
   /** Per-commit data directory. UNIQUE per attempt (r8): under optimistic
     * concurrency two committers may both stage data for the same target
@@ -850,13 +1013,14 @@ object TableFormat {
     // aliasing select, so files created after a rename are byte-layout
     // identical to files created before it (rename never forks the
     // on-disk naming). Footer stats read back under physical names too.
-    val cm: Map[String, String] = {
+    val head: Manifest = {
       val v = latestVersion(spark, base)
-      if (v == 0) Map.empty
+      if (v == 0) Manifest.empty
       else
-        try manifestColmap(spark, base, v).filter { case (l, p) => l != p }
-        catch { case _: java.io.FileNotFoundException => Map.empty }
+        try manifest(spark, base, v)
+        catch { case _: java.io.FileNotFoundException => Manifest.empty }
     }
+    val cm = head.colmap.filter { case (l, p) => l != p }
     val physDf =
       if (cm.isEmpty) df
       else df.select(df.columns.toSeq.map(c => col(c).as(cm.getOrElse(c, c))): _*)
@@ -891,25 +1055,13 @@ object TableFormat {
     // them automatically under the pushed `=`/IN predicates, skipping
     // row groups the way Delta's bloom index does, with zero manifest
     // growth (the filter lives in the file it describes).
-    val bloomCols: Seq[String] = {
-      val v = latestVersion(spark, base)
-      if (v == 0) Nil
-      else
-        try manifestProps(spark, base, v).get("graft.bloom")
-          .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-          .filter(c => df.columns.contains(c))
-        catch { case _: java.io.FileNotFoundException => Nil }
-    }
+    val bloomCols: Seq[String] = head.props.get("graft.bloom")
+      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
+      .filter(c => df.columns.contains(c))
     // `graft.write.compression` (r13): per-table parquet codec — zstd
     // is the 100 TB default trade (≈30 % smaller than snappy at minor
     // CPU cost); undeclared tables keep the session default untouched
-    val codec = {
-      val v = latestVersion(spark, base)
-      if (v == 0) None
-      else
-        try manifestProps(spark, base, v).get("graft.write.compression")
-        catch { case _: java.io.FileNotFoundException => None }
-    }
+    val codec = head.props.get("graft.write.compression")
     def configured(d: DataFrame) = {
       val w0 = codec.foldLeft(d.write.mode("overwrite"))((w, c) =>
         w.option("compression", c))
@@ -1011,197 +1163,69 @@ object TableFormat {
           "this version; re-read the latest version and rebase (appendCommit does this " +
           "automatically)")
 
-  /** Single-JVM guard making exists+create atomic under local[*] (tests,
-    * local mode). On HDFS `create(overwrite=false)` is server-side
-    * atomic anyway; object stores need their conditional-put (the same
-    * place Delta plugs in a LogStore). */
-  private val manifestLocks =
+  /** Per-path locks serializing this JVM's publishers of one file (the
+    * put-if-absent slots below and the `_CURRENT` pointer advance). */
+  private val publishLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Put-if-absent publish (r8): creates `path` ONLY if absent; returns
-    * false when a concurrent writer got there first. The foundation of
-    * optimistic concurrency — losing a race must be an observable event,
-    * never a silent overwrite.
+  /** PUT-IF-ABSENT (r8): write `bytes` to `target` ONLY if it is absent;
+    * false when another writer got there first. The foundation of
+    * optimistic concurrency — the table manifests' and the view
+    * versions' compare-and-swap slots — so losing a race must be an
+    * observable event, never a silent overwrite. Errors other than
+    * losing propagate.
     *
-    * STAGE-THEN-RENAME (r10): the body is written to a sibling tmp and
-    * RENAMED into the slot. The pre-r10 direct create+write left a
-    * window where a concurrent REBASER could read the just-created
-    * manifest before its bytes landed — an empty parent entry list —
-    * and publish the next version with the parent's files silently
-    * dropped (a rare full-suite flake was exactly this). Rename is
-    * atomic for READERS on local FS and HDFS: a manifest either isn't
-    * there or is complete. Writer-vs-writer arbitration stays the
-    * exists-check under the per-path lock (single-JVM guard; HDFS's
-    * no-overwrite rename rejects a racing double-publish server-side,
-    * object stores plug in their conditional-put here — same seam as
-    * Delta's LogStore). */
+    * STAGE-THEN-RENAME (r10): the bytes go to a sibling tmp (`tmpTag` +
+    * a unique suffix) RENAMED into the slot with no OVERWRITE flag, so a
+    * reader sees the target either absent or complete (a direct
+    * create+write let a concurrent rebaser read an empty parent).
+    * Writer-vs-writer arbitration is the exists-check under a per-path
+    * lock, which holds within ONE JVM only: across processes on `file:`
+    * the race remains check-then-rename, because the checksummed local
+    * FS checks for the target and then renames the data file and its
+    * `.crc` separately. HDFS's no-overwrite rename rejects a double
+    * publish server-side; object stores plug in their conditional put
+    * here (the seam of Delta's LogStore). */
+  private[graft] def putIfAbsent(fs: org.apache.hadoop.fs.FileSystem, target: Path,
+                                 bytes: Array[Byte], tmpTag: String): Boolean =
+    publishLocks.computeIfAbsent(target.toString, _ => new Object).synchronized {
+      if (fs.exists(target)) return false
+      val tmp = new Path(target.getParent,
+        target.getName + tmpTag + java.util.UUID.randomUUID.toString.take(8))
+      val out = fs.create(tmp, false)
+      try out.write(bytes) finally out.close()
+      try {
+        FileContext.getFileContext(fs.getUri, fs.getConf).rename(tmp, target)
+        true
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+             _: java.nio.file.FileAlreadyExistsException =>
+          try fs.delete(tmp, false) catch { case _: Exception => () }
+          false
+      }
+    }
+
+  /** [[putIfAbsent]] for a manifest: a successful publish also drops
+    * this JVM's cache entries for the path (a re-created table can
+    * re-publish a version number an older incarnation once used) and
+    * records the new file's stamp — the freshness guard (ADVICE r12 #3)
+    * defers caching of young manifests, but our own are immediately
+    * trustworthy. Vacuum reclaims stale `.staged.` leftovers. */
   private[operators] def writeFileIfAbsent(spark: SparkSession, path: String,
                                            body: String): Boolean = {
     val f = fs(spark, path)
     val p = new Path(path)
-    val lock = manifestLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (f.exists(p)) return false
-      val tmp = new Path(path + ".staged." + java.util.UUID.randomUUID.toString.take(8))
-      try {
-        val out = f.create(tmp, false)
-        out.write(body.getBytes(StandardCharsets.UTF_8))
-        out.close()
-        val fc = FileContext.getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
-        fc.rename(tmp, p) // NO overwrite option: dst must not exist
-        // a re-created table can re-publish a version number an older
-        // incarnation once used (tests drop+recreate constantly; users
-        // DROP+CREATE) — this JVM's cache entries for the path are now
-        // stale regardless of the (mtime, len) guard
-        invalidateManifest(path)
-        // record OUR publish's stamp: the freshness guard (ADVICE r12
-        // #3) defers caching of young manifests, but our own are
-        // immediately trustworthy — same-JVM coherence is the explicit
-        // invalidation above
-        try {
-          val st = f.getFileStatus(p)
-          ownPublishStamps.synchronized {
-            ownPublishStamps.put(path, ManifestStamp(st.getModificationTime, st.getLen))
-            ()
-          }
-        } catch { case _: java.io.IOException => () }
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          try f.delete(tmp, false) catch { case _: Exception => () }
-          false
-        case _: java.nio.file.FileAlreadyExistsException =>
-          try f.delete(tmp, false) catch { case _: Exception => () }
-          false
+    if (!putIfAbsent(f, p, body.getBytes(StandardCharsets.UTF_8), ".staged.")) return false
+    invalidateManifest(path)
+    try {
+      val st = f.getFileStatus(p)
+      ownPublishStamps.synchronized {
+        ownPublishStamps.put(path, ManifestStamp(st.getModificationTime, st.getLen))
+        ()
       }
-    }
+    } catch { case _: java.io.IOException => () }
+    true
   }
-
-  /** `#stats` header: the column name(s) the manifest's per-file stats
-    * were collected on — so SQL-side readers (the `graft` catalog) can
-    * map pushed predicates onto the file-skipping index. */
-  private val StatsPrefix = "#stats\t"
-
-  /** `#props` header (r10): the table's user properties (TBLPROPERTIES)
-    * as URL-encoded k=v pairs — versioned metadata like the schema, so
-    * time travel sees the properties a snapshot was committed under.
-    * Every commit INHERITS the parent's props unless it explicitly sets
-    * them ([[alterPropsCommit]]); pre-r10 manifests simply have none. */
-  private val PropsPrefix = "#props\t"
-
-  private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** The table properties snapshot `version` was committed with. */
-  def manifestProps(spark: SparkSession, base: String, version: Int): Map[String, String] =
-    manifestHeader(spark, base, version, PropsPrefix).map { body =>
-      body.split("\t").toSeq.filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** `#colmap` header (r10): logical→PHYSICAL column-name mapping — the
-    * Delta column-mapping (name mode) / Iceberg rename device. A
-    * column's physical name (what parquet files store) NEVER changes;
-    * RENAME only re-points the logical name, so zero data files move
-    * and files written before or after the rename read identically.
-    * Only columns whose names diverge appear here. `#tombstones` lists
-    * physical names that once held data under a now-retired meaning
-    * (dropped columns, or names vacated by rename): ADD COLUMN re-using
-    * such a name is assigned a FRESH physical name, so old files'
-    * stale bytes can never resurrect under the new column. Both
-    * headers inherit through commits like `#props`. */
-  private val ColmapPrefix = "#colmap\t"
-  private val TombstonesPrefix = "#tombstones\t"
-
-  /** logical → physical name map of snapshot `version` (empty = all
-    * columns store under their logical names). */
-  def manifestColmap(spark: SparkSession, base: String, version: Int): Map[String, String] =
-    manifestHeader(spark, base, version, ColmapPrefix).map { body =>
-      body.split("\t").toSeq.filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** Physical names retired by DROP/RENAME as of `version`. */
-  def manifestTombstones(spark: SparkSession, base: String, version: Int): Set[String] =
-    manifestHeader(spark, base, version, TombstonesPrefix)
-      .map(_.split("\t").toSet.filter(_.nonEmpty).map(dec)).getOrElse(Set.empty)
-
-  /** `#constraints` header (r10): the table's enforced CHECK
-    * constraints as URL-encoded name=predicateSql pairs — versioned
-    * metadata inherited through commits like `#props`. Only CHECK is
-    * stored: unique/PK/FK are not enforceable without a global index
-    * (the Delta posture — CHECK + NOT NULL only). */
-  private val ConstraintsPrefix = "#constraints\t"
-
-  /** IDENTITY high-water marks (r11, VERDICT r10 #5): per identity
-    * column, the NEXT value to allocate. The OCC commit loop serializes
-    * versions, so an insert that reads hwm H and publishes hwm H + n·step
-    * owns [H, H + n·step) exclusively — a loser's conflict re-reads the
-    * new hwm and re-assigns before retrying ([[appendCommitIdentity]]).
-    * Inherited through ordinary commits like `#props`; RESTORE keeps the
-    * PARENT's marks (a watermark must never regress, or restored-past
-    * inserts would re-issue ids — the Delta identity rule). */
-  private val HwmPrefix = "#hwm\t"
-
-  /** Per-column NDV sketches (r11, VERDICT r10 #7): `#ndv` carries one
-    * base64 DataSketches HLL per declared stats column — MERGEABLE, so
-    * every data-adding commit unions the new files' sketch into the
-    * parent's instead of rescanning the table (the Iceberg puffin-
-    * sketch model). Deletes/rewrites inherit the sketch unchanged: an
-    * HLL cannot subtract, so the estimate is a documented UPPER bound
-    * until a full rewrite rebuilds it — exactly the staleness contract
-    * CBO stats have everywhere. Surfaced to Spark through the scan's
-    * `columnStats()` (distinctCount), which `transformV2Stats` turns
-    * into catalyst attribute stats — CBO join-reorder sees real NDVs
-    * for graft-native joins. */
-  private val NdvPrefix = "#ndv\t"
-
-  /** stats column → base64 HLL sketch of snapshot `version`. */
-  def manifestNdv(spark: SparkSession, base: String, version: Int): Map[String, String] =
-    manifestHeader(spark, base, version, NdvPrefix).map { body =>
-      body.split("\t").toSeq.filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        dec(kv.substring(0, i)) -> kv.substring(i + 1)
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-column EQUI-HEIGHT HISTOGRAMS (r13): `#hist` carries, per
-    * declared stats column ANALYZE processed, `height|lo:hi:ndv;…` —
-    * the selectivity input CBO's FilterEstimation consumes beyond plain
-    * NDV, so skewed columns stop estimating under the uniformity
-    * assumption. Values are the column's numeric image (raw integral,
-    * micros for timestamps, epoch-days for dates — the stats units).
-    * Inherited through commits like `#ndv`, same staleness contract
-    * (exact as of the last ANALYZE, advisory afterwards — estimation
-    * input, never correctness). */
-  private val HistPrefix = "#hist\t"
-
-  /** Raw (encoded) histogram strings — the inheritance currency. */
-  private def manifestHistRaw(spark: SparkSession, base: String,
-                              version: Int): Map[String, String] =
-    manifestHeader(spark, base, version, HistPrefix).map { body =>
-      body.split("\t").toSeq.filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        dec(kv.substring(0, i)) -> kv.substring(i + 1)
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** column → (binHeight, bins as (lo, hi, ndv)) of snapshot `version`. */
-  def manifestHist(spark: SparkSession, base: String, version: Int)
-      : Map[String, (Double, Seq[(Double, Double, Long)])] =
-    manifestHistRaw(spark, base, version).map { case (c, s) =>
-      val bar = s.indexOf('|')
-      val height = s.substring(0, bar).toDouble
-      val bins = s.substring(bar + 1).split(";").toSeq.filter(_.nonEmpty).map { b =>
-        val p = b.split(":")
-        (p(0).toDouble, p(1).toDouble, p(2).toLong)
-      }
-      c -> (height, bins)
-    }
 
   /** Distinct-count estimate decoded from a `#ndv` sketch. */
   def ndvEstimate(sketchB64: String): Long =
@@ -1272,7 +1296,8 @@ object TableFormat {
     while (true) {
       val v = latestVersion(spark, base)
       require(v > 0, s"table $base: cannot ANALYZE a table with no commits")
-      val statsCols = manifestStatsCols(spark, base, v)
+      val m = manifest(spark, base, v)
+      val statsCols = m.statsCols
       val entries = manifestEntries(spark, base, v)
       if (statsCols.isEmpty || entries.isEmpty)
         return (v, Map.empty)
@@ -1356,14 +1381,12 @@ object TableFormat {
           }
         }
       }.toMap
-      val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-        throw new IllegalStateException(s"table $base v$v has no schema header"))
       if (fresh.isEmpty && hist.isEmpty) return (v, Map.empty) // nothing to record
       try
-        return (writeManifest(spark, base, v + 1, schemaJson, entries,
-          txn = None, statsCols = statsCols, op = "alter",
-          ndv = if (fresh.isEmpty) None else Some(fresh),
-          hist = if (hist.isEmpty) None else Some(hist)),
+        return (writeManifest(spark, base, v + 1, schemaJsonOf(m, base, v), entries,
+          statsCols = statsCols, op = "alter",
+          edit = h => h.copy(ndv = if (fresh.isEmpty) h.ndv else fresh,
+            hist = if (hist.isEmpty) h.hist else hist)),
           fresh.map { case (c, s) => c -> ndvEstimate(s) })
       catch {
         case e: CommitConflictException =>
@@ -1374,40 +1397,13 @@ object TableFormat {
     (0, Map.empty) // unreachable
   }
 
-  /** The `#ndv` value for a commit whose fresh sketches are `fresh`,
-    * publishing over `parentV` — `mergeParent = false` for whole-table
-    * replacements (the fresh sketch alone is exact); appends union with
-    * the parent's. None when there is nothing to record (callers then
-    * let [[writeManifest]] inherit). */
-  private def ndvOut(spark: SparkSession, base: String, parentV: Int,
-                     fresh: Map[String, String],
-                     mergeParent: Boolean): Option[Map[String, String]] = {
-    if (fresh.isEmpty) return None
-    val parent =
-      if (!mergeParent || parentV <= 0) Map.empty[String, String]
-      else
-        try manifestNdv(spark, base, parentV)
-        catch { case _: java.io.FileNotFoundException => Map.empty[String, String] }
-    Some(mergeNdv(parent, fresh))
-  }
-
-  /** identity column → next value to allocate, of snapshot `version`. */
-  def manifestHwm(spark: SparkSession, base: String, version: Int): Map[String, Long] =
-    manifestHeader(spark, base, version, HwmPrefix).map { body =>
-      body.split("\t").toSeq.filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        dec(kv.substring(0, i)) -> kv.substring(i + 1).toLong
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** (name, predicateSql) CHECK constraints of snapshot `version`. */
-  def manifestConstraints(spark: SparkSession, base: String, version: Int): Seq[(String, String)] =
-    manifestHeader(spark, base, version, ConstraintsPrefix).map { body =>
-      body.split("\t").toSeq.filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        dec(kv.substring(0, i)) -> dec(kv.substring(i + 1))
-      }
-    }.getOrElse(Seq.empty)
+  /** [[writeManifest]] edit recording a commit's fresh `#ndv` sketches:
+    * unioned into the inherited (parent's) sketches, or alone for a
+    * whole-table replacement (`mergeParent = false`, the fresh sketch is
+    * exact). No fresh sketches keeps the parent's. */
+  private def ndvEdit(fresh: Map[String, String], mergeParent: Boolean)(m: Manifest): Manifest =
+    if (fresh.isEmpty) m
+    else m.copy(ndv = if (mergeParent) mergeNdv(m.ndv, fresh) else fresh)
 
   /** CONSTRAINT commit (r10): add (`upsert`) or remove (`drop`) a CHECK
     * constraint as a metadata-only commit (`#op alter`, OCC loop). The
@@ -1428,16 +1424,14 @@ object TableFormat {
       // ENFORCED/VALID constraint over unvalidated rows would hand the
       // optimizer a known-true predicate the data violates
       validate(parentV)
-      val schemaJson = manifestSchema(spark, base, parentV).map(_.json).getOrElse(
-        throw new IllegalStateException(s"table $base v$parentV has no schema header"))
-      val cur = manifestConstraints(spark, base, parentV)
-      val afterDrop = drop.fold(cur)(n => cur.filterNot(_._1 == n))
+      val parent = manifest(spark, base, parentV)
+      val afterDrop = drop.fold(parent.constraints)(n => parent.constraints.filterNot(_._1 == n))
       val merged = upsert.fold(afterDrop)(u =>
         afterDrop.filterNot(_._1 == u._1) :+ u)
       try
-        return writeManifestWithConstraints(spark, base, parentV + 1, schemaJson,
-          manifestEntries(spark, base, parentV),
-          statsCols = manifestStatsCols(spark, base, parentV), merged)
+        return writeManifest(spark, base, parentV + 1, schemaJsonOf(parent, base, parentV),
+          manifestEntries(spark, base, parentV), statsCols = parent.statsCols,
+          op = "alter", edit = _.copy(constraints = merged))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -1446,34 +1440,6 @@ object TableFormat {
     }
     -1 // unreachable
   }
-
-  private def writeManifestWithConstraints(spark: SparkSession, base: String,
-                                           version: Int, schemaJson: String,
-                                           entries: Seq[ManifestEntry],
-                                           statsCols: Seq[String],
-                                           constraints: Seq[(String, String)]): Int =
-    writeManifest(spark, base, version, schemaJson, entries, txn = None,
-      statsCols = statsCols, op = "alter", constraints = Some(constraints))
-
-  /** `#op` header (r9): WHAT KIND of commit produced this version —
-    * `append`, `replace`, `delete`, `merge`, `compact`, `restore`. The
-    * change-data-feed ([[readChanges]]) needs it for exactly one
-    * distinction: a COMPACT commit moves bytes but changes no rows, so
-    * it must emit zero change rows — without the marker a file diff
-    * would have to read and cancel the entire compacted payload to
-    * discover that nothing changed (Delta/Iceberg record the same
-    * operation tag in their commit metadata for the same reason). */
-  private val OpPrefix = "#op\t"
-
-  /** The operation tag snapshot `version` was committed with (absent on
-    * pre-r9 manifests — [[readChanges]] then falls back to the full
-    * file diff, which is always correct, just not compact-aware). */
-  def manifestOp(spark: SparkSession, base: String, version: Int): Option[String] =
-    manifestHeader(spark, base, version, OpPrefix)
-
-  def manifestStatsCols(spark: SparkSession, base: String, version: Int): Seq[String] =
-    manifestHeader(spark, base, version, StatsPrefix)
-      .map(_.split("\t").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
 
   /** Highest version with a manifest on disk — the rebase point for a
     * conflicted committer (`_CURRENT` can lag a just-published manifest
@@ -1530,50 +1496,44 @@ object TableFormat {
     } else listingMax
   }
 
+  /** Publish `version`'s manifest over `entries`. The headers start as
+    * the parent's (`version - 1`, read once; none for v1 or a vacuumed
+    * parent) with `schemaJson`, `statsCols`, `op` and `txn` — which every
+    * commit sets itself — replaced; `edit` then states whatever else
+    * this commit changes (props, colmap, constraints, sketches, equality
+    * deletes …), and every other header is inherited verbatim. The
+    * `#eqadd` stamp is maintained HERE — the one commit choke point — so
+    * every committer scopes its new files out of older equality
+    * deletes; a commit that carries a whole snapshot's headers over
+    * (restore/clone/publish) states it explicitly instead. */
   private def writeManifest(spark: SparkSession, base: String, version: Int,
                             schemaJson: String, entries: Seq[ManifestEntry],
-                            txn: Option[(String, Long)],
-                            statsCols: Seq[String] = Nil,
-                            op: String = "append",
-                            props: Option[Map[String, String]] = None,
-                            colmap: Option[Map[String, String]] = None,
-                            tombstones: Option[Set[String]] = None,
-                            constraints: Option[Seq[(String, String)]] = None,
-                            hwm: Option[Map[String, Long]] = None,
-                            ndv: Option[Map[String, String]] = None,
-                            hist: Option[Map[String, String]] = None,
-                            eqdel: Option[Seq[(String, String, Int)]] = None,
-                            eqadd: Option[Map[String, Int]] = None): Int = {
-    // properties/colmap/tombstones flow with the table unless this
-    // commit sets them: None = inherit the parent's header verbatim
-    // (absent parent or pre-feature manifest → none), Some = write it
-    def inherited[A](read: => A, empty: A): A =
-      if (version <= 1) empty
-      else
-        try read
-        catch { case _: java.io.FileNotFoundException => empty }
-    val effProps = props.getOrElse(
-      inherited(manifestProps(spark, base, version - 1), Map.empty[String, String]))
-    val effColmap = colmap.getOrElse(
-      inherited(manifestColmap(spark, base, version - 1), Map.empty[String, String]))
-    val effTombs = tombstones.getOrElse(
-      inherited(manifestTombstones(spark, base, version - 1), Set.empty[String]))
-    val effCons = constraints.getOrElse(
-      inherited(manifestConstraints(spark, base, version - 1), Seq.empty[(String, String)]))
-    val effHwm = hwm.getOrElse(
-      inherited(manifestHwm(spark, base, version - 1), Map.empty[String, Long]))
-    val effNdv = ndv.getOrElse(
-      inherited(manifestNdv(spark, base, version - 1), Map.empty[String, String]))
-    val effHist = hist.getOrElse(
-      inherited(manifestHistRaw(spark, base, version - 1), Map.empty[String, String]))
-    // equality deletes (r15): inherit unless this commit sets them; the
-    // #eqadd stamp is maintained HERE — the one commit choke point — so
-    // every committer scopes its new files out of older deletes
-    val effEqDel = eqdel.getOrElse(
-      inherited(manifestEqDels(spark, base, version - 1), Seq.empty[(String, String, Int)]))
-    if (effEqDel.nonEmpty && !EqSafeOps(op))
+                            statsCols: Seq[String], op: String,
+                            txn: Option[(String, Long)] = None,
+                            edit: Manifest => Manifest = identity): Int = {
+    txn.foreach(t => Manifest.requireTxnId(t._1))
+    def orNone[A](read: => A): Option[A] =
+      if (version <= 1) None
+      else try Some(read) catch { case _: java.io.FileNotFoundException => None }
+    val parent = orNone(manifest(spark, base, version - 1)).getOrElse(Manifest.empty)
+    lazy val parentEntries = orNone(manifestEntries(spark, base, version - 1))
+    // equality deletes (r15): files this commit adds relative to the
+    // parent get added-version = this version; surviving files keep
+    // their stamp. Derived only while deletes are outstanding.
+    val eqAdds: Map[String, Int] =
+      if (parent.eqDels.isEmpty) Map.empty
+      else {
+        val parentPaths = parentEntries.toSeq.flatten.map(e => normPath(e.path)).toSet
+        val cur = entries.map(e => normPath(e.path)).toSet
+        parent.eqAdds.filter { case (p, _) => cur.contains(p) } ++
+          cur.toSeq.filterNot(parentPaths).map(_ -> version)
+      }
+    val stated = edit(parent.copy(schemaJson = Some(schemaJson), statsCols = statsCols,
+      op = Some(op), txn = txn, eqAdds = eqAdds, delta = None, entriesPq = None, body = Nil))
+    val headers = if (stated.eqDels.isEmpty) stated.copy(eqAdds = Map.empty) else stated
+    if (headers.eqDels.nonEmpty && !EqSafeOps(op))
       throw new UnsupportedOperationException(
-        s"table $base: commit op '$op' while ${effEqDel.size} equality delete(s) " +
+        s"table $base: commit op '$op' while ${headers.eqDels.size} equality delete(s) " +
           "are outstanding — a rewrite would re-add masked rows under a fresh " +
           "added-version; resolve first (CALL graft.system.resolve_eqdel, or " +
           "TableFormat.resolveEqDeletes)")
@@ -1584,13 +1544,11 @@ object TableFormat {
     // re-point the masks at the new, unrelated column. Refuse any alter
     // that removes a key column or changes its physical mapping;
     // unrelated schema evolution stays allowed.
-    if (effEqDel.nonEmpty && op == "alter") {
+    if (headers.eqDels.nonEmpty && op == "alter") {
       val newSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val parentColmap = inherited(
-        manifestColmap(spark, base, version - 1), Map.empty[String, String])
-      effEqDel.flatMap(r => eqColsOf(r._2)).distinct.foreach { k =>
+      headers.eqDels.flatMap(r => eqColsOf(r._2)).distinct.foreach { k =>
         if (!newSchema.fieldNames.contains(k) ||
-            effColmap.getOrElse(k, k) != parentColmap.getOrElse(k, k))
+            headers.colmap.getOrElse(k, k) != parent.colmap.getOrElse(k, k))
           throw new UnsupportedOperationException(
             s"table $base: ALTER would rename/drop column '$k' while an " +
               "equality delete keyed on it is outstanding — the masks " +
@@ -1598,61 +1556,6 @@ object TableFormat {
               "(CALL graft.system.resolve_eqdel)")
       }
     }
-    // explicit eqadd (restore/clone) wins: deriving it from the PARENT
-    // diff would stamp every re-appearing old file addedV = this
-    // version, scoping it out of every delete — a silent un-delete
-    val effEqAdd: Map[String, Int] = eqadd.getOrElse {
-      if (effEqDel.isEmpty) Map.empty
-      else {
-        val parentAdd = inherited(manifestEqAdds(spark, base, version - 1),
-          Map.empty[String, Int])
-        val parentPaths = inherited(
-          manifestEntries(spark, base, version - 1).map(e => normPath(e.path)).toSet,
-          Set.empty[String])
-        val cur = entries.map(e => normPath(e.path)).toSet
-        parentAdd.filter { case (p, _) => cur.contains(p) } ++
-          cur.toSeq.filterNot(parentPaths).map(_ -> version)
-      }
-    }
-    val header = Seq(SchemaPrefix + schemaJson) ++
-      (if (statsCols.nonEmpty) Seq(StatsPrefix + statsCols.mkString("\t")) else Nil) ++
-      Seq(OpPrefix + op) ++
-      (if (effProps.nonEmpty)
-         Seq(PropsPrefix + effProps.toSeq.sortBy(_._1)
-           .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("\t"))
-       else Nil) ++
-      (if (effColmap.nonEmpty)
-         Seq(ColmapPrefix + effColmap.toSeq.sortBy(_._1)
-           .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("\t"))
-       else Nil) ++
-      (if (effTombs.nonEmpty)
-         Seq(TombstonesPrefix + effTombs.toSeq.sorted.map(enc).mkString("\t"))
-       else Nil) ++
-      (if (effCons.nonEmpty)
-         Seq(ConstraintsPrefix + effCons
-           .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("\t"))
-       else Nil) ++
-      (if (effHwm.nonEmpty)
-         Seq(HwmPrefix + effHwm.toSeq.sortBy(_._1)
-           .map { case (k, v) => s"${enc(k)}=$v" }.mkString("\t"))
-       else Nil) ++
-      (if (effNdv.nonEmpty)
-         Seq(NdvPrefix + effNdv.toSeq.sortBy(_._1)
-           .map { case (k, v) => s"${enc(k)}=$v" }.mkString("\t"))
-       else Nil) ++
-      (if (effHist.nonEmpty)
-         Seq(HistPrefix + effHist.toSeq.sortBy(_._1)
-           .map { case (k, v) => s"${enc(k)}=$v" }.mkString("\t"))
-       else Nil) ++
-      (if (effEqDel.nonEmpty)
-         Seq(EqDelPrefix + effEqDel
-           .map { case (d, k, dv) => s"${enc(d)}:${enc(k)}:$dv" }.mkString("\t"))
-       else Nil) ++
-      (if (effEqAdd.nonEmpty)
-         Seq(EqAddPrefix + effEqAdd.toSeq.sortBy(_._1)
-           .map { case (p, av) => s"${enc(p)}=$av" }.mkString("\t"))
-       else Nil) ++
-      txn.map { case (app, b) => s"$TxnPrefix$app\t$b" }
     // delta-vs-full decision (r13): diff against the parent's resolved
     // entries; publish the edit script when it is strictly smaller than
     // the snapshot AND replays to the intended list byte-for-byte, the
@@ -1662,57 +1565,42 @@ object TableFormat {
     // rewrites — writes the full list, which also resets the chain.
     // lazy: the common delta path must never pay the O(entry-count)
     // snapshot serialization it exists to avoid. A big full manifest
-    // stages a columnar sidecar (r14) — tracked so a lost CAS can
-    // delete it again.
-    var pqSidecar: Option[String] = None
-    lazy val fullBody = {
-      val (bodyLines, sc) = fullEntriesBody(spark, base, version, entries)
-      pqSidecar = sc
-      (header ++ bodyLines).mkString("\n")
-    }
-    val body: String =
-      if (version <= 1 || entries.isEmpty) fullBody
-      else {
-        val parentOpt =
-          try Some(manifestEntries(spark, base, version - 1))
-          catch { case _: java.io.FileNotFoundException => None }
-        parentOpt match {
-          case Some(parent) if parent.nonEmpty &&
-              deltaDepth(spark, base, version - 1) < CheckpointEvery - 1 =>
-            val parentBy = parent.map(e => e.path -> e).toMap
-            val newBy = entries.map(e => e.path -> e).toMap
-            if (parentBy.size != parent.size || newBy.size != entries.size) fullBody
-            else {
-              val removed = parent.filter(e => !newBy.contains(e.path))
-              val mods = entries.filter(e =>
-                parentBy.get(e.path).exists(pe => pe.line != e.line))
-              val added = entries.filter(e => !parentBy.contains(e.path))
-              val cost = removed.size + mods.size + added.size
-              // REPLAY EQUIVALENCE is structural, not checked per line:
-              // paths are unique on both sides (the map-size guard
-              // above), so "parent minus removals, mods applied in
-              // place, additions appended" is a bijection on paths and
-              // every surviving unchanged entry's LINE equals the
-              // intended one by the mods definition — the resolved
-              // multiset can only equal the intended entries. Entry
-              // lists are path-keyed sets to every consumer, so the
-              // canonical delta order ("parent order, additions
-              // appended") is the same snapshot. The O(1) size check
-              // stands in for the pre-optimization O(n log n) sorted
-              // line compare, which billed every commit the full
-              // snapshot cost this format exists to avoid.
-              if (cost >= entries.size ||
-                  parent.size - removed.size + added.size != entries.size) fullBody
-              else {
-                val depth = deltaDepth(spark, base, version - 1) + 1
-                (header ++ Seq(s"$DeltaPrefix${version - 1}\t$depth") ++
-                  removed.map(e => "-\t" + e.path) ++
-                  mods.map(e => "~\t" + e.line) ++
-                  added.map(e => "+\t" + e.line)).mkString("\n")
-              }
-            }
-          case _ => fullBody
-        }
+    // stages a columnar sidecar (r14) — a lost CAS deletes it again.
+    lazy val full = fullManifest(spark, base, version, headers, entries)
+    val out: Manifest =
+      if (version <= 1 || entries.isEmpty) full
+      else parentEntries match {
+        case Some(parentList) if parentList.nonEmpty && parent.depth < CheckpointEvery - 1 =>
+          val parentBy = parentList.map(e => e.path -> e).toMap
+          val newBy = entries.map(e => e.path -> e).toMap
+          if (parentBy.size != parentList.size || newBy.size != entries.size) full
+          else {
+            val removed = parentList.filter(e => !newBy.contains(e.path))
+            val mods = entries.filter(e =>
+              parentBy.get(e.path).exists(pe => pe.line != e.line))
+            val added = entries.filter(e => !parentBy.contains(e.path))
+            val cost = removed.size + mods.size + added.size
+            // REPLAY EQUIVALENCE is structural, not checked per line:
+            // paths are unique on both sides (the map-size guard
+            // above), so "parent minus removals, mods applied in
+            // place, additions appended" is a bijection on paths and
+            // every surviving unchanged entry's LINE equals the
+            // intended one by the mods definition — the resolved
+            // multiset can only equal the intended entries. Entry
+            // lists are path-keyed sets to every consumer, so the
+            // canonical delta order ("parent order, additions
+            // appended") is the same snapshot. The O(1) size check
+            // stands in for the pre-optimization O(n log n) sorted
+            // line compare, which billed every commit the full
+            // snapshot cost this format exists to avoid.
+            if (cost >= entries.size ||
+                parentList.size - removed.size + added.size != entries.size) full
+            else headers.copy(delta = Some((version - 1, parent.depth + 1)),
+              body = removed.map(e => "-\t" + e.path) ++
+                mods.map(e => "~\t" + e.line) ++
+                added.map(e => "+\t" + e.line))
+          }
+        case _ => full
       }
     // put-if-absent (r8): v$N.manifest is the commit's compare-and-swap
     // slot — two committers from the same parent CANNOT both win it; the
@@ -1721,7 +1609,7 @@ object TableFormat {
     // would fork history under every version above — a committer whose
     // rebase point somehow landed below the reclaim line conflicts and
     // retries against the healed latestVersion instead.
-    def dropSidecar(): Unit = pqSidecar.foreach { n =>
+    def dropSidecar(): Unit = out.entriesPq.foreach { case (n, _) =>
       try { fs(spark, base).delete(new Path(s"$base/_manifests/$n"), false); () }
       catch { case scala.util.control.NonFatal(_) => () }
     }
@@ -1730,7 +1618,7 @@ object TableFormat {
       dropSidecar()
       throw new CommitConflictException(base, version)
     }
-    if (!writeFileIfAbsent(spark, s"$base/_manifests/v$version.manifest", body)) {
+    if (!writeFileIfAbsent(spark, s"$base/_manifests/v$version.manifest", out.render)) {
       dropSidecar()
       throw new CommitConflictException(base, version)
     }
@@ -1739,7 +1627,7 @@ object TableFormat {
     // read-compare-write is serialized per table (same single-JVM guard
     // as the manifest CAS; cross-JVM, latestVersion() self-heals a stale
     // pointer on the next commit).
-    val ptrLock = manifestLocks.computeIfAbsent(s"$base/_CURRENT", _ => new Object)
+    val ptrLock = publishLocks.computeIfAbsent(s"$base/_CURRENT", _ => new Object)
     ptrLock.synchronized {
       // compare against the RAW pointer file (not currentVersion, whose
       // manifest-listing fallback would see the manifest just written
@@ -1775,10 +1663,12 @@ object TableFormat {
     // instead of parallelism/8 stubs (small-file debt the compactor
     // would otherwise repay with interest). Undeclared tables keep the
     // local heuristic unchanged.
+    val headV = latestVersion(spark, base)
+    val head =
+      try manifest(spark, base, headV)
+      catch { case _: java.io.FileNotFoundException => Manifest.empty }
     val sized: Option[Int] =
-      (try manifestProps(spark, base, latestVersion(spark, base))
-         .get("graft.write.target-file-size").flatMap(_.toLongOption)
-       catch { case _: java.io.FileNotFoundException => None })
+      head.props.get("graft.write.target-file-size").flatMap(_.toLongOption)
         .filter(_ > 0).map { t =>
           val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
           ((est + t - 1) / t).min(4096).max(1).toInt
@@ -1789,11 +1679,8 @@ object TableFormat {
     // column, collect bounds for EVERY declared column (r11, VERDICT
     // r10 #3) — an append into an N-column-clustered table keeps the
     // whole skipping index alive, not just its first dimension
-    val declared0 =
-      try manifestStatsCols(spark, base, latestVersion(spark, base))
-      catch { case _: java.io.FileNotFoundException => Nil }
     val collectCols: Seq[String] =
-      if (statsCol.isDefined && declared0.headOption == statsCol) declared0
+      if (statsCol.isDefined && head.statsCols.headOption == statsCol) head.statsCols
       else statsCol.toSeq
     // a bucketed table's layout is owned by the write itself (r12,
     // one-file-per-bucket routing inside writeDataFilesNdv) — the range
@@ -1807,7 +1694,7 @@ object TableFormat {
     // NDV sketches accumulate IN-FLIGHT through the write (r11,
     // VERDICT r10 #7 + observe refinement: zero extra pass)
     val staged0 = writeDataFilesNdv(spark, base,
-      newCommitDir(base, latestVersion(spark, base) + 1), clustered,
+      newCommitDir(base, headV + 1), clustered,
       collectCols.headOption, collectCols.drop(1).headOption, collectCols.drop(2),
       collectNdv = true, bucketBy = bucketBy)
     val entries = staged0.entries
@@ -1815,13 +1702,13 @@ object TableFormat {
     var attempt = 0
     while (true) {
       val parentV = latestVersion(spark, base)
+      val parent = if (parentV == 0) Manifest.empty else manifest(spark, base, parentV)
       // `replace` (r12): publish as an INSERT OVERWRITE — parentless
       // entry list at the next version slot, prior snapshots readable
       val parentEntries =
         if (parentV == 0 || replace) Seq.empty
         else manifestEntries(spark, base, parentV)
-      val statsCols =
-        if (parentV == 0) collectCols else manifestStatsCols(spark, base, parentV)
+      val statsCols = if (parentV == 0) collectCols else parent.statsCols
       // entry stats must MEAN what the inherited #stats header says they
       // mean (r9, ADVICE r8 #2): appending with a different statsCol than
       // the table's declared one would record bounds of column Y under a
@@ -1841,9 +1728,7 @@ object TableFormat {
       // schema and hide older files' columns — evolution is add-only in
       // both directions. SQL INSERT aligns schemas up front; this guards
       // the programmatic API.
-      val parentSchema =
-        if (parentV == 0) None else manifestSchema(spark, base, parentV)
-      val mergedSchema = parentSchema.fold(df.schema) { ps =>
+      val mergedSchema = parent.schema.fold(df.schema) { ps =>
         val have = ps.fieldNames.toSet
         val added = df.schema.fields.filterNot(f => have(f.name))
         // implicit evolution cannot re-use a RETIRED or in-use physical
@@ -1852,11 +1737,9 @@ object TableFormat {
         // (which must act BEFORE any data lands) can't apply here —
         // route such adds through ALTER TABLE ADD COLUMN instead
         if (added.nonEmpty) {
-          val tombs = manifestTombstones(spark, base, parentV)
-          val cm = manifestColmap(spark, base, parentV)
-          val physInUse = ps.fieldNames.map(n => cm.getOrElse(n, n)).toSet -- have
+          val physInUse = ps.fieldNames.map(n => parent.colmap.getOrElse(n, n)).toSet -- have
           added.foreach { f =>
-            require(!tombs(f.name) && !physInUse(f.name),
+            require(!parent.tombstones(f.name) && !physInUse(f.name),
               s"appendCommit: column ${f.name} re-uses a retired physical name " +
                 "(a dropped or renamed-away column once stored bytes under it); " +
                 "add it via ALTER TABLE ADD COLUMN, which assigns a fresh " +
@@ -1868,16 +1751,12 @@ object TableFormat {
       // `setProps` (r12, materialized views): property updates travel IN
       // the data commit — refresh bookkeeping (`graft.mv.version`) can
       // never be observed apart from the state it describes
-      val propsOut =
-        if (setProps.isEmpty) None
-        else Some((if (parentV == 0) Map.empty[String, String]
-                   else manifestProps(spark, base, parentV)) ++ setProps)
       try
         return writeManifest(spark, base, parentV + 1, mergedSchema.json,
-          parentEntries ++ publishable, txn = None, statsCols = statsCols,
+          parentEntries ++ publishable, statsCols = statsCols,
           op = if (replace) "replace" else "append",
-          props = propsOut,
-          ndv = ndvOut(spark, base, parentV, freshNdv, mergeParent = !replace))
+          edit = m => ndvEdit(freshNdv, mergeParent = !replace)(
+            m.copy(props = m.props ++ setProps)))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -1931,7 +1810,8 @@ object TableFormat {
       val parentV = latestVersion(spark, base)
       require(parentV > 0,
         s"table $base: identity tables are created via the catalog before any insert")
-      val hwm0 = manifestHwm(spark, base, parentV)
+      val parent = manifest(spark, base, parentV)
+      val hwm0 = parent.hwm
       def marksOf(h: Map[String, Long]) = identityCols.map {
         case (n, start, _) => n -> h.getOrElse(n, start)
       }.toMap
@@ -1943,9 +1823,8 @@ object TableFormat {
           prev.foreach { case (_, old) =>
             old.foreach(en => fOf.delete(new Path(en.path), false))
           }
-          val declared = manifestStatsCols(spark, base, parentV)
           val collectCols =
-            if (statsCol.isDefined && declared.headOption == statsCol) declared
+            if (statsCol.isDefined && parent.statsCols.headOption == statsCol) parent.statsCols
             else statsCol.toSeq
           val assigned = assign(hwm0)
           val clustered =
@@ -1964,14 +1843,12 @@ object TableFormat {
       }
       val parentEntries =
         if (replace) Seq.empty else manifestEntries(spark, base, parentV)
-      val ps = manifestSchema(spark, base, parentV)
-      val outSchema = preserveFieldMetadata(ps, schema)
+      val outSchema = preserveFieldMetadata(parent.schema, schema)
       try
         return writeManifest(spark, base, parentV + 1, outSchema.json,
-          parentEntries ++ entries, txn = None,
-          statsCols = manifestStatsCols(spark, base, parentV),
-          op = if (replace) "replace" else "append", hwm = Some(newHwm),
-          ndv = ndvOut(spark, base, parentV, idNdv, mergeParent = !replace))
+          parentEntries ++ entries, statsCols = parent.statsCols,
+          op = if (replace) "replace" else "append",
+          edit = m => ndvEdit(idNdv, mergeParent = !replace)(m.copy(hwm = newHwm)))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -1981,6 +1858,14 @@ object TableFormat {
     -1 // unreachable
   }
 
+  /** Commit `df` as snapshot `version`. `parent = Some(v)` makes this an
+    * APPEND commit (new manifest = v's files + the new ones); `None`
+    * starts the table (or replaces it wholesale). `statsCol` (a LONG
+    * column) records per-file min/max in the manifest — the file-skipping
+    * index `readSnapshotWhere` prunes on; the data is range-clustered on
+    * it first so file ranges are disjoint and skipping actually bites
+    * (production writers collect these stats task-side during the write;
+    * the one-pass read-back here stands in for that). Returns version. */
   def commit(spark: SparkSession, base: String, df: DataFrame, version: Int,
              parent: Option[Int], statsCol: Option[String] = None,
              txn: Option[(String, Long)] = None,
@@ -1990,21 +1875,17 @@ object TableFormat {
     // N-column upgrade (r11, VERDICT r10 #3), same rule as appendCommit:
     // statsCol matching the table's declared first cluster column means
     // this commit maintains the WHOLE declared index
-    val declared0 =
-      if (version <= 1) Nil
+    val prev =
+      if (version <= 1) Manifest.empty
       else
-        try manifestStatsCols(spark, base, version - 1)
-        catch { case _: java.io.FileNotFoundException => Nil }
+        try manifest(spark, base, version - 1)
+        catch { case _: java.io.FileNotFoundException => Manifest.empty }
     val collectCols: Seq[String] =
-      if (statsCol.isDefined && declared0.headOption == statsCol) declared0
+      if (statsCol.isDefined && prev.statsCols.headOption == statsCol) prev.statsCols
       else statsCol.toSeq
     // bucketed tables keep their layout through programmatic commits
     // too (r12) — same rule as the SQL insert path
-    val bucket =
-      if (version <= 1) None
-      else
-        try bucketSpecOf(manifestProps(spark, base, version - 1))
-        catch { case _: java.io.FileNotFoundException => None }
+    val bucket = bucketSpecOf(prev.props)
     val clustered =
       if (collectCols.isEmpty || bucket.isDefined) df
       else df.repartitionByRange(nFiles, collectCols.map(col): _*)
@@ -2018,11 +1899,12 @@ object TableFormat {
     // OVERWRITE's DataFrame flowed through withColumn/planner and lost
     // GENERATION_EXPRESSION/defaults — re-attach from the latest
     // recorded schema (parentless overwrites still belong to the table)
-    val prevSchema = {
-      val pv = parent.getOrElse(version - 1)
-      if (pv <= 0) None
-      else try manifestSchema(spark, base, pv)
-           catch { case _: java.io.FileNotFoundException => None }
+    val prevSchema = parent match {
+      case Some(pv) if pv != version - 1 =>
+        if (pv <= 0) None
+        else try manifest(spark, base, pv).schema
+             catch { case _: java.io.FileNotFoundException => None }
+      case _ => prev.schema
     }
     val outSchema = preserveFieldMetadata(prevSchema, df.schema)
     // `append` promises readChanges' fast path that NOTHING was removed
@@ -2030,11 +1912,10 @@ object TableFormat {
     // caller committing over an older parent (the API allows it) drops
     // version-1's extra files, so tag it `replace` and let the CDF take
     // the always-correct full-diff path (r10, ADVICE r9 #3).
-    writeManifest(spark, base, version, outSchema.json, parentEntries ++ entries, txn,
-      ndv = ndvOut(spark, base, version - 1, freshNdv,
-        mergeParent = parent.isDefined),
+    writeManifest(spark, base, version, outSchema.json, parentEntries ++ entries,
       statsCols = collectCols,
-      op = if (parent.contains(version - 1)) "append" else "replace")
+      op = if (parent.contains(version - 1)) "append" else "replace", txn = txn,
+      edit = ndvEdit(freshNdv, mergeParent = parent.isDefined))
   }
 
   /** NDV STALENESS trigger (r12, VERDICT r11 #7). Incremental `#ndv`
@@ -2054,7 +1935,7 @@ object TableFormat {
   private def maybeAutoAnalyze(spark: SparkSession, base: String,
                                newVersion: Int): Unit = {
     val props =
-      try manifestProps(spark, base, newVersion)
+      try manifest(spark, base, newVersion).props
       catch { case _: java.io.FileNotFoundException => return }
     if (!props.get("graft.analyze.auto").exists(_.equalsIgnoreCase("true"))) return
     val threshold = props.get("graft.analyze.threshold")
@@ -2081,7 +1962,7 @@ object TableFormat {
     * time and are invisible to file metadata. */
   def liveRowCount(spark: SparkSession, base: String,
                    version: Int): Option[Long] = {
-    if (manifestEqDels(spark, base, version).nonEmpty) return None
+    if (manifest(spark, base, version).eqDels.nonEmpty) return None
     val es = manifestEntries(spark, base, version)
     if (es.forall(_.rows.isDefined)) Some(es.flatMap(_.liveRows).sum) else None
   }
@@ -2101,6 +1982,7 @@ object TableFormat {
   def deleteWhere(spark: SparkSession, base: String, statsCol: String,
                   lo: Long, hi: Long): Int = {
     val v = currentVersion(spark, base)
+    val m = manifest(spark, base, v)
     val version = v + 1
     val entries = manifestEntries(spark, base, v)
     val (touched, untouched) = entries.partition(_.mayMatch(lo, hi))
@@ -2115,7 +1997,7 @@ object TableFormat {
     // bucketed tables keep their layout through the rewrite (review
     // r12): a CoW DELETE staging plain files would silently knock the
     // table off the storage-partitioned-join path
-    val bucket = bucketSpecOf(manifestProps(spark, base, v))
+    val bucket = bucketSpecOf(m.props)
     val rewritten =
       if (straddling.isEmpty) Seq.empty
       else writeDataFilesNdv(spark, base, newCommitDir(base, version),
@@ -2123,10 +2005,9 @@ object TableFormat {
           // file's already-deleted rows must not resurrect in the rewrite
           .filter(!(col(statsCol) >= lo && col(statsCol) <= hi) || col(statsCol).isNull),
         Some(statsCol), bucketBy = bucket).entries
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val schemaJson = schemaJsonOf(m, base, v)
     val out = writeManifest(spark, base, version, schemaJson, untouched ++ rewritten,
-      txn = None, statsCols = Seq(statsCol), op = "delete")
+      statsCols = Seq(statsCol), op = "delete")
     maybeAutoAnalyze(spark, base, out)
     out
   }
@@ -2150,6 +2031,7 @@ object TableFormat {
   def mergeInto(spark: SparkSession, base: String, changes: DataFrame,
                 key: String): (Int, Int, Int) = {
     val v = currentVersion(spark, base)
+    val m = manifest(spark, base, v)
     val version = v + 1
     val entries = manifestEntries(spark, base, v)
     if (changes.isEmpty) return (v, 0, entries.size) // empty change set: no-op
@@ -2166,7 +2048,7 @@ object TableFormat {
     // file as a candidate (full copy-on-write), or files holding
     // matching keys would be skipped and the merge would silently
     // miss updates / produce duplicate keys.
-    val statsOnKey = manifestStatsCols(spark, base, v).headOption.contains(key)
+    val statsOnKey = m.statsCols.headOption.contains(key)
     val cands =
       if (statsOnKey) entries.filter(e => e.lo.isDefined && e.hi.isDefined)
       else Seq.empty
@@ -2183,8 +2065,7 @@ object TableFormat {
       }
     val touched = noStats ++ cands.filter(e => touchedPaths(e.path))
     val untouched = entries.filterNot(touched.toSet)
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val schemaJson = schemaJsonOf(m, base, v)
     val baseRows =
       if (touched.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[Row](),
@@ -2197,17 +2078,17 @@ object TableFormat {
     // first column (r11): a merge on the cluster key used to re-declare
     // the header as just `Seq(key)`, silently dropping a 2nd/3rd
     // declared column's index for every later commit
-    val declared = manifestStatsCols(spark, base, v)
+    val declared = m.statsCols
     val outStats = if (declared.headOption.contains(key)) declared else Seq(key)
     // bucketed tables keep their layout through the merge rewrite (r12)
-    val bucket = bucketSpecOf(manifestProps(spark, base, v))
+    val bucket = bucketSpecOf(m.props)
     val rewritten = writeDataFilesNdv(spark, base, newCommitDir(base, version),
       if (bucket.isDefined) merged
       else merged.repartitionByRange(nFiles, outStats.map(col): _*),
       outStats.headOption, outStats.drop(1).headOption, outStats.drop(2),
       bucketBy = bucket).entries
     val out = writeManifest(spark, base, version, schemaJson,
-      untouched ++ rewritten, txn = None, statsCols = outStats, op = "merge")
+      untouched ++ rewritten, statsCols = outStats, op = "merge")
     (out, touched.size, entries.size)
   }
 
@@ -2226,10 +2107,11 @@ object TableFormat {
   def deleteByKeys(spark: SparkSession, base: String, keys: DataFrame,
                    key: String): (Int, Int, Int) = {
     val v = currentVersion(spark, base)
+    val m = manifest(spark, base, v)
     val version = v + 1
     val entries = manifestEntries(spark, base, v)
     if (keys.isEmpty) return (v, 0, entries.size)
-    val statsCols = manifestStatsCols(spark, base, v)
+    val statsCols = m.statsCols
     val statsOnKey = statsCols.headOption.contains(key)
     val cands =
       if (statsOnKey) entries.filter(e => e.lo.isDefined && e.hi.isDefined)
@@ -2248,8 +2130,7 @@ object TableFormat {
     val touched = noStats ++ cands.filter(e => touchedPaths(e.path))
     if (touched.isEmpty) return (v, 0, entries.size) // no file can hold a key
     val untouched = entries.filterNot(touched.toSet)
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val schemaJson = schemaJsonOf(m, base, v)
     // survivors of the touched files only; dv-aware read (a prior MoR
     // delete's masked rows must not resurrect through the rewrite)
     val survivors = readEntriesDf(spark, base, v, touched)
@@ -2257,9 +2138,9 @@ object TableFormat {
     val rewritten = writeDataFilesNdv(spark, base, newCommitDir(base, version),
       survivors, statsCols.headOption, statsCols.drop(1).headOption,
       statsCols.drop(2),
-      bucketBy = bucketSpecOf(manifestProps(spark, base, v))).entries
+      bucketBy = bucketSpecOf(m.props)).entries
     val out = writeManifest(spark, base, version, schemaJson,
-      untouched ++ rewritten, txn = None, statsCols = statsCols, op = "delete")
+      untouched ++ rewritten, statsCols = statsCols, op = "delete")
     maybeAutoAnalyze(spark, base, out)
     (out, touched.size, entries.size)
   }
@@ -2277,9 +2158,10 @@ object TableFormat {
               targetFiles: Int = 1, minFiles: Int = 2): (Int, Int) = {
     // outstanding equality deletes resolve FIRST (r15) — the lazy half
     // of the eqdel contract: maintenance pays the one deferred join
-    if (manifestEqDels(spark, base, currentVersion(spark, base)).nonEmpty)
+    if (manifest(spark, base, currentVersion(spark, base)).eqDels.nonEmpty)
       resolveEqDeletes(spark, base)
     val v = currentVersion(spark, base)
+    val m = manifest(spark, base, v)
     val version = v + 1
     val f = fs(spark, base)
     val entries = manifestEntries(spark, base, v)
@@ -2290,13 +2172,13 @@ object TableFormat {
     // (r11): re-cluster the consolidated rows on the declared columns
     // and record their bounds — a stat-less compacted file would read
     // on EVERY predicate forever (the pre-r11 behavior)
-    val declared = manifestStatsCols(spark, base, v)
+    val declared = m.statsCols
     // BUCKET-AWARE (r12): a bucketed table's compaction must PRESERVE
     // the `__bkt=` layout, or consolidated files would silently knock
     // the whole table off the storage-partitioned-join path until a
     // full rewrite — the bucketed write re-routes the consolidated rows
     // one-file-per-bucket (targetFiles is owned by the bucket count)
-    val bucket = bucketSpecOf(manifestProps(spark, base, v))
+    val bucket = bucketSpecOf(m.props)
     val smallDf = readEntriesDf(spark, base, v, small)
       // dv-aware read: compacting a dv-carrying file MATERIALIZES its
       // deletes — the consolidated output holds live rows only and the
@@ -2341,14 +2223,13 @@ object TableFormat {
       val headLines = head.map(_.line).toSet
       if (!srcLines.subsetOf(headLines))
         throw new ConcurrentModificationException(base, basedOn, v)
-      if (v != basedOn && manifestStatsCols(spark, base, v) != statsCols)
+      val m = manifest(spark, base, v)
+      if (v != basedOn && m.statsCols != statsCols)
         throw new ConcurrentModificationException(base, basedOn, v)
       val keep = head.filterNot(e => srcLines.contains(e.line))
-      val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-        throw new IllegalStateException(s"table $base v$v has no schema header"))
       try
-        return writeManifest(spark, base, v + 1, schemaJson, keep ++ rewritten,
-          txn = None, statsCols = statsCols, op = op)
+        return writeManifest(spark, base, v + 1, schemaJsonOf(m, base, v), keep ++ rewritten,
+          statsCols = statsCols, op = op)
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -2380,17 +2261,18 @@ object TableFormat {
       s"purge_dv: min_fraction must be in (0, 1], got $minFraction")
     // outstanding equality deletes resolve FIRST (r15): the resolution
     // dv lands before the fraction test so heavy masks purge in one pass
-    if (manifestEqDels(spark, base, currentVersion(spark, base)).nonEmpty)
+    if (manifest(spark, base, currentVersion(spark, base)).eqDels.nonEmpty)
       resolveEqDeletes(spark, base)
     val v = currentVersion(spark, base)
+    val m = manifest(spark, base, v)
     val entries = manifestEntries(spark, base, v)
     val (heavy, keep) = entries.partition(e =>
       e.dv.isDefined && e.rows.exists(r => r > 0 &&
         e.dvRows.exists(d => d.toDouble / r >= minFraction)))
     if (heavy.isEmpty) return (v, 0, entries.size)
     val version = v + 1
-    val declared = manifestStatsCols(spark, base, v)
-    val bucket = bucketSpecOf(manifestProps(spark, base, v))
+    val declared = m.statsCols
+    val bucket = bucketSpecOf(m.props)
     // dv-aware read = the masks MATERIALIZE: live rows only
     val live = readEntriesDf(spark, base, v, heavy)
     val clustered =
@@ -2452,11 +2334,11 @@ object TableFormat {
     }
     val dvFiles = retainedEntriesAll.flatMap(_.dv).distinct.flatMap(dirFiles)
     val eqFiles = ((retain.flatMap(v =>
-        try manifestEqDels(spark, base, v).map(_._1)
+        try manifest(spark, base, v).eqDels.map(_._1)
         catch { case _: java.io.FileNotFoundException => Nil }) ++
       branchTreesOf(spark, base).flatMap { bt =>
         history(spark, bt).flatMap { case (bv, _, _) =>
-          try manifestEqDels(spark, bt, bv).map(_._1)
+          try manifest(spark, bt, bv).eqDels.map(_._1)
           catch { case _: java.io.FileNotFoundException => Nil }
         }
       }).distinct).flatMap(dirFiles)
@@ -2583,7 +2465,7 @@ object TableFormat {
     if (reclaiming.nonEmpty) {
       // advance-only, same lock discipline as writeManifest's publish —
       // a concurrent commit may have moved the head past `cur` already
-      val ptrLock = manifestLocks.computeIfAbsent(s"$base/_CURRENT", _ => new Object)
+      val ptrLock = publishLocks.computeIfAbsent(s"$base/_CURRENT", _ => new Object)
       ptrLock.synchronized {
         val ptr = try readFile(spark, s"$base/_CURRENT").trim.toInt
                   catch { case scala.util.control.NonFatal(_) => 0 }
@@ -2609,8 +2491,7 @@ object TableFormat {
         val ver = n.takeWhile(_ != '.').stripPrefix("v").toIntOption
         val named = ver.exists { v =>
           retain.contains(v) &&
-            (try manifestHeader(spark, base, v, EntriesPqPrefix)
-               .exists(_.split("\t").headOption.contains(n))
+            (try manifest(spark, base, v).entriesPq.exists(_._1 == n)
              catch { case _: java.io.FileNotFoundException => false })
         }
         if (!named) {
@@ -2671,14 +2552,15 @@ object TableFormat {
     * resolves only against the file-source relation itself. */
   private[graft] def readFilesWith(spark: SparkSession, base: String, version: Int,
                                    files: Seq[String], withPos: Boolean): DataFrame = {
+    val m = manifest(spark, base, version)
     def pos(df: DataFrame) =
       if (withPos)
         df.withColumn("__fp", col("_metadata.file_path"))
           .withColumn("__ri", col("_metadata.row_index"))
       else df
-    manifestSchema(spark, base, version) match {
+    m.schema match {
       case Some(schema) =>
-        val cm = manifestColmap(spark, base, version).filter { case (l, p) => l != p }
+        val cm = m.colmap.filter { case (l, p) => l != p }
         if (cm.isEmpty) pos(spark.read.schema(schema).parquet(files: _*))
         else {
           val phys = StructType(schema.fields.map(f =>
@@ -2707,35 +2589,28 @@ object TableFormat {
         case _ => ()
       }
     }
-    val lines = manifestText(spark, base, version).split("\n").toSeq
-    val body = lines.filter(l => l.nonEmpty && !l.startsWith("#"))
+    val m = manifestAt(spark, path, stamp)
     // delta resolution (r13): apply the edit script to the parent's
     // resolved list — removals by path, modifications in place,
     // additions at the tail. Recursion bottoms out at the chain's full
     // manifest (≤ CheckpointEvery hops, each level cached).
-    val parsed = lines.find(_.startsWith(DeltaPrefix)) match {
-      case Some(h) =>
-        val parentV = h.substring(DeltaPrefix.length).split("\t").head.toInt
+    val parsed = (m.delta, m.entriesPq) match {
+      case (Some((parentV, _)), _) =>
         val parent = manifestEntries(spark, base, parentV)
-        val removed = body.filter(_.startsWith("-\t")).map(_.substring(2)).toSet
-        val modBy = body.filter(_.startsWith("~\t"))
+        val removed = m.body.filter(_.startsWith("-\t")).map(_.substring(2)).toSet
+        val modBy = m.body.filter(_.startsWith("~\t"))
           .map(l => ManifestEntry.parse(l.substring(2)))
           .map(e => e.path -> e).toMap
-        val added = body.filter(_.startsWith("+\t"))
+        val added = m.body.filter(_.startsWith("+\t"))
           .map(l => ManifestEntry.parse(l.substring(2)))
         parent.flatMap { pe =>
           if (removed.contains(pe.path)) None
           else Some(modBy.getOrElse(pe.path, pe))
         } ++ added
-      case None =>
-        // parquet checkpoint (r14): the entry list lives in a columnar
-        // sidecar; resolve through the vectorized driver-side read
-        lines.find(_.startsWith(EntriesPqPrefix)) match {
-          case Some(h) =>
-            val name = h.substring(EntriesPqPrefix.length).split("\t").head
-            readEntriesParquet(spark, s"$base/_manifests/$name")
-          case None => body.map(ManifestEntry.parse)
-        }
+      // parquet checkpoint (r14): the entry list lives in a columnar
+      // sidecar; resolve through the vectorized driver-side read
+      case (None, Some((name, _))) => readEntriesParquet(spark, s"$base/_manifests/$name")
+      case (None, None) => m.body.map(ManifestEntry.parse)
     }
     if (trustable(path, stamp)) manifestEntriesCache.synchronized {
       manifestEntriesCache.put(path, (stamp, parsed))
@@ -2962,7 +2837,7 @@ object TableFormat {
     val v = currentVersion(spark, base)
     val entries = manifestEntries(spark, base, v)
     if (keys.isEmpty) return (v, 0, entries.size)
-    val statsCols = manifestStatsCols(spark, base, v)
+    val statsCols = manifest(spark, base, v).statsCols
     val statsOnKey = statsCols.headOption.contains(key)
     val cands =
       if (statsOnKey) entries.filter(e => e.lo.isDefined && e.hi.isDefined)
@@ -2999,9 +2874,9 @@ object TableFormat {
                              untouched: Seq[ManifestEntry],
                              newPairs: DataFrame, total: Int): (Int, Int, Int) = {
     val version = v + 1
-    val statsCols = manifestStatsCols(spark, base, v)
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val m = manifest(spark, base, v)
+    val statsCols = m.statsCols
+    val schemaJson = schemaJsonOf(m, base, v)
     val allPairs = dvPairsOf(spark, touched)
       .fold(newPairs)(old => newPairs.unionByName(old)).distinct()
     val dvDir = s"$base/data/dv${version}_${java.util.UUID.randomUUID.toString.take(8)}"
@@ -3022,7 +2897,7 @@ object TableFormat {
       else { withDv += 1; Some(e.copy(dv = Some(dvDir), dvRows = Some(n))) }
     }
     val out = writeManifest(spark, base, version, schemaJson, untouched ++ updated,
-      txn = None, statsCols = statsCols, op = "delete_dv")
+      statsCols = statsCols, op = "delete_dv")
     maybeAutoAnalyze(spark, base, out)
     (out, withDv, total)
   }
@@ -3060,8 +2935,6 @@ object TableFormat {
   // refuse outstanding-delete snapshots loudly instead of silently
   // missing masks.
 
-  private[graft] val EqDelPrefix = "#eqdel\t"
-  private[graft] val EqAddPrefix = "#eqadd\t"
   /** Commit ops that cannot re-expose equality-masked rows: they add
     * new rows and/or mask more, never rewrite old rows to new files. */
   // restore/clone/publish are safe because they carry their SOURCE
@@ -3074,26 +2947,6 @@ object TableFormat {
   private val EqSafeOps =
     Set("append", "delete_eq", "eqdel_resolve", "eqdel_consolidate",
         "delete_dv", "alter", "restore", "clone", "publish")
-
-  /** Outstanding equality deletes of `version`: (keyDir, keyCol,
-    * committedAtVersion), oldest first. */
-  def manifestEqDels(spark: SparkSession, base: String,
-                     version: Int): Seq[(String, String, Int)] =
-    manifestHeader(spark, base, version, EqDelPrefix)
-      .map(_.split("\t").toSeq.filter(_.nonEmpty).map { r =>
-        val p = r.split(":", 3)
-        (dec(p(0)), dec(p(1)), p(2).toInt)
-      }).getOrElse(Nil)
-
-  /** path → version the file was ADDED at, for files added while
-    * equality deletes were outstanding (absent path = predates them). */
-  def manifestEqAdds(spark: SparkSession, base: String,
-                     version: Int): Map[String, Int] =
-    manifestHeader(spark, base, version, EqAddPrefix)
-      .map(_.split("\t").toSeq.filter(_.nonEmpty).map { r =>
-        val i = r.lastIndexOf('=')
-        dec(r.substring(0, i)) -> r.substring(i + 1).toInt
-      }.toMap).getOrElse(Map.empty)
 
   /** EQUALITY DELETE BY KEYS: stage the key set, commit metadata —
     * ingest IO ∝ |keys|, ZERO table reads, ZERO joins. Returns
@@ -3126,7 +2979,7 @@ object TableFormat {
     val cap = spark.conf.getOption("spark.graft.eqdel.maxOutstanding")
       .map(_.toInt).getOrElse(64)
     if (cap > 0 &&
-        manifestEqDels(spark, base, currentVersion(spark, base)).size >= cap) {
+        manifest(spark, base, currentVersion(spark, base)).eqDels.size >= cap) {
       // `spark.graft.eqdel.capAction` (r16, r17 candidate #5):
       // `resolve` (default) folds the backlog into one dv commit;
       // `consolidate` takes the cheaper middle step — union the key
@@ -3142,10 +2995,10 @@ object TableFormat {
       ()
     }
     val v = currentVersion(spark, base)
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val m = manifest(spark, base, v)
+    val schemaJson = schemaJsonOf(m, base, v)
     keyCols.foreach(k =>
-      require(manifestSchema(spark, base, v).exists(_.fields.exists(_.name == k)),
+      require(m.schema.exists(_.fields.exists(_.name == k)),
         s"delete_eq: key column '$k' is not in the table schema"))
     val version = v + 1
     val dir = s"$base/data/eq${version}_${java.util.UUID.randomUUID.toString.take(8)}"
@@ -3171,12 +3024,11 @@ object TableFormat {
       catch { case _: java.io.IOException => () }
       return (v, 0L)
     }
-    val eqd = manifestEqDels(spark, base, v) :+
+    val eqd = m.eqDels :+
       ((dir, keyCols.mkString(","), version))
     val out = writeManifest(spark, base, version, schemaJson,
-      manifestEntries(spark, base, v), txn = None,
-      statsCols = manifestStatsCols(spark, base, v), op = "delete_eq",
-      eqdel = Some(eqd))
+      manifestEntries(spark, base, v), statsCols = m.statsCols, op = "delete_eq",
+      edit = _.copy(eqDels = eqd))
     (out, n)
   }
 
@@ -3259,10 +3111,11 @@ object TableFormat {
                                  entries: Seq[ManifestEntry],
                                  schemaVersion: Int = -1,
                                  keepPos: Boolean = false): DataFrame = {
+    val m = manifest(spark, base, version)
     val sv = if (schemaVersion > 0) schemaVersion else version
-    val eqd = manifestEqDels(spark, base, version)
+    val eqd = m.eqDels
     if (eqd.isEmpty) return readEntriesDf(spark, base, sv, entries, keepPos = keepPos)
-    val adds = manifestEqAdds(spark, base, version)
+    val adds = m.eqAdds
     val (clear, masked) = entries.partition(e =>
       !eqd.exists(_._3 > adds.getOrElse(normPath(e.path), 0)))
     val clearDf =
@@ -3297,13 +3150,13 @@ object TableFormat {
     * (newVersion, nDeletes resolved). */
   def resolveEqDeletes(spark: SparkSession, base: String): (Int, Int) = {
     val v = currentVersion(spark, base)
-    val eqd = manifestEqDels(spark, base, v)
+    val m = manifest(spark, base, v)
+    val eqd = m.eqDels
     if (eqd.isEmpty) return (v, 0)
     val entries = manifestEntries(spark, base, v)
-    val adds = manifestEqAdds(spark, base, v)
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
-    val statsCols = manifestStatsCols(spark, base, v)
+    val adds = m.eqAdds
+    val schemaJson = schemaJsonOf(m, base, v)
+    val statsCols = m.statsCols
     val groups = entries
       .groupBy(e => eqd.filter(_._3 > adds.getOrElse(normPath(e.path), 0)))
       .toSeq.filter(_._1.nonEmpty)
@@ -3311,8 +3164,7 @@ object TableFormat {
       // every live file postdates every outstanding delete (fully
       // compacted/rewritten since): nothing to mask, just clear headers
       val out = writeManifest(spark, base, v + 1, schemaJson, entries,
-        txn = None, statsCols = statsCols, op = "eqdel_resolve",
-        eqdel = Some(Nil))
+        statsCols = statsCols, op = "eqdel_resolve", edit = _.copy(eqDels = Nil))
       return (out, eqd.size)
     }
     // same single-join-per-key-column shape as [[entriesDfEq]]: rows
@@ -3342,8 +3194,8 @@ object TableFormat {
       else Some(e.copy(dv = Some(dvDir), dvRows = Some(n)))
     }
     val out = writeManifest(spark, base, version, schemaJson,
-      untouched ++ updated, txn = None, statsCols = statsCols,
-      op = "eqdel_resolve", eqdel = Some(Nil))
+      untouched ++ updated, statsCols = statsCols,
+      op = "eqdel_resolve", edit = _.copy(eqDels = Nil))
     maybeAutoAnalyze(spark, base, out)
     (out, eqd.size)
   }
@@ -3370,11 +3222,11 @@ object TableFormat {
     * already ≤ 1 record per column. */
   def consolidateEqDeletes(spark: SparkSession, base: String): (Int, Int) = {
     val v = currentVersion(spark, base)
-    val eqd = manifestEqDels(spark, base, v)
+    val m = manifest(spark, base, v)
+    val eqd = m.eqDels
     val byCol = eqd.groupBy(_._2).toSeq.sortBy(_._1)
     if (eqd.size <= byCol.size) return (v, 0)
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val schemaJson = schemaJsonOf(m, base, v)
     val version = v + 1
     val newRecs = byCol.map { case (k, recs) =>
       if (recs.size == 1) recs.head
@@ -3396,9 +3248,8 @@ object TableFormat {
       }
     }
     val out = writeManifest(spark, base, version, schemaJson,
-      manifestEntries(spark, base, v), txn = None,
-      statsCols = manifestStatsCols(spark, base, v),
-      op = "eqdel_consolidate", eqdel = Some(newRecs))
+      manifestEntries(spark, base, v), statsCols = m.statsCols,
+      op = "eqdel_consolidate", edit = _.copy(eqDels = newRecs))
     (out, eqd.size)
   }
 
@@ -3422,14 +3273,14 @@ object TableFormat {
                         dvPairPaths: Seq[String], insertPaths: Seq[String],
                         op: String): Int = {
     val parentV = latestVersion(spark, base)
+    val parent = manifest(spark, base, parentV)
     if (basedOn != parentV)
       throw new ConcurrentModificationException(base, basedOn, parentV)
     val version = parentV + 1
     val entries = manifestEntries(spark, base, parentV)
-    val statsCols = manifestStatsCols(spark, base, parentV)
-    val cm = manifestColmap(spark, base, parentV)
-    val schemaJson = manifestSchema(spark, base, parentV).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$parentV has no schema header"))
+    val statsCols = parent.statsCols
+    val cm = parent.colmap
+    val schemaJson = schemaJsonOf(parent, base, parentV)
     val newPairs =
       if (dvPairPaths.isEmpty) None
       else Some(spark.read.parquet(dvPairPaths: _*)
@@ -3459,9 +3310,8 @@ object TableFormat {
     val insertEntries = entriesFromFooters(spark, insertPaths, statsCols, cm)
     val out = writeManifest(spark, base, version, schemaJson,
       untouched ++ updatedTouched ++ insertEntries,
-      txn = None, statsCols = statsCols, op = op,
-      ndv = ndvOut(spark, base, parentV,
-        ndvFromFiles(spark, insertPaths, statsCols, cm), mergeParent = true))
+      statsCols = statsCols, op = op,
+      edit = ndvEdit(ndvFromFiles(spark, insertPaths, statsCols, cm), mergeParent = true))
     // the raw pair stage served only this commit — the published dv dir
     // carries the state; reclaim the stage bytes
     val f = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3556,7 +3406,7 @@ object TableFormat {
     // keep the previous snapshot's field metadata (r11) — see commit()
     val zSchema = preserveFieldMetadata(
       if (version <= 1) None
-      else try manifestSchema(spark, base, version - 1)
+      else try manifest(spark, base, version - 1).schema
            catch { case _: java.io.FileNotFoundException => None },
       df.schema)
     val b = df.agg(min(col(c1)).cast("long"), max(col(c1)).cast("long"),
@@ -3573,8 +3423,8 @@ object TableFormat {
       val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, version),
         df.repartition(nFiles), Some(c1), Some(c2), collectNdv = true)
       return writeManifest(spark, base, version, zSchema.json, staged0.entries,
-        txn = None, statsCols = Seq(c1, c2), op = op,
-        ndv = ndvOut(spark, base, version - 1, staged0.ndv, mergeParent = false))
+        statsCols = Seq(c1, c2), op = op,
+        edit = ndvEdit(staged0.ndv, mergeParent = false))
     }
     def norm(c: String, lo: Long, hi: Long): Column = {
       // grid cell in DOUBLE: the old integer form (x - lo) * 65535
@@ -3597,9 +3447,9 @@ object TableFormat {
     val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, version),
       clustered, Some(c1), Some(c2), collectNdv = true)
     // whole-table rewrite: the fresh sketch is EXACT — replace, not merge
-    writeManifest(spark, base, version, zSchema.json, staged0.entries, txn = None,
+    writeManifest(spark, base, version, zSchema.json, staged0.entries,
       statsCols = Seq(c1, c2), op = op,
-      ndv = ndvOut(spark, base, version - 1, staged0.ndv, mergeParent = false))
+      edit = ndvEdit(staged0.ndv, mergeParent = false))
   }
 
   /** OPTIMIZE ZORDER on an EXISTING table (r9) — rewrite the current
@@ -3631,14 +3481,14 @@ object TableFormat {
     * has no bounds (empty/all-NULL). */
   def optimizeZorderN(spark: SparkSession, base: String, nFiles: Int = 16): Int = {
     val v = currentVersion(spark, base)
-    val cols = manifestStatsCols(spark, base, v)
+    val m = manifest(spark, base, v)
+    val cols = m.statsCols
     require(cols.size >= 2 && cols.size <= 6,
       s"optimizeZorderN: need 2..6 declared clustering columns (got ${cols.mkString(", ")})")
-    require(bucketSpecOf(manifestProps(spark, base, v)).isEmpty,
+    require(bucketSpecOf(m.props).isEmpty,
       s"optimizeZorderN: table $base declares a bucket layout — the z-curve " +
         "and hash-bucket routing conflict; drop graft.bucket first")
-    val schema = manifestSchema(spark, base, v).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val schema = schemaOf(m, base, v)
     // STRING dimensions (r12, VERDICT r11 #6): a string key rides the
     // curve through its 7-byte PREFIX RANK — a monotone byte-order →
     // long map (HashKernels.prefixRank), so the interleave and the
@@ -3689,9 +3539,9 @@ object TableFormat {
     val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
       clustered, cols.headOption, cols.drop(1).headOption, cols.drop(2),
       collectNdv = true)
-    writeManifest(spark, base, v + 1, schema.json, staged0.entries, txn = None,
+    writeManifest(spark, base, v + 1, schema.json, staged0.entries,
       statsCols = cols, op = "optimize",
-      ndv = ndvOut(spark, base, v, staged0.ndv, mergeParent = false))
+      edit = ndvEdit(staged0.ndv, mergeParent = false))
   }
 
   /** OPTIMIZE over the table's DECLARED clustering (r11) — rewrite the
@@ -3703,16 +3553,16 @@ object TableFormat {
     * an N-column-clustered table. Returns the new version. */
   def optimizeCluster(spark: SparkSession, base: String, nFiles: Int = 16): Int = {
     val v = currentVersion(spark, base)
-    val declared = manifestStatsCols(spark, base, v)
+    val m = manifest(spark, base, v)
+    val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimizeCluster: table $base declares no clustering columns — " +
         "use compact for plain consolidation")
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val schemaJson = schemaJsonOf(m, base, v)
     // bucket-aware (r12): the bucketed write owns the layout and sorts
     // within buckets on the declared columns — the range exchange would
     // be overridden anyway
-    val bucket = bucketSpecOf(manifestProps(spark, base, v))
+    val bucket = bucketSpecOf(m.props)
     val clustered =
       if (bucket.isDefined) readSnapshot(spark, base, Some(v))
       else readSnapshot(spark, base, Some(v))
@@ -3720,9 +3570,9 @@ object TableFormat {
     val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
       clustered, declared.headOption, declared.drop(1).headOption, declared.drop(2),
       collectNdv = true, bucketBy = bucket)
-    writeManifest(spark, base, v + 1, schemaJson, staged0.entries, txn = None,
+    writeManifest(spark, base, v + 1, schemaJson, staged0.entries,
       statsCols = declared, op = "optimize",
-      ndv = ndvOut(spark, base, v, staged0.ndv, mergeParent = false))
+      edit = ndvEdit(staged0.ndv, mergeParent = false))
   }
 
   /** REPLACE WHERE commit (r12) — ONE atomic commit that deletes every
@@ -3749,11 +3599,11 @@ object TableFormat {
     // (CommitConflictException) instead of carrying the concurrent
     // files past the replace unexamined
     val v = basedOnVersion
+    val m = manifest(spark, base, v)
     val version = v + 1
     val entries = manifestEntries(spark, base, v)
-    val statsCols = manifestStatsCols(spark, base, v)
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val statsCols = m.statsCols
+    val schemaJson = schemaJsonOf(m, base, v)
     val untouched = entries.filterNot(touched.toSet)
     // the Delta replaceWhere validation — incoming rows must ALL satisfy
     // the condition — accumulates IN-FLIGHT through the write itself
@@ -3789,9 +3639,8 @@ object TableFormat {
           "condition (widen the condition or filter the data)")
     }
     val out = writeManifest(spark, base, version, schemaJson,
-      untouched ++ staged.entries, txn = None, statsCols = statsCols,
-      op = "replace",
-      ndv = ndvOut(spark, base, v, staged.ndv, mergeParent = true))
+      untouched ++ staged.entries, statsCols = statsCols, op = "replace",
+      edit = ndvEdit(staged.ndv, mergeParent = true))
     (out, touched.size, entries.size)
   }
 
@@ -3808,22 +3657,22 @@ object TableFormat {
                      bucketCol: String): Int = {
     require(nBuckets > 0, s"optimizeBucket: nBuckets must be positive (got $nBuckets)")
     val v = currentVersion(spark, base)
-    val schema = manifestSchema(spark, base, v).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val snap = manifest(spark, base, v)
+    val schema = schemaOf(snap, base, v)
     require(schema.fields.find(_.name == bucketCol).map(_.dataType)
       .exists(graft.sources.GraftBucketRouting.supported),
       s"optimizeBucket: column $bucketCol must be a bucket-routable type " +
         "(the bucket function hashes byte/short/int/long/string)")
-    val declared = manifestStatsCols(spark, base, v)
+    val declared = snap.statsCols
     val staged = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
       readSnapshot(spark, base, Some(v)),
       declared.headOption, declared.drop(1).headOption, declared.drop(2),
       collectNdv = true, bucketBy = Some((nBuckets, bucketCol)))
-    val props = manifestProps(spark, base, v) +
+    val props = snap.props +
       (BucketProp -> s"$nBuckets:$bucketCol")
-    writeManifest(spark, base, v + 1, schema.json, staged.entries, txn = None,
-      statsCols = declared, op = "optimize", props = Some(props),
-      ndv = ndvOut(spark, base, v, staged.ndv, mergeParent = false))
+    writeManifest(spark, base, v + 1, schema.json, staged.entries,
+      statsCols = declared, op = "optimize",
+      edit = m => ndvEdit(staged.ndv, mergeParent = false)(m.copy(props = props)))
   }
 
   /** INCREMENTAL OPTIMIZE (r12, VERDICT r11 #5) — rewrite ONLY the
@@ -3848,11 +3697,12 @@ object TableFormat {
   def optimizeIncremental(spark: SparkSession, base: String,
                           smallBytes: Long = 0L): (Int, Int, Int) = {
     val v = currentVersion(spark, base)
-    val declared = manifestStatsCols(spark, base, v)
+    val m = manifest(spark, base, v)
+    val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimizeIncremental: table $base declares no clustering columns — " +
         "use compact for plain consolidation")
-    require(bucketSpecOf(manifestProps(spark, base, v)).isEmpty,
+    require(bucketSpecOf(m.props).isEmpty,
       s"optimizeIncremental: table $base declares a bucket layout — use " +
         "compact (bucket-aware since r12) to consolidate within buckets")
     val entries = manifestEntries(spark, base, v)
@@ -3863,7 +3713,7 @@ object TableFormat {
     // keys (review r12): reading only lo/hi classified every file of a
     // lang-clustered table as stat-less and each pass rewrote 100 % of
     // the snapshot — the exact cost the feature exists to avoid
-    val firstIsString = manifestSchema(spark, base, v).exists(sch =>
+    val firstIsString = m.schema.exists(sch =>
       declared.headOption.flatMap(c => sch.fields.find(_.name == c))
         .exists(_.dataType == org.apache.spark.sql.types.StringType))
     def greedyDisjoint[A](get: ManifestEntry => Option[(A, A)])(
@@ -3922,13 +3772,14 @@ object TableFormat {
                     targetFiles: Int = 0): (Int, Int, Int) = {
     require(lo <= hi, s"optimize_where: lo $lo must be <= hi $hi")
     val v = currentVersion(spark, base)
-    val declared = manifestStatsCols(spark, base, v)
+    val m = manifest(spark, base, v)
+    val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimize_where: table $base declares no clustering column to scope on")
     // a STRING first key records no numeric bounds — every file would
     // "intersect" and the scoped optimize silently degrade to a full
     // one; route to the string form instead of quietly rewriting all
-    require(!manifestSchema(spark, base, v).exists(_.fields
+    require(!m.schema.exists(_.fields
         .find(_.name == declared.head).exists(_.dataType ==
           org.apache.spark.sql.types.StringType)),
       s"optimize_where: ${declared.head} is a STRING clustering column — " +
@@ -3937,7 +3788,7 @@ object TableFormat {
     val (in, _) = entries.partition(_.mayMatch(lo, hi))
     // nothing to repair: zero or one clean file in range is already optimal
     if (in.size < 2 && !in.exists(_.dv.isDefined)) return (v, 0, entries.size)
-    val bucket = bucketSpecOf(manifestProps(spark, base, v))
+    val bucket = bucketSpecOf(m.props)
     val nF = if (targetFiles > 0) targetFiles else math.max(1, in.size / 2)
     val df = readEntriesDf(spark, base, v, in) // dv-aware: live rows only
     val clustered =
@@ -3959,13 +3810,14 @@ object TableFormat {
                        targetFiles: Int = 0): (Int, Int, Int) = {
     require(lo <= hi, s"optimize_where_str: lo '$lo' must be <= hi '$hi'")
     val v = currentVersion(spark, base)
-    val declared = manifestStatsCols(spark, base, v)
+    val m = manifest(spark, base, v)
+    val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimize_where_str: table $base declares no clustering column to scope on")
     // mirror of the numeric form's guard: a non-STRING first key records
     // no string bounds — every file would "intersect" and the scoped
     // optimize silently degrade to a full one
-    require(manifestSchema(spark, base, v).exists(_.fields
+    require(m.schema.exists(_.fields
         .find(_.name == declared.head).exists(_.dataType ==
           org.apache.spark.sql.types.StringType)),
       s"optimize_where_str: ${declared.head} is not a STRING clustering " +
@@ -3973,7 +3825,7 @@ object TableFormat {
     val entries = manifestEntries(spark, base, v)
     val (in, _) = entries.partition(_.mayMatchStrAt(0, Some(lo), Some(hi)))
     if (in.size < 2 && !in.exists(_.dv.isDefined)) return (v, 0, entries.size)
-    val bucket = bucketSpecOf(manifestProps(spark, base, v))
+    val bucket = bucketSpecOf(m.props)
     val nF = if (targetFiles > 0) targetFiles else math.max(1, in.size / 2)
     val df = readEntriesDf(spark, base, v, in)
     val clustered =
@@ -4005,12 +3857,12 @@ object TableFormat {
     require(lo1 <= hi1, s"optimize_where_box: lo1 $lo1 must be <= hi1 $hi1")
     require(lo2 <= hi2, s"optimize_where_box: lo2 $lo2 must be <= hi2 $hi2")
     val v = currentVersion(spark, base)
-    val declared = manifestStatsCols(spark, base, v)
+    val m = manifest(spark, base, v)
+    val declared = m.statsCols
     require(declared.size >= 2,
       s"optimize_where_box: table $base declares ${declared.size} clustering " +
         "column(s) — the box form needs two (optimize_zorder / set_clustering first)")
-    val schema = manifestSchema(spark, base, v).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+    val schema = schemaOf(m, base, v)
     // same silent-degradation guard as the 1-D forms: a STRING key
     // records no numeric bounds, every file would "intersect" and the
     // scoped optimize quietly rewrite the whole table
@@ -4020,7 +3872,7 @@ object TableFormat {
         s"optimize_where_box: $c is a STRING clustering column — string " +
           "bounds form no numeric box; use optimize_where_str for 1-D scoping")
     }
-    require(bucketSpecOf(manifestProps(spark, base, v)).isEmpty,
+    require(bucketSpecOf(m.props).isEmpty,
       s"optimize_where_box: table $base declares a bucket layout — the " +
         "z-curve and hash-bucket routing conflict; use optimize_bucket")
     val entries = manifestEntries(spark, base, v)
@@ -4191,7 +4043,7 @@ object TableFormat {
   private def pairUpdateImages(spark: SparkSession, base: String, toVersion: Int,
                                changes: Seq[DataFrame]): Seq[DataFrame] = {
     if (changes.isEmpty) return changes
-    val keyCols = manifestConstraints(spark, base, toVersion)
+    val keyCols = manifest(spark, base, toVersion).constraints
       .collectFirst { case (_, spec) if spec.startsWith("PK:") =>
         spec.drop(3).split(',').toSeq }
       .getOrElse(Seq.empty)
@@ -4241,7 +4093,7 @@ object TableFormat {
     def eqdAt(ver: Int): Seq[(String, String, Int)] =
       if (ver <= 0) Nil
       else
-        try manifestEqDels(spark, base, ver)
+        try manifest(spark, base, ver).eqDels
         catch { case _: java.io.FileNotFoundException => Nil }
     val steps = ((fromVersion + 1) to toVersion).map { v =>
       val before = retainedEntries(spark, base, v - 1, "readChanges")
@@ -4254,7 +4106,7 @@ object TableFormat {
       val afterKeys = after.map(key).toSet
       val added = after.filterNot(e => beforeKeys(key(e)))
       val removed = before.filterNot(e => afterKeys(key(e)))
-      val op = manifestOp(spark, base, v)
+      val op = manifest(spark, base, v).op
       def read(entries: Seq[ManifestEntry]) =
         if (entries.isEmpty) emptySnapshot(spark, base, toVersion)
         else readEntriesDf(spark, base, toVersion, entries)
@@ -4384,28 +4236,23 @@ object TableFormat {
     * version that was cloned. */
   def cloneTable(spark: SparkSession, srcBase: String, dstBase: String): Int = {
     val v = currentVersion(spark, srcBase)
-    val schemaJson = manifestSchema(spark, srcBase, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $srcBase v$v has no schema header"))
+    val src = manifest(spark, srcBase, v)
     // the clone must carry the source's FULL header state (r10): a
     // renamed column without the colmap would read NULL in the clone
     // (files store physical names), a dropped-then-readded column
     // without the tombstones could resurrect, and props/constraints are
     // part of the table's definition
-    writeManifest(spark, dstBase, 1, schemaJson, manifestEntries(spark, srcBase, v),
-      txn = None, statsCols = manifestStatsCols(spark, srcBase, v), op = "clone",
-      props = Some(manifestProps(spark, srcBase, v)),
-      colmap = Some(manifestColmap(spark, srcBase, v)),
-      tombstones = Some(manifestTombstones(spark, srcBase, v)),
-      constraints = Some(manifestConstraints(spark, srcBase, v)),
-      ndv = Some(manifestNdv(spark, srcBase, v)),
-      // identity watermarks travel with the clone (r11): a clone (or a
-      // branch) of an identity table must CONTINUE the sequence, never
-      // restart it — publish merges marks back per-column MAX
-      hwm = Some(manifestHwm(spark, srcBase, v)),
-      // equality-delete state travels too (r15): dropping it would
-      // silently un-delete every masked row in the clone
-      eqdel = Some(manifestEqDels(spark, srcBase, v)),
-      eqadd = Some(manifestEqAdds(spark, srcBase, v)))
+    writeManifest(spark, dstBase, 1, schemaJsonOf(src, srcBase, v),
+      manifestEntries(spark, srcBase, v), statsCols = src.statsCols, op = "clone",
+      edit = _.copy(props = src.props, colmap = src.colmap, tombstones = src.tombstones,
+        constraints = src.constraints, ndv = src.ndv,
+        // identity watermarks travel with the clone (r11): a clone (or a
+        // branch) of an identity table must CONTINUE the sequence, never
+        // restart it — publish merges marks back per-column MAX
+        hwm = src.hwm,
+        // equality-delete state travels too (r15): dropping it would
+        // silently un-delete every masked row in the clone
+        eqDels = src.eqDels, eqAdds = src.eqAdds))
     v
   }
 
@@ -4447,6 +4294,11 @@ object TableFormat {
     (parts(0).toInt, if (parts.length > 1) parts(1).toInt else 1)
   }
 
+  /** Per-column MAX of two identity watermark sets (a mark never regresses). */
+  private def maxMarks(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
+    (a.keySet ++ b.keySet).map(k =>
+      k -> math.max(a.getOrElse(k, Long.MinValue), b.getOrElse(k, Long.MinValue))).toMap
+
   /** PUBLISH (write-audit-publish): fast-forward the parent table to
     * branch `name`'s current contents as one commit. All of the
     * branch's headers travel (schema/colmap/constraints/props/stats/
@@ -4460,12 +4312,13 @@ object TableFormat {
       catch { case _: java.io.FileNotFoundException =>
         throw new IllegalArgumentException(s"no branch $name of $base") }
     val bv = currentVersion(spark, bb)
+    val b = manifest(spark, bb, bv)
     // outstanding equality deletes refuse to publish (r15): the parent
     // snapshot would reference key files living under the BRANCH's data
     // tree through its #eqdel header — a later drop_branch's reference
     // guard scans entries only and would yank them. Resolving first
     // turns the masks into ordinary dv sidecars the guard understands.
-    if (manifestEqDels(spark, bb, bv).nonEmpty)
+    if (b.eqDels.nonEmpty)
       throw new UnsupportedOperationException(
         s"cannot publish branch $name of $base: the branch has outstanding " +
           "equality deletes — CALL graft.system.resolve_eqdel on the branch first")
@@ -4475,28 +4328,16 @@ object TableFormat {
       require(mainV == fork,
         s"cannot publish branch $name: $base advanced to v$mainV since the " +
           s"branch forked at v$fork — fast-forward only; re-branch and replay")
-      val schemaJson = manifestSchema(spark, bb, bv).map(_.json).getOrElse(
+      val schemaJson = b.schemaJson.getOrElse(
         throw new IllegalStateException(s"branch $name has no schema header"))
-      val mergedHwm = {
-        val m = manifestHwm(spark, base, mainV)
-        val b = manifestHwm(spark, bb, bv)
-        (m.keySet ++ b.keySet).map(k =>
-          k -> math.max(m.getOrElse(k, Long.MinValue), b.getOrElse(k, Long.MinValue))).toMap
-      }
       try
         return writeManifest(spark, base, mainV + 1, schemaJson,
-          manifestEntries(spark, bb, bv), txn = None,
-          statsCols = manifestStatsCols(spark, bb, bv), op = "publish",
-          props = Some(manifestProps(spark, bb, bv)),
-          colmap = Some(manifestColmap(spark, bb, bv)),
-          tombstones = Some(manifestTombstones(spark, bb, bv)),
-          constraints = Some(manifestConstraints(spark, bb, bv)),
-          ndv = Some(manifestNdv(spark, bb, bv)),
-          hwm = Some(mergedHwm),
-          // the branch's equality-delete state fast-forwards with its
-          // entries (r15) — same pass-through rule as restore/clone
-          eqdel = Some(manifestEqDels(spark, bb, bv)),
-          eqadd = Some(manifestEqAdds(spark, bb, bv)))
+          manifestEntries(spark, bb, bv), statsCols = b.statsCols, op = "publish",
+          edit = h => h.copy(props = b.props, colmap = b.colmap, tombstones = b.tombstones,
+            constraints = b.constraints, ndv = b.ndv, hwm = maxMarks(h.hwm, b.hwm),
+            // the branch's equality-delete state fast-forwards with its
+            // entries (r15) — same pass-through rule as restore/clone
+            eqDels = b.eqDels, eqAdds = b.eqAdds))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -4604,21 +4445,23 @@ object TableFormat {
     val pv = latestVersion(spark, base)
     if (pv == fork) return (bv, pv, 0) // nothing to rebase; publish works as-is
     require(pv > fork, s"parent $base at v$pv is BEHIND the fork v$fork")
+    val snap = manifest(spark, base, pv)
     val allowed = Set("append", "delete_dv", "update_mor", "merge_mor")
     ((localBase + 1) to bv).foreach { w =>
-      val op = manifestOp(spark, bb, w).getOrElse("unknown")
+      val op = manifest(spark, bb, w).op.getOrElse("unknown")
       if (!allowed(op)) refuse(
         s"branch commit v$w is '$op' — only append and merge-on-read " +
           "commits (delete_dv/update_mor/merge_mor) replay position-stably; " +
           "re-branch from the new head and re-apply")
     }
-    val pSchema = manifestSchema(spark, base, pv).map(_.json).getOrElse(
+    val b = manifest(spark, bb, bv)
+    val pSchema = snap.schema.map(_.json).getOrElse(
       refuse(s"parent v$pv has no schema header"))
-    val bSchema = manifestSchema(spark, bb, bv).map(_.json).getOrElse(
+    val bSchema = b.schema.map(_.json).getOrElse(
       refuse(s"branch v$bv has no schema header"))
     if (pSchema != bSchema) refuse(
       "schemas diverged since the fork — reconcile the DDL first")
-    if (manifestColmap(spark, base, pv) != manifestColmap(spark, bb, bv))
+    if (snap.colmap != b.colmap)
       refuse("column mappings diverged since the fork (rename on one side)")
     val forkE = manifestEntries(spark, bb, localBase)
     val headE = manifestEntries(spark, bb, bv)
@@ -4669,23 +4512,13 @@ object TableFormat {
           }
         } ++ added
       }
-    val mergedHwm = {
-      val m = manifestHwm(spark, base, pv)
-      val b = manifestHwm(spark, bb, bv)
-      (m.keySet ++ b.keySet).map(k =>
-        k -> math.max(m.getOrElse(k, Long.MinValue), b.getOrElse(k, Long.MinValue))).toMap
-    }
-    val newV = writeManifest(spark, bb, bv + 1, pSchema, out, txn = None,
-      statsCols = manifestStatsCols(spark, base, pv), op = "rebase",
+    val newV = writeManifest(spark, bb, bv + 1, pSchema, out,
+      statsCols = snap.statsCols, op = "rebase",
       // parent props as the base, branch's overrides on top — the same
       // branch-wins rule publish applies to the whole header
-      props = Some(manifestProps(spark, base, pv) ++ manifestProps(spark, bb, bv)),
-      colmap = Some(manifestColmap(spark, base, pv)),
-      tombstones = Some(manifestTombstones(spark, base, pv) ++
-        manifestTombstones(spark, bb, bv)),
-      constraints = Some(manifestConstraints(spark, base, pv)),
-      ndv = Some(manifestNdv(spark, base, pv)),
-      hwm = Some(mergedHwm))
+      edit = h => h.copy(props = snap.props ++ h.props, colmap = snap.colmap,
+        tombstones = snap.tombstones ++ h.tombstones, constraints = snap.constraints,
+        ndv = snap.ndv, hwm = maxMarks(snap.hwm, h.hwm)))
     // both coordinates advance: based on parent pv, mirrored locally by
     // the rebase commit itself — a SECOND rebase diffs against newV
     writeFile(spark, s"$bb/_FORK", s"$pv $newV")
@@ -4698,7 +4531,7 @@ object TableFormat {
     * the audit surface an operator checks before VACUUM/RESTORE. */
   def history(spark: SparkSession, base: String): Seq[(Int, String, Int)] =
     (1 to latestVersion(spark, base)).flatMap { v =>
-      try Some((v, manifestOp(spark, base, v).getOrElse("unknown"),
+      try Some((v, manifest(spark, base, v).op.getOrElse("unknown"),
         manifestEntries(spark, base, v).size))
       catch { case _: java.io.FileNotFoundException => None } // vacuumed gap
     }
@@ -4726,8 +4559,8 @@ object TableFormat {
     * schema (they were committed together), so no extra guard is
     * needed beyond the pass-through itself. */
   def restoreVersion(spark: SparkSession, base: String, toVersion: Int): Int = {
-    val schemaJson = manifestSchema(spark, base, toVersion).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$toVersion has no schema header"))
+    val to = manifest(spark, base, toVersion)
+    val schemaJson = schemaJsonOf(to, base, toVersion)
     var attempt = 0
     val maxRetries = 10
     while (true) {
@@ -4736,21 +4569,17 @@ object TableFormat {
         s"restore target v$toVersion does not exist (latest is v$parentV)")
       try
         return writeManifest(spark, base, parentV + 1, schemaJson,
-          manifestEntries(spark, base, toVersion), txn = None,
-          statsCols = manifestStatsCols(spark, base, toVersion), op = "restore",
-          props = Some(manifestProps(spark, base, toVersion)),
-          colmap = Some(manifestColmap(spark, base, toVersion)),
-          tombstones = Some(manifestTombstones(spark, base, toVersion)),
-          constraints = Some(manifestConstraints(spark, base, toVersion)),
-          // contents ARE toVersion's — its NDV is exact for the restore
-          // (the identity hwm, by contrast, stays the parent's: monotone)
-          ndv = Some(manifestNdv(spark, base, toVersion)),
-          // equality-delete state rides the SAME pass-through (r15): the
-          // restored snapshot must read exactly like toVersion did —
-          // deriving #eqadd from the parent diff would scope every
-          // re-appearing file out of its deletes
-          eqdel = Some(manifestEqDels(spark, base, toVersion)),
-          eqadd = Some(manifestEqAdds(spark, base, toVersion)))
+          manifestEntries(spark, base, toVersion), statsCols = to.statsCols, op = "restore",
+          edit = _.copy(props = to.props, colmap = to.colmap, tombstones = to.tombstones,
+            constraints = to.constraints,
+            // contents ARE toVersion's — its NDV is exact for the restore
+            // (the identity hwm, by contrast, stays the parent's: monotone)
+            ndv = to.ndv,
+            // equality-delete state rides the SAME pass-through (r15): the
+            // restored snapshot must read exactly like toVersion did —
+            // deriving #eqadd from the parent diff would scope every
+            // re-appearing file out of its deletes
+            eqDels = to.eqDels, eqAdds = to.eqAdds))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -4780,12 +4609,13 @@ object TableFormat {
     * Wire it as `.foreachBatch(TableFormat.exactlyOnceBatch(base) _)`. */
   def exactlyOnceBatch(base: String, appId: String = "stream")(
       batch: DataFrame, batchId: Long): Unit = {
+    Manifest.requireTxnId(appId) // before any data is staged
     val spark = batch.sparkSession
     val version = batchId.toInt + 1 // manifests are 1-based
     val marker = new Path(s"$base/_manifests/v$version.manifest")
     if (fs(spark, base).exists(marker)) {
-      manifestHeader(spark, base, version, TxnPrefix) match {
-        case Some(t) if t == s"$appId\t$batchId" =>
+      manifest(spark, base, version).txn match {
+        case Some(t) if t == ((appId, batchId)) =>
           // genuine replay: data is committed; finish the pointer publish
           // if the crash landed between the two writes
           val cur = try currentVersion(spark, base) catch { case _: java.io.IOException => 0 }
@@ -4793,7 +4623,7 @@ object TableFormat {
             writeFile(spark, s"$base/_CURRENT", version.toString)
         case other =>
           throw new IllegalStateException(
-            s"table $base v$version exists with txn=${other.getOrElse("<none>")}, " +
+            s"table $base v$version exists with txn=${other.fold("<none>")(_.toString)}, " +
               s"not ($appId, $batchId) — NOT a replay of this query; refusing to " +
               "drop the batch (fresh checkpoint against an existing table, or a " +
               "second stream writing to the same base?)")
@@ -4825,14 +4655,12 @@ object TableFormat {
     var attempt = 0
     while (true) {
       val parentV = latestVersion(spark, base)
+      val snap = if (parentV == 0) Manifest.empty else manifest(spark, base, parentV)
       val parentEntries =
         if (parentV == 0) Seq.empty else manifestEntries(spark, base, parentV)
-      val statsCols = if (parentV == 0) Nil else manifestStatsCols(spark, base, parentV)
-      val cm = if (parentV == 0) Map.empty[String, String]
-               else manifestColmap(spark, base, parentV)
-      val parentSchema =
-        if (parentV == 0) None else manifestSchema(spark, base, parentV)
-      val mergedSchema = parentSchema.fold(schema) { ps =>
+      val statsCols = snap.statsCols
+      val cm = snap.colmap
+      val mergedSchema = snap.schema.fold(schema) { ps =>
         val have = ps.fieldNames.toSet
         val added = schema.fields.filterNot(f => have(f.name))
         // same retired-physical-name guard as appendCommit (r10): the
@@ -4840,10 +4668,9 @@ object TableFormat {
         // spelling, so the colmap fresh-name device cannot apply — a
         // streamed epoch must not resurrect a dropped column's bytes
         if (added.nonEmpty) {
-          val tombs = manifestTombstones(spark, base, parentV)
           val physInUse = ps.fieldNames.map(n => cm.getOrElse(n, n)).toSet -- have
           added.foreach { f =>
-            require(!tombs(f.name) && !physInUse(f.name),
+            require(!snap.tombstones(f.name) && !physInUse(f.name),
               s"appendCommitStaged: column ${f.name} re-uses a retired physical " +
                 "name (a dropped or renamed-away column once stored bytes under " +
                 "it); add it via ALTER TABLE ADD COLUMN first")
@@ -4853,9 +4680,9 @@ object TableFormat {
       }
       try
         return writeManifest(spark, base, parentV + 1, mergedSchema.json,
-          parentEntries ++ entriesFor(statsCols, cm), txn, statsCols = statsCols,
-          ndv = ndvOut(spark, base, parentV,
-            ndvFromFiles(spark, paths, statsCols, cm), mergeParent = true))
+          parentEntries ++ entriesFor(statsCols, cm), statsCols = statsCols,
+          op = "append", txn = txn,
+          edit = ndvEdit(ndvFromFiles(spark, paths, statsCols, cm), mergeParent = true))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -4944,14 +4771,14 @@ object TableFormat {
     var attempt = 0
     while (true) {
       val parentV = latestVersion(spark, base)
+      val snap = if (parentV == 0) Manifest.empty else manifest(spark, base, parentV)
       // write-write conflict guard (r10): the replacement contents were
       // derived from `basedOnVersion`'s files — if anything committed
       // since, fail loudly instead of silently un-committing it
       basedOnVersion.filter(_ != parentV).foreach(v =>
         throw new ConcurrentModificationException(base, v, parentV))
-      val statsCols = if (parentV == 0) Nil else manifestStatsCols(spark, base, parentV)
-      val cm = if (parentV == 0) Map.empty[String, String]
-               else manifestColmap(spark, base, parentV)
+      val statsCols = snap.statsCols
+      val cm = snap.colmap
       val staged = entriesFromFooters(spark, paths, statsCols, cm)
       // a row-level rewrite never changes the table's DEFINITION — keep
       // the parent's field METADATA (r11, ADVICE r10 medium): the write
@@ -4959,15 +4786,13 @@ object TableFormat {
       // comments, and publishing it verbatim made the first UPDATE
       // silently erase the table's generated-column declarations for
       // every later write
-      val effSchema = preserveFieldMetadata(
-        if (parentV == 0) None else manifestSchema(spark, base, parentV), schema)
+      val effSchema = preserveFieldMetadata(snap.schema, schema)
       try
         return writeManifest(spark, base, parentV + 1, effSchema.json, carried ++ staged,
-          txn = None, statsCols = statsCols, op = "replace",
+          statsCols = statsCols, op = "replace",
           // carried entries keep parent rows -> union is the honest bound;
           // a full replacement (nothing carried) takes the fresh sketch
-          ndv = ndvOut(spark, base, parentV,
-            ndvFromFiles(spark, paths, statsCols, cm),
+          edit = ndvEdit(ndvFromFiles(spark, paths, statsCols, cm),
             mergeParent = carried.nonEmpty))
       catch {
         case e: CommitConflictException =>
@@ -5012,11 +4837,11 @@ object TableFormat {
         // inherit the old table's config (an old CHECK could name a
         // column the new schema lacks, bricking every write) (r10)
         return writeManifest(spark, base, parentV + 1, schema.json, staged,
-          txn = None, statsCols = statsCols, op = "replace",
-          colmap = Some(Map.empty), tombstones = Some(Set.empty),
-          props = Some(props), constraints = Some(Seq.empty),
-          // a redefined table's NDV is exactly its fresh contents
-          ndv = Some(ndvFromFiles(spark, paths, statsCols, Map.empty)))
+          statsCols = statsCols, op = "replace",
+          edit = _.copy(colmap = Map.empty, tombstones = Set.empty,
+            props = props, constraints = Nil,
+            // a redefined table's NDV is exactly its fresh contents
+            ndv = ndvFromFiles(spark, paths, statsCols, Map.empty)))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -5047,9 +4872,9 @@ object TableFormat {
     // alterConstraintsCommit per constraint) left a half-created table
     // behind a failed CREATE when a later constraint was rejected, and
     // made each constraint a separate non-atomic commit.
-    writeManifest(spark, base, 1, schema.json, Seq.empty, txn = None,
-      statsCols = statsCols, op = "replace", props = Some(props),
-      constraints = if (constraints.nonEmpty) Some(constraints) else None)
+    writeManifest(spark, base, 1, schema.json, Seq.empty,
+      statsCols = statsCols, op = "replace",
+      edit = _.copy(props = props, constraints = constraints))
   }
 
   /** PROPERTIES commit (r10): re-publish the current snapshot's entries
@@ -5065,14 +4890,13 @@ object TableFormat {
     while (true) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val schemaJson = manifestSchema(spark, base, parentV).map(_.json).getOrElse(
-        throw new IllegalStateException(s"table $base v$parentV has no schema header"))
-      val merged = (manifestProps(spark, base, parentV) ++ set) -- unset
+      val parent = manifest(spark, base, parentV)
+      val schemaJson = schemaJsonOf(parent, base, parentV)
+      val merged = (parent.props ++ set) -- unset
       try
         return writeManifest(spark, base, parentV + 1, schemaJson,
-          manifestEntries(spark, base, parentV), txn = None,
-          statsCols = manifestStatsCols(spark, base, parentV), op = "alter",
-          props = Some(merged))
+          manifestEntries(spark, base, parentV), statsCols = parent.statsCols,
+          op = "alter", edit = _.copy(props = merged))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -5105,8 +4929,8 @@ object TableFormat {
     while (true) {
       val v = latestVersion(spark, base)
       require(v > 0, s"table $base: cannot re-cluster a table with no commits")
-      val schema = manifestSchema(spark, base, v).getOrElse(
-        throw new IllegalStateException(s"table $base v$v has no schema header"))
+      val m = manifest(spark, base, v)
+      val schema = schemaOf(m, base, v)
       newCols.foreach { c =>
         val f = schema.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
@@ -5122,7 +4946,7 @@ object TableFormat {
               "bounds are integral, string, or temporal")
         }
       }
-      val oldCols = manifestStatsCols(spark, base, v)
+      val oldCols = m.statsCols
       val carried = newCols.count(oldCols.contains)
       val remapped = manifestEntries(spark, base, v).map { e =>
         val ts = newCols.map { c =>
@@ -5137,7 +4961,7 @@ object TableFormat {
       }
       try
         return (writeManifest(spark, base, v + 1, schema.json, remapped,
-          txn = None, statsCols = newCols, op = "alter"), carried)
+          statsCols = newCols, op = "alter"), carried)
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -5161,8 +4985,8 @@ object TableFormat {
     while (true) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val parent = manifestSchema(spark, base, parentV).getOrElse(
-        throw new IllegalStateException(s"table $base v$parentV has no schema header"))
+      val snap = manifest(spark, base, parentV)
+      val parent = schemaOf(snap, base, parentV)
       parent.fields.foreach { f =>
         val kept = schema.fields.find(_.name == f.name)
         require(kept.exists(_.dataType == f.dataType),
@@ -5173,8 +4997,8 @@ object TableFormat {
       // gets a fresh physical spelling via the colmap (r10) — otherwise
       // pre-drop/pre-rename files would resurrect their stale bytes
       // under the new column
-      val cm = manifestColmap(spark, base, parentV)
-      val tombs = manifestTombstones(spark, base, parentV)
+      val cm = snap.colmap
+      val tombs = snap.tombstones
       val parentNames = parent.fieldNames.toSet
       val physInUse = parent.fieldNames.map(n => cm.getOrElse(n, n)).toSet
       val newCm = schema.fields.filterNot(f => parentNames(f.name)).foldLeft(cm) {
@@ -5185,9 +5009,8 @@ object TableFormat {
       }
       try
         return writeManifest(spark, base, parentV + 1, schema.json,
-          manifestEntries(spark, base, parentV), txn = None,
-          statsCols = manifestStatsCols(spark, base, parentV), op = "alter",
-          colmap = Some(newCm))
+          manifestEntries(spark, base, parentV), statsCols = snap.statsCols,
+          op = "alter", edit = _.copy(colmap = newCm))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -5220,8 +5043,8 @@ object TableFormat {
     while (true) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val parent = manifestSchema(spark, base, parentV).getOrElse(
-        throw new IllegalStateException(s"table $base v$parentV has no schema header"))
+      val snap = manifest(spark, base, parentV)
+      val parent = schemaOf(snap, base, parentV)
       val f = parent.fields.find(_.name == colName).getOrElse(
         throw new IllegalArgumentException(
           s"alterWidenCommit: no column $colName in ${parent.fieldNames.mkString(", ")}"))
@@ -5233,8 +5056,8 @@ object TableFormat {
         if (x.name == colName) x.copy(dataType = newType) else x))
       try
         return writeManifest(spark, base, parentV + 1, newSchema.json,
-          manifestEntries(spark, base, parentV), txn = None,
-          statsCols = manifestStatsCols(spark, base, parentV), op = "alter")
+          manifestEntries(spark, base, parentV), statsCols = snap.statsCols,
+          op = "alter")
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -5253,8 +5076,9 @@ object TableFormat {
     * literal is a false positive, and a false refusal names its cure. */
   private def requireNoDependents(spark: SparkSession, base: String, version: Int,
                                   colName: String, verb: String): Unit = {
+    val m = manifest(spark, base, version)
     val pat = ("(?i)\\b" + java.util.regex.Pattern.quote(colName) + "\\b").r
-    manifestConstraints(spark, base, version).foreach { case (n, body) =>
+    m.constraints.foreach { case (n, body) =>
       // r11 (ADVICE r10 low): any body that is not a PK:/UQ: key
       // declaration is a CHECK predicate — the reader (constraints())
       // treats the legacy pre-prefix spelling as an enforced CHECK, so
@@ -5270,7 +5094,7 @@ object TableFormat {
             s"($b) — DROP CONSTRAINT $n first")
       }
     }
-    manifestSchema(spark, base, version).foreach(_.fields.foreach { f =>
+    m.schema.foreach(_.fields.foreach { f =>
       if (f.name != colName && f.metadata.contains("GENERATION_EXPRESSION") &&
           pat.findFirstIn(f.metadata.getString("GENERATION_EXPRESSION")).isDefined)
         throw new IllegalArgumentException(
@@ -5296,14 +5120,14 @@ object TableFormat {
     while (true) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val parent = manifestSchema(spark, base, parentV).getOrElse(
-        throw new IllegalStateException(s"table $base v$parentV has no schema header"))
+      val snap = manifest(spark, base, parentV)
+      val parent = schemaOf(snap, base, parentV)
       require(parent.fieldNames.contains(oldName),
         s"alterRenameCommit: no column $oldName in ${parent.fieldNames.mkString(", ")}")
       require(!parent.fieldNames.contains(newName),
         s"alterRenameCommit: column $newName already exists")
       requireNoDependents(spark, base, parentV, oldName, "rename")
-      val cm = manifestColmap(spark, base, parentV)
+      val cm = snap.colmap
       val physical = cm.getOrElse(oldName, oldName)
       val newSchema = StructType(parent.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
@@ -5312,24 +5136,21 @@ object TableFormat {
       // STILL in use (by the renamed column), and the ADD-COLUMN guard
       // checks in-use physicals as well as tombstones — a later ADD of
       // the old name gets a fresh physical either way
-      val statsCols = manifestStatsCols(spark, base, parentV)
+      val statsCols = snap.statsCols
         .map(c => if (c == oldName) newName else c)
       // the bucket declaration names the LOGICAL column (r12): renaming
       // the bucket key re-points the property in the same commit, so the
       // scan's reported partitioning keeps resolving and SPJ survives
       // the rename (files are untouched — the physical routing is
       // unchanged by construction)
-      val props0 = manifestProps(spark, base, parentV)
-      val propsOut = bucketSpecOf(props0) match {
-        case Some((n, c)) if c == oldName =>
-          Some(props0 + (BucketProp -> s"$n:$newName"))
-        case _ => None // inherit verbatim
+      val props = bucketSpecOf(snap.props) match {
+        case Some((n, c)) if c == oldName => snap.props + (BucketProp -> s"$n:$newName")
+        case _ => snap.props
       }
       try
         return writeManifest(spark, base, parentV + 1, newSchema.json,
-          manifestEntries(spark, base, parentV), txn = None,
-          statsCols = statsCols, op = "alter",
-          props = propsOut, colmap = Some(newCm))
+          manifestEntries(spark, base, parentV), statsCols = statsCols, op = "alter",
+          edit = _.copy(props = props, colmap = newCm))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -5354,8 +5175,8 @@ object TableFormat {
     while (true) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val parent = manifestSchema(spark, base, parentV).getOrElse(
-        throw new IllegalStateException(s"table $base v$parentV has no schema header"))
+      val snap = manifest(spark, base, parentV)
+      val parent = schemaOf(snap, base, parentV)
       require(parent.fieldNames.contains(colName),
         s"alterDropCommit: no column $colName in ${parent.fieldNames.mkString(", ")}")
       require(parent.fields.length > 1,
@@ -5364,15 +5185,15 @@ object TableFormat {
       // the bucket key is load-bearing layout metadata (r12): dropping
       // it would leave `graft.bucket` naming a ghost column and every
       // later insert unroutable — refuse with the cure named
-      bucketSpecOf(manifestProps(spark, base, parentV)).foreach { case (_, c) =>
+      bucketSpecOf(snap.props).foreach { case (_, c) =>
         require(c != colName,
           s"cannot drop column $colName: it is the table's declared bucket " +
             "key (graft.bucket) — UNSET the property first")
       }
-      val cm = manifestColmap(spark, base, parentV)
+      val cm = snap.colmap
       val physical = cm.getOrElse(colName, colName)
       val newSchema = StructType(parent.fields.filterNot(_.name == colName))
-      val statsCols = manifestStatsCols(spark, base, parentV)
+      val statsCols = snap.statsCols
       val entries = manifestEntries(spark, base, parentV)
       // dropping a STATS column removes its positional slot and shifts
       // the later columns' triples down one (r11: generalized to any
@@ -5389,9 +5210,8 @@ object TableFormat {
       }
       try
         return writeManifest(spark, base, parentV + 1, newSchema.json,
-          newEntries, txn = None, statsCols = newStats, op = "alter",
-          colmap = Some(cm - colName),
-          tombstones = Some(manifestTombstones(spark, base, parentV) + physical))
+          newEntries, statsCols = newStats, op = "alter",
+          edit = m => m.copy(colmap = cm - colName, tombstones = m.tombstones + physical))
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -5409,9 +5229,8 @@ object TableFormat {
   def txnVersion(spark: SparkSession, base: String, appId: String, batchId: Long,
                  fromVersion: Int = 0): Option[Int] = {
     val latest = latestVersion(spark, base)
-    val want = s"$appId\t$batchId"
     ((fromVersion + 1) to latest).find { v =>
-      try manifestHeader(spark, base, v, TxnPrefix).contains(want)
+      try manifest(spark, base, v).txn.contains((appId, batchId))
       catch { case _: java.io.FileNotFoundException => false } // vacuumed gap
     }
   }
@@ -5467,9 +5286,10 @@ object TableFormat {
   def deleteRows(spark: SparkSession, base: String, cond: Column,
                  bounds: Seq[(Long, Long)] = Nil): Int = {
     val v = currentVersion(spark, base)
+    val m = manifest(spark, base, v)
     val version = v + 1
     val entries = manifestEntries(spark, base, v)
-    val statsCols = manifestStatsCols(spark, base, v)
+    val statsCols = m.statsCols
     val touched = entries.filter { e =>
       bounds.zipWithIndex.forall {
         case ((lo, hi), i) => e.mayMatchAt(i, lo, hi)
@@ -5482,11 +5302,10 @@ object TableFormat {
         readEntriesDf(spark, base, v, touched) // dv-aware (see deleteWhere)
           .filter(!coalesce(cond, lit(false))),
         statsCols.headOption, statsCols.drop(1).headOption, statsCols.drop(2),
-        bucketBy = bucketSpecOf(manifestProps(spark, base, v))).entries
-    val schemaJson = manifestSchema(spark, base, v).map(_.json).getOrElse(
-      throw new IllegalStateException(s"table $base v$v has no schema header"))
+        bucketBy = bucketSpecOf(m.props)).entries
+    val schemaJson = schemaJsonOf(m, base, v)
     val out = writeManifest(spark, base, version, schemaJson, untouched ++ rewritten,
-      txn = None, statsCols = statsCols, op = "delete")
+      statsCols = statsCols, op = "delete")
     maybeAutoAnalyze(spark, base, out)
     out
   }

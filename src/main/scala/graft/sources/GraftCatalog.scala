@@ -588,7 +588,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         c.isInstanceOf[TableChange.AddConstraint] || c.isInstanceOf[TableChange.DropConstraint])
     if (addChanges.nonEmpty) {
       val v = TableFormat.currentVersion(spark, path)
-      val current = TableFormat.manifestSchema(spark, path, v).getOrElse(
+      val current = TableFormat.manifest(spark, path, v).schema.getOrElse(
         throw new IllegalStateException(s"table $path v$v has no schema header"))
       val widened = addChanges.foldLeft(current) {
         case (sch, add: TableChange.AddColumn) =>
@@ -826,7 +826,7 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
     val base = path(options)
     changeRange(spark, base, options) match {
       case Some((_, to)) =>
-        val snap = TableFormat.manifestSchema(spark, base, to).getOrElse(
+        val snap = TableFormat.manifest(spark, base, to).schema.getOrElse(
           TableFormat.readSnapshot(spark, base, Some(to)).schema)
         StructType(snap.fields ++ Seq(
           StructField("_change_type", StringType, nullable = false),
@@ -834,7 +834,7 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
       case None =>
         val v = Option(options.get("versionAsOf")).map(_.toInt)
           .getOrElse(TableFormat.currentVersion(spark, base))
-        TableFormat.manifestSchema(spark, base, v).getOrElse(
+        TableFormat.manifest(spark, base, v).schema.getOrElse(
           TableFormat.readSnapshot(spark, base, Some(v)).schema)
     }
   }
@@ -858,6 +858,9 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
   import org.apache.spark.sql.connector.write.streaming.StreamingWrite
   private[sources] lazy val resolvedVersion: Int =
     version.getOrElse(TableFormat.currentVersion(spark, base))
+  /** The resolved version's manifest: immutable once published, so one
+    * read serves every header this table object consults. */
+  private lazy val snapshot = TableFormat.manifest(spark, base, resolvedVersion)
   /** The table's base path when this is a PLAIN current-version batch
     * relation — the only shape MV query rewrite may substitute (r15,
     * VERDICT r14 #2). Time-travel and change-feed reads must never be
@@ -873,8 +876,8 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
     // version instead would mismatch the scan when the schema evolved
     // after changesTo
     val v = changes.map(_._2).getOrElse(resolvedVersion)
-    val snap = TableFormat.manifestSchema(spark, base, v).getOrElse(
-      TableFormat.readSnapshot(spark, base, Some(v)).schema)
+    val m = if (changes.isEmpty) snapshot else TableFormat.manifest(spark, base, v)
+    val snap = m.schema.getOrElse(TableFormat.readSnapshot(spark, base, Some(v)).schema)
     if (changes.isEmpty) snap
     else StructType(snap.fields ++ Seq(
       StructField("_change_type", StringType, nullable = false),
@@ -908,7 +911,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
     import org.apache.spark.sql.connector.expressions.Expressions
     def cols(s: String) = s.split(',').map(Expressions.column(_):
       org.apache.spark.sql.connector.expressions.NamedReference)
-    TableFormat.manifestConstraints(spark, base, resolvedVersion).map {
+    snapshot.constraints.map {
       case (name, v) if v.startsWith("C:") =>
         Constraint.check(name).predicateSql(v.drop(2)).enforced(true)
           .validationStatus(Constraint.ValidationStatus.VALID)
@@ -933,8 +936,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
     * properties the manifest records. */
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
-    TableFormat.manifestProps(spark, base, resolvedVersion)
-      .foreach { case (k, v) => m.put(k, v) }
+    snapshot.props.foreach { case (k, v) => m.put(k, v) }
     m
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -944,8 +946,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
     // snapshot read instead (exact; loses agg pushdown / SPJ / stats
     // until resolution — the interim cost the CDC writer opted into);
     // streaming from such a snapshot still refuses (masks can't stream)
-    if (changes.isEmpty &&
-        TableFormat.manifestEqDels(spark, base, resolvedVersion).nonEmpty)
+    if (changes.isEmpty && snapshot.eqDels.nonEmpty)
       return new GraftEqDelScanBuilder(base, resolvedVersion, schema(), spark)
     changes match {
       case Some((from, to)) =>
@@ -953,8 +954,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
           skipChangeCommits = options.getBoolean("skipChangeCommits", false),
           maxVersionsPerBatch = options.getInt("maxVersionsPerBatch", 0))
       case None =>
-        new GraftScanBuilder(base, resolvedVersion, schema(),
-          TableFormat.manifestStatsCols(spark, base, resolvedVersion), spark,
+        new GraftScanBuilder(base, resolvedVersion, schema(), snapshot.statsCols, spark,
           startVersion = Option(options.get("startVersion")).map(_.toInt).getOrElse(0),
           maxVersionsPerBatch =
             Option(options.get("maxVersionsPerBatch")).map(_.toInt).getOrElse(0))
@@ -1007,10 +1007,10 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
               // the recorded column(s) and keep per-file bounds flowing —
               // pre-r10 every SQL INSERT appended stat-less files and the
               // skipping index silently decayed until an OPTIMIZE
-              val declared =
-                try TableFormat.manifestStatsCols(s, base,
-                  TableFormat.currentVersion(s, base))
-                catch { case _: java.io.FileNotFoundException => Nil }
+              val head =
+                try TableFormat.manifest(s, base, TableFormat.currentVersion(s, base))
+                catch { case _: java.io.FileNotFoundException => TableFormat.Manifest.empty }
+              val declared = head.statsCols
               // IDENTITY columns (r11): allocation rides the OCC commit
               // loop — the range is claimed by the manifest publish
               val identityCols = schema().fields.toSeq
@@ -1022,10 +1022,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
               // INSERT through the one-file-per-bucket layout, so the
               // scan can report KeyGroupedPartitioning and co-bucketed
               // joins plan with no Exchange
-              val bucketSpec =
-                try TableFormat.bucketSpecOf(TableFormat.manifestProps(s, base,
-                  TableFormat.currentVersion(s, base)))
-                catch { case _: java.io.FileNotFoundException => None }
+              val bucketSpec = TableFormat.bucketSpecOf(head.props)
               // AUTO-COMPACT (r11, the Delta autoCompact analog; r12:
               // bucket-aware — compaction preserves the `__bkt=` layout
               // so trickle ingest into an SPJ table stays joinable):
@@ -1036,7 +1033,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
               // retries.
               def autoCompact(): Unit = {
                 val vNow = TableFormat.currentVersion(s, base)
-                val props = TableFormat.manifestProps(s, base, vNow)
+                val props = TableFormat.manifest(s, base, vNow).props
                 if (props.get("autoCompact").exists(_.equalsIgnoreCase("true"))) {
                   val smallBytes = props.get("autoCompact.smallBytes")
                     .map(_.toLong).getOrElse(16L * 1024 * 1024)
@@ -1071,7 +1068,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
                 }.reduce(_ && _)
                 val v = TableFormat.currentVersion(s, base)
                 val sb = new GraftScanBuilder(base, v, schema(),
-                  TableFormat.manifestStatsCols(s, base, v), s, 0)
+                  TableFormat.manifest(s, base, v).statsCols, s, 0)
                 sb.pushFilters(replaceFilters)
                 TableFormat.replaceWhereCommit(s, base, data, cond,
                   sb.keptEntries(), basedOnVersion = v, bucketBy = bucketSpec)
@@ -1150,7 +1147,8 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
         case DateType | TimestampType | TimestampNTZType => true // r13: micros/days units
         case _ => false
       }
-    val bounds = TableFormat.manifestStatsCols(spark, base, v).map { c =>
+    val head = TableFormat.manifest(spark, base, v)
+    val bounds = head.statsCols.map { c =>
       if (integral(c)) GraftScanBuilder.bounds(filters, c)
       else (Long.MinValue, Long.MaxValue)
     }
@@ -1163,7 +1161,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
     // copy-on-write: bulk deletes pay row-count-proportional dv IO AND
     // leave masked bytes behind.
     val mode = spark.conf.getOption("spark.graft.delete.mode")
-      .orElse(TableFormat.manifestProps(spark, base, v).get("delete.mode"))
+      .orElse(head.props.get("delete.mode"))
     // TRUNCATE (AlwaysTrue) stays copy-on-write regardless of mode
     // (r10): the CoW filter constant-folds to an EMPTY write — pure
     // metadata — while a dv would scan the table to record every row's
@@ -1250,7 +1248,7 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
       case RowLevelOperation.Command.DELETE => "delete.mode"
     }
     val v = TableFormat.latestVersion(spark, base)
-    val declared = if (v == 0) None else TableFormat.manifestProps(spark, base, v).get(key)
+    val declared = if (v == 0) None else TableFormat.manifest(spark, base, v).props.get(key)
     spark.conf.getOption(s"spark.graft.$key").orElse(declared)
       .exists(_.equalsIgnoreCase("merge-on-read"))
   }
@@ -1275,8 +1273,8 @@ class GraftTable(base: String, version: Option[Int], spark: SparkSession,
           // safely (dv-deleting an already-masked row is idempotent)
           // and keeps the zero-resolve fast path.
           if (info.command() != RowLevelOperation.Command.DELETE &&
-              TableFormat.manifestEqDels(spark, base,
-                TableFormat.currentVersion(spark, base)).nonEmpty)
+              TableFormat.manifest(spark, base,
+                TableFormat.currentVersion(spark, base)).eqDels.nonEmpty)
             TableFormat.resolveEqDeletes(spark, base)
           new GraftDeltaOperation(base, spark, schema(), info.command())
         } else new RowLevelOperation {
@@ -1374,7 +1372,7 @@ class GraftCowScanBuilder(base: String, version: Int, tableSchema: StructType,
     new GraftParquetReaderFactory(tableSchema,
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
       appendFilePath = true,
-      colmap = TableFormat.manifestColmap(spark, base, version))
+      colmap = TableFormat.manifest(spark, base, version).colmap)
 }
 
 /** DELTA-based merge-on-read row-level operation (r13, VERDICT r12
@@ -1434,7 +1432,7 @@ class GraftDeltaScanBuilder(base: String, version: Int,
     * conflict guard compares it with the head at publish time. */
   private[sources] val snapshotVersion: Int = version
   private val inner = new GraftScanBuilder(base, version, tableSchema,
-    TableFormat.manifestStatsCols(spark, base, version), spark, 0)
+    TableFormat.manifest(spark, base, version).statsCols, spark, 0)
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     inner.pushFilters(filters)
     filters // all residual: the push is file-pruning advice, never owns correctness
@@ -1472,7 +1470,7 @@ class GraftDeltaScanBuilder(base: String, version: Int,
     new GraftParquetReaderFactory(required,
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
       appendFilePath = true, appendRowPos = true,
-      colmap = TableFormat.manifestColmap(spark, base, version))
+      colmap = TableFormat.manifest(spark, base, version).colmap)
 }
 
 /** Scan with manifest-stats FILE skipping + V1 delegation to a native
@@ -1542,7 +1540,7 @@ class GraftScanBuilder(base: String, version: Int, tableSchema: StructType,
     if (spjOn && aggResult.isEmpty && hybridAgg.isEmpty &&
         !required.fieldNames.contains("_file")) {
       val spec =
-        try TableFormat.bucketSpecOf(TableFormat.manifestProps(spark, base, version))
+        try TableFormat.bucketSpecOf(TableFormat.manifest(spark, base, version).props)
         catch { case _: java.io.FileNotFoundException => None }
       spec match {
         case Some((n, c)) =>
@@ -1843,6 +1841,10 @@ class GraftScanBuilder(base: String, version: Int, tableSchema: StructType,
     * BROADCAST side, as it should. Pre-r10 manifests (no row counts)
     * report unknown, never a guess. */
   override def estimateStatistics(): Statistics = new Statistics {
+    // advisory inputs only: an unreadable manifest estimates without them
+    private lazy val snap =
+      try TableFormat.manifest(spark, base, version)
+      catch { case _: Exception => TableFormat.Manifest.empty }
     /** STRING-KEY histogram selectivity (r14, VERDICT r13 #5): catalyst's
       * FilterEstimation cannot consume a histogram for a string column
       * (it maps literals onto doubles), so string-equality selectivity
@@ -1853,10 +1855,7 @@ class GraftScanBuilder(base: String, version: Int, tableSchema: StructType,
       * under the uniformity assumption. Estimation-only (advisory size
       * for join-side selection); prefix collapse can only over-estimate. */
     private lazy val strHistSel: Double = {
-      val histAll =
-        try TableFormat.manifestHist(spark, base, version)
-        catch { case _: Exception =>
-          Map.empty[String, (Double, Seq[(Double, Double, Long)])] }
+      val histAll = snap.histograms
       if (histAll.isEmpty) 1.0
       else pushed.toSeq.flatMap {
         case org.apache.spark.sql.sources.EqualTo(c, v: String)
@@ -1899,16 +1898,11 @@ class GraftScanBuilder(base: String, version: Int, tableSchema: StructType,
       val m = new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-      val ndv =
-        try TableFormat.manifestNdv(spark, base, version)
-        catch { case _: Exception => Map.empty[String, String] }
+      val ndv = snap.ndv
       // ANALYZE's equi-height histograms (r13): transformV2Stats maps
       // them into catalyst ColumnStat.histogram, the input
       // FilterEstimation uses for skew-aware selectivity under CBO
-      val histAll =
-        try TableFormat.manifestHist(spark, base, version)
-        catch { case _: Exception =>
-          Map.empty[String, (Double, Seq[(Double, Double, Long)])] }
+      val histAll = snap.histograms
       val kept = keptEntries()
       statsCols.zipWithIndex.foreach { case (c, i) =>
         val est = ndv.get(c).map(TableFormat.ndvEstimate)
@@ -2137,7 +2131,7 @@ class GraftTableCdfMicroBatch(base: String, dataSchema: StructType, startVersion
       val after = TableFormat.manifestEntries(spark, base, v)
       val beforeByPath = before.map(en => norm(en.path) -> en).toMap
       val afterPaths = after.map(en => norm(en.path)).toSet
-      TableFormat.manifestOp(spark, base, v) match {
+      TableFormat.manifest(spark, base, v).op match {
         case Some("compact") | Some("optimize") | Some("alter") => Seq.empty
         case Some("append") =>
           after.filterNot(en => beforeByPath.contains(norm(en.path)))
@@ -2156,13 +2150,13 @@ class GraftTableCdfMicroBatch(base: String, dataSchema: StructType, startVersion
           def eqdAt(ver: Int) =
             if (ver <= 0) Seq.empty
             else
-              try TableFormat.manifestEqDels(spark, base, ver)
+              try TableFormat.manifest(spark, base, ver).eqDels
               catch { case _: java.io.FileNotFoundException =>
                 Seq.empty[(String, String, Int)] }
           val prevEq = eqdAt(v - 1)
           val prevSet = prevEq.toSet
           val newRecs = eqdAt(v).filterNot(prevSet)
-          val adds = TableFormat.manifestEqAdds(spark, base, v - 1)
+          val adds = TableFormat.manifest(spark, base, v - 1).eqAdds
           for {
             en <- before
             (dir, keyCol, _) <- newRecs
@@ -2231,8 +2225,8 @@ class GraftTableCdfMicroBatch(base: String, dataSchema: StructType, startVersion
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftParquetReaderFactory(dataSchema, conf,
-      colmap = TableFormat.manifestColmap(spark, base,
-        TableFormat.currentVersion(spark, base)))
+      colmap = TableFormat.manifest(spark, base,
+        TableFormat.currentVersion(spark, base)).colmap)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -2264,7 +2258,7 @@ class GraftV1Relation(ctx: SQLContext, base: String, version: Int,
     val df =
       if (kept.isEmpty) {
         val empty = spark.createDataFrame(new util.ArrayList[Row](),
-          TableFormat.manifestSchema(spark, base, version).getOrElse(required))
+          TableFormat.manifest(spark, base, version).schema.getOrElse(required))
         val withF = fileCol.fold(empty)(c =>
           empty.withColumn(c, org.apache.spark.sql.functions.lit("")))
         posCol.fold(withF)(c =>
@@ -2325,7 +2319,7 @@ class GraftBucketedScan(base: String, version: Int, required: StructType,
     // skip semantics live in the row-view reader
     new GraftBucketReaderFactory(required,
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
-      TableFormat.manifestColmap(spark, base, version),
+      TableFormat.manifest(spark, base, version).colmap,
       columnar = kept.forall(_.dv.isEmpty))
   /** Same manifest-derived size the V1 path reports — the bucketed scan
     * must not regress join-side selection to "unknown = huge". */
@@ -2738,8 +2732,8 @@ class GraftTableMicroBatch(base: String, readSchema: StructType, startVersion: I
     // guards above cannot see it — but it masks rows this stream may
     // already have emitted, the same cannot-unsend hazard as a dv change
     val eqBefore = if (s == 0) Nil
-                   else TableFormat.manifestEqDels(spark, base, s)
-    val eqAfter = TableFormat.manifestEqDels(spark, base, e)
+                   else TableFormat.manifest(spark, base, s).eqDels
+    val eqAfter = TableFormat.manifest(spark, base, e).eqDels
     if (eqBefore != eqAfter || eqAfter.nonEmpty)
       throw new IllegalStateException(
         s"graft-table stream on $base: versions $s -> $e carry outstanding " +
@@ -2760,8 +2754,8 @@ class GraftTableMicroBatch(base: String, readSchema: StructType, startVersion: I
     // row-view path; true-columnar is the SPJ scan's win, where the
     // whole partition set is known at plan time.
     new GraftParquetReaderFactory(readSchema, conf,
-      colmap = TableFormat.manifestColmap(spark, base,
-        TableFormat.currentVersion(spark, base)))
+      colmap = TableFormat.manifest(spark, base,
+        TableFormat.currentVersion(spark, base)).colmap)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -3518,8 +3512,8 @@ object GraftCatalogOps {
       }.start()
     try q.processAllAvailable() finally q.stop()
     // the O(batch) path must actually have run: deletes still unresolved
-    require(TableFormat.manifestEqDels(spark, mirror,
-      TableFormat.currentVersion(spark, mirror)).nonEmpty,
+    require(TableFormat.manifest(spark, mirror,
+      TableFormat.currentVersion(spark, mirror)).eqDels.nonEmpty,
       "table_cdc_apply_eq: no outstanding equality deletes before resolution")
     TableFormat.resolveEqDeletes(spark, mirror)
     TableFormat.readSnapshot(spark, mirror)

@@ -153,7 +153,7 @@ object MvDetailTvf {
     val state =
       if (GraftViews.exists(fs, base)) s"${base}__state" else base
     val sv = TableFormat.currentVersion(spark, state)
-    val props = TableFormat.manifestProps(spark, state, sv)
+    val props = TableFormat.manifest(spark, state, sv).props
     // EVERY chain source (r16 N-table join MVs): `graft.mv.src` plus
     // `src2`, `src3`, … each with its own bookmark — one output ROW per
     // source, so staleness at ANY chain position is visible (a join
@@ -345,19 +345,20 @@ object TableDetailTvf {
       else if (entries.isEmpty) Some(0L)
       else None
     import spark.implicits._
+    val m = TableFormat.manifest(spark, base, v)
     SqlBridge.analyzed(Seq((
       v,
       entries.size,
       entries.count(_.dv.isDefined),
       liveRows,
       sizeBytes,
-      TableFormat.manifestStatsCols(spark, base, v).mkString(","),
-      TableFormat.manifestProps(spark, base, v).size,
-      TableFormat.manifestConstraints(spark, base, v).size,
+      m.statsCols.mkString(","),
+      m.props.size,
+      m.constraints.size,
       // outstanding equality deletes (r15): the operator signal that a
       // resolve_eqdel / compact is due — scans serve exactly meanwhile,
       // but without file skipping / agg pushdown / SPJ, and streams refuse
-      TableFormat.manifestEqDels(spark, base, v).size
+      m.eqDels.size
     )).toDF("version", "n_files", "n_dv_files", "live_rows", "size_bytes",
             "stats_cols", "n_props", "n_constraints", "n_eqdel"))
   }
@@ -442,7 +443,7 @@ object TableManifestTvf {
     val rows = TableFormat.history(spark, base).map { case (v, op, _) =>
       val (isDelta, depth, body, bytes) = TableFormat.manifestLogStat(spark, base, v)
       val fmt = if (isDelta) "delta"
-        else if (TableFormat.manifestIsParquet(spark, base, v)) "parquet-checkpoint"
+        else if (TableFormat.manifest(spark, base, v).entriesPq.isDefined) "parquet-checkpoint"
         else "text"
       (v, op, isDelta, depth, fmt, body, bytes,
         TableFormat.manifestEntries(spark, base, v).size)
@@ -637,8 +638,8 @@ object GraftProcedures {
     * callers who hand-pick versions own their own retention. */
   private val DefaultVacuumMinAgeMs = 7L * 24 * 60 * 60 * 1000
   private def vacuumMinAge(spark: SparkSession, base: String): Long =
-    (try TableFormat.manifestProps(spark, base,
-        TableFormat.currentVersion(spark, base))
+    (try TableFormat.manifest(spark, base,
+        TableFormat.currentVersion(spark, base)).props
       catch { case _: Exception => Map.empty[String, String] })
       .get("graft.vacuum.min-age").flatMap(_.toLongOption)
       .getOrElse(DefaultVacuumMinAgeMs)

@@ -10,6 +10,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
 import org.apache.spark.sql.connector.catalog.{Identifier, View}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.operators.TableFormat
+
 /** Persistent SQL views for the graft catalog (r12).
   *
   * A view is a `_VIEW` file inside the identifier's warehouse directory —
@@ -103,35 +105,6 @@ object GraftViews {
       ver = Option(p.getProperty("ver")).map(_.toInt).getOrElse(1))
   }
 
-  /** Atomic put-if-absent: temp write + rename-with-dst-must-not-exist
-    * through [[org.apache.hadoop.fs.FileContext]] (plain
-    * `FileSystem.rename` overwrites on some local implementations, and
-    * `create(overwrite=false)` is a check-then-create race). */
-  private def putIfAbsent(fs: FileSystem, target: HadoopPath,
-                          bytes: Array[Byte]): Boolean = {
-    if (fs.exists(target)) return false
-    val tmp = new HadoopPath(target.getParent,
-      target.getName + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, fs.getConf)
-      fc.rename(tmp, target) // NO overwrite option: dst must not exist
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        try fs.delete(tmp, false) catch { case _: Exception => () }
-        false
-      case _: java.nio.file.FileAlreadyExistsException =>
-        try fs.delete(tmp, false) catch { case _: Exception => () }
-        false
-      case _: java.io.IOException =>
-        try fs.delete(tmp, false) catch { case _: Exception => () }
-        false
-    }
-  }
-
   /** Write `dir/_VIEW`. `overwrite=false` is put-if-absent (atomic via
     * temp + rename) publishing VERSION 1; `overwrite=true` ARCHIVES the
     * replaced descriptor as `_VIEW.v<oldVer>`, CLAIMS the next version
@@ -160,7 +133,8 @@ object GraftViews {
       // write IDENTICAL bytes, and a crashed replace re-archives
       // idempotently)
       prior.foreach { old =>
-        putIfAbsent(fs, new HadoopPath(dir, s"$FILE.v${old.ver}"), encode(old))
+        TableFormat.putIfAbsent(fs, new HadoopPath(dir, s"$FILE.v${old.ver}"),
+          encode(old), ".tmp-")
         ()
       }
       // the new version SLOT is the CAS: temp-write + dst-must-not-exist
@@ -168,7 +142,7 @@ object GraftViews {
       // put-if-absent — `create(overwrite=false)` on a local FS is a
       // check-then-create race; same device as the manifest CAS)
       val slot = new HadoopPath(dir, s"$FILE.v${versioned.ver}")
-      if (!putIfAbsent(fs, slot, bytes))
+      if (!TableFormat.putIfAbsent(fs, slot, bytes, ".tmp-"))
         throw new IllegalStateException(
           s"graft views: concurrent REPLACE on $dir — version " +
             s"${versioned.ver} was already claimed; re-read and retry")
@@ -192,7 +166,7 @@ object GraftViews {
       if (fs.exists(d0)) fs.listStatus(d0).toSeq
         .filter(_.getPath.getName.startsWith(s"$FILE.tmp-"))
         .foreach(s => fs.delete(s.getPath, false))
-      putIfAbsent(fs, target, bytes)
+      TableFormat.putIfAbsent(fs, target, bytes, ".tmp-")
     }
     // AFTER the mutation (not before): an early invalidate would let a
     // concurrent probe re-cache the pre-write answer for a full TTL

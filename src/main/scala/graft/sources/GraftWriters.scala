@@ -104,7 +104,7 @@ object GenerationProjection {
                writeSchema: StructType): Option[Seq[Expression]] = {
     val v = TableFormat.latestVersion(spark, base)
     if (v == 0) return None
-    val tbl = TableFormat.manifestSchema(spark, base, v).getOrElse(return None)
+    val tbl = TableFormat.manifest(spark, base, v).schema.getOrElse(return None)
     val gen = tbl.fields.iterator
       .filter(_.metadata.contains("GENERATION_EXPRESSION"))
       .map(f => f.name -> f.metadata.getString("GENERATION_EXPRESSION")).toMap
@@ -293,7 +293,7 @@ class GraftStreamingWrite(base: String, queryId: String, schema: StructType,
     val v = TableFormat.latestVersion(spark, base)
     if (v == 0) s
     else {
-      val cm = TableFormat.manifestColmap(spark, base, v)
+      val cm = TableFormat.manifest(spark, base, v).colmap
       if (cm.isEmpty) s
       else StructType(s.fields.map(f => f.copy(name = cm.getOrElse(f.name, f.name))))
     }
@@ -334,12 +334,11 @@ object GraftWriterBucket {
                physSchema: StructType): Option[(Int, Int)] = {
     val v = TableFormat.latestVersion(spark, base)
     if (v == 0) return None
-    val props =
-      try TableFormat.manifestProps(spark, base, v)
+    val m =
+      try TableFormat.manifest(spark, base, v)
       catch { case _: java.io.FileNotFoundException => return None }
-    TableFormat.bucketSpecOf(props).flatMap { case (n, c) =>
-      val cm = TableFormat.manifestColmap(spark, base, v)
-      val phys = cm.getOrElse(c, c)
+    TableFormat.bucketSpecOf(m.props).flatMap { case (n, c) =>
+      val phys = m.colmap.getOrElse(c, c)
       val i = physSchema.fieldNames.indexOf(phys)
       val routable = i >= 0 && GraftBucketRouting.supported(physSchema.fields(i).dataType)
       if (routable) Some((n, i)) else None
@@ -370,7 +369,7 @@ class GraftReplaceWrite(base: String, schema: StructType,
     // physical names under a column mapping (r10) — see GraftStreamingWrite
     val v = TableFormat.latestVersion(spark, base)
     val cm = if (v == 0) Map.empty[String, String]
-             else TableFormat.manifestColmap(spark, base, v)
+             else TableFormat.manifest(spark, base, v).colmap
     val phys =
       if (cm.isEmpty) schema
       else StructType(schema.fields.map(f => f.copy(name = cm.getOrElse(f.name, f.name))))
@@ -430,7 +429,7 @@ class GraftDeltaWrite(base: String, schema: StructType,
     // physical names under a column mapping (r10) — see GraftReplaceWrite
     val v = TableFormat.latestVersion(spark, base)
     val cm = if (v == 0) Map.empty[String, String]
-             else TableFormat.manifestColmap(spark, base, v)
+             else TableFormat.manifest(spark, base, v).colmap
     val phys =
       if (cm.isEmpty) schema
       else StructType(schema.fields.map(f => f.copy(name = cm.getOrElse(f.name, f.name))))

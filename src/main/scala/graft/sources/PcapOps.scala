@@ -99,7 +99,8 @@ object PcapOps {
     // r7: splitBytes chunks the single 200k-packet capture into ~8 tasks —
     // the one-task-per-file model serializes the CPU-bound decode on a
     // multi-GB capture; chunk readers skim framing to their offset and
-    // decode only their range (PcapParser.parseFileRange), so the result
+    // decode only their range (PcapDataSource.skimLegacyChunk, then
+    // PcapParser.openRecords), so the result
     // is byte-identical to the unsplit read (PcapSourceSpec pins parity)
     spark.read.format("pcap").option("splitBytes", (2L << 20).toString)
       .load(largeCaptureDir())

@@ -364,24 +364,11 @@ object PcapParser {
     * keeping every record that decoded cleanly. */
   def parseFile(bytes: Array[Byte], wants: Wants = WantsAll,
                 strict: Boolean = false, name: String = "<buffer>"): Iterator[Packet] =
-    parseFileRange(bytes, wants, strict, name, 0L, Long.MaxValue, moreAfterBuffer = false)
+    packets(openFile(bytes, strict, name), wants)
 
   /** Is this buffer (or its first bytes) a pcapng capture? */
   def sniffPcapng(bytes: Array[Byte]): Boolean =
     bytes.length >= 4 && le32(bytes, 0) == PcapngShb
-
-  /** The snaplen a legacy pcap global header declares, honoring its byte
-    * order; None when the magic isn't legacy pcap (pcapng, junk, or a
-    * short buffer). Lets the DSv2 source size a chunk's prefetch window —
-    * a record starting inside a chunk spans at most 16 + snaplen bytes. */
-  def legacySnapLen(head: Array[Byte]): Option[Long] = {
-    if (head.length < 24) return None
-    le32(head, 0) match {
-      case MagicBe | MagicBeNs => Some(le32(head, 16))
-      case MagicLe | MagicLeNs => Some(be32(head, 16))
-      case _ => None
-    }
-  }
 
   /** The record byte order a legacy global header declares: Some(true)
     * when reads must swap (file written big-endian), None when the magic
@@ -396,43 +383,21 @@ object PcapParser {
     }
   }
 
-  /** CHUNKED parse (r7 — intra-file parallelism for large captures):
-    * decode only the records whose first byte lies in
-    * `[rangeStart, rangeEnd)`, with GLOBAL `pkt_idx` values, so the union
-    * of the chunk reads of one capture is byte-identical to the unsplit
-    * read. A record belongs to exactly the chunk containing its start.
-    * See [[openFile]] for the walk. */
-  def parseFileRange(bytes: Array[Byte], wants: Wants, strict: Boolean, name: String,
-                     rangeStart: Long, rangeEnd: Long,
-                     moreAfterBuffer: Boolean): Iterator[Packet] =
-    packets(openFile(bytes, strict, name, rangeStart, rangeEnd, moreAfterBuffer), wants)
-
-  /** Cursor over the records of one whole-capture buffer whose first byte
-    * lies in `[rangeStart, rangeEnd)`, the container sniffed from its
-    * magic. Header-level strict errors raise here, eagerly.
+  /** Cursor over the records of one whole-capture buffer, the container
+    * sniffed from its magic. Header-level strict errors raise here,
+    * eagerly.
     *
-    * Legacy pcap has no record sync markers, so a mid-file offset cannot
-    * be decoded in isolation — and SPECULATIVE resync (scan for a
-    * plausible header, validate N records ahead) was rejected: it cannot
-    * recover the global record ordinal `pkt_idx` at all, and a crafted or
-    * unlucky payload embedding a plausible header misframes silently.
-    * Instead a range walk SKIMS the file prefix: a framing-only walk
-    * (16-byte header arithmetic, no network decode, no trailer scan — the
-    * actual per-record cost) that lands on its range start EXACTLY,
-    * counting records on the way. pcapng ranges skim the same way,
-    * additionally replaying SHB/IDB section state (byte order, tsresol,
-    * snaplens) that mid-file packets depend on.
-    *
-    * `moreAfterBuffer = true` says the buffer is a PREFIX of the capture
-    * (the caller prefetched `[0, rangeEnd + straddle)`): running out of
-    * buffer then just ends the walk instead of raising "truncated", and
-    * a record that overruns the prefetch window (declared length past the
-    * snaplen the window was sized by) is a named strict error. Structural
-    * strict errors in the skimmed prefix raise exactly as the unsplit
-    * read would — a malformed capture names itself from every chunk. */
+    * A range `[rangeStart, rangeEnd)` applies to pcapng only: its chunk
+    * walk skims the buffer from the start — replaying the SHB/IDB section
+    * state (byte order, tsresol, snaplens) that mid-file packets depend
+    * on — and decodes the records whose first byte lies in the range,
+    * with GLOBAL `pkt_idx` values. Legacy pcap chunks never come here:
+    * the format has no record sync markers, so the DSv2 source skims the
+    * 16-byte framing headers to a chunk's exact record range
+    * (`PcapDataSource.skimLegacyChunk`) and decodes just those bytes
+    * through [[openRecords]]. */
   def openFile(bytes: Array[Byte], strict: Boolean, name: String,
-               rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue,
-               moreAfterBuffer: Boolean = false): RecordCursor = {
+               rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue): RecordCursor = {
     def fail(why: String): Nothing = throw new PcapFormatException(s"$name: $why")
     if (sniffPcapng(bytes))
       return new PcapngCursor(bytes, strict, name, rangeStart, rangeEnd)
@@ -443,8 +408,9 @@ object PcapParser {
     val magic = le32(bytes, 0)
     legacyByteOrder(bytes) match {
       case Some(swapped) =>
-        new LegacyCursor(bytes, swapped, startOff = 24, baseIdx = 0L,
-          rangeStart, rangeEnd, moreAfterBuffer, strict, name)
+        require(rangeStart == 0L && rangeEnd == Long.MaxValue,
+          s"$name: a legacy pcap chunk is decoded through openRecords, not a range walk")
+        new LegacyCursor(bytes, swapped, startOff = 24, baseIdx = 0L, strict, name)
       case None =>
         if (strict) fail(f"unrecognized pcap magic 0x$magic%08x — not a capture " +
           "(read with option(\"mode\", \"permissive\") to skip unreadable files)")
@@ -460,72 +426,45 @@ object PcapParser {
     * order the capture's global header declared. */
   def openRecords(bytes: Array[Byte], swapped: Boolean, baseIdx: Long,
                   strict: Boolean, name: String): RecordCursor =
-    new LegacyCursor(bytes, swapped, startOff = 0, baseIdx,
-      rangeStart = 0L, rangeEnd = Long.MaxValue, moreAfterBuffer = false, strict, name)
+    new LegacyCursor(bytes, swapped, startOff = 0, baseIdx, strict, name)
 
   private final class LegacyCursor(val bytes: Array[Byte], swapped: Boolean,
-                                   startOff: Int, baseIdx: Long,
-                                   rangeStart: Long, rangeEnd: Long,
-                                   moreAfterBuffer: Boolean, strict: Boolean,
+                                   startOff: Int, baseIdx: Long, strict: Boolean,
                                    name: String) extends RecordCursor {
     private def fail(why: String): Nothing = throw new PcapFormatException(s"$name: $why")
     private def u32(o: Int): Long = if (swapped) be32(bytes, o) else le32(bytes, o)
     private var pos = startOff
     private var nextIdx = baseIdx
-    private var done = false
 
-    /** Next record in [rangeStart, rangeEnd), skimming earlier ones. */
+    /** Next record; false once the buffer is exhausted. */
     def next(): Boolean = {
-      while (!done) {
-        if (pos >= rangeEnd) done = true // next chunk's record
-        else {
-          val rem = bytes.length - pos
-          if (rem < 16) {
-            // clean EOF / prefix end, or a truncated record header
-            if (rem != 0 && !moreAfterBuffer && strict) fail(
-              s"truncated record header after record ${nextIdx - 1} at byte $pos ($rem bytes < 16)")
-            done = true
-          } else {
-            val ts = u32(pos)
-            // incl_len is a u32: `.toInt` on values >= 2^31 wraps negative, and
-            // a negative length walks `pos` backwards (a non-terminating walk).
-            // Clamp to the bytes actually present instead: a record claiming
-            // more than remains is truncated — emit what's there, after which
-            // `pos` lands at bytes.length and the walk ends. `pos` therefore
-            // always advances by >= 16, so the walk terminates.
-            val rawIncl = u32(pos + 8)
-            val avail = (bytes.length - pos - 16).toLong
-            if (rawIncl > avail) {
-              if (moreAfterBuffer) {
-                // the prefetch window was sized by the header's snaplen, so
-                // only a record VIOLATING its capture's snaplen lands here
-                if (strict) fail(
-                  s"record $nextIdx at byte $pos claims $rawIncl bytes, past the chunk " +
-                    "prefetch window sized by the capture's declared snaplen " +
-                    "(corrupt record, or a snaplen-violating writer)")
-                done = true
-              } else if (strict) fail(
-                s"record $nextIdx at byte $pos claims $rawIncl bytes but only $avail remain " +
-                  "(truncated or corrupt capture)")
-            }
-            if (!done) {
-              val incl = math.min(rawIncl, avail).toInt
-              val start = pos
-              pos += 16 + incl
-              nextIdx += 1
-              if (start >= rangeStart) { // ours. Earlier: skim (framing only)
-                idx = nextIdx - 1
-                off = start + 16
-                inclLen = incl
-                tsSec = ts
-                origLen = u32(start + 12)
-                return true
-              }
-            }
-          }
-        }
+      val rem = bytes.length - pos
+      if (rem < 16) {
+        // clean EOF, or a truncated record header
+        if (rem != 0 && strict) fail(
+          s"truncated record header after record ${nextIdx - 1} at byte $pos ($rem bytes < 16)")
+        pos = bytes.length
+        return false
       }
-      false
+      // incl_len is a u32: `.toInt` on values >= 2^31 wraps negative, and
+      // a negative length walks `pos` backwards (a non-terminating walk).
+      // Clamp to the bytes actually present instead: a record claiming
+      // more than remains is truncated — emit what's there, after which
+      // `pos` lands at bytes.length and the walk ends. `pos` therefore
+      // always advances by >= 16, so the walk terminates.
+      val rawIncl = u32(pos + 8)
+      val avail = (bytes.length - pos - 16).toLong
+      if (rawIncl > avail && strict) fail(
+        s"record $nextIdx at byte $pos claims $rawIncl bytes but only $avail remain " +
+          "(truncated or corrupt capture)")
+      idx = nextIdx
+      off = pos + 16
+      inclLen = math.min(rawIncl, avail).toInt
+      tsSec = u32(pos)
+      origLen = u32(pos + 12)
+      pos += 16 + inclLen
+      nextIdx += 1
+      true
     }
   }
 

@@ -66,8 +66,8 @@ class MaterializedViewSpec extends SparkTestBase {
     assert(mvRead("graft.db.mv_agg") ==
       recompute("graft.db.mv_src", "WHERE doc_id % 5 <> 0"))
     // the bookmark rode the SAME commit as the data
-    val props = TableFormat.manifestProps(spark, s"$wh/db/mv_agg__state",
-      TableFormat.currentVersion(spark, s"$wh/db/mv_agg__state"))
+    val props = TableFormat.manifest(spark, s"$wh/db/mv_agg__state",
+      TableFormat.currentVersion(spark, s"$wh/db/mv_agg__state")).props
     assert(props("graft.mv.version") == "3")
   }
 
@@ -373,8 +373,8 @@ class MaterializedViewSpec extends SparkTestBase {
     assert(readMv == recomputeJoin, "two-sided span drifted")
     assert(!readMv.exists(_.getString(0) == "de"), "dead joined group must vanish")
     // both bookmarks advanced atomically with the state
-    val props = TableFormat.manifestProps(spark, s"${graft.Tables.scratchDir}/graft_wh/db/jmv_agg__state",
-      TableFormat.currentVersion(spark, s"${graft.Tables.scratchDir}/graft_wh/db/jmv_agg__state"))
+    val props = TableFormat.manifest(spark, s"${graft.Tables.scratchDir}/graft_wh/db/jmv_agg__state",
+      TableFormat.currentVersion(spark, s"${graft.Tables.scratchDir}/graft_wh/db/jmv_agg__state")).props
     assert(props("graft.mv.version").toInt ==
       TableFormat.currentVersion(spark, facts), props.toString)
     assert(props("graft.mv.version2").toInt ==
@@ -741,8 +741,8 @@ class MaterializedViewSpec extends SparkTestBase {
       """CALL graft.system.create_mv('db.mv_agge',
         |  'SELECT lang, count(*) AS n_docs, sum(n) AS sum_n
         |   FROM graft.db.mv_srce GROUP BY lang')""".stripMargin).collect()
-    assert(TableFormat.manifestEqDels(spark, src,
-      TableFormat.currentVersion(spark, src)).isEmpty,
+    assert(TableFormat.manifest(spark, src,
+      TableFormat.currentVersion(spark, src)).eqDels.isEmpty,
       "create must resolve the source's outstanding deletes")
     assert(mvRead("graft.db.mv_agge") == recompute("graft.db.mv_srce", ""))
     // the CDC loop: appends + an equality delete, then ONE refresh —
@@ -755,8 +755,8 @@ class MaterializedViewSpec extends SparkTestBase {
       (Seq(20L, 21L, 22L) ++ (200L until 210L)).toDF("doc_id"), "doc_id")
     val r = spark.sql("CALL graft.system.refresh_mv('db.mv_agge')").head
     assert(r.getLong(3) > 0, s"refresh should fold rows: $r")
-    assert(TableFormat.manifestEqDels(spark, src,
-      TableFormat.currentVersion(spark, src)).isEmpty,
+    assert(TableFormat.manifest(spark, src,
+      TableFormat.currentVersion(spark, src)).eqDels.isEmpty,
       "refresh must resolve the source's outstanding deletes")
     assert(mvRead("graft.db.mv_agge") == recompute("graft.db.mv_srce", ""))
   }
@@ -1386,8 +1386,8 @@ class MaterializedViewSpec extends SparkTestBase {
     // var/stddev queries against a poisoned state — the direct Welford
     // plan still returns a finite double where the state would serve
     // NULL. Non-variance queries keep serving from the same MV.
-    assert(TableFormat.manifestProps(spark, s"$wh/db/mv_aggof__state",
-      TableFormat.currentVersion(spark, s"$wh/db/mv_aggof__state"))
+    assert(TableFormat.manifest(spark, s"$wh/db/mv_aggof__state",
+      TableFormat.currentVersion(spark, s"$wh/db/mv_aggof__state")).props
       .get("graft.mv.varpoison").contains("1"))
     val qVar = "SELECT lang, var_samp(n) AS v FROM graft.db.mv_srcof GROUP BY lang"
     val qCnt = "SELECT lang, count(*) AS c FROM graft.db.mv_srcof GROUP BY lang"
@@ -1436,8 +1436,8 @@ class MaterializedViewSpec extends SparkTestBase {
       s"recovered variance must equal recompute: ${readOf("of")} vs $recovered")
     // recovery CLEARS the poison flag in the same commit: var queries
     // serve from state again (r18, ADVICE r17 #3)
-    assert(TableFormat.manifestProps(spark, s"$wh/db/mv_aggof__state",
-      TableFormat.currentVersion(spark, s"$wh/db/mv_aggof__state"))
+    assert(TableFormat.manifest(spark, s"$wh/db/mv_aggof__state",
+      TableFormat.currentVersion(spark, s"$wh/db/mv_aggof__state")).props
       .get("graft.mv.varpoison").contains("0"))
     try {
       spark.conf.set("spark.graft.mv.rewrite", "true")
@@ -3396,10 +3396,10 @@ class MaterializedViewSpec extends SparkTestBase {
       "a region dying at the chain's far end must kill its groups")
     assert(readS.exists(_.getString(1) == "pt"))
     // ALL bookmarks advanced atomically with the state
-    val props = TableFormat.manifestProps(spark,
+    val props = TableFormat.manifest(spark,
       s"${graft.Tables.scratchDir}/graft_wh/db/sf_agg__state",
       TableFormat.currentVersion(spark,
-        s"${graft.Tables.scratchDir}/graft_wh/db/sf_agg__state"))
+        s"${graft.Tables.scratchDir}/graft_wh/db/sf_agg__state")).props
     assert(props("graft.mv.version").toInt ==
       TableFormat.currentVersion(spark, facts))
     assert(props("graft.mv.version2").toInt ==

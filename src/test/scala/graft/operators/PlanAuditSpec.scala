@@ -425,8 +425,8 @@ class PlanAuditSpec extends SparkTestBase {
     spark.sql("INSERT INTO graft_ndv.db.ndv_b SELECT * FROM ndv_b_src")
     // the manifests carry mergeable HLL sketches whose estimates see
     // the 1000-vs-10 asymmetry
-    val ndvF = TableFormat.manifestNdv(spark, s"$wh/db/ndv_f",
-      TableFormat.currentVersion(spark, s"$wh/db/ndv_f"))
+    val ndvF = TableFormat.manifest(spark, s"$wh/db/ndv_f",
+      TableFormat.currentVersion(spark, s"$wh/db/ndv_f")).ndv
     val estK1 = TableFormat.ndvEstimate(ndvF("k1"))
     val estK2 = TableFormat.ndvEstimate(ndvF("k2"))
     assert(estK1 > 900 && estK1 < 1100, s"k1 ndv estimate $estK1")
@@ -478,8 +478,8 @@ class PlanAuditSpec extends SparkTestBase {
     spark.sql("INSERT INTO graft_hist.db.hist_t SELECT * FROM hist_src")
     spark.sql("CALL graft_hist.system.analyze('db.hist_t')")
     val base = s"$wh/db/hist_t"
-    val hist = TableFormat.manifestHist(spark, base,
-      TableFormat.currentVersion(spark, base))
+    val hist = TableFormat.manifest(spark, base,
+      TableFormat.currentVersion(spark, base)).histograms
     assert(hist.contains("k"), s"no histogram recorded: ${hist.keys}")
     val (height, bins) = hist("k")
     assert(bins.size == 32, s"expected 32 bins, got ${bins.size}")
@@ -503,8 +503,8 @@ class PlanAuditSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.cbo.enabled", "false")
     // histograms inherit through ordinary commits like #ndv
     spark.sql("INSERT INTO graft_hist.db.hist_t VALUES (99999, 1)")
-    val after = TableFormat.manifestHist(spark, base,
-      TableFormat.currentVersion(spark, base))
+    val after = TableFormat.manifest(spark, base,
+      TableFormat.currentVersion(spark, base)).histograms
     assert(after.contains("k"), "histogram dropped by an append")
   }
 
@@ -530,14 +530,14 @@ class PlanAuditSpec extends SparkTestBase {
     val base = s"$wh/db/shist_t"
     val cur = TableFormat.currentVersion(spark, base)
     // histogram present for the string cluster key, on the rank image
-    val hist = TableFormat.manifestHist(spark, base, cur)
+    val hist = TableFormat.manifest(spark, base, cur).histograms
     assert(hist.contains("lang"), s"no string histogram recorded: ${hist.keys}")
     assert(hist("lang")._2.size == 32)
     // selectivity shift: the same scan, filtered on the hot vs a rare
     // key, reports proportionally different row estimates — the input
     // join-side selection needs on skewed string keys. Single file ⇒
     // file pruning identical on both sides; only the histogram differs.
-    val schema = TableFormat.manifestSchema(spark, base, cur).get
+    val schema = TableFormat.manifest(spark, base, cur).schema.get
     def est(lang: String): Long = {
       val sb = new GraftScanBuilder(base, cur, schema, Seq("lang"), spark, 0)
       sb.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("lang", lang)))

@@ -503,9 +503,9 @@ class TableFormatSpec extends SparkTestBase {
       (100L until 120L).map(i => (i, s"r$i")).toDF("k", "v"), statsCol = Some("k"))
     TableFormat.deleteWhere(spark, base, "k", 10L, 19L)
     TableFormat.compact(spark, base, smallBytes = Long.MaxValue, targetFiles = 1)
-    assert(TableFormat.manifestOp(spark, base, 2).contains("append"))
-    assert(TableFormat.manifestOp(spark, base, 3).contains("delete"))
-    assert(TableFormat.manifestOp(spark, base, 4).contains("compact"))
+    assert(TableFormat.manifest(spark, base, 2).op.contains("append"))
+    assert(TableFormat.manifest(spark, base, 3).op.contains("delete"))
+    assert(TableFormat.manifest(spark, base, 4).op.contains("compact"))
     val ch = TableFormat.readChanges(spark, base, 1, 4)
     val byStep = ch.groupBy(col("_commit_version"), col("_change_type")).count().collect()
       .map(r => ((r.getInt(0), r.getString(1)), r.getLong(2))).toMap
@@ -532,7 +532,7 @@ class TableFormatSpec extends SparkTestBase {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toString)
     val v2 = TableFormat.appendCommitStaged(spark, base, staged,
-      TableFormat.manifestSchema(spark, base, 1).get)
+      TableFormat.manifest(spark, base, 1).schema.get)
     // the staged entries carry FOOTER-derived bounds (pre-r10: stat-less)
     val newEntries = TableFormat.manifestEntries(spark, base, v2)
       .filterNot(e => v1Files(e.path))
@@ -579,7 +579,7 @@ class TableFormatSpec extends SparkTestBase {
       "a", 100L, 200L, "b", 0L, 4000L)
     assert(read1 == total1, "test premise: no stats, nothing skippable")
     val v2 = TableFormat.optimizeZorder(spark, base, "a", "b")
-    assert(v2 == 2 && TableFormat.manifestOp(spark, base, 2).contains("optimize"))
+    assert(v2 == 2 && TableFormat.manifest(spark, base, 2).op.contains("optimize"))
     val (df2, (read2, total2)) = TableFormat.readSnapshotWhere2(spark, base,
       "a", 100L, 200L, "b", 0L, 4000L)
     assert(total2 >= 4 && read2 < total2, s"optimize did not enable skipping: $read2/$total2")
@@ -622,7 +622,7 @@ class TableFormatSpec extends SparkTestBase {
     assert(TableFormat.manifestFiles(spark, dst, 1).toSet ==
       TableFormat.manifestFiles(spark, src, 1).toSet)
     assert(TableFormat.readSnapshot(spark, dst).count() == 100)
-    assert(TableFormat.manifestOp(spark, dst, 1).contains("clone"))
+    assert(TableFormat.manifest(spark, dst, 1).op.contains("clone"))
     // clone-side writes stage under the CLONE's tree; the source is inert
     TableFormat.appendCommit(spark, dst, Seq((1000L, "x")).toDF("k", "v"))
     assert(TableFormat.readSnapshot(spark, dst).count() == 101)
@@ -654,7 +654,7 @@ class TableFormatSpec extends SparkTestBase {
       TableFormat.manifestFiles(spark, base, 1).toSet)
     assert(TableFormat.readSnapshot(spark, base).count() == 50)
     assert(TableFormat.readSnapshot(spark, base, Some(2)).count() == 40) // undone v2 readable
-    assert(TableFormat.manifestOp(spark, base, 3).contains("restore"))
+    assert(TableFormat.manifest(spark, base, 3).op.contains("restore"))
     // across the restore the rows deleted in v2 come BACK as inserts, nothing deleted
     val ch = TableFormat.readChanges(spark, base, 2, 3)
     val ins = ch.filter(col("_change_type") === "insert")
@@ -804,9 +804,9 @@ class TableFormatSpec extends SparkTestBase {
     val base = freshBase("tf_drop_stats")
     val rows = (0L until 4000L).map(i => (i % 64, i / 64, i)).toDF("a", "b", "payload")
     TableFormat.commitZorder(spark, base, rows, "a", "b", 1)
-    assert(TableFormat.manifestStatsCols(spark, base, 1) == Seq("a", "b"))
+    assert(TableFormat.manifest(spark, base, 1).statsCols == Seq("a", "b"))
     TableFormat.alterDropCommit(spark, base, "a")
-    assert(TableFormat.manifestStatsCols(spark, base, 2) == Seq("b"))
+    assert(TableFormat.manifest(spark, base, 2).statsCols == Seq("b"))
     // entries' second-slot bounds promoted to the first slot: a range
     // read on b still prunes and returns exactly b's rows
     val (df, (kept, total)) = TableFormat.readSnapshotWhere(spark, base, "b", 10L, 12L)
@@ -825,7 +825,7 @@ class TableFormatSpec extends SparkTestBase {
     TableFormat.alterRenameCommit(spark, base, "v", "amount")
     TableFormat.alterSchemaCommit(spark, base,
       org.apache.spark.sql.types.StructType(
-        TableFormat.manifestSchema(spark, base, 3).get.fields :+
+        TableFormat.manifest(spark, base, 3).schema.get.fields :+
           org.apache.spark.sql.types.StructField("tag",
             org.apache.spark.sql.types.StringType, nullable = true)))
     // the dv anti-join must compose with the colmap aliasing AND the
@@ -904,8 +904,8 @@ class TableFormatSpec extends SparkTestBase {
     assert(cl.count() == 199, "clone lost the deletion vector")
     assert(cl.filter(col("amount").isNull).count() == 0,
       "clone lost the column mapping — renamed column reads NULL")
-    assert(TableFormat.manifestProps(spark, dst, 1) == Map("delete.mode" -> "merge-on-read"))
-    assert(TableFormat.manifestConstraints(spark, dst, 1)
+    assert(TableFormat.manifest(spark, dst, 1).props == Map("delete.mode" -> "merge-on-read"))
+    assert(TableFormat.manifest(spark, dst, 1).constraints
       == Seq("nonneg" -> "C:amount >= 0"))
     // renaming/dropping a column a CHECK references is refused by name
     val ex1 = intercept[IllegalArgumentException] {
@@ -965,12 +965,12 @@ class TableFormatSpec extends SparkTestBase {
     val base = freshBase("tf_restore_hdr")
     TableFormat.commit(spark, base, Seq((1L, 10L), (2L, 20L)).toDF("a", "v"), 1, None)
     TableFormat.alterRenameCommit(spark, base, "a", "b")             // v2: colmap b→a
-    val s2 = TableFormat.manifestSchema(spark, base, 2).get
+    val s2 = TableFormat.manifest(spark, base, 2).schema.get
     TableFormat.alterSchemaCommit(spark, base,                       // v3: re-ADD `a`
       StructType(s2.fields :+ StructField("a", LongType)))
     // premise: the re-added `a` got a FRESH physical name via the colmap
     // (physical `a` is still owned by the renamed column b)
-    assert(TableFormat.manifestColmap(spark, base, 3).get("a").exists(_ != "a"),
+    assert(TableFormat.manifest(spark, base, 3).colmap.get("a").exists(_ != "a"),
       "test premise: re-added column must map to a fresh physical name")
     TableFormat.alterPropsCommit(spark, base, Map("tier" -> "late")) // v4
     TableFormat.alterConstraintsCommit(spark, base,                  // v5: CHECK on b,
@@ -981,11 +981,11 @@ class TableFormatSpec extends SparkTestBase {
     // would silently NULL column `a` in every pre-rename file, and the
     // inherited CHECK on `b` (absent from the restored schema) would
     // brick every subsequent write.
-    assert(TableFormat.manifestColmap(spark, base, vR).isEmpty,
+    assert(TableFormat.manifest(spark, base, vR).colmap.isEmpty,
       "restore inherited the parent's colmap")
-    assert(TableFormat.manifestProps(spark, base, vR).isEmpty,
+    assert(TableFormat.manifest(spark, base, vR).props.isEmpty,
       "restore inherited the parent's props")
-    assert(TableFormat.manifestConstraints(spark, base, vR).isEmpty,
+    assert(TableFormat.manifest(spark, base, vR).constraints.isEmpty,
       "restore inherited the parent's constraints")
     val got = TableFormat.readSnapshot(spark, base, Some(vR)).orderBy("a")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -1012,8 +1012,8 @@ class TableFormatSpec extends SparkTestBase {
     // dropping the constraint releases the column
     TableFormat.alterConstraintsCommit(spark, base, drop = Some("legacy"))
     TableFormat.alterRenameCommit(spark, base, "k", "kk")
-    assert(TableFormat.manifestSchema(spark, base,
-      TableFormat.latestVersion(spark, base)).get.fieldNames.contains("kk"))
+    assert(TableFormat.manifest(spark, base,
+      TableFormat.latestVersion(spark, base)).schema.get.fieldNames.contains("kk"))
   }
 
   test("vacuum spares fresh .staged. leftovers (live publishers) and reclaims stale ones (r11, ADVICE r10 low)") {
@@ -1218,7 +1218,7 @@ class TableFormatSpec extends SparkTestBase {
     val rows = (0L until 4000L).map(i => (i, s"r$i")).toDF("k", "v")
     TableFormat.commit(spark, base, rows, 1, None, statsCol = Some("k"),
       clusterFiles = Some(80)) // ≥ PqCheckpointMinEntries → parquet form
-    assert(TableFormat.manifestIsParquet(spark, base, 1),
+    assert(TableFormat.manifest(spark, base, 1).entriesPq.isDefined,
       "an 80-entry full manifest should checkpoint as parquet")
     val (isDelta, _, body, bytes) = TableFormat.manifestLogStat(spark, base, 1)
     assert(!isDelta && body == 80 && bytes > 0)
@@ -1255,12 +1255,12 @@ class TableFormatSpec extends SparkTestBase {
     f.setTimes(orphan, System.currentTimeMillis() - 6L * 60 * 1000, -1)
     TableFormat.vacuum(spark, base, retain = Seq(1, v3))
     assert(!f.exists(orphan), "aged orphan sidecar must reclaim")
-    assert(TableFormat.manifestIsParquet(spark, base, 1))
+    assert(TableFormat.manifest(spark, base, 1).entriesPq.isDefined)
     assert(TableFormat.readSnapshot(spark, base, Some(1)).count() == 4000)
     assert(TableFormat.readSnapshot(spark, base).count() == 3901)
     // a materialized retained version ≥ threshold is ALSO parquet: v3
     // resolved through v2 (now reclaimed), so vacuum materialized it
-    assert(TableFormat.manifestIsParquet(spark, base, v3),
+    assert(TableFormat.manifest(spark, base, v3).entriesPq.isDefined,
       "materialization of a big delta should land in the parquet form")
   }
 
@@ -1284,12 +1284,12 @@ class TableFormatSpec extends SparkTestBase {
     // NON-key evolution stays allowed while outstanding, and the
     // serving read keeps applying the mask through it
     val vR = TableFormat.alterRenameCommit(spark, base, "v", "val")
-    assert(TableFormat.manifestEqDels(spark, base, vR).nonEmpty)
+    assert(TableFormat.manifest(spark, base, vR).eqDels.nonEmpty)
     assert(TableFormat.readSnapshot(spark, base).count() == 49L)
     // resolution lifts the guard
     TableFormat.resolveEqDeletes(spark, base)
     val vOk = TableFormat.alterRenameCommit(spark, base, "id", "id2")
-    assert(TableFormat.manifestSchema(spark, base, vOk)
+    assert(TableFormat.manifest(spark, base, vOk).schema
       .exists(_.fieldNames.contains("id2")))
     assert(TableFormat.readSnapshot(spark, base).count() == 49L)
   }
@@ -1316,7 +1316,7 @@ class TableFormatSpec extends SparkTestBase {
       next += 20
     }
     val vCur = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base, vCur).size == 25)
+    assert(TableFormat.manifest(spark, base, vCur).eqDels.size == 25)
     // PLAN SHAPE: one anti-join for the one key column — the version
     // scoping lives in the join condition, NOT in a per-interval chain
     val df = TableFormat.readSnapshot(spark, base)
@@ -1348,7 +1348,7 @@ class TableFormatSpec extends SparkTestBase {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoBefore)
     }
     val vRes = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base, vRes).isEmpty)
+    assert(TableFormat.manifest(spark, base, vRes).eqDels.isEmpty)
     assert(TableFormat.readSnapshot(spark, base).as[(Long, String)]
       .collect().map(_._1).toSet == live, "post-resolution state diverged")
     // BACKLOG PRESSURE (r16, ADVICE r15 #3): past maxOutstanding the
@@ -1359,8 +1359,8 @@ class TableFormatSpec extends SparkTestBase {
         val k = rnd.nextLong(next)
         live -= k
         TableFormat.deleteByKeysEq(spark, base, Seq(k).toDF("k"), "k")
-        val outst = TableFormat.manifestEqDels(spark, base,
-          TableFormat.currentVersion(spark, base)).size
+        val outst = TableFormat.manifest(spark, base,
+          TableFormat.currentVersion(spark, base)).eqDels.size
         assert(outst <= 4, s"cap breached: $outst outstanding")
       }
       assert(TableFormat.readSnapshot(spark, base).as[(Long, String)]
@@ -1392,7 +1392,7 @@ class TableFormatSpec extends SparkTestBase {
     // superset of files
     val (vc, n) = TableFormat.consolidateEqDeletes(spark, base)          // v5
     assert(n == 2, s"consolidated records: $n")
-    val recs = TableFormat.manifestEqDels(spark, base, vc)
+    val recs = TableFormat.manifest(spark, base, vc).eqDels
     assert(recs.size == 1 && recs.head._2 == "k" &&
       new org.apache.hadoop.fs.Path(recs.head._1).getName.startsWith("eqc"),
       recs.toString)
@@ -1440,8 +1440,8 @@ class TableFormatSpec extends SparkTestBase {
     } finally q.stop()
     // resolution converges from the consolidated state
     TableFormat.resolveEqDeletes(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base,
-      TableFormat.currentVersion(spark, base)).isEmpty)
+    assert(TableFormat.manifest(spark, base,
+      TableFormat.currentVersion(spark, base)).eqDels.isEmpty)
     assert(served == live + 2L - 4L, "post-resolution state diverged")
     // CAP ACTION: `capAction=consolidate` takes the cheap middle step at
     // the cap instead of resolving — outstanding collapses to one
@@ -1453,9 +1453,9 @@ class TableFormatSpec extends SparkTestBase {
       TableFormat.deleteByKeysEq(spark, base, Seq(6L).toDF("k"), "k")
       TableFormat.deleteByKeysEq(spark, base, Seq(7L).toDF("k"), "k") // at cap
       val cur = TableFormat.currentVersion(spark, base)
-      assert(TableFormat.manifestOp(spark, base, cur - 1)
+      assert(TableFormat.manifest(spark, base, cur - 1).op
         .contains("eqdel_consolidate"), "cap must consolidate, not resolve")
-      val out = TableFormat.manifestEqDels(spark, base, cur)
+      val out = TableFormat.manifest(spark, base, cur).eqDels
       assert(out.size == 2,
         s"one consolidated + the fresh record expected: $out")
       assert(served == live + 2L - 4L - 5L - 6L - 7L,
@@ -1550,7 +1550,7 @@ class TableFormatSpec extends SparkTestBase {
       served.exists(_ == ("a", 3L, "ra3")),
       "the OTHER tenant's same uid must survive — tuple, not column, masking")
     // the record stores the comma-joined spec; ONE anti-join serves it
-    assert(TableFormat.manifestEqDels(spark, base, v2).head._2 == "tenant,uid")
+    assert(TableFormat.manifest(spark, base, v2).eqDels.head._2 == "tenant,uid")
     val plan = TableFormat.readSnapshot(spark, base)
       .queryExecution.optimizedPlan.toString
     assert(plan.sliding("LeftAnti".length).count(_ == "LeftAnti") == 1, plan)
@@ -1572,7 +1572,7 @@ class TableFormatSpec extends SparkTestBase {
     // CONSOLIDATE the two composite records into one eqc file
     val (vc, nc) = TableFormat.consolidateEqDeletes(spark, base)      // v5
     assert(nc == 2)
-    val recs = TableFormat.manifestEqDels(spark, base, vc)
+    val recs = TableFormat.manifest(spark, base, vc).eqDels
     assert(recs.size == 1 && recs.head._2 == "tenant,uid" &&
       new org.apache.hadoop.fs.Path(recs.head._1).getName.startsWith("eqc"))
     assert(served == live, "consolidation changed the served tuples")
@@ -1620,8 +1620,8 @@ class TableFormatSpec extends SparkTestBase {
     assert(eRen.getMessage.contains("resolve_eqdel"), eRen.getMessage)
     // resolution converges to plain dv state; answers unchanged
     TableFormat.resolveEqDeletes(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base,
-      TableFormat.currentVersion(spark, base)).isEmpty)
+    assert(TableFormat.manifest(spark, base,
+      TableFormat.currentVersion(spark, base)).eqDels.isEmpty)
     assert(served == live, "post-resolution tuples diverged")
   }
 
@@ -1745,8 +1745,8 @@ class TableFormatSpec extends SparkTestBase {
     // final state == the mirror deleteByKeysDV produced batch-by-batch
     val (rv, nRes) = TableFormat.resolveEqDeletes(spark, base)
     assert(nRes == 2)
-    assert(TableFormat.manifestEqDels(spark, base, rv).isEmpty &&
-      TableFormat.manifestEqAdds(spark, base, rv).isEmpty)
+    assert(TableFormat.manifest(spark, base, rv).eqDels.isEmpty &&
+      TableFormat.manifest(spark, base, rv).eqAdds.isEmpty)
     assert(spark.sql(s"SELECT n_eqdel FROM graft_table_detail('$base')")
       .head.getInt(0) == 0, "detail TVF must show zero after resolution")
     assert(snap(base) == snap(mirror))
@@ -1767,7 +1767,7 @@ class TableFormatSpec extends SparkTestBase {
     TableFormat.deleteByKeysEq(spark, base, Seq(600L).toDF("k"), "k")
     TableFormat.compact(spark, base, smallBytes = Long.MaxValue, targetFiles = 2)
     val head = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base, head).isEmpty)
+    assert(TableFormat.manifest(spark, base, head).eqDels.isEmpty)
     assert(TableFormat.readSnapshot(spark, base)
       .filter(col("k") === 600L).count() == 0)
   }
@@ -1863,7 +1863,7 @@ class TableFormatSpec extends SparkTestBase {
   test("auto-analyze: a heavy delete rebuilds stale NDV only under graft.analyze.auto; light deletes never trigger (r12, VERDICT r11 #7)") {
     def est(base: String): Long = {
       val v = TableFormat.currentVersion(spark, base)
-      TableFormat.ndvEstimate(TableFormat.manifestNdv(spark, base, v)("k"))
+      TableFormat.ndvEstimate(TableFormat.manifest(spark, base, v).ndv("k"))
     }
     // WITHOUT the property: the sketch is an upper bound frozen at
     // pre-delete cardinality — no hidden extra commit, estimate stale
@@ -1883,7 +1883,7 @@ class TableFormatSpec extends SparkTestBase {
     TableFormat.deleteWhere(spark, base2, "k", 0L, 8999L)
     val v2 = TableFormat.currentVersion(spark, base2)
     assert(v2 == 4, s"expected commit+props+delete+analyze = v4, got v$v2")
-    assert(TableFormat.manifestOp(spark, base2, v2).contains("alter"),
+    assert(TableFormat.manifest(spark, base2, v2).op.contains("alter"),
       "last commit should be the auto-ANALYZE")
     val repaired = est(base2)
     assert(repaired < 2000, s"auto-analyze did not repair the estimate: $repaired")
@@ -2598,7 +2598,7 @@ class TableFormatSpec extends SparkTestBase {
     // manifest (v1, checkpoints, vacuum materializations) from here on
     // takes the parquet-sidecar form
     append(700, 70)
-    assert(TableFormat.manifestIsParquet(spark, base, 1),
+    assert(TableFormat.manifest(spark, base, 1).entriesPq.isDefined,
       "fuzz premise: the seed checkpoint should be parquet")
     val snaps = scala.collection.mutable.Map(
       TableFormat.currentVersion(spark, base) -> live)

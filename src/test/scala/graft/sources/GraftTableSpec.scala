@@ -50,7 +50,7 @@ class GraftTableSpec extends SparkTestBase {
     val total = TableFormat.manifestEntries(spark, base, 1).size
     assert(total >= 2, s"test premise: need multiple files, got $total")
     val sb = new GraftScanBuilder(base, 1,
-      TableFormat.manifestSchema(spark, base, 1).get, Seq("k"), spark, 0)
+      TableFormat.manifest(spark, base, 1).schema.get, Seq("k"), spark, 0)
     sb.pushFilters(Array(GreaterThanOrEqual("k", 100L), LessThanOrEqual("k", 200L)))
     val kept = sb.keptEntries().size
     assert(kept < total, s"scan kept $kept of $total files — stats didn't prune")
@@ -73,7 +73,7 @@ class GraftTableSpec extends SparkTestBase {
     val total = TableFormat.manifestEntries(spark, base, 1).size
     assert(total >= 2, s"test premise: need multiple files, got $total")
     val sb = new GraftScanBuilder(base, 1,
-      TableFormat.manifestSchema(spark, base, 1).get, Seq("d"), spark, 0)
+      TableFormat.manifest(spark, base, 1).schema.get, Seq("d"), spark, 0)
     sb.pushFilters(Array(GreaterThan("d", 10.5)))
     assert(sb.keptEntries().size == total,
       "pruned on a DOUBLE stats column — truncated bounds are not trustworthy")
@@ -83,7 +83,7 @@ class GraftTableSpec extends SparkTestBase {
     // fractional LITERAL against an integral column: no bound derived,
     // filter prunes nothing, result exact
     val sb2 = new GraftScanBuilder(base, 1,
-      TableFormat.manifestSchema(spark, base, 1).get, Seq("k"), spark, 0)
+      TableFormat.manifest(spark, base, 1).schema.get, Seq("k"), spark, 0)
     sb2.pushFilters(Array(GreaterThan("k", 100.5)))
     assert(sb2.keptEntries().size == total,
       "a fractional literal must yield no pruning bound on an integral column")
@@ -103,14 +103,14 @@ class GraftTableSpec extends SparkTestBase {
     val v = TableFormat.currentVersion(spark, base)
     // the transform resolves to clustering on the SOURCE column with
     // real per-file micros bounds from the parquet footers
-    assert(TableFormat.manifestStatsCols(spark, base, v) == Seq("ts"))
+    assert(TableFormat.manifest(spark, base, v).statsCols == Seq("ts"))
     val entries = TableFormat.manifestEntries(spark, base, v)
     assert(entries.size >= 2 && entries.forall(e => e.lo.isDefined && e.hi.isDefined),
       s"temporal footer stats missing: ${entries.map(e => (e.lo, e.hi))}")
     // a predicate on the RAW column prunes files — the hidden-partitioning
     // contract: the query never names the transform
     val sb = new GraftScanBuilder(base, v,
-      TableFormat.manifestSchema(spark, base, v).get, Seq("ts"), spark, 0)
+      TableFormat.manifest(spark, base, v).schema.get, Seq("ts"), spark, 0)
     sb.pushFilters(Array(
       GreaterThanOrEqual("ts", java.sql.Timestamp.valueOf("2024-01-02 00:00:00")),
       LessThan("ts", java.sql.Timestamp.valueOf("2024-01-03 00:00:00"))))
@@ -125,8 +125,8 @@ class GraftTableSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS graft.db.hpb")
     spark.sql("CREATE TABLE graft.db.hpb (k BIGINT, v STRING) PARTITIONED BY (bucket(4, k))")
     val bBase = s"$wh/db/hpb"
-    assert(TableFormat.bucketSpecOf(TableFormat.manifestProps(spark, bBase,
-      TableFormat.currentVersion(spark, bBase))) == Some((4, "k")),
+    assert(TableFormat.bucketSpecOf(TableFormat.manifest(spark, bBase,
+      TableFormat.currentVersion(spark, bBase)).props) == Some((4, "k")),
       "bucket transform must land as the graft.bucket layout property")
     spark.sql("INSERT INTO graft.db.hpb SELECT id, concat('r', id) FROM range(0, 100)")
     val bEntries = TableFormat.manifestEntries(spark, bBase,
@@ -365,7 +365,7 @@ class GraftTableSpec extends SparkTestBase {
       "carried entries lost their manifest stats")
     // and the rewritten snapshot still file-skips: narrow reads prune
     val sb = new GraftScanBuilder(base, 2,
-      TableFormat.manifestSchema(spark, base, 2).get, Seq("k"), spark, 0)
+      TableFormat.manifest(spark, base, 2).schema.get, Seq("k"), spark, 0)
     sb.pushFilters(Array(GreaterThanOrEqual("k", 10L), LessThanOrEqual("k", 19L)))
     assert(sb.keptEntries().size < v2Entries.size,
       "post-UPDATE snapshot lost its file-skipping index")
@@ -403,7 +403,7 @@ class GraftTableSpec extends SparkTestBase {
     spark.sql("ALTER TABLE graft.db.sqlalter ADD COLUMN extra BIGINT")
     // metadata-only: same files, new version, `alter` op, CDF silent
     assert(TableFormat.manifestFiles(spark, base, 2) == v1Files)
-    assert(TableFormat.manifestOp(spark, base, 2).contains("alter"))
+    assert(TableFormat.manifest(spark, base, 2).op.contains("alter"))
     assert(TableFormat.readChanges(spark, base, 1, 2).count() == 0)
     // old rows project NULL; INSERT can now carry the column
     assert(spark.sql("SELECT count(extra) FROM graft.db.sqlalter").head.getLong(0) == 0)
@@ -446,7 +446,7 @@ class GraftTableSpec extends SparkTestBase {
     assert(o.getInt(0) == 6 && o.getInt(1) >= 4, s"got $o")
     val (_, (read1, total1)) = TableFormat.readSnapshotWhere(spark, base, "a", 0L, 400L, Some(6))
     assert(read1 < total1, s"post-optimize read $read1/$total1 — no skipping")
-    assert(TableFormat.manifestOp(spark, base, 6).contains("optimize"))
+    assert(TableFormat.manifest(spark, base, 6).op.contains("optimize"))
     // RESTORE via SQL: metadata-only rollback to the pre-optimize layout
     val r = spark.sql("CALL graft.system.restore('db.maint', 5)").head
     assert(r.getInt(0) == 5 && r.getInt(1) == 7, s"got $r")
@@ -797,13 +797,13 @@ class GraftTableSpec extends SparkTestBase {
     val v = TableFormat.currentVersion(spark, base)
     // the declared clustering column flowed into every INSERT: all
     // entries carry bounds, and the header still names k
-    assert(TableFormat.manifestStatsCols(spark, base, v) == Seq("k"))
+    assert(TableFormat.manifest(spark, base, v).statsCols == Seq("k"))
     val entries = TableFormat.manifestEntries(spark, base, v)
     assert(entries.size >= 2 && entries.forall(e => e.lo.isDefined && e.hi.isDefined),
       s"SQL INSERTs produced stat-less entries: $entries")
     // and a narrow catalog-SQL predicate prunes files
     val sb = new GraftScanBuilder(base, v,
-      TableFormat.manifestSchema(spark, base, v).get, Seq("k"), spark, 0)
+      TableFormat.manifest(spark, base, v).schema.get, Seq("k"), spark, 0)
     sb.pushFilters(Array(GreaterThanOrEqual("k", 100L), LessThanOrEqual("k", 200L)))
     assert(sb.keptEntries().size < entries.size,
       s"kept ${sb.keptEntries().size} of ${entries.size} — no pruning")
@@ -882,7 +882,7 @@ class GraftTableSpec extends SparkTestBase {
     // min-holding file AND the interior dv file below the dv-free min
     import org.apache.spark.sql.connector.expressions.Expressions
     import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, Max, Min}
-    val schema1 = TableFormat.manifestSchema(spark, base, 1).get
+    val schema1 = TableFormat.manifest(spark, base, 1).schema.get
     val cur = TableFormat.currentVersion(spark, base)
     def builderWith(agg: Aggregation): GraftScanBuilder = {
       val sb = new GraftScanBuilder(base, cur, schema1, Seq("k"), spark, 0)
@@ -957,7 +957,7 @@ class GraftTableSpec extends SparkTestBase {
     TableFormat.commit(spark, base, rows, 1, None, statsCol = Some("k"))
     // scan-level: statistics equal the pruned entries' recorded rows
     val sb = new GraftScanBuilder(base, 1,
-      TableFormat.manifestSchema(spark, base, 1).get, Seq("k"), spark, 0)
+      TableFormat.manifest(spark, base, 1).schema.get, Seq("k"), spark, 0)
     sb.pushFilters(Array(GreaterThanOrEqual("k", 0L), LessThanOrEqual("k", 99L)))
     val stats = sb.estimateStatistics()
     val total = TableFormat.manifestEntries(spark, base, 1).flatMap(_.rows).sum
@@ -992,7 +992,7 @@ class GraftTableSpec extends SparkTestBase {
       "CREATE TABLE graft.db.ctasp PARTITIONED BY (k) AS SELECT k, v FROM ctas_src")
     val base = s"$wh/db/ctasp"
     val v = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestStatsCols(spark, base, v) == Seq("k"))
+    assert(TableFormat.manifest(spark, base, v).statsCols == Seq("k"))
     val entries = TableFormat.manifestEntries(spark, base, v)
     assert(entries.nonEmpty && entries.forall(e => e.lo.isDefined && e.hi.isDefined),
       s"CTAS into a partitioned table lost stats: $entries")
@@ -1015,7 +1015,7 @@ class GraftTableSpec extends SparkTestBase {
     })
     assert(spark.sql("SELECT * FROM graft.db.rtas").schema.fieldNames.toSeq == Seq("k2"))
     val v2 = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestStatsCols(spark, base, v2) == Seq("k2"),
+    assert(TableFormat.manifest(spark, base, v2).statsCols == Seq("k2"),
       "REPLACE TABLE did not re-declare the clustering column")
     assert(TableFormat.manifestEntries(spark, base, v2).forall(_.rows.isDefined))
     // the replaced definition is STILL time-travel readable
@@ -1077,7 +1077,7 @@ class GraftTableSpec extends SparkTestBase {
       (100L until 110L).map(i => (i, s"r$i")).toDF("k", "v"))
     val e = intercept[TableFormat.ConcurrentModificationException] {
       TableFormat.replaceCommitStaged(spark, base, Seq.empty,
-        TableFormat.manifestSchema(spark, base, 1).get, basedOnVersion = Some(1))
+        TableFormat.manifest(spark, base, 1).schema.get, basedOnVersion = Some(1))
     }
     assert(e.getMessage.contains("v1") && e.getMessage.contains("v2"),
       s"wrong error: ${e.getMessage}")
@@ -1308,7 +1308,7 @@ class GraftTableSpec extends SparkTestBase {
       // the defining property: the data file set did not move
       assert(TableFormat.manifestFiles(spark, base, 2).toSet == v1Files,
         "merge-on-read SQL DELETE rewrote data files")
-      assert(TableFormat.manifestOp(spark, base, 2).contains("delete_dv"))
+      assert(TableFormat.manifest(spark, base, 2).op.contains("delete_dv"))
       // V1Relation scan path applies the dv
       assert(spark.sql("SELECT count(1) AS n FROM graft.db.sqldv WHERE k < 100")
         .head.getLong(0) == 99)
@@ -1385,8 +1385,8 @@ class GraftTableSpec extends SparkTestBase {
       """CREATE TABLE graft.db.ctas_props
         |TBLPROPERTIES ('delete.mode' = 'merge-on-read', 'tier' = 'gold')
         |AS SELECT * FROM ctas_src""".stripMargin)
-    val props1 = TableFormat.manifestProps(spark, base,
-      TableFormat.currentVersion(spark, base))
+    val props1 = TableFormat.manifest(spark, base,
+      TableFormat.currentVersion(spark, base)).props
     assert(props1 == Map("delete.mode" -> "merge-on-read", "tier" -> "gold"),
       s"CTAS dropped TBLPROPERTIES: $props1")
     // the property routes the dv path with no session conf
@@ -1394,7 +1394,7 @@ class GraftTableSpec extends SparkTestBase {
       TableFormat.currentVersion(spark, base)).toSet
     spark.sql("DELETE FROM graft.db.ctas_props WHERE k IN (3, 97)")
     val vNow = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestOp(spark, base, vNow).contains("delete_dv"))
+    assert(TableFormat.manifest(spark, base, vNow).op.contains("delete_dv"))
     assert(TableFormat.manifestFiles(spark, base, vNow).toSet == filesBefore)
     // add a constraint, then REPLACE: the new definition must NOT
     // inherit the old constraint (its column is gone) or the old props
@@ -1403,9 +1403,9 @@ class GraftTableSpec extends SparkTestBase {
       """REPLACE TABLE graft.db.ctas_props
         |AS SELECT k AS kk FROM ctas_src""".stripMargin)
     val vR = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestConstraints(spark, base, vR).isEmpty,
+    assert(TableFormat.manifest(spark, base, vR).constraints.isEmpty,
       "REPLACE TABLE inherited a constraint naming a dropped column")
-    assert(TableFormat.manifestProps(spark, base, vR).isEmpty)
+    assert(TableFormat.manifest(spark, base, vR).props.isEmpty)
     // writes against the replaced definition work (no phantom CHECK)
     spark.sql("INSERT INTO graft.db.ctas_props VALUES (12345)")
     assert(spark.sql("SELECT count(1) FROM graft.db.ctas_props").head.getLong(0) == 101)
@@ -1448,8 +1448,8 @@ class GraftTableSpec extends SparkTestBase {
     // declared clustering column
     val entries = TableFormat.manifestEntries(spark, base,
       TableFormat.currentVersion(spark, base))
-    assert(TableFormat.manifestStatsCols(spark, base,
-      TableFormat.currentVersion(spark, base)) == Seq("day"))
+    assert(TableFormat.manifest(spark, base,
+      TableFormat.currentVersion(spark, base)).statsCols == Seq("day"))
     assert(entries.exists(e => e.lo.isDefined && e.hi.isDefined),
       "generated clustering column recorded no bounds")
     // GENERATED ALWAYS: a user-supplied value is overwritten, not honored
@@ -1702,17 +1702,17 @@ class GraftTableSpec extends SparkTestBase {
         |PARTITIONED BY (k)
         |TBLPROPERTIES ('delete.mode' = 'merge-on-read', 'team' = 'ingest')""".stripMargin)
     // v1 props as declared; engine bookkeeping (provider) filtered out
-    val p1 = TableFormat.manifestProps(spark, base, 1)
+    val p1 = TableFormat.manifest(spark, base, 1).props
     assert(p1 == Map("delete.mode" -> "merge-on-read", "team" -> "ingest"), p1.toString)
     // props INHERIT through ordinary commits
     (0L until 2000L).map(i => (i, i)).toDF("k", "v").createOrReplaceTempView("props_src")
     spark.sql("INSERT INTO graft.db.props_spec SELECT * FROM props_src")
-    assert(TableFormat.manifestProps(spark, base, 2) == p1, "INSERT dropped the props")
+    assert(TableFormat.manifest(spark, base, 2).props == p1, "INSERT dropped the props")
     // the TABLE PROPERTY alone routes SQL DELETE through deletion
     // vectors — no session conf set
     val beforeFiles = TableFormat.manifestFiles(spark, base, 2).toSet
     spark.sql("DELETE FROM graft.db.props_spec WHERE k IN (5, 1500)")
-    assert(TableFormat.manifestOp(spark, base, 3).contains("delete_dv"))
+    assert(TableFormat.manifest(spark, base, 3).op.contains("delete_dv"))
     assert(TableFormat.manifestFiles(spark, base, 3).toSet == beforeFiles)
     assert(spark.sql("SELECT count(*) FROM graft.db.props_spec").head.getLong(0) == 1998)
     // SET/UNSET commit metadata-only revisions; SHOW reads them back
@@ -1723,11 +1723,11 @@ class GraftTableSpec extends SparkTestBase {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(shown == Map("delete.mode" -> "copy-on-write", "quality.tier" -> "gold"), shown.toString)
     // properties are VERSIONED: the pre-alter manifests still carry theirs
-    assert(TableFormat.manifestProps(spark, base, 3)("delete.mode") == "merge-on-read")
+    assert(TableFormat.manifest(spark, base, 3).props("delete.mode") == "merge-on-read")
     // with copy-on-write restored, the same delete shape now moves files
     spark.sql("DELETE FROM graft.db.props_spec WHERE k IN (6, 1501)")
     val vNow = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestOp(spark, base, vNow).contains("delete"))
+    assert(TableFormat.manifest(spark, base, vNow).op.contains("delete"))
     assert(TableFormat.manifestFiles(spark, base, vNow).toSet != beforeFiles)
     assert(spark.sql("SELECT count(*) FROM graft.db.props_spec").head.getLong(0) == 1996)
   }
@@ -1803,7 +1803,7 @@ class GraftTableSpec extends SparkTestBase {
       .withConstraints(Array(chk, pk)).build())
     assert(TableFormat.latestVersion(spark, base) == 1,
       "inline constraints must not spawn extra commits")
-    val cons = TableFormat.manifestConstraints(spark, base, 1).toMap
+    val cons = TableFormat.manifest(spark, base, 1).constraints.toMap
     assert(cons.get("k_pos").contains("C:k > 0"), cons.toString)
     assert(cons.get("pk_k").contains("PK:k"), cons.toString)
   }
@@ -1823,7 +1823,7 @@ class GraftTableSpec extends SparkTestBase {
       .toDF("a", "b", "c", "v").createOrReplaceTempView("stats3_src")
     spark.sql("INSERT INTO graft.db.stats3 SELECT * FROM stats3_src")
     val v1 = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestStatsCols(spark, base, v1) == Seq("a", "b", "c"),
+    assert(TableFormat.manifest(spark, base, v1).statsCols == Seq("a", "b", "c"),
       "the #stats header must declare all three columns")
     val entries = TableFormat.manifestEntries(spark, base, v1)
     assert(entries.size >= 2, s"test premise: need multiple files, got ${entries.size}")
@@ -1831,7 +1831,7 @@ class GraftTableSpec extends SparkTestBase {
       "every entry must record bounds for the third declared column")
     // the SCAN prunes on a predicate over ONLY the third column
     val sb = new GraftScanBuilder(base, v1,
-      TableFormat.manifestSchema(spark, base, v1).get, Seq("a", "b", "c"), spark, 0)
+      TableFormat.manifest(spark, base, v1).schema.get, Seq("a", "b", "c"), spark, 0)
     sb.pushFilters(Array(GreaterThanOrEqual("c", 1000100L), LessThanOrEqual("c", 1000200L)))
     val kept = sb.keptEntries().size
     assert(kept < entries.size,
@@ -1851,7 +1851,7 @@ class GraftTableSpec extends SparkTestBase {
     // DROP of a middle stats column shifts the later slots down
     spark.sql("ALTER TABLE graft.db.stats3 DROP COLUMN b")
     val v3 = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestStatsCols(spark, base, v3) == Seq("a", "c"))
+    assert(TableFormat.manifest(spark, base, v3).statsCols == Seq("a", "c"))
     val shifted = TableFormat.manifestEntries(spark, base, v3)
     // c's triples moved from slot 2 (ext) into slot 1 (lo2/hi2)
     assert(shifted.forall(e => e.statsAt(1)._1.isDefined && e.ext.isEmpty),
@@ -1873,7 +1873,7 @@ class GraftTableSpec extends SparkTestBase {
         |  (id BIGINT GENERATED ALWAYS AS IDENTITY, w BIGINT, v BIGINT)
         |PARTITIONED BY (id)""".stripMargin)
     // identity declaration survives in the manifest schema
-    val md = TableFormat.manifestSchema(spark, base, 1).get("id").metadata
+    val md = TableFormat.manifest(spark, base, 1).schema.get("id").metadata
     assert(md.contains("GRAFT_IDENTITY_START") && md.getLong("GRAFT_IDENTITY_STEP") == 1L)
     // TWO writers race 3 inserts each of 500 rows — the OCC loop must
     // serialize the hwm claims: every conflict re-reads the winner's
@@ -1895,7 +1895,7 @@ class GraftTableSpec extends SparkTestBase {
     assert(r.getLong(2) == 1L && r.getLong(3) == 3000L,
       s"ids not gap-free [1,3000]: [${r.getLong(2)}, ${r.getLong(3)}]")
     // the manifest watermark agrees: next id to allocate is 3001
-    val hwm = TableFormat.manifestHwm(spark, base, TableFormat.currentVersion(spark, base))
+    val hwm = TableFormat.manifest(spark, base, TableFormat.currentVersion(spark, base)).hwm
     assert(hwm.get("id").contains(3001L), hwm.toString)
     // ids being the clustering key, a range predicate prunes files
     val vCur = TableFormat.currentVersion(spark, base)
@@ -1913,7 +1913,7 @@ class GraftTableSpec extends SparkTestBase {
     (0L until 5000L).map(i => (i, i)).toDF("k", "v").createOrReplaceTempView("an_src")
     spark.sql("INSERT INTO graft.db.analyze_t SELECT * FROM an_src")
     def est(v: Int): Long = TableFormat.ndvEstimate(
-      TableFormat.manifestNdv(spark, base, v)("k"))
+      TableFormat.manifest(spark, base, v).ndv("k"))
     val before = est(TableFormat.currentVersion(spark, base))
     assert(before > 4500 && before < 5500, s"seed ndv $before")
     // delete 90% of the keys: the INCREMENTAL sketch cannot subtract —
@@ -2154,7 +2154,7 @@ class GraftTableSpec extends SparkTestBase {
       s"branch ids: $br")
     // publish: parent adopts the branch contents AND its watermark
     spark.sql("CALL graft.system.publish('db.idbr_t', 'ingest')")
-    val hwm = TableFormat.manifestHwm(spark, base, TableFormat.currentVersion(spark, base))
+    val hwm = TableFormat.manifest(spark, base, TableFormat.currentVersion(spark, base)).hwm
     assert(hwm.get("id").contains(201L), hwm.toString)
     // post-publish inserts continue gap-free from the merged mark
     spark.sql("INSERT INTO graft.db.idbr_t (v) VALUES (999)")
@@ -2289,7 +2289,7 @@ class GraftTableSpec extends SparkTestBase {
     // third-column bounds present too, rows identical, CDF silent
     assert(after.forall(_.statsAt(2)._1.isDefined), "no 3rd-column bounds")
     assert(spark.sql("SELECT count(1) FROM graft.db.optc_t").head.getLong(0) == 8000L)
-    assert(TableFormat.manifestOp(spark, base, v1).contains("optimize"))
+    assert(TableFormat.manifest(spark, base, v1).op.contains("optimize"))
     assert(TableFormat.readChanges(spark, base, v0, v1).count() == 0,
       "optimize must be CDF-silent")
   }
@@ -2321,7 +2321,7 @@ class GraftTableSpec extends SparkTestBase {
     val expect = spark.table("z3_src").where("b BETWEEN 100 AND 400").count()
     assert(spark.sql("SELECT count(1) FROM graft.db.z3_t WHERE b BETWEEN 100 AND 400")
       .head.getLong(0) == expect)
-    assert(TableFormat.manifestOp(spark, base, v).contains("optimize"))
+    assert(TableFormat.manifest(spark, base, v).op.contains("optimize"))
   }
 
   test("optimize_zorder_n with a STRING dimension: (lang, doc_id) curve prunes on the string dim alone (r12, VERDICT r11 #6)") {
@@ -2343,7 +2343,7 @@ class GraftTableSpec extends SparkTestBase {
     // the STRING dimension alone prunes: an equality on lang drops files
     assert(entries.forall(e => e.strStatsAt(0)._1.isDefined), "string bounds lost")
     val sb = new GraftScanBuilder(base, v,
-      TableFormat.manifestSchema(spark, base, v).get, Seq("lang", "doc_id"), spark, 0)
+      TableFormat.manifest(spark, base, v).schema.get, Seq("lang", "doc_id"), spark, 0)
     sb.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("lang", "de")))
     val keptStr = sb.keptEntries().size
     assert(keptStr < entries.size,
@@ -2356,7 +2356,7 @@ class GraftTableSpec extends SparkTestBase {
     val expect = spark.table("zs_src").where("lang = 'de'").count()
     assert(spark.sql("SELECT count(1) FROM graft.db.zs_t WHERE lang = 'de'")
       .head.getLong(0) == expect)
-    assert(TableFormat.manifestOp(spark, base, v).contains("optimize"))
+    assert(TableFormat.manifest(spark, base, v).op.contains("optimize"))
   }
 
   test("string clustering: per-file string bounds prune lang predicates; slots stay positional beside numeric keys (r11)") {
@@ -2381,7 +2381,7 @@ class GraftTableSpec extends SparkTestBase {
     assert(TableFormat.manifestEntries(spark, base, ver) == entries)
     // equality on the string key prunes the SCAN
     val sb = new GraftScanBuilder(base, ver,
-      TableFormat.manifestSchema(spark, base, ver).get, Seq("lang", "k"), spark, 0)
+      TableFormat.manifest(spark, base, ver).schema.get, Seq("lang", "k"), spark, 0)
     sb.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("lang", "ar")))
     val kept = sb.keptEntries().size
     assert(kept < entries.size,
@@ -2475,7 +2475,7 @@ class GraftTableSpec extends SparkTestBase {
       // a branch publish can add dv-CARRYING files whose live rows only
       // the ordinal-skipping row reader streams exactly
       val mb = new GraftTableMicroBatch(base,
-        TableFormat.manifestSchema(spark, base, 1).get, 0, spark,
+        TableFormat.manifest(spark, base, 1).schema.get, 0, spark,
         new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
       assert(!mb.createReaderFactory()
         .supportColumnarReads(GraftFilePartition("any", None)),
@@ -2642,7 +2642,7 @@ class GraftTableSpec extends SparkTestBase {
     val total = TableFormat.manifestEntries(spark, base, 1).size
     assert(total >= 2)
     val sb = new GraftScanBuilder(base, 1,
-      TableFormat.manifestSchema(spark, base, 1).get, Seq("lang"), spark, 0)
+      TableFormat.manifest(spark, base, 1).schema.get, Seq("lang"), spark, 0)
     sb.pushFilters(Array(StringStartsWith("lang", "en")))
     assert(sb.keptEntries().size < total,
       s"kept ${sb.keptEntries().size} of $total — prefix predicate didn't prune")
@@ -2661,7 +2661,7 @@ class GraftTableSpec extends SparkTestBase {
     val total = TableFormat.manifestEntries(spark, base, 1).size
     assert(total >= 4)
     val sb = new GraftScanBuilder(base, 1,
-      TableFormat.manifestSchema(spark, base, 1).get, Seq("k"), spark, 0)
+      TableFormat.manifest(spark, base, 1).schema.get, Seq("k"), spark, 0)
     // the envelope [10, 3990] spans every file; per-value membership
     // keeps only the two boundary files
     sb.pushFilters(Array(In("k", Array(10L, 3990L))))
@@ -2684,7 +2684,7 @@ class GraftTableSpec extends SparkTestBase {
     val total = entries.size
     assert(entries.exists(e => e.nulls.exists(_ > 0) && e.rows.exists(r => e.nulls.contains(r))),
       s"test premise: need a proven all-null file, got ${entries.map(e => (e.nulls, e.rows))}")
-    val schema = TableFormat.manifestSchema(spark, base, 1).get
+    val schema = TableFormat.manifest(spark, base, 1).schema.get
     // IS NOT NULL skips the all-null file
     val sb1 = new GraftScanBuilder(base, 1, schema, Seq("k"), spark, 0)
     sb1.pushFilters(Array(IsNotNull("k")))
@@ -2717,21 +2717,21 @@ class GraftTableSpec extends SparkTestBase {
     spark.sql("INSERT INTO graft.db.pevol SELECT id, (id * 7919) % 4000, concat('r', id) FROM range(0, 4000)")
     val v1 = TableFormat.currentVersion(spark, base)
     val total = TableFormat.manifestEntries(spark, base, v1).size
-    assert(total >= 2 && TableFormat.manifestStatsCols(spark, base, v1) == Seq("a"))
+    assert(total >= 2 && TableFormat.manifest(spark, base, v1).statsCols == Seq("a"))
     // evolve: b leads, a stays declared
     val r = spark.sql("CALL graft.system.set_clustering('db.pevol', 'b,a')").head
     val v2 = r.getInt(0)
     assert(r.getInt(1) == 1, "one column (a) carried over")
-    assert(TableFormat.manifestStatsCols(spark, base, v2) == Seq("b", "a"))
+    assert(TableFormat.manifest(spark, base, v2).statsCols == Seq("b", "a"))
     // a's bounds survived the remap IN THE NEW SLOT: pruning on a never blinks
     val sb = new GraftScanBuilder(base, v2,
-      TableFormat.manifestSchema(spark, base, v2).get, Seq("b", "a"), spark, 0)
+      TableFormat.manifest(spark, base, v2).schema.get, Seq("b", "a"), spark, 0)
     sb.pushFilters(Array(GreaterThanOrEqual("a", 100L), LessThanOrEqual("a", 200L)))
     assert(sb.keptEntries().size < total,
       s"kept ${sb.keptEntries().size} of $total — remapped bounds didn't prune")
     // b is newly declared: unknown bounds on old files → no pruning, never wrong
     val sb2 = new GraftScanBuilder(base, v2,
-      TableFormat.manifestSchema(spark, base, v2).get, Seq("b", "a"), spark, 0)
+      TableFormat.manifest(spark, base, v2).schema.get, Seq("b", "a"), spark, 0)
     sb2.pushFilters(Array(GreaterThanOrEqual("b", 100L), LessThanOrEqual("b", 200L)))
     assert(sb2.keptEntries().size == total, "unknown bounds must read, not prune")
     assert(spark.sql(
@@ -3109,9 +3109,9 @@ class GraftTableSpec extends SparkTestBase {
     val entries = TableFormat.manifestEntries(spark, base, v)
     assert(entries.forall(_.path.contains("__bkt=")), "conversion lost bucket paths")
     // layout + property land ATOMICALLY in the same commit
-    assert(TableFormat.manifestProps(spark, base, v).get("graft.bucket")
+    assert(TableFormat.manifest(spark, base, v).props.get("graft.bucket")
       .contains("4:k"), "graft.bucket not declared by the conversion commit")
-    assert(TableFormat.manifestOp(spark, base, v).contains("optimize"))
+    assert(TableFormat.manifest(spark, base, v).op.contains("optimize"))
     // trickle ingest then compact: consolidation must PRESERVE the layout
     spark.sql("INSERT INTO graft.db.spj_conv SELECT id + 2000, id FROM range(40)")
     spark.sql("INSERT INTO graft.db.spj_conv SELECT id + 2040, id FROM range(40)")
@@ -3142,7 +3142,7 @@ class GraftTableSpec extends SparkTestBase {
     // the reported partitioning keeps resolving and SPJ survives
     spark.sql("ALTER TABLE graft.db.spj_conv RENAME COLUMN k TO kk")
     val vR = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestProps(spark, base, vR).get("graft.bucket")
+    assert(TableFormat.manifest(spark, base, vR).props.get("graft.bucket")
       .contains("4:kk"), "rename did not re-point the bucket declaration")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
@@ -3227,7 +3227,7 @@ class GraftTableSpec extends SparkTestBase {
     assert(postimage.flatMap(_.rows).sum == 80L,
       s"postimage row count: ${postimage.flatMap(_.rows).sum} (expected 80)")
     // history records the op
-    assert(TableFormat.manifestOp(spark, base, v2).contains("update_mor"))
+    assert(TableFormat.manifest(spark, base, v2).op.contains("update_mor"))
     // reads exact: updated rows show, originals don't resurrect
     assert(spark.sql("SELECT count(1) FROM graft.db.mor_upd").head.getLong(0) == 40000L)
     assert(spark.sql(
@@ -3254,7 +3254,7 @@ class GraftTableSpec extends SparkTestBase {
         |WHEN MATCHED THEN UPDATE SET v = s.v
         |WHEN NOT MATCHED THEN INSERT (k, grp, v) VALUES (s.k, s.grp, s.v)""".stripMargin)
     val v3 = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestOp(spark, base, v3).contains("merge_mor"))
+    assert(TableFormat.manifest(spark, base, v3).op.contains("merge_mor"))
     assert(after.map(_.path).toSet.subsetOf(
       TableFormat.manifestEntries(spark, base, v3).map(_.path).toSet),
       "merge-on-read MERGE rewrote existing data files")
@@ -3274,8 +3274,8 @@ class GraftTableSpec extends SparkTestBase {
         |               'merge.mode' = 'merge-on-read')""".stripMargin)
     spark.sql("INSERT INTO graft.db.mor_eq SELECT id, id FROM range(100)")
     TableFormat.deleteByKeysEq(spark, base, Seq(5L, 10L).toDF("k"), "k")
-    assert(TableFormat.manifestEqDels(spark, base,
-      TableFormat.currentVersion(spark, base)).nonEmpty)
+    assert(TableFormat.manifest(spark, base,
+      TableFormat.currentVersion(spark, base)).eqDels.nonEmpty)
     // the UPDATE predicate COVERS the masked keys: pre-fix, the delta
     // scan (dv-aware only) read k=5/k=10 as live and re-inserted their
     // post-images under a fresh addedV — scoping them out of every
@@ -3283,10 +3283,10 @@ class GraftTableSpec extends SparkTestBase {
     // Post-fix: the catalog auto-resolves, THEN runs the MoR update.
     spark.sql("UPDATE graft.db.mor_eq SET v = v + 1000 WHERE k < 20")
     val v = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base, v).isEmpty,
+    assert(TableFormat.manifest(spark, base, v).eqDels.isEmpty,
       "outstanding eqdels must be resolved before a MoR update")
-    assert(TableFormat.manifestOp(spark, base, v).contains("update_mor"))
-    assert(TableFormat.manifestOp(spark, base, v - 1).contains("eqdel_resolve"))
+    assert(TableFormat.manifest(spark, base, v).op.contains("update_mor"))
+    assert(TableFormat.manifest(spark, base, v - 1).op.contains("eqdel_resolve"))
     val got = spark.sql("SELECT k, v FROM graft.db.mor_eq WHERE k < 20")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(!got.contains(5L) && !got.contains(10L), s"masked rows resurrected: $got")
@@ -3304,8 +3304,8 @@ class GraftTableSpec extends SparkTestBase {
         |WHEN MATCHED THEN UPDATE SET v = s.v
         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin)
     val v2 = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base, v2).isEmpty)
-    assert(TableFormat.manifestOp(spark, base, v2).contains("merge_mor"))
+    assert(TableFormat.manifest(spark, base, v2).eqDels.isEmpty)
+    assert(TableFormat.manifest(spark, base, v2).op.contains("merge_mor"))
     val got2 = spark.sql("SELECT k, v FROM graft.db.mor_eq WHERE k IN (30, 31)")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 == Map(30L -> -30L, 31L -> -31L), got2.toString)
@@ -3317,7 +3317,7 @@ class GraftTableSpec extends SparkTestBase {
     try spark.sql("DELETE FROM graft.db.mor_eq WHERE k = 41")
     finally spark.conf.unset("spark.graft.delete.mode")
     val v3 = TableFormat.currentVersion(spark, base)
-    assert(TableFormat.manifestEqDels(spark, base, v3).nonEmpty,
+    assert(TableFormat.manifest(spark, base, v3).eqDels.nonEmpty,
       "MoR DELETE must not force a resolve")
     assert(spark.sql("SELECT count(1) FROM graft.db.mor_eq WHERE k IN (40, 41)")
       .head.getLong(0) == 0L)

@@ -388,7 +388,7 @@ class GraftViewSpec extends SparkTestBase {
     // index keeps a strict subset of files (same check the direct-read
     // suite pins in GraftTableSpec)
     val sb = new GraftScanBuilder(base, 1,
-      TableFormat.manifestSchema(spark, base, 1).get, Seq("k"), spark, 0)
+      TableFormat.manifest(spark, base, 1).schema.get, Seq("k"), spark, 0)
     sb.pushFilters(Array(GreaterThanOrEqual("k", 10L), LessThanOrEqual("k", 20L)))
     assert(sb.keptEntries().size < total,
       s"stats index kept all $total files for the narrow band")

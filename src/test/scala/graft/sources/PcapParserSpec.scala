@@ -203,8 +203,33 @@ class PcapParserSpec extends SparkTestBase {
   }
 
   test("chunked parse: union over any byte-boundary chunking equals the unsplit read") {
+    // the production chunk path over a capture file: skimLegacyChunk
+    // finds each chunk's exact record range, openRecords decodes it
     val bytes = PcapFixtures.goldenPcap
+    val dir = java.nio.file.Files.createTempDirectory("pcap-chunks")
+    java.nio.file.Files.write(dir.resolve("golden.pcap"), bytes)
+    val (file, len) = PcapDataSource.listCaptureFilesWithLen(dir.toString,
+      spark.sessionState.newHadoopConf()).head
+    val factory = new PcapReaderFactory(PcapDataSource.schema, Array.empty, strict = true,
+      spark.sparkContext.broadcast(new SerializableHadoopConf(spark.sessionState.newHadoopConf())))
+    def rows(part: PcapFilePartition): Vector[(Long, Long, String)] = {
+      val r = factory.createColumnarReader(part)
+      val out = Vector.newBuilder[(Long, Long, String)]
+      val (idx, lenCol, src) = Seq("pkt_idx", "len", "src_ip")
+        .map(PcapDataSource.schema.fieldIndex) match { case Seq(a, b, c) => (a, b, c) }
+      try while (r.next()) {
+        val b = r.get()
+        (0 until b.numRows).foreach { i =>
+          val ip = b.column(src)
+          out += ((b.column(idx).getLong(i), b.column(lenCol).getLong(i),
+            if (ip.isNullAt(i)) null else ip.getUTF8String(i).toString))
+        }
+      } finally r.close()
+      out.result()
+    }
     val full = PcapParser.parseFile(bytes).toVector
+      .map(p => (p.pkt_idx, p.len.get, p.src_ip.orNull))
+    assert(full.size == 12 && rows(PcapFilePartition(file, len)) == full)
     // chunk boundaries at raw byte offsets — including degenerate 1-byte
     // chunks — must resolve to exact record boundaries via the skim, with
     // GLOBAL pkt_idx; boundaries inside headers/payloads are the norm
@@ -213,33 +238,9 @@ class PcapParserSpec extends SparkTestBase {
       val union = (0 until n).flatMap { i =>
         val start = i.toLong * chunkSize
         val end = if (i == n - 1) Long.MaxValue else (i + 1).toLong * chunkSize
-        PcapParser.parseFileRange(bytes, PcapParser.WantsAll, strict = true,
-          "golden.pcap", start, end, moreAfterBuffer = false)
+        rows(PcapFilePartition(file, len, start, end))
       }.toVector
       assert(union == full, s"chunkSize=$chunkSize broke parity")
-    }
-  }
-
-  test("chunked parse over PREFIX buffers (snaplen-sized straddle) equals the unsplit read") {
-    val snap = 256
-    val frames = PcapFixtures.goldenFrames
-    val bytes = PcapFixtures.pcapFile(frames ++ frames ++ frames, snapLen = snap)
-    assert(PcapParser.legacySnapLen(bytes).contains(snap.toLong))
-    val full = PcapParser.parseFile(bytes).toVector
-    val straddle = 16L + snap
-    for (splitBytes <- Seq(100L, 333L, 1000L)) {
-      val n = ((bytes.length + splitBytes - 1) / splitBytes).toInt
-      val union = (0 until n).flatMap { i =>
-        val start = i * splitBytes
-        val end = if (i == n - 1) Long.MaxValue else (i + 1) * splitBytes
-        // what the DSv2 chunk reader fetches: [0, rangeEnd + straddle)
-        val upTo = if (end == Long.MaxValue) bytes.length.toLong
-                   else math.min(bytes.length.toLong, end + straddle)
-        val buf = bytes.take(upTo.toInt)
-        PcapParser.parseFileRange(buf, PcapParser.WantsAll, strict = true,
-          "chunk.pcap", start, end, moreAfterBuffer = buf.length < bytes.length)
-      }.toVector
-      assert(union == full, s"splitBytes=$splitBytes broke prefix-buffer parity")
     }
   }
 
