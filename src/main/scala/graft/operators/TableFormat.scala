@@ -458,19 +458,20 @@ object TableFormat {
         "txn app id must not contain a tab or line break")
   }
 
-  /** MANIFEST CACHE (r12). Every table query resolves headers and
-    * entries with SEVERAL reads of the same manifest (schema, stats,
-    * props, colmap, op, entries …) — each a full open+read+parse; at
-    * 100 TB a manifest is a 10⁶-line file and on an object store each
-    * read is a network GET. Manifests are immutable once published
-    * (put-if-absent + rename; never rewritten), so the text and the
-    * parsed entry list cache safely per path. Validity guard: one
-    * `getFileStatus` per access compares (mtime, length) — a table
-    * DROPPED and re-created at the same path from ANOTHER process
-    * (this JVM's own re-publishes invalidate explicitly in
-    * [[writeFileIfAbsent]]) re-reads instead of serving the old
-    * table's snapshot; a VACUUMED manifest fails the status call with
-    * the same FileNotFoundException an uncached read threw. Bounded
+  /** MANIFEST CACHE (r12). Every table query and commit resolves a
+    * version's headers and its entry list; uncached, each is a full
+    * open+read+parse — at 100 TB a manifest is a 10⁶-line file and on an
+    * object store each read is a network GET. Manifests are immutable
+    * once published (put-if-absent + rename; never rewritten except
+    * vacuum's content-equivalent materialization), so ONE slot per
+    * manifest path caches the parsed [[Manifest]] and, once a reader
+    * asks for it, the version's resolved entry list — both halves under
+    * one stamp. Validity guard: one `getFileStatus` per access compares
+    * (mtime, length) — a table DROPPED and re-created at the same path
+    * from ANOTHER process (this JVM's own re-publishes invalidate
+    * explicitly in [[writeFileIfAbsent]]) re-reads instead of serving
+    * the old table's snapshot; a VACUUMED manifest fails the status call
+    * with the same FileNotFoundException an uncached read threw. Bounded
     * LRU — a long-lived session touching thousands of versions cannot
     * pin them all. */
   private case class ManifestStamp(mtime: Long, len: Long)
@@ -505,14 +506,15 @@ object TableFormat {
     System.currentTimeMillis() - stamp.mtime > MtimeGranularityMs ||
       ownPublishStamps.synchronized {
         Option(ownPublishStamps.get(path)).contains(stamp) }
-  private def lru[A]() =
-    new java.util.LinkedHashMap[String, (ManifestStamp, A)](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (ManifestStamp, A)]): Boolean =
+  /** One cache slot: the stamp it was read under, the parsed manifest,
+    * and the version's resolved entry list once something asked for it. */
+  private final case class Slot(stamp: ManifestStamp, manifest: Manifest,
+                                entries: Option[Seq[ManifestEntry]])
+  private val manifestCache =
+    new java.util.LinkedHashMap[String, Slot](32, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Slot]): Boolean =
         size() > ManifestCacheMax
     }
-  private val manifestCache = lru[Manifest]()
-  private val manifestEntriesCache = lru[Seq[ManifestEntry]]()
   private def manifestPath(base: String, version: Int): String =
     s"$base/_manifests/v$version.manifest"
 
@@ -744,33 +746,88 @@ object TableFormat {
     }
     out.toSeq
   }
-  private[operators] def invalidateManifest(path: String): Unit = {
+  private[operators] def invalidateManifest(path: String): Unit =
     manifestCache.synchronized { manifestCache.remove(path); () }
-    manifestEntriesCache.synchronized { manifestEntriesCache.remove(path); () }
-  }
   private def manifestStamp(spark: SparkSession, path: String): ManifestStamp = {
     val st = fs(spark, path).getFileStatus(new Path(path)) // FNF exactly like an uncached read
     ManifestStamp(st.getModificationTime, st.getLen)
   }
-  /** The parsed manifest of snapshot `version`, served from the bounded
-    * cache while its (mtime, len) stamp holds — the one manifest reader.
-    * A caller that needs several headers of one version reads it once. */
+
+  /** One resolved table version: its headers and its entry list. */
+  final case class Snapshot(version: Int, manifest: Manifest, entries: Seq[ManifestEntry])
+  object Snapshot {
+    /** The state before the first commit, or a parent a commit may not
+      * read (vacuumed): no headers, no entries. */
+    def empty(version: Int): Snapshot = Snapshot(version, Manifest.empty, Nil)
+  }
+
+  /** The parsed manifest of snapshot `version` — for readers that need
+    * headers only; the entry list is left unresolved. */
   def manifest(spark: SparkSession, base: String, version: Int): Manifest = {
     val path = manifestPath(base, version)
-    manifestAt(spark, path, manifestStamp(spark, path))
+    slotAt(spark, path, manifestStamp(spark, path)).manifest
   }
-  private def manifestAt(spark: SparkSession, path: String, stamp: ManifestStamp): Manifest = {
+
+  /** Snapshot `version` (the head, see [[currentVersion]], when None):
+    * its headers and resolved entry list from ONE cache slot, under one
+    * stamp check. A commit takes this once per attempt and hands it on. */
+  def snapshot(spark: SparkSession, base: String, version: Option[Int] = None): Snapshot = {
+    val v = version.getOrElse(currentVersion(spark, base))
+    val path = manifestPath(base, v)
+    val stamp = manifestStamp(spark, path)
+    val slot = slotAt(spark, path, stamp)
+    Snapshot(v, slot.manifest, slot.entries.getOrElse {
+      val entries = resolveEntries(spark, base, slot.manifest)
+      if (trustable(path, stamp)) manifestCache.synchronized {
+        manifestCache.put(path, slot.copy(entries = Some(entries))); ()
+      }
+      entries
+    })
+  }
+
+  private def slotAt(spark: SparkSession, path: String, stamp: ManifestStamp): Slot = {
     manifestCache.synchronized {
       Option(manifestCache.get(path)) match {
-        case Some((s, m)) if s == stamp => return m
+        case Some(s) if s.stamp == stamp => return s
         case _ => ()
       }
     }
-    val m = Manifest.parse(readFile(spark, path))
-    if (trustable(path, stamp))
-      manifestCache.synchronized { manifestCache.put(path, (stamp, m)); () }
-    m
+    val s = Slot(stamp, Manifest.parse(readFile(spark, path)), None)
+    if (trustable(path, stamp)) manifestCache.synchronized { manifestCache.put(path, s); () }
+    s
   }
+
+  /** `m`'s entry list. A delta (r13) applies its edit script to the
+    * parent's resolved list — removals by path, modifications in place,
+    * additions at the tail; the recursion bottoms out at the chain's full
+    * manifest (≤ CheckpointEvery hops, each level cached). A parquet
+    * checkpoint (r14) reads its columnar sidecar through the vectorized
+    * driver-side reader; a full text manifest parses its body. */
+  private def resolveEntries(spark: SparkSession, base: String, m: Manifest): Seq[ManifestEntry] =
+    (m.delta, m.entriesPq) match {
+      case (Some((parentV, _)), _) =>
+        val parent = manifestEntries(spark, base, parentV)
+        val removed = m.body.filter(_.startsWith("-\t")).map(_.substring(2)).toSet
+        val modBy = m.body.filter(_.startsWith("~\t"))
+          .map(l => ManifestEntry.parse(l.substring(2)))
+          .map(e => e.path -> e).toMap
+        val added = m.body.filter(_.startsWith("+\t"))
+          .map(l => ManifestEntry.parse(l.substring(2)))
+        parent.flatMap { pe =>
+          if (removed.contains(pe.path)) None
+          else Some(modBy.getOrElse(pe.path, pe))
+        } ++ added
+      case (None, Some((name, _))) => readEntriesParquet(spark, s"$base/_manifests/$name")
+      case (None, None) => m.body.map(ManifestEntry.parse)
+    }
+
+  /** The manifest entries (file + stats) of snapshot `version` — the
+    * entry half of [[snapshot]]: the entry list is the hot metadata
+    * object (every scan, write rebase, CDF step, and maintenance pass
+    * walks it), and at 10⁶ files re-resolving it per access dominates
+    * driver planning time. */
+  def manifestEntries(spark: SparkSession, base: String, version: Int): Seq[ManifestEntry] =
+    snapshot(spark, base, Some(version)).entries
 
   private def emptySnapshot(spark: SparkSession, base: String, version: Int): DataFrame = {
     val schema = manifest(spark, base, version).schema.getOrElse(
@@ -955,25 +1012,8 @@ object TableFormat {
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
   }
 
-  /** Write `df` into `commitDir` and return its manifest entries, with
-    * per-file (min, max, nullCount) of `statsCol` when one is declared.
-    * Shared by append commits, delete-rewrites, and merge-rewrites.
-    * Stats come from the just-written files' parquet FOOTERS — K
-    * metadata reads instead of the pre-r9 full re-scan of the commit's
-    * data (the one-pass read-back this replaces stood in for the
-    * task-side stats collection production writers do). */
-  private def writeDataFiles(spark: SparkSession, base: String, commitDir: String,
-                             df: DataFrame, statsCol: Option[String],
-                             statsCol2: Option[String] = None,
-                             moreStatsCols: Seq[String] = Nil): Seq[ManifestEntry] =
-    writeDataFilesNdv(spark, base, commitDir, df, statsCol, statsCol2,
-      moreStatsCols, collectNdv = false).entries
-
-  /** [[writeDataFiles]] plus IN-FLIGHT NDV sketches (r11): with
-    * `collectNdv` the declared columns' HLL sketches accumulate through
-    * `Dataset.observe` WHILE the write runs — zero extra pass, unlike
-    * the staged-file re-read ([[ndvFromFiles]], still used where only
-    * executor-written files exist). */
+  /** A commit's staged data files: their manifest entries and, when
+    * asked for, the NDV sketches that accumulated during the write. */
   private case class StagedWrite(entries: Seq[ManifestEntry],
                                  ndv: Map[String, String])
   /** BUCKETED LAYOUT (r12, VERDICT r11 #2 — storage-partitioned joins).
@@ -1002,7 +1042,17 @@ object TableFormat {
     else path.substring(i + marker.length).takeWhile(_ != '/').toIntOption
   }
 
-  private def writeDataFilesNdv(spark: SparkSession, base: String, commitDir: String,
+  /** Write `df` into `commitDir` under `head`'s table settings (the
+    * snapshot the commit builds on) and return its manifest entries,
+    * with per-file (min, max, nullCount) of the declared stats columns.
+    * Stats come from the just-written files' parquet FOOTERS — K
+    * metadata reads instead of the pre-r9 full re-scan of the commit's
+    * data. With `collectNdv` (r11) the declared columns' HLL sketches
+    * accumulate through `Dataset.observe` WHILE the write runs — zero
+    * extra pass, unlike the staged-file re-read ([[ndvFromFiles]], still
+    * used where only executor-written files exist). */
+  private def writeDataFilesNdv(spark: SparkSession, base: String, head: Manifest,
+                                commitDir: String,
                                 df: DataFrame, statsCol: Option[String],
                                 statsCol2: Option[String] = None,
                                 moreStatsCols: Seq[String] = Nil,
@@ -1013,31 +1063,16 @@ object TableFormat {
     // aliasing select, so files created after a rename are byte-layout
     // identical to files created before it (rename never forks the
     // on-disk naming). Footer stats read back under physical names too.
-    val head: Manifest = {
-      val v = latestVersion(spark, base)
-      if (v == 0) Manifest.empty
-      else
-        try manifest(spark, base, v)
-        catch { case _: java.io.FileNotFoundException => Manifest.empty }
-    }
     val cm = head.colmap.filter { case (l, p) => l != p }
     val physDf =
       if (cm.isEmpty) df
       else df.select(df.columns.toSeq.map(c => col(c).as(cm.getOrElse(c, c))): _*)
     def phys(c: String) = cm.getOrElse(c, c)
     val declaredAll = statsCol.toSeq ++ statsCol2.toSeq ++ moreStatsCols
-    def sketchableCol(c: String): Boolean =
-      df.schema.fields.find(_.name == c).map(_.dataType).exists {
-        case org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.StringType |
-             org.apache.spark.sql.types.BinaryType => true
-        case _ => false
-      }
     val ndvCols =
       if (collectNdv &&
           !spark.conf.getOption("spark.graft.stats.ndv").exists(_.equalsIgnoreCase("false")))
-        declaredAll.filter(c => df.columns.contains(c) && sketchableCol(c))
+        declaredAll.filter(sketchable(df, _))
       else Nil
     val observation =
       if (ndvCols.isEmpty) None
@@ -1232,6 +1267,16 @@ object TableFormat {
     math.round(org.apache.datasketches.hll.HllSketch.heapify(
       java.util.Base64.getDecoder.decode(sketchB64)).getEstimate)
 
+  /** `df` has a column `c` that `hll_sketch_agg` accepts (int, long,
+    * string, binary); other stats-column types (a double cluster key)
+    * simply record no NDV. */
+  private def sketchable(df: DataFrame, c: String): Boolean =
+    df.schema.fields.find(_.name == c).map(_.dataType).exists {
+      case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
+           org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.BinaryType => true
+      case _ => false
+    }
+
   /** One HLL sketch per stats column over freshly STAGED files — a
     * column-pruned parquet re-read, never a recompute of the insert's
     * source query. Files store PHYSICAL names; output keys are logical. */
@@ -1245,18 +1290,8 @@ object TableFormat {
     if (spark.conf.getOption("spark.graft.stats.ndv").exists(_.equalsIgnoreCase("false")))
       return Map.empty
     val df = spark.read.parquet(paths: _*)
-    // hll_sketch_agg accepts int/long/string/binary — other stats-column
-    // types (a double cluster key) simply record no NDV
-    def sketchable(p: String): Boolean =
-      df.schema.fields.find(_.name == p).map(_.dataType).exists {
-        case org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.StringType |
-             org.apache.spark.sql.types.BinaryType => true
-        case _ => false
-      }
     val present = statsCols.map(c => c -> cm.getOrElse(c, c))
-      .filter { case (_, p) => df.columns.contains(p) && sketchable(p) }
+      .filter { case (_, p) => sketchable(df, p) }
     if (present.isEmpty) return Map.empty
     val aggs = present.map { case (l, p) => hll_sketch_agg(col(p)).as(l) }
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
@@ -1282,6 +1317,20 @@ object TableFormat {
       }
     }.toMap
 
+  /** OPTIMISTIC CONCURRENCY (r8): run `attempt` — resolve the head
+    * snapshot, build the commit over it, publish — until its publish wins
+    * a version slot. A lost slot ([[CommitConflictException]]) runs it
+    * again against the new head, at most `maxRetries` more times; any
+    * other failure propagates at once. */
+  private def retryOnConflict[A](maxRetries: Int)(attempt: => A): A = {
+    var left = maxRetries
+    while (true) {
+      try return attempt
+      catch { case _: CommitConflictException if left > 0 => left -= 1 }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** ANALYZE (r11): rebuild the `#ndv` sketches EXACTLY from the
     * current snapshot's LIVE rows as a metadata-only commit — the
     * repair for upper-bound drift: incremental sketches union on every
@@ -1291,110 +1340,101 @@ object TableFormat {
     * (newVersion, column → fresh estimate); (current, empty) when the
     * table declares no stats columns or is empty. */
   def analyzeNdv(spark: SparkSession, base: String,
-                 maxRetries: Int = 10): (Int, Map[String, Long]) = {
-    var attempt = 0
-    while (true) {
-      val v = latestVersion(spark, base)
-      require(v > 0, s"table $base: cannot ANALYZE a table with no commits")
-      val m = manifest(spark, base, v)
-      val statsCols = m.statsCols
-      val entries = manifestEntries(spark, base, v)
-      if (statsCols.isEmpty || entries.isEmpty)
-        return (v, Map.empty)
-      val df = readEntriesDf(spark, base, v, entries) // dv-aware: LIVE rows
-      val sketchable = statsCols.filter(c =>
-        df.schema.fields.find(_.name == c).map(_.dataType).exists {
-          case org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.StringType |
-               org.apache.spark.sql.types.BinaryType => true
-          case _ => false
-        })
-      val fresh =
-        if (sketchable.isEmpty) Map.empty[String, String]
-        else {
-          val aggs = sketchable.map(c => hll_sketch_agg(col(c)).as(c))
-          val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-          sketchable.zipWithIndex.map { case (c, i) =>
-            c -> java.util.Base64.getEncoder.encodeToString(row.getAs[Array[Byte]](i))
-          }.toMap
-        }
-      // EQUI-HEIGHT HISTOGRAMS (r13) for the numeric-image stats columns:
-      // 32 bins bounded at approximate quantiles (one agg pass), per-bin
-      // NDV from a bucketed approx-distinct pass per column — the same
-      // O(table) cost class ANALYZE already is. Values map to the stats
-      // units (raw integral / micros / epoch-days), matching what CBO's
-      // FilterEstimation compares predicate literals against.
-      val nBins = 32
-      // STRING stats columns histogram too (r14, VERDICT r13 #5): bins
-      // live on the PREFIX-RANK image (first 7 UTF-8 bytes packed
-      // big-endian — monotone in byte order, the same grid the z-order
-      // string dims interleave), so the corpus tables' hot string
-      // predicates (`lang`, `doc_id`) get skew-aware selectivity.
-      // Estimation-only, like every histogram: strings equal through 7
-      // bytes collapse to one rank, which can only OVER-estimate an
-      // equality's selectivity, never prune a row.
-      val histCols = statsCols.filter(c =>
-        df.schema.fields.find(_.name == c).map(_.dataType).exists {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.DateType |
-               org.apache.spark.sql.types.TimestampType |
-               org.apache.spark.sql.types.TimestampNTZType |
-               org.apache.spark.sql.types.StringType => true
-          case _ => false
-        })
-      val hist: Map[String, String] = histCols.flatMap { c =>
-        val dcol = df.schema(c).dataType match {
-          case org.apache.spark.sql.types.TimestampType |
-               org.apache.spark.sql.types.TimestampNTZType =>
-            unix_micros(col(c).cast("timestamp")).cast("double")
-          case org.apache.spark.sql.types.DateType =>
-            unix_date(col(c)).cast("double")
-          case org.apache.spark.sql.types.StringType =>
-            graft.functions.HashKernels.prefix_rank(col(c)).cast("double")
-          case _ => col(c).cast("double")
-        }
-        val qs = (0 to nBins).map(_.toDouble / nBins).toArray
-        val cutsRow = df.select(
-          percentile_approx(dcol, lit(qs), lit(10000)).as("q")).head
-        if (cutsRow.isNullAt(0)) None // all-null or empty column
-        else {
-          val cuts = cutsRow.getSeq[Double](0)
-          // bin index = number of INNER cut points strictly below v
-          val binExpr = cuts.slice(1, nBins).foldLeft(lit(0))((acc, cp) =>
-            acc + when(dcol > lit(cp), 1).otherwise(0))
-          val perBin = df.filter(dcol.isNotNull)
-            .groupBy(binExpr.as("__bin"))
-            .agg(approx_count_distinct(dcol).as("__ndv"), count(lit(1)).as("__n"))
-            .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-          val nonNull = perBin.values.map(_._2).sum
-          if (nonNull == 0) None
-          else {
-            val height = nonNull.toDouble / nBins
-            val bins = (0 until nBins).map { i =>
-              s"${cuts(i)}:${cuts(i + 1)}:${perBin.get(i).map(_._1).getOrElse(0L)}"
-            }.mkString(";")
-            Some(c -> s"$height|$bins")
-          }
-        }
-      }.toMap
-      if (fresh.isEmpty && hist.isEmpty) return (v, Map.empty) // nothing to record
-      try
-        return (writeManifest(spark, base, v + 1, schemaJsonOf(m, base, v), entries,
-          statsCols = statsCols, op = "alter",
-          edit = h => h.copy(ndv = if (fresh.isEmpty) h.ndv else fresh,
-            hist = if (hist.isEmpty) h.hist else hist)),
-          fresh.map { case (c, s) => c -> ndvEstimate(s) })
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+                 maxRetries: Int = 10): (Int, Map[String, Long]) = retryOnConflict(maxRetries) {
+    val v = latestVersion(spark, base)
+    require(v > 0, s"table $base: cannot ANALYZE a table with no commits")
+    val snap = snapshot(spark, base, Some(v))
+    val statsCols = snap.manifest.statsCols
+    val none = Map.empty[String, String]
+    val (fresh, hist) =
+      if (statsCols.isEmpty || snap.entries.isEmpty) (none, none)
+      else analyzeScan(readEntriesDf(spark, base, v, snap.entries), statsCols) // dv-aware
+    if (fresh.isEmpty && hist.isEmpty) (v, Map.empty[String, Long]) // nothing to record
+    else (writeManifest(spark, base, snap, schemaJsonOf(snap.manifest, base, v),
+      snap.entries, statsCols = statsCols, op = "alter",
+      edit = h => h.copy(ndv = if (fresh.isEmpty) h.ndv else fresh,
+        hist = if (hist.isEmpty) h.hist else hist)),
+      fresh.map { case (c, s) => c -> ndvEstimate(s) })
+  }
+
+  /** ANALYZE's scan of the live rows `df`: (exact HLL sketch per
+    * sketchable stats column, equi-height histogram per stats column
+    * with a numeric image). */
+  private def analyzeScan(df: DataFrame,
+                          statsCols: Seq[String]): (Map[String, String], Map[String, String]) = {
+    val sketched = statsCols.filter(sketchable(df, _))
+    val fresh =
+      if (sketched.isEmpty) Map.empty[String, String]
+      else {
+        val aggs = sketched.map(c => hll_sketch_agg(col(c)).as(c))
+        val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+        sketched.zipWithIndex.map { case (c, i) =>
+          c -> java.util.Base64.getEncoder.encodeToString(row.getAs[Array[Byte]](i))
+        }.toMap
       }
-    }
-    (0, Map.empty) // unreachable
+    // EQUI-HEIGHT HISTOGRAMS (r13) for the numeric-image stats columns:
+    // 32 bins bounded at approximate quantiles (one agg pass), per-bin
+    // NDV from a bucketed approx-distinct pass per column — the same
+    // O(table) cost class ANALYZE already is. Values map to the stats
+    // units (raw integral / micros / epoch-days), matching what CBO's
+    // FilterEstimation compares predicate literals against.
+    val nBins = 32
+    // STRING stats columns histogram too (r14, VERDICT r13 #5): bins
+    // live on the PREFIX-RANK image (first 7 UTF-8 bytes packed
+    // big-endian — monotone in byte order, the same grid the z-order
+    // string dims interleave), so the corpus tables' hot string
+    // predicates (`lang`, `doc_id`) get skew-aware selectivity.
+    // Estimation-only, like every histogram: strings equal through 7
+    // bytes collapse to one rank, which can only OVER-estimate an
+    // equality's selectivity, never prune a row.
+    val histCols = statsCols.filter(c =>
+      df.schema.fields.find(_.name == c).map(_.dataType).exists {
+        case org.apache.spark.sql.types.ByteType |
+             org.apache.spark.sql.types.ShortType |
+             org.apache.spark.sql.types.IntegerType |
+             org.apache.spark.sql.types.LongType |
+             org.apache.spark.sql.types.DateType |
+             org.apache.spark.sql.types.TimestampType |
+             org.apache.spark.sql.types.TimestampNTZType |
+             org.apache.spark.sql.types.StringType => true
+        case _ => false
+      })
+    val hist: Map[String, String] = histCols.flatMap { c =>
+      val dcol = df.schema(c).dataType match {
+        case org.apache.spark.sql.types.TimestampType |
+             org.apache.spark.sql.types.TimestampNTZType =>
+          unix_micros(col(c).cast("timestamp")).cast("double")
+        case org.apache.spark.sql.types.DateType =>
+          unix_date(col(c)).cast("double")
+        case org.apache.spark.sql.types.StringType =>
+          graft.functions.HashKernels.prefix_rank(col(c)).cast("double")
+        case _ => col(c).cast("double")
+      }
+      val qs = (0 to nBins).map(_.toDouble / nBins).toArray
+      val cutsRow = df.select(
+        percentile_approx(dcol, lit(qs), lit(10000)).as("q")).head
+      if (cutsRow.isNullAt(0)) None // all-null or empty column
+      else {
+        val cuts = cutsRow.getSeq[Double](0)
+        // bin index = number of INNER cut points strictly below v
+        val binExpr = cuts.slice(1, nBins).foldLeft(lit(0))((acc, cp) =>
+          acc + when(dcol > lit(cp), 1).otherwise(0))
+        val perBin = df.filter(dcol.isNotNull)
+          .groupBy(binExpr.as("__bin"))
+          .agg(approx_count_distinct(dcol).as("__ndv"), count(lit(1)).as("__n"))
+          .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+        val nonNull = perBin.values.map(_._2).sum
+        if (nonNull == 0) None
+        else {
+          val height = nonNull.toDouble / nBins
+          val bins = (0 until nBins).map { i =>
+            s"${cuts(i)}:${cuts(i + 1)}:${perBin.get(i).map(_._1).getOrElse(0L)}"
+          }.mkString(";")
+          Some(c -> s"$height|$bins")
+        }
+      }
+    }.toMap
+    (fresh, hist)
   }
 
   /** [[writeManifest]] edit recording a commit's fresh `#ndv` sketches:
@@ -1414,8 +1454,7 @@ object TableFormat {
                              drop: Option[String] = None,
                              maxRetries: Int = 10,
                              validate: Int => Unit = _ => ()): Int = {
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
       // re-run the caller's data validation against THE SNAPSHOT BEING
@@ -1424,27 +1463,17 @@ object TableFormat {
       // ENFORCED/VALID constraint over unvalidated rows would hand the
       // optimizer a known-true predicate the data violates
       validate(parentV)
-      val parent = manifest(spark, base, parentV)
-      val afterDrop = drop.fold(parent.constraints)(n => parent.constraints.filterNot(_._1 == n))
+      val parent = snapshot(spark, base, Some(parentV))
+      val pm = parent.manifest
+      val afterDrop = drop.fold(pm.constraints)(n => pm.constraints.filterNot(_._1 == n))
       val merged = upsert.fold(afterDrop)(u =>
         afterDrop.filterNot(_._1 == u._1) :+ u)
-      try
-        return writeManifest(spark, base, parentV + 1, schemaJsonOf(parent, base, parentV),
-          manifestEntries(spark, base, parentV), statsCols = parent.statsCols,
-          op = "alter", edit = _.copy(constraints = merged))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, parent, schemaJsonOf(pm, base, parentV),
+        parent.entries, statsCols = pm.statsCols,
+        op = "alter", edit = _.copy(constraints = merged))
     }
-    -1 // unreachable
   }
 
-  /** Highest version with a manifest on disk — the rebase point for a
-    * conflicted committer (`_CURRENT` can lag a just-published manifest
-    * by one crashed pointer write, so conflicts resolve against the
-    * manifest listing, not the pointer). */
   /** `_manifests/_RECLAIMED` (r14, ADVICE r13 #2): written by [[vacuum]]
     * BEFORE it deletes any manifest — `<maxReclaimedVersion>\t<headAtVacuum>`,
     * both monotone across vacuums. It closes the one hole in the
@@ -1462,6 +1491,14 @@ object TableFormat {
       Some((parts(0).toInt, parts(1).toInt))
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Highest version with a manifest on disk, 0 before the first commit
+    * — the head every reader and committer resolves. `_CURRENT` is only
+    * a hint: it can lag a just-published manifest by crashed pointer
+    * writes, regress under a slow cross-JVM loser (the advance-only
+    * guard in [[writeManifest]] is serialized per JVM only), or name a
+    * version that has no manifest; a published manifest IS a committed
+    * snapshot, so the manifests on disk decide (how Delta resolves its
+    * head — by the log, not a pointer). */
   def latestVersion(spark: SparkSession, base: String): Int = {
     val f = fs(spark, base)
     // POINTER + PROBE (r13): versions are dense (each is a CAS slot won
@@ -1496,39 +1533,37 @@ object TableFormat {
     } else listingMax
   }
 
-  /** Publish `version`'s manifest over `entries`. The headers start as
-    * the parent's (`version - 1`, read once; none for v1 or a vacuumed
-    * parent) with `schemaJson`, `statsCols`, `op` and `txn` — which every
-    * commit sets itself — replaced; `edit` then states whatever else
-    * this commit changes (props, colmap, constraints, sketches, equality
-    * deletes …), and every other header is inherited verbatim. The
-    * `#eqadd` stamp is maintained HERE — the one commit choke point — so
-    * every committer scopes its new files out of older equality
-    * deletes; a commit that carries a whole snapshot's headers over
-    * (restore/clone/publish) states it explicitly instead. */
-  private def writeManifest(spark: SparkSession, base: String, version: Int,
+  /** Publish the version after `parent` over `entries`. The headers
+    * start as the parent's — the snapshot the caller already holds;
+    * [[Snapshot.empty]] for v1 or a vacuumed parent — with `schemaJson`,
+    * `statsCols`, `op` and `txn` — which every commit sets itself —
+    * replaced; `edit` then states whatever else this commit changes
+    * (props, colmap, constraints, sketches, equality deletes …), and
+    * every other header is inherited verbatim. The `#eqadd` stamp is
+    * maintained HERE — the one commit choke point — so every committer
+    * scopes its new files out of older equality deletes; a commit that
+    * carries a whole snapshot's headers over (restore/clone/publish)
+    * states it explicitly instead. */
+  private def writeManifest(spark: SparkSession, base: String, parent: Snapshot,
                             schemaJson: String, entries: Seq[ManifestEntry],
                             statsCols: Seq[String], op: String,
                             txn: Option[(String, Long)] = None,
                             edit: Manifest => Manifest = identity): Int = {
     txn.foreach(t => Manifest.requireTxnId(t._1))
-    def orNone[A](read: => A): Option[A] =
-      if (version <= 1) None
-      else try Some(read) catch { case _: java.io.FileNotFoundException => None }
-    val parent = orNone(manifest(spark, base, version - 1)).getOrElse(Manifest.empty)
-    lazy val parentEntries = orNone(manifestEntries(spark, base, version - 1))
+    val version = parent.version + 1
+    val pm = parent.manifest
     // equality deletes (r15): files this commit adds relative to the
     // parent get added-version = this version; surviving files keep
     // their stamp. Derived only while deletes are outstanding.
     val eqAdds: Map[String, Int] =
-      if (parent.eqDels.isEmpty) Map.empty
+      if (pm.eqDels.isEmpty) Map.empty
       else {
-        val parentPaths = parentEntries.toSeq.flatten.map(e => normPath(e.path)).toSet
+        val parentPaths = parent.entries.map(e => normPath(e.path)).toSet
         val cur = entries.map(e => normPath(e.path)).toSet
-        parent.eqAdds.filter { case (p, _) => cur.contains(p) } ++
+        pm.eqAdds.filter { case (p, _) => cur.contains(p) } ++
           cur.toSeq.filterNot(parentPaths).map(_ -> version)
       }
-    val stated = edit(parent.copy(schemaJson = Some(schemaJson), statsCols = statsCols,
+    val stated = edit(pm.copy(schemaJson = Some(schemaJson), statsCols = statsCols,
       op = Some(op), txn = txn, eqAdds = eqAdds, delta = None, entriesPq = None, body = Nil))
     val headers = if (stated.eqDels.isEmpty) stated.copy(eqAdds = Map.empty) else stated
     if (headers.eqDels.nonEmpty && !EqSafeOps(op))
@@ -1548,7 +1583,7 @@ object TableFormat {
       val newSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
       headers.eqDels.flatMap(r => eqColsOf(r._2)).distinct.foreach { k =>
         if (!newSchema.fieldNames.contains(k) ||
-            headers.colmap.getOrElse(k, k) != parent.colmap.getOrElse(k, k))
+            headers.colmap.getOrElse(k, k) != pm.colmap.getOrElse(k, k))
           throw new UnsupportedOperationException(
             s"table $base: ALTER would rename/drop column '$k' while an " +
               "equality delete keyed on it is outstanding — the masks " +
@@ -1567,40 +1602,40 @@ object TableFormat {
     // snapshot serialization it exists to avoid. A big full manifest
     // stages a columnar sidecar (r14) — a lost CAS deletes it again.
     lazy val full = fullManifest(spark, base, version, headers, entries)
+    val parentList = parent.entries
     val out: Manifest =
-      if (version <= 1 || entries.isEmpty) full
-      else parentEntries match {
-        case Some(parentList) if parentList.nonEmpty && parent.depth < CheckpointEvery - 1 =>
-          val parentBy = parentList.map(e => e.path -> e).toMap
-          val newBy = entries.map(e => e.path -> e).toMap
-          if (parentBy.size != parentList.size || newBy.size != entries.size) full
-          else {
-            val removed = parentList.filter(e => !newBy.contains(e.path))
-            val mods = entries.filter(e =>
-              parentBy.get(e.path).exists(pe => pe.line != e.line))
-            val added = entries.filter(e => !parentBy.contains(e.path))
-            val cost = removed.size + mods.size + added.size
-            // REPLAY EQUIVALENCE is structural, not checked per line:
-            // paths are unique on both sides (the map-size guard
-            // above), so "parent minus removals, mods applied in
-            // place, additions appended" is a bijection on paths and
-            // every surviving unchanged entry's LINE equals the
-            // intended one by the mods definition — the resolved
-            // multiset can only equal the intended entries. Entry
-            // lists are path-keyed sets to every consumer, so the
-            // canonical delta order ("parent order, additions
-            // appended") is the same snapshot. The O(1) size check
-            // stands in for the pre-optimization O(n log n) sorted
-            // line compare, which billed every commit the full
-            // snapshot cost this format exists to avoid.
-            if (cost >= entries.size ||
-                parentList.size - removed.size + added.size != entries.size) full
-            else headers.copy(delta = Some((version - 1, parent.depth + 1)),
-              body = removed.map(e => "-\t" + e.path) ++
-                mods.map(e => "~\t" + e.line) ++
-                added.map(e => "+\t" + e.line))
-          }
-        case _ => full
+      if (version <= 1 || entries.isEmpty || parentList.isEmpty ||
+          pm.depth >= CheckpointEvery - 1) full
+      else {
+        val parentBy = parentList.map(e => e.path -> e).toMap
+        val newBy = entries.map(e => e.path -> e).toMap
+        if (parentBy.size != parentList.size || newBy.size != entries.size) full
+        else {
+          val removed = parentList.filter(e => !newBy.contains(e.path))
+          val mods = entries.filter(e =>
+            parentBy.get(e.path).exists(pe => pe.line != e.line))
+          val added = entries.filter(e => !parentBy.contains(e.path))
+          val cost = removed.size + mods.size + added.size
+          // REPLAY EQUIVALENCE is structural, not checked per line:
+          // paths are unique on both sides (the map-size guard
+          // above), so "parent minus removals, mods applied in
+          // place, additions appended" is a bijection on paths and
+          // every surviving unchanged entry's LINE equals the
+          // intended one by the mods definition — the resolved
+          // multiset can only equal the intended entries. Entry
+          // lists are path-keyed sets to every consumer, so the
+          // canonical delta order ("parent order, additions
+          // appended") is the same snapshot. The O(1) size check
+          // stands in for the pre-optimization O(n log n) sorted
+          // line compare, which billed every commit the full
+          // snapshot cost this format exists to avoid.
+          if (cost >= entries.size ||
+              parentList.size - removed.size + added.size != entries.size) full
+          else headers.copy(delta = Some((version - 1, pm.depth + 1)),
+            body = removed.map(e => "-\t" + e.path) ++
+              mods.map(e => "~\t" + e.line) ++
+              added.map(e => "+\t" + e.line))
+        }
       }
     // put-if-absent (r8): v$N.manifest is the commit's compare-and-swap
     // slot — two committers from the same parent CANNOT both win it; the
@@ -1693,21 +1728,19 @@ object TableFormat {
       else df.repartitionByRange(nFiles, collectCols.map(col): _*)
     // NDV sketches accumulate IN-FLIGHT through the write (r11,
     // VERDICT r10 #7 + observe refinement: zero extra pass)
-    val staged0 = writeDataFilesNdv(spark, base,
+    val staged0 = writeDataFilesNdv(spark, base, head,
       newCommitDir(base, headV + 1), clustered,
       collectCols.headOption, collectCols.drop(1).headOption, collectCols.drop(2),
       collectNdv = true, bucketBy = bucketBy)
     val entries = staged0.entries
     val freshNdv = staged0.ndv
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
-      val parent = if (parentV == 0) Manifest.empty else manifest(spark, base, parentV)
+      val snap = if (parentV == 0) Snapshot.empty(0) else snapshot(spark, base, Some(parentV))
+      val parent = snap.manifest
       // `replace` (r12): publish as an INSERT OVERWRITE — parentless
       // entry list at the next version slot, prior snapshots readable
-      val parentEntries =
-        if (parentV == 0 || replace) Seq.empty
-        else manifestEntries(spark, base, parentV)
+      val parentEntries = if (replace) Seq.empty else snap.entries
       val statsCols = if (parentV == 0) collectCols else parent.statsCols
       // entry stats must MEAN what the inherited #stats header says they
       // mean (r9, ADVICE r8 #2): appending with a different statsCol than
@@ -1751,19 +1784,12 @@ object TableFormat {
       // `setProps` (r12, materialized views): property updates travel IN
       // the data commit — refresh bookkeeping (`graft.mv.version`) can
       // never be observed apart from the state it describes
-      try
-        return writeManifest(spark, base, parentV + 1, mergedSchema.json,
-          parentEntries ++ publishable, statsCols = statsCols,
-          op = if (replace) "replace" else "append",
-          edit = m => ndvEdit(freshNdv, mergeParent = !replace)(
-            m.copy(props = m.props ++ setProps)))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, snap, mergedSchema.json,
+        parentEntries ++ publishable, statsCols = statsCols,
+        op = if (replace) "replace" else "append",
+        edit = m => ndvEdit(freshNdv, mergeParent = !replace)(
+          m.copy(props = m.props ++ setProps)))
     }
-    -1 // unreachable
   }
 
   /** IDENTITY-allocating commit (r11, VERDICT r10 #5): insert `df` with
@@ -1805,12 +1831,12 @@ object TableFormat {
     def fOf = fs(spark, base)
     var staged: Option[(Map[String, Long], Seq[ManifestEntry])] = None
     var idNdv: Map[String, String] = Map.empty
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0,
         s"table $base: identity tables are created via the catalog before any insert")
-      val parent = manifest(spark, base, parentV)
+      val snap = snapshot(spark, base, Some(parentV))
+      val parent = snap.manifest
       val hwm0 = parent.hwm
       def marksOf(h: Map[String, Long]) = identityCols.map {
         case (n, start, _) => n -> h.getOrElse(n, start)
@@ -1830,7 +1856,7 @@ object TableFormat {
           val clustered =
             if (collectCols.isEmpty) assigned
             else assigned.repartitionByRange(nFiles, collectCols.map(col): _*)
-          val e = writeDataFilesNdv(spark, base, newCommitDir(base, parentV + 1),
+          val e = writeDataFilesNdv(spark, base, parent, newCommitDir(base, parentV + 1),
             clustered, collectCols.headOption, collectCols.drop(1).headOption,
             collectCols.drop(2), collectNdv = true)
           staged = Some((marksOf(hwm0), e.entries))
@@ -1841,21 +1867,13 @@ object TableFormat {
       val newHwm = hwm0 ++ identityCols.map { case (c, start, step) =>
         c -> (hwm0.getOrElse(c, start) + n * step)
       }
-      val parentEntries =
-        if (replace) Seq.empty else manifestEntries(spark, base, parentV)
+      val parentEntries = if (replace) Seq.empty else snap.entries
       val outSchema = preserveFieldMetadata(parent.schema, schema)
-      try
-        return writeManifest(spark, base, parentV + 1, outSchema.json,
-          parentEntries ++ entries, statsCols = parent.statsCols,
-          op = if (replace) "replace" else "append",
-          edit = m => ndvEdit(idNdv, mergeParent = !replace)(m.copy(hwm = newHwm)))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, snap, outSchema.json,
+        parentEntries ++ entries, statsCols = parent.statsCols,
+        op = if (replace) "replace" else "append",
+        edit = m => ndvEdit(idNdv, mergeParent = !replace)(m.copy(hwm = newHwm)))
     }
-    -1 // unreachable
   }
 
   /** Commit `df` as snapshot `version`. `parent = Some(v)` makes this an
@@ -1875,11 +1893,12 @@ object TableFormat {
     // N-column upgrade (r11, VERDICT r10 #3), same rule as appendCommit:
     // statsCol matching the table's declared first cluster column means
     // this commit maintains the WHOLE declared index
-    val prev =
-      if (version <= 1) Manifest.empty
+    val prevSnap =
+      if (version <= 1) Snapshot.empty(version - 1)
       else
-        try manifest(spark, base, version - 1)
-        catch { case _: java.io.FileNotFoundException => Manifest.empty }
+        try snapshot(spark, base, Some(version - 1))
+        catch { case _: java.io.FileNotFoundException => Snapshot.empty(version - 1) }
+    val prev = prevSnap.manifest
     val collectCols: Seq[String] =
       if (statsCol.isDefined && prev.statsCols.headOption == statsCol) prev.statsCols
       else statsCol.toSeq
@@ -1889,7 +1908,7 @@ object TableFormat {
     val clustered =
       if (collectCols.isEmpty || bucket.isDefined) df
       else df.repartitionByRange(nFiles, collectCols.map(col): _*)
-    val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, version), clustered,
+    val staged0 = writeDataFilesNdv(spark, base, prev, newCommitDir(base, version), clustered,
       collectCols.headOption, collectCols.drop(1).headOption, collectCols.drop(2),
       collectNdv = true, bucketBy = bucket)
     val entries = staged0.entries
@@ -1912,7 +1931,7 @@ object TableFormat {
     // caller committing over an older parent (the API allows it) drops
     // version-1's extra files, so tag it `replace` and let the CDF take
     // the always-correct full-diff path (r10, ADVICE r9 #3).
-    writeManifest(spark, base, version, outSchema.json, parentEntries ++ entries,
+    writeManifest(spark, base, prevSnap, outSchema.json, parentEntries ++ entries,
       statsCols = collectCols,
       op = if (parent.contains(version - 1)) "append" else "replace", txn = txn,
       edit = ndvEdit(freshNdv, mergeParent = parent.isDefined))
@@ -1962,9 +1981,9 @@ object TableFormat {
     * time and are invisible to file metadata. */
   def liveRowCount(spark: SparkSession, base: String,
                    version: Int): Option[Long] = {
-    if (manifest(spark, base, version).eqDels.nonEmpty) return None
-    val es = manifestEntries(spark, base, version)
-    if (es.forall(_.rows.isDefined)) Some(es.flatMap(_.liveRows).sum) else None
+    val s = snapshot(spark, base, Some(version))
+    if (s.manifest.eqDels.nonEmpty || !s.entries.forall(_.rows.isDefined)) None
+    else Some(s.entries.flatMap(_.liveRows).sum)
   }
 
   /** DELETE commit (r7): remove every row with `statsCol` in [lo, hi] as
@@ -1981,11 +2000,10 @@ object TableFormat {
     * files per range edge, not a table rewrite. Returns the new version. */
   def deleteWhere(spark: SparkSession, base: String, statsCol: String,
                   lo: Long, hi: Long): Int = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m) = (snap.version, snap.manifest)
     val version = v + 1
-    val entries = manifestEntries(spark, base, v)
-    val (touched, untouched) = entries.partition(_.mayMatch(lo, hi))
+    val (touched, untouched) = snap.entries.partition(_.mayMatch(lo, hi))
     // manifest-only drop needs the file PROVEN null-free (r8, ADVICE r7
     // #1): min/max ignore NULLs, so "bounds fully inside [lo, hi]" says
     // nothing about NULL-key rows — and SQL `DELETE WHERE c BETWEEN lo
@@ -2000,16 +2018,49 @@ object TableFormat {
     val bucket = bucketSpecOf(m.props)
     val rewritten =
       if (straddling.isEmpty) Seq.empty
-      else writeDataFilesNdv(spark, base, newCommitDir(base, version),
+      else writeDataFilesNdv(spark, base, m, newCommitDir(base, version),
         readEntriesDf(spark, base, v, straddling) // dv-aware: a straddling
           // file's already-deleted rows must not resurrect in the rewrite
           .filter(!(col(statsCol) >= lo && col(statsCol) <= hi) || col(statsCol).isNull),
         Some(statsCol), bucketBy = bucket).entries
     val schemaJson = schemaJsonOf(m, base, v)
-    val out = writeManifest(spark, base, version, schemaJson, untouched ++ rewritten,
+    val out = writeManifest(spark, base, snap, schemaJson, untouched ++ rewritten,
       statsCols = Seq(statsCol), op = "delete")
     maybeAutoAnalyze(spark, base, out)
     out
+  }
+
+  /** The entries that may hold one of `keys`' `key` values — the file
+    * pruning of [[mergeInto]], [[deleteByKeys]] and [[deleteByKeysDV]]:
+    * the keys SEMI-JOIN the files' recorded ranges, precise where a
+    * min/max envelope over-touches (one distant insert key would stretch
+    * the envelope over every file). The ranges side is file METADATA
+    * (one row per file — small even at 100 TB), so it broadcasts, and
+    * only the touched PATHS reach the driver; stat-less files are always
+    * touched (they could hold any key), and keys in NO file's range
+    * (pure inserts, NULL keys) touch nothing. Stats prune ONLY when they
+    * were collected on `key` itself (r9, ADVICE r8 #2): lo/hi describe
+    * the `#stats` header's first column, so any other key treats every
+    * file as a candidate, or files holding matching keys would be
+    * skipped and the commit would silently miss rows. */
+  private def keyRangeTouched(spark: SparkSession, entries: Seq[ManifestEntry],
+                              statsCols: Seq[String], keys: DataFrame,
+                              key: String): Seq[ManifestEntry] = {
+    val cands =
+      if (statsCols.headOption.contains(key)) entries.filter(e => e.lo.isDefined && e.hi.isDefined)
+      else Seq.empty
+    val noStats = entries.filterNot(cands.toSet)
+    val touchedPaths: Set[String] =
+      if (cands.isEmpty) Set.empty
+      else {
+        import spark.implicits._
+        val ranges = cands.map(e => (e.path, e.lo.get, e.hi.get)).toDF("path", "lo", "hi")
+        keys.select(col(key).cast("long").as("__k")).na.drop
+          .join(broadcast(ranges), col("__k") >= col("lo") && col("__k") <= col("hi"))
+          .select("path").distinct()
+          .collect().map(_.getString(0)).toSet
+      }
+    noStats ++ cands.filter(e => touchedPaths(e.path))
   }
 
   /** MERGE commit (r8, VERDICT r7 #2): upsert `changes` into the table by
@@ -2030,40 +2081,11 @@ object TableFormat {
     * runtime error too). Returns (newVersion, filesRewritten, filesTotal). */
   def mergeInto(spark: SparkSession, base: String, changes: DataFrame,
                 key: String): (Int, Int, Int) = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val version = v + 1
-    val entries = manifestEntries(spark, base, v)
     if (changes.isEmpty) return (v, 0, entries.size) // empty change set: no-op
-    // Per-file pruning by SEMI-JOINING the change keys against the file
-    // ranges — precise where a min/max envelope over-touches (one distant
-    // insert key would stretch the envelope over every file). The ranges
-    // side is file METADATA (one row per file — small even at 100 TB), so
-    // this broadcasts; stat-less files are always touched (could hold any
-    // key). Keys landing in NO file's range (pure inserts, incl. NULL
-    // keys) match no base row and just write fresh.
-    // Stats prune ONLY when they were collected on the merge key itself
-    // (r9, ADVICE r8 #2): the manifest's lo/hi describe the #stats
-    // header's column — merging on any OTHER column must treat every
-    // file as a candidate (full copy-on-write), or files holding
-    // matching keys would be skipped and the merge would silently
-    // miss updates / produce duplicate keys.
-    val statsOnKey = m.statsCols.headOption.contains(key)
-    val cands =
-      if (statsOnKey) entries.filter(e => e.lo.isDefined && e.hi.isDefined)
-      else Seq.empty
-    val noStats = entries.filterNot(cands.toSet)
-    val touchedPaths: Set[String] =
-      if (cands.isEmpty) Set.empty
-      else {
-        import spark.implicits._
-        val ranges = cands.map(e => (e.path, e.lo.get, e.hi.get)).toDF("path", "lo", "hi")
-        changes.select(col(key).cast("long").as("__k")).na.drop
-          .join(broadcast(ranges), col("__k") >= col("lo") && col("__k") <= col("hi"))
-          .select("path").distinct()
-          .collect().map(_.getString(0)).toSet
-      }
-    val touched = noStats ++ cands.filter(e => touchedPaths(e.path))
+    val touched = keyRangeTouched(spark, entries, m.statsCols, changes, key)
     val untouched = entries.filterNot(touched.toSet)
     val schemaJson = schemaJsonOf(m, base, v)
     val baseRows =
@@ -2082,12 +2104,12 @@ object TableFormat {
     val outStats = if (declared.headOption.contains(key)) declared else Seq(key)
     // bucketed tables keep their layout through the merge rewrite (r12)
     val bucket = bucketSpecOf(m.props)
-    val rewritten = writeDataFilesNdv(spark, base, newCommitDir(base, version),
+    val rewritten = writeDataFilesNdv(spark, base, m, newCommitDir(base, version),
       if (bucket.isDefined) merged
       else merged.repartitionByRange(nFiles, outStats.map(col): _*),
       outStats.headOption, outStats.drop(1).headOption, outStats.drop(2),
       bucketBy = bucket).entries
-    val out = writeManifest(spark, base, version, schemaJson,
+    val out = writeManifest(spark, base, snap, schemaJson,
       untouched ++ rewritten, statsCols = outStats, op = "merge")
     (out, touched.size, entries.size)
   }
@@ -2106,28 +2128,12 @@ object TableFormat {
     * Returns (newVersion, filesRewritten, filesTotal). */
   def deleteByKeys(spark: SparkSession, base: String, keys: DataFrame,
                    key: String): (Int, Int, Int) = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val version = v + 1
-    val entries = manifestEntries(spark, base, v)
     if (keys.isEmpty) return (v, 0, entries.size)
     val statsCols = m.statsCols
-    val statsOnKey = statsCols.headOption.contains(key)
-    val cands =
-      if (statsOnKey) entries.filter(e => e.lo.isDefined && e.hi.isDefined)
-      else Seq.empty
-    val noStats = entries.filterNot(cands.toSet)
-    val touchedPaths: Set[String] =
-      if (cands.isEmpty) Set.empty
-      else {
-        import spark.implicits._
-        val ranges = cands.map(e => (e.path, e.lo.get, e.hi.get)).toDF("path", "lo", "hi")
-        keys.select(col(key).cast("long").as("__k")).na.drop
-          .join(broadcast(ranges), col("__k") >= col("lo") && col("__k") <= col("hi"))
-          .select("path").distinct()
-          .collect().map(_.getString(0)).toSet
-      }
-    val touched = noStats ++ cands.filter(e => touchedPaths(e.path))
+    val touched = keyRangeTouched(spark, entries, statsCols, keys, key)
     if (touched.isEmpty) return (v, 0, entries.size) // no file can hold a key
     val untouched = entries.filterNot(touched.toSet)
     val schemaJson = schemaJsonOf(m, base, v)
@@ -2135,14 +2141,23 @@ object TableFormat {
     // delete's masked rows must not resurrect through the rewrite)
     val survivors = readEntriesDf(spark, base, v, touched)
       .join(keys.select(col(key)), Seq(key), "left_anti")
-    val rewritten = writeDataFilesNdv(spark, base, newCommitDir(base, version),
+    val rewritten = writeDataFilesNdv(spark, base, m, newCommitDir(base, version),
       survivors, statsCols.headOption, statsCols.drop(1).headOption,
       statsCols.drop(2),
       bucketBy = bucketSpecOf(m.props)).entries
-    val out = writeManifest(spark, base, version, schemaJson,
+    val out = writeManifest(spark, base, snap, schemaJson,
       untouched ++ rewritten, statsCols = statsCols, op = "delete")
     maybeAutoAnalyze(spark, base, out)
     (out, touched.size, entries.size)
+  }
+
+  /** The head snapshot with no equality deletes outstanding: when the
+    * head has some, they resolve first ([[resolveEqDeletes]]) and the
+    * head is read again. */
+  private def resolvedHead(spark: SparkSession, base: String): Snapshot = {
+    val head = snapshot(spark, base)
+    if (head.manifest.eqDels.isEmpty) head
+    else { resolveEqDeletes(spark, base); snapshot(spark, base) }
   }
 
   /** COMPACT (r7): rewrite the current snapshot's SMALL files (strictly
@@ -2158,14 +2173,11 @@ object TableFormat {
               targetFiles: Int = 1, minFiles: Int = 2): (Int, Int) = {
     // outstanding equality deletes resolve FIRST (r15) — the lazy half
     // of the eqdel contract: maintenance pays the one deferred join
-    if (manifest(spark, base, currentVersion(spark, base)).eqDels.nonEmpty)
-      resolveEqDeletes(spark, base)
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = resolvedHead(spark, base)
+    val (v, m) = (snap.version, snap.manifest)
     val version = v + 1
     val f = fs(spark, base)
-    val entries = manifestEntries(spark, base, v)
-    val (small, large) = entries.partition(e =>
+    val (small, large) = snap.entries.partition(e =>
       f.getFileStatus(new Path(e.path)).getLen < smallBytes)
     if (small.size < math.max(2, minFiles)) return (v, 0) // nothing to consolidate
     // compacted output keeps the declared file-skipping index alive
@@ -2187,7 +2199,7 @@ object TableFormat {
       if (bucket.isDefined) smallDf
       else if (declared.isEmpty) smallDf.coalesce(targetFiles)
       else smallDf.repartitionByRange(targetFiles, declared.map(col): _*)
-    val rewritten = writeDataFilesNdv(spark, base, newCommitDir(base, version),
+    val rewritten = writeDataFilesNdv(spark, base, m, newCommitDir(base, version),
       clustered, declared.headOption, declared.drop(1).headOption, declared.drop(2),
       bucketBy = bucket).entries
     (maintenanceCommit(spark, base, v, small, rewritten,
@@ -2216,28 +2228,19 @@ object TableFormat {
                                            op: String, statsCols: Seq[String],
                                            maxRetries: Int = 10): Int = {
     val srcLines = src.map(_.line).toSet
-    var v = basedOn
-    var attempt = 0
-    while (true) {
-      val head = manifestEntries(spark, base, v)
-      val headLines = head.map(_.line).toSet
-      if (!srcLines.subsetOf(headLines))
+    var at = Option(basedOn) // the first attempt publishes over `basedOn`, retries over the head
+    retryOnConflict(maxRetries) {
+      val head = snapshot(spark, base, at)
+      at = None
+      val v = head.version
+      if (!srcLines.subsetOf(head.entries.map(_.line).toSet))
         throw new ConcurrentModificationException(base, basedOn, v)
-      val m = manifest(spark, base, v)
-      if (v != basedOn && m.statsCols != statsCols)
+      if (v != basedOn && head.manifest.statsCols != statsCols)
         throw new ConcurrentModificationException(base, basedOn, v)
-      val keep = head.filterNot(e => srcLines.contains(e.line))
-      try
-        return writeManifest(spark, base, v + 1, schemaJsonOf(m, base, v), keep ++ rewritten,
-          statsCols = statsCols, op = op)
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          v = latestVersion(spark, base)
-      }
+      val keep = head.entries.filterNot(e => srcLines.contains(e.line))
+      writeManifest(spark, base, head, schemaJsonOf(head.manifest, base, v),
+        keep ++ rewritten, statsCols = statsCols, op = op)
     }
-    -1 // unreachable
   }
 
   /** PURGE DELETION VECTORS (r13) — the Delta `REORG TABLE … APPLY
@@ -2261,11 +2264,8 @@ object TableFormat {
       s"purge_dv: min_fraction must be in (0, 1], got $minFraction")
     // outstanding equality deletes resolve FIRST (r15): the resolution
     // dv lands before the fraction test so heavy masks purge in one pass
-    if (manifest(spark, base, currentVersion(spark, base)).eqDels.nonEmpty)
-      resolveEqDeletes(spark, base)
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
-    val entries = manifestEntries(spark, base, v)
+    val snap = resolvedHead(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val (heavy, keep) = entries.partition(e =>
       e.dv.isDefined && e.rows.exists(r => r > 0 &&
         e.dvRows.exists(d => d.toDouble / r >= minFraction)))
@@ -2279,7 +2279,7 @@ object TableFormat {
       if (bucket.isDefined) live
       else if (declared.isEmpty) live.coalesce(math.max(1, heavy.size))
       else live.repartitionByRange(math.max(1, heavy.size), declared.map(col): _*)
-    val rewritten = writeDataFilesNdv(spark, base, newCommitDir(base, version),
+    val rewritten = writeDataFilesNdv(spark, base, m, newCommitDir(base, version),
       clustered, declared.headOption, declared.drop(1).headOption, declared.drop(2),
       bucketBy = bucket).entries
     val out = maintenanceCommit(spark, base, v, heavy, rewritten,
@@ -2575,50 +2575,6 @@ object TableFormat {
     }
   }
 
-  /** The manifest entries (file + stats) of snapshot `version` — parsed
-    * once per (path, stamp) and served from the bounded cache (r12):
-    * the entry list is the hot metadata object (every scan, write
-    * rebase, CDF step, and maintenance pass walks it), and at 10⁶ files
-    * re-parsing it per access dominates driver planning time. */
-  def manifestEntries(spark: SparkSession, base: String, version: Int): Seq[ManifestEntry] = {
-    val path = manifestPath(base, version)
-    val stamp = manifestStamp(spark, path)
-    manifestEntriesCache.synchronized {
-      Option(manifestEntriesCache.get(path)) match {
-        case Some((s, e)) if s == stamp => return e
-        case _ => ()
-      }
-    }
-    val m = manifestAt(spark, path, stamp)
-    // delta resolution (r13): apply the edit script to the parent's
-    // resolved list — removals by path, modifications in place,
-    // additions at the tail. Recursion bottoms out at the chain's full
-    // manifest (≤ CheckpointEvery hops, each level cached).
-    val parsed = (m.delta, m.entriesPq) match {
-      case (Some((parentV, _)), _) =>
-        val parent = manifestEntries(spark, base, parentV)
-        val removed = m.body.filter(_.startsWith("-\t")).map(_.substring(2)).toSet
-        val modBy = m.body.filter(_.startsWith("~\t"))
-          .map(l => ManifestEntry.parse(l.substring(2)))
-          .map(e => e.path -> e).toMap
-        val added = m.body.filter(_.startsWith("+\t"))
-          .map(l => ManifestEntry.parse(l.substring(2)))
-        parent.flatMap { pe =>
-          if (removed.contains(pe.path)) None
-          else Some(modBy.getOrElse(pe.path, pe))
-        } ++ added
-      // parquet checkpoint (r14): the entry list lives in a columnar
-      // sidecar; resolve through the vectorized driver-side read
-      case (None, Some((name, _))) => readEntriesParquet(spark, s"$base/_manifests/$name")
-      case (None, None) => m.body.map(ManifestEntry.parse)
-    }
-    if (trustable(path, stamp)) manifestEntriesCache.synchronized {
-      manifestEntriesCache.put(path, (stamp, parsed))
-      ()
-    }
-    parsed
-  }
-
   /** DELETION VECTORS (r10) — merge-on-read deletes. A dv file is a
     * parquet relation of (file_path, row_index) pairs naming the rows
     * deleted from still-referenced data files; `file_path` holds the
@@ -2803,8 +2759,8 @@ object TableFormat {
 
   def deleteRowsDV(spark: SparkSession, base: String, cond: Column,
                    bounds: Seq[(Long, Long)] = Nil): (Int, Int, Int) = {
-    val v = currentVersion(spark, base)
-    val entries = manifestEntries(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, entries) = (snap.version, snap.entries)
     val touched = entries.filter { e =>
       bounds.zipWithIndex.forall {
         case ((lo, hi), i) => e.mayMatchAt(i, lo, hi)
@@ -2820,7 +2776,7 @@ object TableFormat {
     val newPairs = entriesDfEq(spark, base, v, touched, keepPos = true)
       .filter(coalesce(cond, lit(false)))
       .select(col("__fp").as(DvFileCol), col("__ri").as(DvPosCol))
-    dvDeleteCommit(spark, base, v, touched, untouched, newPairs, entries.size)
+    dvDeleteCommit(spark, base, snap, touched, untouched, newPairs)
   }
 
   /** MERGE-ON-READ DELETE BY KEYS (r13) — `deleteByKeys`'s dv twin and
@@ -2834,26 +2790,10 @@ object TableFormat {
     * can't re-match (the dv applies before the join). */
   def deleteByKeysDV(spark: SparkSession, base: String, keys: DataFrame,
                      key: String): (Int, Int, Int) = {
-    val v = currentVersion(spark, base)
-    val entries = manifestEntries(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, entries) = (snap.version, snap.entries)
     if (keys.isEmpty) return (v, 0, entries.size)
-    val statsCols = manifest(spark, base, v).statsCols
-    val statsOnKey = statsCols.headOption.contains(key)
-    val cands =
-      if (statsOnKey) entries.filter(e => e.lo.isDefined && e.hi.isDefined)
-      else Seq.empty
-    val noStats = entries.filterNot(cands.toSet)
-    val touchedPaths: Set[String] =
-      if (cands.isEmpty) Set.empty
-      else {
-        import spark.implicits._
-        val ranges = cands.map(e => (e.path, e.lo.get, e.hi.get)).toDF("path", "lo", "hi")
-        keys.select(col(key).cast("long").as("__k")).na.drop
-          .join(broadcast(ranges), col("__k") >= col("lo") && col("__k") <= col("hi"))
-          .select("path").distinct()
-          .collect().map(_.getString(0)).toSet
-      }
-    val touched = noStats ++ cands.filter(e => touchedPaths(e.path))
+    val touched = keyRangeTouched(spark, entries, snap.manifest.statsCols, keys, key)
     if (touched.isEmpty) return (v, 0, entries.size)
     val untouched = entries.filterNot(touched.toSet)
     // live rows only: dv and outstanding eq masks apply before the key
@@ -2861,20 +2801,21 @@ object TableFormat {
     val newPairs = entriesDfEq(spark, base, v, touched, keepPos = true)
       .join(keys.select(col(key)), Seq(key), "left_semi")
       .select(col("__fp").as(DvFileCol), col("__ri").as(DvPosCol))
-    dvDeleteCommit(spark, base, v, touched, untouched, newPairs, entries.size)
+    dvDeleteCommit(spark, base, snap, touched, untouched, newPairs)
   }
 
-  /** The shared dv-delete commit tail: superseding dv = old ∪ new
-    * positions for the touched files (an entry's dv must describe its
-    * complete deletion state). Pairs the old dirs carry for files
-    * outside `touched` ride along harmlessly: no entry references them
-    * through this dir, and `distinct` bounds the duplication. */
-  private def dvDeleteCommit(spark: SparkSession, base: String, v: Int,
+  /** The shared dv-delete commit tail over `snap`, the snapshot the
+    * caller pruned: superseding dv = old ∪ new positions for the
+    * touched files (an entry's dv must describe its complete deletion
+    * state). Pairs the old dirs carry for files outside `touched` ride
+    * along harmlessly: no entry references them through this dir, and
+    * `distinct` bounds the duplication. */
+  private def dvDeleteCommit(spark: SparkSession, base: String, snap: Snapshot,
                              touched: Seq[ManifestEntry],
                              untouched: Seq[ManifestEntry],
-                             newPairs: DataFrame, total: Int): (Int, Int, Int) = {
+                             newPairs: DataFrame): (Int, Int, Int) = {
+    val (v, m, total) = (snap.version, snap.manifest, snap.entries.size)
     val version = v + 1
-    val m = manifest(spark, base, v)
     val statsCols = m.statsCols
     val schemaJson = schemaJsonOf(m, base, v)
     val allPairs = dvPairsOf(spark, touched)
@@ -2896,7 +2837,7 @@ object TableFormat {
       else if (e.rows.contains(n)) None // every row deleted: file drops out
       else { withDv += 1; Some(e.copy(dv = Some(dvDir), dvRows = Some(n))) }
     }
-    val out = writeManifest(spark, base, version, schemaJson, untouched ++ updated,
+    val out = writeManifest(spark, base, snap, schemaJson, untouched ++ updated,
       statsCols = statsCols, op = "delete_dv")
     maybeAutoAnalyze(spark, base, out)
     (out, withDv, total)
@@ -2978,8 +2919,8 @@ object TableFormat {
       s"delete_eq: key column names may not contain ',' (got $keyCols)")
     val cap = spark.conf.getOption("spark.graft.eqdel.maxOutstanding")
       .map(_.toInt).getOrElse(64)
-    if (cap > 0 &&
-        manifest(spark, base, currentVersion(spark, base)).eqDels.size >= cap) {
+    val head = snapshot(spark, base)
+    val snap = if (cap <= 0 || head.manifest.eqDels.size < cap) head else {
       // `spark.graft.eqdel.capAction` (r16, r17 candidate #5):
       // `resolve` (default) folds the backlog into one dv commit;
       // `consolidate` takes the cheaper middle step — union the key
@@ -2992,10 +2933,9 @@ object TableFormat {
         case "consolidate" => consolidateEqDeletes(spark, base)
         case _ => resolveEqDeletes(spark, base)
       }
-      ()
+      snapshot(spark, base)
     }
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val (v, m) = (snap.version, snap.manifest)
     val schemaJson = schemaJsonOf(m, base, v)
     keyCols.foreach(k =>
       require(m.schema.exists(_.fields.exists(_.name == k)),
@@ -3026,8 +2966,8 @@ object TableFormat {
     }
     val eqd = m.eqDels :+
       ((dir, keyCols.mkString(","), version))
-    val out = writeManifest(spark, base, version, schemaJson,
-      manifestEntries(spark, base, v), statsCols = m.statsCols, op = "delete_eq",
+    val out = writeManifest(spark, base, snap, schemaJson,
+      snap.entries, statsCols = m.statsCols, op = "delete_eq",
       edit = _.copy(eqDels = eqd))
     (out, n)
   }
@@ -3149,11 +3089,10 @@ object TableFormat {
     * [[deleteByKeysDV]] calls would have produced. Returns
     * (newVersion, nDeletes resolved). */
   def resolveEqDeletes(spark: SparkSession, base: String): (Int, Int) = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val eqd = m.eqDels
     if (eqd.isEmpty) return (v, 0)
-    val entries = manifestEntries(spark, base, v)
     val adds = m.eqAdds
     val schemaJson = schemaJsonOf(m, base, v)
     val statsCols = m.statsCols
@@ -3163,7 +3102,7 @@ object TableFormat {
     if (groups.isEmpty) {
       // every live file postdates every outstanding delete (fully
       // compacted/rewritten since): nothing to mask, just clear headers
-      val out = writeManifest(spark, base, v + 1, schemaJson, entries,
+      val out = writeManifest(spark, base, snap, schemaJson, entries,
         statsCols = statsCols, op = "eqdel_resolve", edit = _.copy(eqDels = Nil))
       return (out, eqd.size)
     }
@@ -3193,7 +3132,7 @@ object TableFormat {
       else if (e.rows.contains(n)) None // every row deleted: file drops out
       else Some(e.copy(dv = Some(dvDir), dvRows = Some(n)))
     }
-    val out = writeManifest(spark, base, version, schemaJson,
+    val out = writeManifest(spark, base, snap, schemaJson,
       untouched ++ updated, statsCols = statsCols,
       op = "eqdel_resolve", edit = _.copy(eqDels = Nil))
     maybeAutoAnalyze(spark, base, out)
@@ -3221,8 +3160,8 @@ object TableFormat {
     * (newVersion, nRecordsBefore); (current, 0) when the backlog is
     * already ≤ 1 record per column. */
   def consolidateEqDeletes(spark: SparkSession, base: String): (Int, Int) = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m) = (snap.version, snap.manifest)
     val eqd = m.eqDels
     val byCol = eqd.groupBy(_._2).toSeq.sortBy(_._1)
     if (eqd.size <= byCol.size) return (v, 0)
@@ -3247,8 +3186,8 @@ object TableFormat {
         (dir, k, recs.map(_._3).max)
       }
     }
-    val out = writeManifest(spark, base, version, schemaJson,
-      manifestEntries(spark, base, v), statsCols = m.statsCols,
+    val out = writeManifest(spark, base, snap, schemaJson,
+      snap.entries, statsCols = m.statsCols,
       op = "eqdel_consolidate", edit = _.copy(eqDels = newRecs))
     (out, eqd.size)
   }
@@ -3272,12 +3211,11 @@ object TableFormat {
   def deltaCommitStaged(spark: SparkSession, base: String, basedOn: Int,
                         dvPairPaths: Seq[String], insertPaths: Seq[String],
                         op: String): Int = {
-    val parentV = latestVersion(spark, base)
-    val parent = manifest(spark, base, parentV)
+    val snap = snapshot(spark, base)
+    val (parentV, parent, entries) = (snap.version, snap.manifest, snap.entries)
     if (basedOn != parentV)
       throw new ConcurrentModificationException(base, basedOn, parentV)
     val version = parentV + 1
-    val entries = manifestEntries(spark, base, parentV)
     val statsCols = parent.statsCols
     val cm = parent.colmap
     val schemaJson = schemaJsonOf(parent, base, parentV)
@@ -3308,7 +3246,7 @@ object TableFormat {
         }
       }
     val insertEntries = entriesFromFooters(spark, insertPaths, statsCols, cm)
-    val out = writeManifest(spark, base, version, schemaJson,
+    val out = writeManifest(spark, base, snap, schemaJson,
       untouched ++ updatedTouched ++ insertEntries,
       statsCols = statsCols, op = op,
       edit = ndvEdit(ndvFromFiles(spark, insertPaths, statsCols, cm), mergeParent = true))
@@ -3325,39 +3263,22 @@ object TableFormat {
   def manifestFiles(spark: SparkSession, base: String, version: Int): Seq[String] =
     manifestEntries(spark, base, version).map(_.path)
 
+  /** The head version ([[latestVersion]]); a table with no manifest at
+    * all has none, which is a FileNotFoundException here. */
   def currentVersion(spark: SparkSession, base: String): Int = {
-    val ptr =
-      try Some(readFile(spark, s"$base/_CURRENT").trim.toInt)
-      catch {
-        case _: java.io.FileNotFoundException => None
-        case _: org.apache.hadoop.fs.ChecksumException => None
-        // pointer momentarily unreadable: local-FS overwrite-rename is
-        // delete-then-rename and the .crc sidecar swaps in a SECOND
-        // rename (both real windows, unlike HDFS), and a crash can land
-        // between manifest and pointer writes.
-      }
-    // The manifest LISTING is the durable source of truth (how Delta
-    // resolves the current version — by listing the log, not a pointer);
-    // a published manifest IS a committed snapshot. Taking max(pointer,
-    // listing) also heals a REGRESSED pointer (r9, ADVICE r8 #5): the
-    // advance-only guard in writeManifest is serialized per-JVM only, so
-    // across JVMs a slow loser can still write a stale version — which
-    // would otherwise be served until the next commit.
-    val lv = latestVersion(spark, base)
-    val v = math.max(ptr.getOrElse(0), lv)
+    val v = latestVersion(spark, base)
     if (v > 0) v
     else throw new java.io.FileNotFoundException(
       s"table $base: no _CURRENT pointer and no manifests")
   }
 
-  /** Read a snapshot: `version = None` resolves `_CURRENT`. Plans from
-    * the manifest's explicit file list — never a directory listing. */
+  /** Read a snapshot: `version = None` reads the head. Plans from the
+    * manifest's explicit file list — never a directory listing. */
   def readSnapshot(spark: SparkSession, base: String,
                    version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, base))
-    val entries = manifestEntries(spark, base, v)
-    if (entries.isEmpty) emptySnapshot(spark, base, v)
-    else entriesDfEq(spark, base, v, entries) // r15: equality deletes apply
+    val s = snapshot(spark, base, version)
+    if (s.entries.isEmpty) emptySnapshot(spark, base, s.version)
+    else entriesDfEq(spark, base, s.version, s.entries) // r15: equality deletes apply
   }
 
   /** FILE SKIPPING — the reason table formats carry stats: resolve the
@@ -3372,8 +3293,8 @@ object TableFormat {
   def readSnapshotWhere(spark: SparkSession, base: String, statsCol: String,
                         lo: Long, hi: Long,
                         version: Option[Int] = None): (DataFrame, (Int, Int)) = {
-    val v = version.getOrElse(currentVersion(spark, base))
-    val entries = manifestEntries(spark, base, v)
+    val snap = snapshot(spark, base, version)
+    val (v, entries) = (snap.version, snap.entries)
     val keep = entries.filter(_.mayMatch(lo, hi))
     val df =
       (if (keep.isEmpty) emptySnapshot(spark, base, v)
@@ -3403,12 +3324,12 @@ object TableFormat {
   def commitZorder(spark: SparkSession, base: String, df: DataFrame,
                    c1: String, c2: String, version: Int,
                    nFiles: Int = 16, op: String = "replace"): Int = {
+    val parent =
+      if (version <= 1) Snapshot.empty(version - 1)
+      else try snapshot(spark, base, Some(version - 1))
+           catch { case _: java.io.FileNotFoundException => Snapshot.empty(version - 1) }
     // keep the previous snapshot's field metadata (r11) — see commit()
-    val zSchema = preserveFieldMetadata(
-      if (version <= 1) None
-      else try manifest(spark, base, version - 1).schema
-           catch { case _: java.io.FileNotFoundException => None },
-      df.schema)
+    val zSchema = preserveFieldMetadata(parent.manifest.schema, df.schema)
     val b = df.agg(min(col(c1)).cast("long"), max(col(c1)).cast("long"),
                    min(col(c2)).cast("long"), max(col(c2)).cast("long"))
       .collect()(0) // 1 row of bounds — broadcast into the norm expressions
@@ -3420,9 +3341,9 @@ object TableFormat {
     // (e.g. INSERT OVERWRITE with an empty SELECT), or every later
     // append would silently stop recording bounds.
     if ((0 to 3).exists(b.isNullAt)) {
-      val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, version),
+      val staged0 = writeDataFilesNdv(spark, base, parent.manifest, newCommitDir(base, version),
         df.repartition(nFiles), Some(c1), Some(c2), collectNdv = true)
-      return writeManifest(spark, base, version, zSchema.json, staged0.entries,
+      return writeManifest(spark, base, parent, zSchema.json, staged0.entries,
         statsCols = Seq(c1, c2), op = op,
         edit = ndvEdit(staged0.ndv, mergeParent = false))
     }
@@ -3444,10 +3365,10 @@ object TableFormat {
     }
     val clustered = df.withColumn("__z", z)
       .repartitionByRange(nFiles, col("__z")).drop("__z")
-    val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, version),
+    val staged0 = writeDataFilesNdv(spark, base, parent.manifest, newCommitDir(base, version),
       clustered, Some(c1), Some(c2), collectNdv = true)
     // whole-table rewrite: the fresh sketch is EXACT — replace, not merge
-    writeManifest(spark, base, version, zSchema.json, staged0.entries,
+    writeManifest(spark, base, parent, zSchema.json, staged0.entries,
       statsCols = Seq(c1, c2), op = op,
       edit = ndvEdit(staged0.ndv, mergeParent = false))
   }
@@ -3480,8 +3401,8 @@ object TableFormat {
     * version; falls back to hierarchical clustering when any dimension
     * has no bounds (empty/all-NULL). */
   def optimizeZorderN(spark: SparkSession, base: String, nFiles: Int = 16): Int = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m) = (snap.version, snap.manifest)
     val cols = m.statsCols
     require(cols.size >= 2 && cols.size <= 6,
       s"optimizeZorderN: need 2..6 declared clustering columns (got ${cols.mkString(", ")})")
@@ -3536,10 +3457,10 @@ object TableFormat {
     }
     val clustered = df.withColumn("__z", z)
       .repartitionByRange(nFiles, col("__z")).drop("__z")
-    val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
+    val staged0 = writeDataFilesNdv(spark, base, m, newCommitDir(base, v + 1),
       clustered, cols.headOption, cols.drop(1).headOption, cols.drop(2),
       collectNdv = true)
-    writeManifest(spark, base, v + 1, schema.json, staged0.entries,
+    writeManifest(spark, base, snap, schema.json, staged0.entries,
       statsCols = cols, op = "optimize",
       edit = ndvEdit(staged0.ndv, mergeParent = false))
   }
@@ -3552,8 +3473,8 @@ object TableFormat {
     * The right maintenance pass after heavy out-of-order ingest into
     * an N-column-clustered table. Returns the new version. */
   def optimizeCluster(spark: SparkSession, base: String, nFiles: Int = 16): Int = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m) = (snap.version, snap.manifest)
     val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimizeCluster: table $base declares no clustering columns — " +
@@ -3567,10 +3488,10 @@ object TableFormat {
       if (bucket.isDefined) readSnapshot(spark, base, Some(v))
       else readSnapshot(spark, base, Some(v))
         .repartitionByRange(nFiles, declared.map(col): _*)
-    val staged0 = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
+    val staged0 = writeDataFilesNdv(spark, base, m, newCommitDir(base, v + 1),
       clustered, declared.headOption, declared.drop(1).headOption, declared.drop(2),
       collectNdv = true, bucketBy = bucket)
-    writeManifest(spark, base, v + 1, schemaJson, staged0.entries,
+    writeManifest(spark, base, snap, schemaJson, staged0.entries,
       statsCols = declared, op = "optimize",
       edit = ndvEdit(staged0.ndv, mergeParent = false))
   }
@@ -3598,10 +3519,9 @@ object TableFormat {
     // after the caller's scan makes the CAS fail loudly
     // (CommitConflictException) instead of carrying the concurrent
     // files past the replace unexamined
-    val v = basedOnVersion
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base, Some(basedOnVersion))
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val version = v + 1
-    val entries = manifestEntries(spark, base, v)
     val statsCols = m.statsCols
     val schemaJson = schemaJsonOf(m, base, v)
     val untouched = entries.filterNot(touched.toSet)
@@ -3623,7 +3543,7 @@ object TableFormat {
       if (bucketBy.isDefined || statsCols.isEmpty) merged
       else merged.repartitionByRange(nF, statsCols.map(col): _*)
     val commitDir = newCommitDir(base, version)
-    val staged = writeDataFilesNdv(spark, base, commitDir,
+    val staged = writeDataFilesNdv(spark, base, m, commitDir,
       clustered, statsCols.headOption, statsCols.drop(1).headOption,
       statsCols.drop(2), collectNdv = true, bucketBy = bucketBy)
     val leaks = obs.get.get("leaks")
@@ -3638,7 +3558,7 @@ object TableFormat {
           "region — every inserted row must satisfy the REPLACE WHERE " +
           "condition (widen the condition or filter the data)")
     }
-    val out = writeManifest(spark, base, version, schemaJson,
+    val out = writeManifest(spark, base, snap, schemaJson,
       untouched ++ staged.entries, statsCols = statsCols, op = "replace",
       edit = ndvEdit(staged.ndv, mergeParent = true))
     (out, touched.size, entries.size)
@@ -3656,21 +3576,21 @@ object TableFormat {
   def optimizeBucket(spark: SparkSession, base: String, nBuckets: Int,
                      bucketCol: String): Int = {
     require(nBuckets > 0, s"optimizeBucket: nBuckets must be positive (got $nBuckets)")
-    val v = currentVersion(spark, base)
-    val snap = manifest(spark, base, v)
+    val head = snapshot(spark, base)
+    val (v, snap) = (head.version, head.manifest)
     val schema = schemaOf(snap, base, v)
     require(schema.fields.find(_.name == bucketCol).map(_.dataType)
       .exists(graft.sources.GraftBucketRouting.supported),
       s"optimizeBucket: column $bucketCol must be a bucket-routable type " +
         "(the bucket function hashes byte/short/int/long/string)")
     val declared = snap.statsCols
-    val staged = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
+    val staged = writeDataFilesNdv(spark, base, snap, newCommitDir(base, v + 1),
       readSnapshot(spark, base, Some(v)),
       declared.headOption, declared.drop(1).headOption, declared.drop(2),
       collectNdv = true, bucketBy = Some((nBuckets, bucketCol)))
     val props = snap.props +
       (BucketProp -> s"$nBuckets:$bucketCol")
-    writeManifest(spark, base, v + 1, schema.json, staged.entries,
+    writeManifest(spark, base, head, schema.json, staged.entries,
       statsCols = declared, op = "optimize",
       edit = m => ndvEdit(staged.ndv, mergeParent = false)(m.copy(props = props)))
   }
@@ -3696,8 +3616,8 @@ object TableFormat {
     * conforming snapshot is a NO-OP (current version, 0 rewritten). */
   def optimizeIncremental(spark: SparkSession, base: String,
                           smallBytes: Long = 0L): (Int, Int, Int) = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimizeIncremental: table $base declares no clustering columns — " +
@@ -3705,7 +3625,6 @@ object TableFormat {
     require(bucketSpecOf(m.props).isEmpty,
       s"optimizeIncremental: table $base declares a bucket layout — use " +
         "compact (bucket-aware since r12) to consolidate within buckets")
-    val entries = manifestEntries(spark, base, v)
     if (entries.size < 2) return (v, 0, entries.size)
     val f = fs(spark, base)
     // the leading cluster key's bounds live in the NUMERIC slot for
@@ -3747,7 +3666,7 @@ object TableFormat {
     // deletes; a dv-carrying CONFORMING file carries its dv pointer
     val df = readEntriesDf(spark, base, v, violators)
     val nF = math.max(1, violators.size / 2)
-    val staged = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
+    val staged = writeDataFilesNdv(spark, base, m, newCommitDir(base, v + 1),
       df.repartitionByRange(nF, declared.map(col): _*),
       declared.headOption, declared.drop(1).headOption, declared.drop(2))
     val out = maintenanceCommit(spark, base, v, violators, staged.entries,
@@ -3771,8 +3690,8 @@ object TableFormat {
   def optimizeWhere(spark: SparkSession, base: String, lo: Long, hi: Long,
                     targetFiles: Int = 0): (Int, Int, Int) = {
     require(lo <= hi, s"optimize_where: lo $lo must be <= hi $hi")
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimize_where: table $base declares no clustering column to scope on")
@@ -3784,7 +3703,6 @@ object TableFormat {
           org.apache.spark.sql.types.StringType)),
       s"optimize_where: ${declared.head} is a STRING clustering column — " +
         "use optimize_where_str(table, lo, hi)")
-    val entries = manifestEntries(spark, base, v)
     val (in, _) = entries.partition(_.mayMatch(lo, hi))
     // nothing to repair: zero or one clean file in range is already optimal
     if (in.size < 2 && !in.exists(_.dv.isDefined)) return (v, 0, entries.size)
@@ -3794,7 +3712,7 @@ object TableFormat {
     val clustered =
       if (bucket.isDefined) df
       else df.repartitionByRange(nF, declared.map(col): _*)
-    val staged = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
+    val staged = writeDataFilesNdv(spark, base, m, newCommitDir(base, v + 1),
       clustered, declared.headOption, declared.drop(1).headOption, declared.drop(2),
       bucketBy = bucket)
     val out = maintenanceCommit(spark, base, v, in, staged.entries,
@@ -3809,8 +3727,8 @@ object TableFormat {
   def optimizeWhereStr(spark: SparkSession, base: String, lo: String, hi: String,
                        targetFiles: Int = 0): (Int, Int, Int) = {
     require(lo <= hi, s"optimize_where_str: lo '$lo' must be <= hi '$hi'")
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val declared = m.statsCols
     require(declared.nonEmpty,
       s"optimize_where_str: table $base declares no clustering column to scope on")
@@ -3822,7 +3740,6 @@ object TableFormat {
           org.apache.spark.sql.types.StringType)),
       s"optimize_where_str: ${declared.head} is not a STRING clustering " +
         "column — use optimize_where(table, lo, hi)")
-    val entries = manifestEntries(spark, base, v)
     val (in, _) = entries.partition(_.mayMatchStrAt(0, Some(lo), Some(hi)))
     if (in.size < 2 && !in.exists(_.dv.isDefined)) return (v, 0, entries.size)
     val bucket = bucketSpecOf(m.props)
@@ -3831,7 +3748,7 @@ object TableFormat {
     val clustered =
       if (bucket.isDefined) df
       else df.repartitionByRange(nF, declared.map(col): _*)
-    val staged = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
+    val staged = writeDataFilesNdv(spark, base, m, newCommitDir(base, v + 1),
       clustered, declared.headOption, declared.drop(1).headOption, declared.drop(2),
       bucketBy = bucket)
     val out = maintenanceCommit(spark, base, v, in, staged.entries,
@@ -3856,8 +3773,8 @@ object TableFormat {
                        targetFiles: Int = 0): (Int, Int, Int) = {
     require(lo1 <= hi1, s"optimize_where_box: lo1 $lo1 must be <= hi1 $hi1")
     require(lo2 <= hi2, s"optimize_where_box: lo2 $lo2 must be <= hi2 $hi2")
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val declared = m.statsCols
     require(declared.size >= 2,
       s"optimize_where_box: table $base declares ${declared.size} clustering " +
@@ -3875,7 +3792,6 @@ object TableFormat {
     require(bucketSpecOf(m.props).isEmpty,
       s"optimize_where_box: table $base declares a bucket layout — the " +
         "z-curve and hash-bucket routing conflict; use optimize_bucket")
-    val entries = manifestEntries(spark, base, v)
     val (in, _) = entries.partition(e =>
       e.mayMatchAt(0, lo1, hi1) && e.mayMatchAt(1, lo2, hi2))
     // nothing to repair: zero or one clean file in the box is optimal
@@ -3914,7 +3830,7 @@ object TableFormat {
         }
         df.withColumn("__z", z).repartitionByRange(nF, col("__z")).drop("__z")
       }
-    val staged = writeDataFilesNdv(spark, base, newCommitDir(base, v + 1),
+    val staged = writeDataFilesNdv(spark, base, m, newCommitDir(base, v + 1),
       clustered, declared.headOption, declared.drop(1).headOption, declared.drop(2))
     val out = maintenanceCommit(spark, base, v, in, staged.entries,
       op = "optimize", statsCols = declared)
@@ -3928,8 +3844,8 @@ object TableFormat {
                          c1: String, lo1: Long, hi1: Long,
                          c2: String, lo2: Long, hi2: Long,
                          version: Option[Int] = None): (DataFrame, (Int, Int)) = {
-    val v = version.getOrElse(currentVersion(spark, base))
-    val entries = manifestEntries(spark, base, v)
+    val snap = snapshot(spark, base, version)
+    val (v, entries) = (snap.version, snap.entries)
     val keep = entries.filter(e => e.mayMatch(lo1, hi1) && e.mayMatch2(lo2, hi2))
     val df =
       (if (keep.isEmpty) emptySnapshot(spark, base, v)
@@ -4235,17 +4151,17 @@ object TableFormat {
     * clones are working copies, not backups. Returns the source
     * version that was cloned. */
   def cloneTable(spark: SparkSession, srcBase: String, dstBase: String): Int = {
-    val v = currentVersion(spark, srcBase)
-    val src = manifest(spark, srcBase, v)
+    val snap = snapshot(spark, srcBase)
+    val (v, src) = (snap.version, snap.manifest)
     // the clone must carry the source's FULL header state (r10): a
     // renamed column without the colmap would read NULL in the clone
     // (files store physical names), a dropped-then-readded column
     // without the tombstones could resurrect, and props/constraints are
     // part of the table's definition
-    writeManifest(spark, dstBase, 1, schemaJsonOf(src, srcBase, v),
-      manifestEntries(spark, srcBase, v), statsCols = src.statsCols, op = "clone",
+    writeManifest(spark, dstBase, Snapshot.empty(0), schemaJsonOf(src, srcBase, v),
+      snap.entries, statsCols = src.statsCols, op = "clone",
       edit = _.copy(props = src.props, colmap = src.colmap, tombstones = src.tombstones,
-        constraints = src.constraints, ndv = src.ndv,
+        constraints = src.constraints, ndv = src.ndv, hist = src.hist,
         // identity watermarks travel with the clone (r11): a clone (or a
         // branch) of an identity table must CONTINUE the sequence, never
         // restart it — publish merges marks back per-column MAX
@@ -4311,8 +4227,8 @@ object TableFormat {
       try readForkInfo(spark, bb)._1
       catch { case _: java.io.FileNotFoundException =>
         throw new IllegalArgumentException(s"no branch $name of $base") }
-    val bv = currentVersion(spark, bb)
-    val b = manifest(spark, bb, bv)
+    val branch = snapshot(spark, bb)
+    val b = branch.manifest
     // outstanding equality deletes refuse to publish (r15): the parent
     // snapshot would reference key files living under the BRANCH's data
     // tree through its #eqdel header — a later drop_branch's reference
@@ -4322,29 +4238,22 @@ object TableFormat {
       throw new UnsupportedOperationException(
         s"cannot publish branch $name of $base: the branch has outstanding " +
           "equality deletes — CALL graft.system.resolve_eqdel on the branch first")
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val mainV = latestVersion(spark, base)
       require(mainV == fork,
         s"cannot publish branch $name: $base advanced to v$mainV since the " +
           s"branch forked at v$fork — fast-forward only; re-branch and replay")
       val schemaJson = b.schemaJson.getOrElse(
         throw new IllegalStateException(s"branch $name has no schema header"))
-      try
-        return writeManifest(spark, base, mainV + 1, schemaJson,
-          manifestEntries(spark, bb, bv), statsCols = b.statsCols, op = "publish",
-          edit = h => h.copy(props = b.props, colmap = b.colmap, tombstones = b.tombstones,
-            constraints = b.constraints, ndv = b.ndv, hwm = maxMarks(h.hwm, b.hwm),
-            // the branch's equality-delete state fast-forwards with its
-            // entries (r15) — same pass-through rule as restore/clone
-            eqDels = b.eqDels, eqAdds = b.eqAdds))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, snapshot(spark, base, Some(mainV)), schemaJson,
+        branch.entries, statsCols = b.statsCols, op = "publish",
+        edit = h => h.copy(props = b.props, colmap = b.colmap, tombstones = b.tombstones,
+          constraints = b.constraints, ndv = b.ndv, hist = b.hist,
+          hwm = maxMarks(h.hwm, b.hwm),
+          // the branch's equality-delete state fast-forwards with its
+          // entries (r15) — same pass-through rule as restore/clone
+          eqDels = b.eqDels, eqAdds = b.eqAdds))
     }
-    -1 // unreachable
   }
 
   /** DROP BRANCH (r13) — the branch lifecycle's missing end: a branch
@@ -4441,11 +4350,13 @@ object TableFormat {
       try readForkInfo(spark, bb)
       catch { case _: java.io.FileNotFoundException =>
         throw new IllegalArgumentException(s"no branch $name of $base") }
-    val bv = currentVersion(spark, bb)
+    val head = snapshot(spark, bb)
+    val (bv, b, headE) = (head.version, head.manifest, head.entries)
     val pv = latestVersion(spark, base)
     if (pv == fork) return (bv, pv, 0) // nothing to rebase; publish works as-is
     require(pv > fork, s"parent $base at v$pv is BEHIND the fork v$fork")
-    val snap = manifest(spark, base, pv)
+    val parent = snapshot(spark, base, Some(pv))
+    val (snap, parentE) = (parent.manifest, parent.entries)
     val allowed = Set("append", "delete_dv", "update_mor", "merge_mor")
     ((localBase + 1) to bv).foreach { w =>
       val op = manifest(spark, bb, w).op.getOrElse("unknown")
@@ -4454,7 +4365,6 @@ object TableFormat {
           "commits (delete_dv/update_mor/merge_mor) replay position-stably; " +
           "re-branch from the new head and re-apply")
     }
-    val b = manifest(spark, bb, bv)
     val pSchema = snap.schema.map(_.json).getOrElse(
       refuse(s"parent v$pv has no schema header"))
     val bSchema = b.schema.map(_.json).getOrElse(
@@ -4464,8 +4374,6 @@ object TableFormat {
     if (snap.colmap != b.colmap)
       refuse("column mappings diverged since the fork (rename on one side)")
     val forkE = manifestEntries(spark, bb, localBase)
-    val headE = manifestEntries(spark, bb, bv)
-    val parentE = manifestEntries(spark, base, pv)
     val forkByPath = forkE.map(e => normPath(e.path) -> e).toMap
     val headPaths = headE.map(e => normPath(e.path)).toSet
     val parentByPath = parentE.map(e => normPath(e.path) -> e).toMap
@@ -4512,7 +4420,7 @@ object TableFormat {
           }
         } ++ added
       }
-    val newV = writeManifest(spark, bb, bv + 1, pSchema, out,
+    val newV = writeManifest(spark, bb, head, pSchema, out,
       statsCols = snap.statsCols, op = "rebase",
       // parent props as the base, branch's overrides on top — the same
       // branch-wins rule publish applies to the whole header
@@ -4531,9 +4439,10 @@ object TableFormat {
     * the audit surface an operator checks before VACUUM/RESTORE. */
   def history(spark: SparkSession, base: String): Seq[(Int, String, Int)] =
     (1 to latestVersion(spark, base)).flatMap { v =>
-      try Some((v, manifest(spark, base, v).op.getOrElse("unknown"),
-        manifestEntries(spark, base, v).size))
-      catch { case _: java.io.FileNotFoundException => None } // vacuumed gap
+      try {
+        val s = snapshot(spark, base, Some(v))
+        Some((v, s.manifest.op.getOrElse("unknown"), s.entries.size))
+      } catch { case _: java.io.FileNotFoundException => None } // vacuumed gap
     }
 
   /** RESTORE (r9): roll the table back to `toVersion`'s contents as a
@@ -4559,34 +4468,27 @@ object TableFormat {
     * schema (they were committed together), so no extra guard is
     * needed beyond the pass-through itself. */
   def restoreVersion(spark: SparkSession, base: String, toVersion: Int): Int = {
-    val to = manifest(spark, base, toVersion)
+    val target = snapshot(spark, base, Some(toVersion))
+    val to = target.manifest
     val schemaJson = schemaJsonOf(to, base, toVersion)
-    var attempt = 0
-    val maxRetries = 10
-    while (true) {
+    retryOnConflict(maxRetries = 10) {
       val parentV = latestVersion(spark, base)
       require(toVersion <= parentV,
         s"restore target v$toVersion does not exist (latest is v$parentV)")
-      try
-        return writeManifest(spark, base, parentV + 1, schemaJson,
-          manifestEntries(spark, base, toVersion), statsCols = to.statsCols, op = "restore",
-          edit = _.copy(props = to.props, colmap = to.colmap, tombstones = to.tombstones,
-            constraints = to.constraints,
-            // contents ARE toVersion's — its NDV is exact for the restore
-            // (the identity hwm, by contrast, stays the parent's: monotone)
-            ndv = to.ndv,
-            // equality-delete state rides the SAME pass-through (r15): the
-            // restored snapshot must read exactly like toVersion did —
-            // deriving #eqadd from the parent diff would scope every
-            // re-appearing file out of its deletes
-            eqDels = to.eqDels, eqAdds = to.eqAdds))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, snapshot(spark, base, Some(parentV)), schemaJson,
+        target.entries, statsCols = to.statsCols, op = "restore",
+        edit = _.copy(props = to.props, colmap = to.colmap, tombstones = to.tombstones,
+          constraints = to.constraints,
+          // contents ARE toVersion's — its NDV and histograms are exact
+          // for the restore (the identity hwm, by contrast, stays the
+          // parent's: monotone)
+          ndv = to.ndv, hist = to.hist,
+          // equality-delete state rides the SAME pass-through (r15): the
+          // restored snapshot must read exactly like toVersion did —
+          // deriving #eqadd from the parent diff would scope every
+          // re-appearing file out of its deletes
+          eqDels = to.eqDels, eqAdds = to.eqAdds))
     }
-    -1 // unreachable
   }
 
   /** Exactly-once streaming sink on the commit protocol: use the micro-
@@ -4652,12 +4554,10 @@ object TableFormat {
                          maxRetries: Int = 10): Int = {
     def entriesFor(statsCols: Seq[String], cm: Map[String, String]): Seq[ManifestEntry] =
       entriesFromFooters(spark, paths, statsCols, cm)
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
-      val snap = if (parentV == 0) Manifest.empty else manifest(spark, base, parentV)
-      val parentEntries =
-        if (parentV == 0) Seq.empty else manifestEntries(spark, base, parentV)
+      val parent = if (parentV == 0) Snapshot.empty(0) else snapshot(spark, base, Some(parentV))
+      val snap = parent.manifest
       val statsCols = snap.statsCols
       val cm = snap.colmap
       val mergedSchema = snap.schema.fold(schema) { ps =>
@@ -4678,18 +4578,11 @@ object TableFormat {
         }
         StructType(ps.fields ++ added)
       }
-      try
-        return writeManifest(spark, base, parentV + 1, mergedSchema.json,
-          parentEntries ++ entriesFor(statsCols, cm), statsCols = statsCols,
-          op = "append", txn = txn,
-          edit = ndvEdit(ndvFromFiles(spark, paths, statsCols, cm), mergeParent = true))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, parent, mergedSchema.json,
+        parent.entries ++ entriesFor(statsCols, cm), statsCols = statsCols,
+        op = "append", txn = txn,
+        edit = ndvEdit(ndvFromFiles(spark, paths, statsCols, cm), mergeParent = true))
     }
-    -1 // unreachable
   }
 
   /** REPLACE the table with pre-staged data files as a new snapshot
@@ -4768,10 +4661,10 @@ object TableFormat {
                           schema: StructType, maxRetries: Int = 10,
                           carried: Seq[ManifestEntry] = Seq.empty,
                           basedOnVersion: Option[Int] = None): Int = {
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
-      val snap = if (parentV == 0) Manifest.empty else manifest(spark, base, parentV)
+      val parent = if (parentV == 0) Snapshot.empty(0) else snapshot(spark, base, Some(parentV))
+      val snap = parent.manifest
       // write-write conflict guard (r10): the replacement contents were
       // derived from `basedOnVersion`'s files — if anything committed
       // since, fail loudly instead of silently un-committing it
@@ -4787,20 +4680,13 @@ object TableFormat {
       // silently erase the table's generated-column declarations for
       // every later write
       val effSchema = preserveFieldMetadata(snap.schema, schema)
-      try
-        return writeManifest(spark, base, parentV + 1, effSchema.json, carried ++ staged,
-          statsCols = statsCols, op = "replace",
-          // carried entries keep parent rows -> union is the honest bound;
-          // a full replacement (nothing carried) takes the fresh sketch
-          edit = ndvEdit(ndvFromFiles(spark, paths, statsCols, cm),
-            mergeParent = carried.nonEmpty))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, parent, effSchema.json, carried ++ staged,
+        statsCols = statsCols, op = "replace",
+        // carried entries keep parent rows -> union is the honest bound;
+        // a full replacement (nothing carried) takes the fresh sketch
+        edit = ndvEdit(ndvFromFiles(spark, paths, statsCols, cm),
+          mergeParent = carried.nonEmpty))
     }
-    -1 // unreachable
   }
 
   /** Publish pre-staged files as a whole-table definition with an
@@ -4818,8 +4704,7 @@ object TableFormat {
                          props: Map[String, String] = Map.empty,
                          requireParent: Option[Int] = None): Int = {
     val staged = entriesFromFooters(spark, paths, statsCols)
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       // CREATE (not REPLACE) semantics (r10): the publish is only valid
       // over the exact parent the caller staged against — a CTAS loser
@@ -4830,25 +4715,19 @@ object TableFormat {
           s"table $base: CTAS expected to publish v${exp + 1} but v$parentV is " +
             "already committed — a concurrent CREATE won this table; re-run " +
             "against it (or use CREATE OR REPLACE)"))
-      try
-        // a table REDEFINITION resets the column mapping, tombstones,
-        // properties and constraints: the staged files store the new
-        // schema's literal names, and a replaced definition must not
-        // inherit the old table's config (an old CHECK could name a
-        // column the new schema lacks, bricking every write) (r10)
-        return writeManifest(spark, base, parentV + 1, schema.json, staged,
-          statsCols = statsCols, op = "replace",
-          edit = _.copy(colmap = Map.empty, tombstones = Set.empty,
-            props = props, constraints = Nil,
-            // a redefined table's NDV is exactly its fresh contents
-            ndv = ndvFromFiles(spark, paths, statsCols, Map.empty)))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      // a table REDEFINITION resets the column mapping, tombstones,
+      // properties and constraints: the staged files store the new
+      // schema's literal names, and a replaced definition must not
+      // inherit the old table's config (an old CHECK could name a
+      // column the new schema lacks, bricking every write) (r10)
+      writeManifest(spark, base,
+        if (parentV == 0) Snapshot.empty(0) else snapshot(spark, base, Some(parentV)),
+        schema.json, staged, statsCols = statsCols, op = "replace",
+        edit = _.copy(colmap = Map.empty, tombstones = Set.empty,
+          props = props, constraints = Nil,
+          // a redefined table's NDV is exactly its fresh contents
+          ndv = ndvFromFiles(spark, paths, statsCols, Map.empty)))
     }
-    -1 // unreachable
   }
 
   /** CREATE an empty v1 snapshot that DECLARES its clustering columns
@@ -4872,7 +4751,7 @@ object TableFormat {
     // alterConstraintsCommit per constraint) left a half-created table
     // behind a failed CREATE when a later constraint was rejected, and
     // made each constraint a separate non-atomic commit.
-    writeManifest(spark, base, 1, schema.json, Seq.empty,
+    writeManifest(spark, base, Snapshot.empty(0), schema.json, Seq.empty,
       statsCols = statsCols, op = "replace",
       edit = _.copy(props = props, constraints = constraints))
   }
@@ -4886,24 +4765,16 @@ object TableFormat {
   def alterPropsCommit(spark: SparkSession, base: String,
                        set: Map[String, String], unset: Seq[String] = Nil,
                        maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val parent = manifest(spark, base, parentV)
-      val schemaJson = schemaJsonOf(parent, base, parentV)
-      val merged = (parent.props ++ set) -- unset
-      try
-        return writeManifest(spark, base, parentV + 1, schemaJson,
-          manifestEntries(spark, base, parentV), statsCols = parent.statsCols,
-          op = "alter", edit = _.copy(props = merged))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      val parent = snapshot(spark, base, Some(parentV))
+      val pm = parent.manifest
+      val merged = (pm.props ++ set) -- unset
+      writeManifest(spark, base, parent, schemaJsonOf(pm, base, parentV),
+        parent.entries, statsCols = pm.statsCols,
+        op = "alter", edit = _.copy(props = merged))
     }
-    -1 // unreachable
   }
 
   /** PARTITION EVOLUTION (r13) — re-declare the table's clustering
@@ -4925,11 +4796,11 @@ object TableFormat {
     require(newCols.nonEmpty, "set_clustering: declare at least one column")
     require(newCols.distinct == newCols,
       s"set_clustering: duplicate columns in ${newCols.mkString(",")}")
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val v = latestVersion(spark, base)
       require(v > 0, s"table $base: cannot re-cluster a table with no commits")
-      val m = manifest(spark, base, v)
+      val snap = snapshot(spark, base, Some(v))
+      val m = snap.manifest
       val schema = schemaOf(m, base, v)
       newCols.foreach { c =>
         val f = schema.fields.find(_.name == c).getOrElse(
@@ -4948,7 +4819,7 @@ object TableFormat {
       }
       val oldCols = m.statsCols
       val carried = newCols.count(oldCols.contains)
-      val remapped = manifestEntries(spark, base, v).map { e =>
+      val remapped = snap.entries.map { e =>
         val ts = newCols.map { c =>
           val j = oldCols.indexOf(c)
           if (j >= 0) e.statsAt(j) else (None, None, None)
@@ -4959,16 +4830,9 @@ object TableFormat {
         }
         e.withStatsTriples(ts, ss)
       }
-      try
-        return (writeManifest(spark, base, v + 1, schema.json, remapped,
-          statsCols = newCols, op = "alter"), carried)
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      (writeManifest(spark, base, snap, schema.json, remapped,
+        statsCols = newCols, op = "alter"), carried)
     }
-    (-1, -1) // unreachable
   }
 
   /** SCHEMA-ALTER commit (r10, VERDICT r9 #3): re-publish the current
@@ -4981,11 +4845,11 @@ object TableFormat {
     * Rides the standard OCC loop; returns the new version. */
   def alterSchemaCommit(spark: SparkSession, base: String, schema: StructType,
                         maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val snap = manifest(spark, base, parentV)
+      val head = snapshot(spark, base, Some(parentV))
+      val snap = head.manifest
       val parent = schemaOf(snap, base, parentV)
       parent.fields.foreach { f =>
         val kept = schema.fields.find(_.name == f.name)
@@ -5007,17 +4871,10 @@ object TableFormat {
             m + (f.name -> s"${f.name}__r${parentV + 1}")
           else m
       }
-      try
-        return writeManifest(spark, base, parentV + 1, schema.json,
-          manifestEntries(spark, base, parentV), statsCols = snap.statsCols,
-          op = "alter", edit = _.copy(colmap = newCm))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, head, schema.json,
+        head.entries, statsCols = snap.statsCols,
+        op = "alter", edit = _.copy(colmap = newCm))
     }
-    -1 // unreachable
   }
 
   /** TYPE WIDENING commit (r11) — `ALTER TABLE … ALTER COLUMN c TYPE t`
@@ -5039,32 +4896,24 @@ object TableFormat {
       case (IntegerType, DoubleType) => true
       case _ => false
     }
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val snap = manifest(spark, base, parentV)
+      val head = snapshot(spark, base, Some(parentV))
+      val snap = head.manifest
       val parent = schemaOf(snap, base, parentV)
       val f = parent.fields.find(_.name == colName).getOrElse(
         throw new IllegalArgumentException(
           s"alterWidenCommit: no column $colName in ${parent.fieldNames.mkString(", ")}"))
-      if (f.dataType == newType) return parentV // no-op
-      require(widens(f.dataType, newType),
+      require(f.dataType == newType || widens(f.dataType, newType),
         s"alterWidenCommit: ${f.dataType.simpleString} → ${newType.simpleString} " +
           "is not a supported widening (int→bigint, float→double, int→double)")
       val newSchema = StructType(parent.fields.map(x =>
         if (x.name == colName) x.copy(dataType = newType) else x))
-      try
-        return writeManifest(spark, base, parentV + 1, newSchema.json,
-          manifestEntries(spark, base, parentV), statsCols = snap.statsCols,
-          op = "alter")
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      if (f.dataType == newType) parentV // no-op
+      else writeManifest(spark, base, head, newSchema.json, head.entries,
+        statsCols = snap.statsCols, op = "alter")
     }
-    -1 // unreachable
   }
 
   /** Dependent-metadata guard (r10): renaming or dropping a column that
@@ -5074,9 +4923,7 @@ object TableFormat {
     * (drop the constraint / the generated column first). Word-boundary
     * matching is conservative: a name appearing only inside a string
     * literal is a false positive, and a false refusal names its cure. */
-  private def requireNoDependents(spark: SparkSession, base: String, version: Int,
-                                  colName: String, verb: String): Unit = {
-    val m = manifest(spark, base, version)
+  private def requireNoDependents(m: Manifest, colName: String, verb: String): Unit = {
     val pat = ("(?i)\\b" + java.util.regex.Pattern.quote(colName) + "\\b").r
     m.constraints.foreach { case (n, body) =>
       // r11 (ADVICE r10 low): any body that is not a PK:/UQ: key
@@ -5116,17 +4963,17 @@ object TableFormat {
   def alterRenameCommit(spark: SparkSession, base: String,
                         oldName: String, newName: String,
                         maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val snap = manifest(spark, base, parentV)
+      val head = snapshot(spark, base, Some(parentV))
+      val snap = head.manifest
       val parent = schemaOf(snap, base, parentV)
       require(parent.fieldNames.contains(oldName),
         s"alterRenameCommit: no column $oldName in ${parent.fieldNames.mkString(", ")}")
       require(!parent.fieldNames.contains(newName),
         s"alterRenameCommit: column $newName already exists")
-      requireNoDependents(spark, base, parentV, oldName, "rename")
+      requireNoDependents(snap, oldName, "rename")
       val cm = snap.colmap
       val physical = cm.getOrElse(oldName, oldName)
       val newSchema = StructType(parent.fields.map(f =>
@@ -5147,17 +4994,10 @@ object TableFormat {
         case Some((n, c)) if c == oldName => snap.props + (BucketProp -> s"$n:$newName")
         case _ => snap.props
       }
-      try
-        return writeManifest(spark, base, parentV + 1, newSchema.json,
-          manifestEntries(spark, base, parentV), statsCols = statsCols, op = "alter",
-          edit = _.copy(props = props, colmap = newCm))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, head, newSchema.json,
+        head.entries, statsCols = statsCols, op = "alter",
+        edit = _.copy(props = props, colmap = newCm))
     }
-    -1 // unreachable
   }
 
   /** DROP COLUMN commit (r10) — pure metadata, zero data IO: the field
@@ -5171,17 +5011,17 @@ object TableFormat {
     * still reads the column. Returns the new version. */
   def alterDropCommit(spark: SparkSession, base: String, colName: String,
                       maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (true) {
+    retryOnConflict(maxRetries) {
       val parentV = latestVersion(spark, base)
       require(parentV > 0, s"table $base: cannot ALTER a table with no commits")
-      val snap = manifest(spark, base, parentV)
+      val head = snapshot(spark, base, Some(parentV))
+      val snap = head.manifest
       val parent = schemaOf(snap, base, parentV)
       require(parent.fieldNames.contains(colName),
         s"alterDropCommit: no column $colName in ${parent.fieldNames.mkString(", ")}")
       require(parent.fields.length > 1,
         s"alterDropCommit: cannot drop the only column of $base")
-      requireNoDependents(spark, base, parentV, colName, "drop")
+      requireNoDependents(snap, colName, "drop")
       // the bucket key is load-bearing layout metadata (r12): dropping
       // it would leave `graft.bucket` naming a ghost column and every
       // later insert unroutable — refuse with the cure named
@@ -5194,7 +5034,7 @@ object TableFormat {
       val physical = cm.getOrElse(colName, colName)
       val newSchema = StructType(parent.fields.filterNot(_.name == colName))
       val statsCols = snap.statsCols
-      val entries = manifestEntries(spark, base, parentV)
+      val entries = head.entries
       // dropping a STATS column removes its positional slot and shifts
       // the later columns' triples down one (r11: generalized to any
       // number of declared columns — the per-entry triples must keep
@@ -5208,17 +5048,10 @@ object TableFormat {
               statsCols.indices.map(e.strStatsAt).patch(idx, Nil, 1))
           })
       }
-      try
-        return writeManifest(spark, base, parentV + 1, newSchema.json,
-          newEntries, statsCols = newStats, op = "alter",
-          edit = m => m.copy(colmap = cm - colName, tombstones = m.tombstones + physical))
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      writeManifest(spark, base, head, newSchema.json,
+        newEntries, statsCols = newStats, op = "alter",
+        edit = m => m.copy(colmap = cm - colName, tombstones = m.tombstones + physical))
     }
-    -1 // unreachable
   }
 
   /** The version whose manifest records txn `(appId, batchId)`, scanning
@@ -5285,10 +5118,9 @@ object TableFormat {
     * same as Delta/Iceberg copy-on-write without a clustering match. */
   def deleteRows(spark: SparkSession, base: String, cond: Column,
                  bounds: Seq[(Long, Long)] = Nil): Int = {
-    val v = currentVersion(spark, base)
-    val m = manifest(spark, base, v)
+    val snap = snapshot(spark, base)
+    val (v, m, entries) = (snap.version, snap.manifest, snap.entries)
     val version = v + 1
-    val entries = manifestEntries(spark, base, v)
     val statsCols = m.statsCols
     val touched = entries.filter { e =>
       bounds.zipWithIndex.forall {
@@ -5298,13 +5130,13 @@ object TableFormat {
     val untouched = entries.filterNot(touched.toSet)
     val rewritten =
       if (touched.isEmpty) Seq.empty
-      else writeDataFilesNdv(spark, base, newCommitDir(base, version),
+      else writeDataFilesNdv(spark, base, m, newCommitDir(base, version),
         readEntriesDf(spark, base, v, touched) // dv-aware (see deleteWhere)
           .filter(!coalesce(cond, lit(false))),
         statsCols.headOption, statsCols.drop(1).headOption, statsCols.drop(2),
         bucketBy = bucketSpecOf(m.props)).entries
     val schemaJson = schemaJsonOf(m, base, v)
-    val out = writeManifest(spark, base, version, schemaJson, untouched ++ rewritten,
+    val out = writeManifest(spark, base, snap, schemaJson, untouched ++ rewritten,
       statsCols = statsCols, op = "delete")
     maybeAutoAnalyze(spark, base, out)
     out

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
+import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -66,10 +66,20 @@ class ForkFreeLocalFileSystemSpec extends SparkTestBase {
       rec.stop()
       rec.dump(dump)
     } finally rec.close()
-    val forks = RecordingFile.readAllEvents(dump).asScala
+    val starts = RecordingFile.readAllEvents(dump).asScala
       .filter(_.getEventType.getName == "jdk.ProcessStart")
+    def thread(e: RecordedEvent) = Option(e.getThread).map(_.getJavaName).getOrElse("?")
+    def describe(e: RecordedEvent) = s"${e.getString("command")} [${thread(e)}]"
+    // Spark's session cleaner deletes a collected session's artifact
+    // directory with `rm -rf` on its own `Cleaner-N` thread, whenever GC
+    // collects an unreachable session (streaming queries clone one), so
+    // it can land inside the recording without the write forking anything
+    val (cleaner, forks) = starts.partition(e =>
+      thread(e).startsWith("Cleaner-") && e.getString("command").startsWith("rm -rf ") &&
+        e.getString("command").contains("/artifacts-"))
     assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) == 16)
-    assert(forks.isEmpty, forks.map(_.getString("command")).mkString("forked: ", "; ", ""))
+    assert(forks.map(describe).isEmpty,
+      cleaner.map(describe).mkString("(excluded as session cleanup: ", "; ", ")"))
     Files.delete(dump)
   }
 }

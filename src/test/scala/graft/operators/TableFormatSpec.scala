@@ -480,6 +480,12 @@ class TableFormatSpec extends SparkTestBase {
     assert(TableFormat.currentVersion(spark, base) == 2,
       "stale pointer served instead of the committed v2 manifest")
     assert(TableFormat.readSnapshot(spark, base).count() == 2)
+    // the opposite case: a pointer AHEAD of every manifest names no
+    // snapshot, so the manifests on disk decide
+    TableFormat.writeFile(spark, s"$base/_CURRENT", "9")
+    assert(TableFormat.currentVersion(spark, base) == 2,
+      "pointer to a version with no manifest served as the head")
+    assert(TableFormat.readSnapshot(spark, base).count() == 2)
   }
 
   test("commitZorder survives empty input and all-NULL cluster columns (r8)") {
@@ -896,8 +902,11 @@ class TableFormatSpec extends SparkTestBase {
     TableFormat.alterPropsCommit(spark, base, Map("delete.mode" -> "merge-on-read"))
     TableFormat.alterConstraintsCommit(spark, base,
       upsert = Some("nonneg" -> "C:amount >= 0"))
-    // CLONE must carry colmap + dv + props + constraints: without the
-    // colmap the renamed column reads NULL in the clone
+    val (analyzed, _) = TableFormat.analyzeNdv(spark, base)
+    val hist = TableFormat.manifest(spark, base, analyzed).hist
+    assert(hist.contains("k"), "premise: ANALYZE records a histogram on k")
+    // CLONE must carry colmap + dv + props + constraints + histograms:
+    // without the colmap the renamed column reads NULL in the clone
     val dst = freshBase("tf_fix_clone")
     TableFormat.cloneTable(spark, base, dst)
     val cl = TableFormat.readSnapshot(spark, dst)
@@ -907,6 +916,7 @@ class TableFormatSpec extends SparkTestBase {
     assert(TableFormat.manifest(spark, dst, 1).props == Map("delete.mode" -> "merge-on-read"))
     assert(TableFormat.manifest(spark, dst, 1).constraints
       == Seq("nonneg" -> "C:amount >= 0"))
+    assert(TableFormat.manifest(spark, dst, 1).hist == hist, "clone lost the histograms")
     // renaming/dropping a column a CHECK references is refused by name
     val ex1 = intercept[IllegalArgumentException] {
       TableFormat.alterRenameCommit(spark, base, "amount", "price")
@@ -963,7 +973,8 @@ class TableFormatSpec extends SparkTestBase {
   test("restore carries the RESTORED version's colmap/props/constraints, not the parent's (r11, ADVICE r10 high)") {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val base = freshBase("tf_restore_hdr")
-    TableFormat.commit(spark, base, Seq((1L, 10L), (2L, 20L)).toDF("a", "v"), 1, None)
+    TableFormat.commit(spark, base, Seq((1L, 10L), (2L, 20L)).toDF("a", "v"), 1, None,
+      statsCol = Some("v"))
     TableFormat.alterRenameCommit(spark, base, "a", "b")             // v2: colmap b→a
     val s2 = TableFormat.manifest(spark, base, 2).schema.get
     TableFormat.alterSchemaCommit(spark, base,                       // v3: re-ADD `a`
@@ -975,6 +986,9 @@ class TableFormatSpec extends SparkTestBase {
     TableFormat.alterPropsCommit(spark, base, Map("tier" -> "late")) // v4
     TableFormat.alterConstraintsCommit(spark, base,                  // v5: CHECK on b,
       upsert = Some("chk_b" -> "C:b > 0"))                           // absent from v1
+    val (v6, _) = TableFormat.analyzeNdv(spark, base)                // v6: histograms
+    assert(TableFormat.manifest(spark, base, v6).hist.contains("v"),
+      "premise: ANALYZE records a histogram on v")
     val vR = TableFormat.restoreVersion(spark, base, 1)
     // v1 had no colmap/props/constraints — the restore commit must carry
     // v1's (empty) headers. Inheriting the parent's a→a__r3 mapping
@@ -987,6 +1001,8 @@ class TableFormatSpec extends SparkTestBase {
       "restore inherited the parent's props")
     assert(TableFormat.manifest(spark, base, vR).constraints.isEmpty,
       "restore inherited the parent's constraints")
+    assert(TableFormat.manifest(spark, base, vR).hist == TableFormat.manifest(spark, base, 1).hist,
+      "restore inherited the parent's histograms")
     val got = TableFormat.readSnapshot(spark, base, Some(vR)).orderBy("a")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq(1L -> 10L, 2L -> 20L), s"restored column a lost its bytes: $got")
@@ -2161,6 +2177,8 @@ class TableFormatSpec extends SparkTestBase {
     writeText(mPath, textA)
     assert(TableFormat.manifestEntries(spark, cBase, 1)
       .forall(_.path.contains("tf_fp_tmpA")))
+    val bodyA = TableFormat.manifest(spark, cBase, 1).body
+    assert(bodyA.nonEmpty && bodyA.forall(_.contains("tf_fp_tmpA")))
     val st0 = fs.getFileStatus(mPath)
     // the attack: DROP + re-create republishes a DIFFERENT manifest of
     // identical byte length, forged to the identical mtime — the exact
@@ -2176,6 +2194,8 @@ class TableFormatSpec extends SparkTestBase {
     assert(TableFormat.manifestEntries(spark, cBase, 1)
       .forall(_.path.contains("tf_fp_tmpZ")),
       "stale manifest entries served across a same-stamp cross-process re-create")
+    assert(TableFormat.manifest(spark, cBase, 1).body.forall(_.contains("tf_fp_tmpZ")),
+      "stale parsed manifest served across a same-stamp cross-process re-create")
   }
 
   // ---- delta-log manifests (r13): commit metadata IO ∝ change ----

@@ -2024,8 +2024,14 @@ class GraftTableSpec extends SparkTestBase {
     // audit on the branch, then publish: ONE metadata commit
     assert(spark.sql(
       "SELECT v FROM graft.db.wap_t.branches.staged WHERE k = 1500").head.getLong(0) == -1L)
+    val staged = TableFormat.branchBaseOf(base, "staged")
+    val (analyzed, _) = TableFormat.analyzeNdv(spark, staged)
+    val hist = TableFormat.manifest(spark, staged, analyzed).hist
+    assert(hist.contains("k"), "premise: ANALYZE on the branch records a histogram on k")
     val pub = spark.sql("CALL graft.system.publish('db.wap_t', 'staged')").head
     assert(pub.getInt(0) == 3, pub.toString)
+    assert(TableFormat.manifest(spark, base, 3).hist == hist,
+      "publish kept the parent's histograms over the branch's")
     assert(spark.sql("SELECT count(1) FROM graft.db.wap_t").head.getLong(0) == 2000L)
     assert(spark.sql("SELECT v FROM graft.db.wap_t WHERE k = 1500").head.getLong(0) == -1L)
     // pre-publish versions stay time-travel readable
